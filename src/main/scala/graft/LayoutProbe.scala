@@ -191,7 +191,7 @@ object LayoutProbe {
       // shared so a bucketing change can never desync the probe from
       // the layout it measures
       .withColumn("idx_bucket",
-        graft.operators.Dedup.idxBucketCol(col("doc_id"), 64))
+        graft.operators.VersionedIndex.bucketCol(col("doc_id"), 64))
       .persist()
     val n = sh.count()
     // FIXED rows-per-file = the row-group emulation (the mirror/state

@@ -171,8 +171,8 @@ object Dedup {
     * replace-by-doc_id semantics rely on): duplicate id rows would
     * band per ROW rather than per merged shingle set, while Jaccard
     * verification still merges per id — the persisted-index writers
-    * validate the contract loudly ([[requireUniqueDocIds]]); the
-    * transient pair paths document it here. */
+    * validate the contract loudly ([[VersionedIndex.requireUniqueIds]]);
+    * the transient pair paths document it here. */
   private def docShingles(docs: DataFrame, id: Column, text: Column,
       n: Int): DataFrame =
     docs.select(id.as("doc_id"), shingleArray(text, n).as("sh"))
@@ -277,77 +277,45 @@ object Dedup {
     *   <path>/v=N/_GRAFT_COMMITTED
     * }}}
     *
-    * Both member tables are hive-partitioned by
-    * `idx_bucket = pmod(xxhash64(doc_id), idxBuckets)` — a pure
-    * function of the doc id, so an UPSERT knows its touched partitions
+    * Both member tables are hive-partitioned by `idx_bucket`, the
+    * [[VersionedIndex.bucketCol]] of the doc id — a pure function of
+    * the doc id, so an UPSERT knows its touched partitions
     * from the batch alone (no index lookup) and rewrites ONLY those:
     * per-round commit I/O is O(batch ∕ bucket density), not O(index).
     * Untouched buckets stay byte-identical in the version that last
     * wrote them, referenced by manifest. Readers resolve the manifest
-    * via [[VersionedIndex.readTable]]. */
+    * via [[VersionedIndex.readTable]]. The persisted boundary
+    * validates the unique-doc_id contract loudly
+    * ([[VersionedIndex.requireUniqueIds]] over the already-cached
+    * per-doc rows): duplicate-id rows would band per ROW while Jaccard
+    * verification merges shingles per id, so candidates and
+    * verification silently disagree. */
 
-  /** Bucket partition key: a pure function of the doc id, so batch →
-    * touched-partitions needs no index read. */
-  // private[graft]: LayoutProbe --lsh emulates the committed member
-  // layout and must use THE bucket definition, not a hand copy that
-  // silently desyncs if the hash/cast/default ever changes
-  private[graft] def idxBucketCol(id: Column, nBuckets: Int): Column =
-    pmod(xxhash64(id), lit(nBuckets.toLong)).cast("int")
+  /** `df` plus its `idx_bucket` partition column. */
+  private def withIdxBucket(df: DataFrame, nBuckets: Int): DataFrame =
+    df.withColumn("idx_bucket", VersionedIndex.bucketCol(col("doc_id"), nBuckets))
 
-  /** The PERSISTED-index boundary validates the unique-doc_id
-    * contract loudly (one aggregation over the already-cached per-doc
-    * rows — it doubles as the cache materialization, so it is ~free):
-    * duplicate-id rows would band per ROW while Jaccard verification
-    * merges shingles per id, so candidates and verification silently
-    * disagree, and the index would accumulate conflicting band rows
-    * for one id. Transient pair-mining paths document the same
-    * contract ([[docShingles]]) without paying a per-call check — the
-    * ivfSeeds precedent: validate where state commits. */
-  private def requireUniqueDocIds(ds: DataFrame, where: String): Long = {
-    val r = ds.agg(count(lit(1)), count_distinct(col("doc_id"))).head()
-    require(r.getLong(0) == r.getLong(1),
-      s"$where: ${r.getLong(0) - r.getLong(1)} duplicate doc_id rows — " +
-        "doc ids must be unique (one row per document)")
-    r.getLong(0)
-  }
-
-  /** Directory of the current committed index version (the generic
-    * [[VersionedIndex]] layout). Falls back to the legacy unversioned
-    * layout (`<path>/shingles`) for indexes written before versioning
-    * existed. NOTE: under partial commits a version dir holds only the
-    * partitions it owns — read member tables with [[readLshTable]],
-    * not by pathing into this dir. */
-  def currentLshIndexDir(spark: org.apache.spark.sql.SparkSession,
-      path: String): String =
-    VersionedIndex.currentDir(spark, path).getOrElse {
-      val root = new org.apache.hadoop.fs.Path(path)
-      val fs = root.getFileSystem(spark.sparkContext.hadoopConfiguration)
-      if (fs.exists(new org.apache.hadoop.fs.Path(path, "shingles"))) path
-      else sys.error(s"no committed LSH index at $path")
-    }
+  /** `df` without the internal `idx_bucket` column (absent from an
+    * unpartitioned or emptied member). */
+  private def dropBucket(df: DataFrame): DataFrame =
+    if (df.columns.contains("idx_bucket")) df.drop("idx_bucket") else df
 
   /** Manifest-resolved read of an LSH index member table ("shingles"
     * or "bands"), without the internal `idx_bucket` partition column.
-    * Legacy layouts (pre-versioning or pre-bucketing) read as-is.
     * A committed-but-EMPTIED index reads as zero typed rows, never an
     * error (the VersionedIndex commit stages an emptied partitioned
     * table as an empty unpartitioned one), so full takedown followed
     * by re-ingest works — pinned by the LayoutSpec recovery case. */
   def readLshTable(spark: org.apache.spark.sql.SparkSession,
-      path: String, table: String): DataFrame = {
-    val df =
-      if (VersionedIndex.currentDir(spark, path).isDefined)
-        VersionedIndex.readTable(spark, path, table)
-      else spark.read.parquet(s"${currentLshIndexDir(spark, path)}/$table")
-    if (df.columns.contains("idx_bucket")) df.drop("idx_bucket") else df
-  }
+      path: String, table: String): DataFrame =
+    dropBucket(VersionedIndex.readTable(spark, path, table))
 
   /** Fail fast when the caller's hash parameters disagree with the
     * ones the index was built with — mixing them silently produces
     * incomparable signatures (candidates vanish, never an error). */
-  private def requireLshParams(spark: org.apache.spark.sql.SparkSession,
-      dir: String, n: Int, numHashes: Int, bands: Int): Unit =
-    VersionedIndex.requireParams(spark, dir,
+  private def requireLshParams(path: String, params: Map[String, String],
+      n: Int, numHashes: Int, bands: Int): Unit =
+    VersionedIndex.requireParams(path, params,
       Map("n" -> n.toString, "numHashes" -> numHashes.toString,
         "bands" -> bands.toString))
 
@@ -366,7 +334,6 @@ object Dedup {
         ++ extraParams,
       partitionBy = Map("shingles" -> Seq("idx_bucket"),
         "bands" -> Seq("idx_bucket")),
-      legacySweep = Seq("shingles", "bands"),
       carry = carry,
       // shingles clustered by doc_id: verification reads push a
       // candidate-id set (prunedOldShingles — dictionary-probed, with
@@ -374,7 +341,7 @@ object Dedup {
       // clustered by bucket key: the incremental banded join only
       // consumes corpus rows colliding with the batch's (band,
       // band_hash) set, so the same layout serves a future probe-side
-      // prune. Layout change r15 → cache key graft-lshdel3.
+      // prune.
       clusterBy = Map("shingles" -> Seq("doc_id"),
         "bands" -> Seq("band", "band_hash")))
 
@@ -528,12 +495,11 @@ object Dedup {
     // the lazy-checkpoint barriers where the fan-out helps
     val ds = docShingles(docs, id, text, n).cache()
     try {
-      requireUniqueDocIds(ds, "writeLshIndex")
+      VersionedIndex.requireUniqueIds(ds, "doc_id", "writeLshIndex")
       commitLshVersion(docs.sparkSession, path,
-        ds.select(col("doc_id"), explode(col("sh")).as("shingle"))
-          .withColumn("idx_bucket", idxBucketCol(col("doc_id"), idxBuckets)),
-        bandedFromDocShingles(ds, numHashes, bands)
-          .withColumn("idx_bucket", idxBucketCol(col("doc_id"), idxBuckets)),
+        withIdxBucket(ds.select(col("doc_id"), explode(col("sh")).as("shingle")),
+          idxBuckets),
+        withIdxBucket(bandedFromDocShingles(ds, numHashes, bands), idxBuckets),
         n, numHashes, bands, idxBuckets)
     } finally ds.unpersist()
   }
@@ -554,34 +520,29 @@ object Dedup {
     * the batch's own rows). Every untouched bucket is carried by
     * manifest reference, byte-identical. Per-round write I/O is
     * O(touched buckets), not O(index). Once the manifest references
-    * `maxVersionChain` distinct versions the upsert compacts with a
-    * full rewrite (also the migration path for a pre-bucketing
-    * index, which has no `idxBuckets` param). */
+    * `maxVersionChain` distinct versions — or the committed state
+    * cannot carry (a full takedown left whole-table members) — the
+    * upsert takes a full rewrite. */
   def upsertLshIndex(newDocs: DataFrame, id: Column, text: Column, path: String,
       n: Int = 3, numHashes: Int = 64, bands: Int = 16,
-      maxVersionChain: Int = 8, idxBuckets: Int = 64): Unit = {
+      maxVersionChain: Int = 8): Unit = {
     val spark = newDocs.sparkSession
-    val curDir = currentLshIndexDir(spark, path)
-    requireLshParams(spark, curDir, n, numHashes, bands)
-    val params = VersionedIndex.readParams(spark, curDir)
-    val storedBuckets = params.get("idxBuckets").map(_.toInt)
-    val nBuckets = storedBuckets.getOrElse(idxBuckets)
+    val params = VersionedIndex.current(spark, path)
+    requireLshParams(path, params, n, numHashes, bands)
+    val nBuckets = params("idxBuckets").toInt
     val newIds = newDocs.select(id.as("doc_id")).distinct()
     val ds = docShingles(newDocs, id, text, n).cache()
     try {
-      requireUniqueDocIds(ds, "upsertLshIndex")
-      val shNew = ds.select(col("doc_id"), explode(col("sh")).as("shingle"))
-        .withColumn("idx_bucket", idxBucketCol(col("doc_id"), nBuckets))
-      val bandsNew = bandedFromDocShingles(ds, numHashes, bands)
-        .withColumn("idx_bucket", idxBucketCol(col("doc_id"), nBuckets))
+      VersionedIndex.requireUniqueIds(ds, "doc_id", "upsertLshIndex")
+      val shNew = withIdxBucket(
+        ds.select(col("doc_id"), explode(col("sh")).as("shingle")), nBuckets)
+      val bandsNew = withIdxBucket(bandedFromDocShingles(ds, numHashes, bands), nBuckets)
       // shared partial-commit planner (VersionedIndex.planPartialRewrite
-      // — one protocol definition across the LSH and sketch kinds);
-      // the extra gate keeps legacy/unbucketed indexes on the
-      // full-rewrite path, which migrates them
+      // — one protocol definition across the LSH and sketch kinds)
       val plan = VersionedIndex.planPartialRewrite(spark, path,
         Seq("shingles", "bands"),
-        newIds.select(idxBucketCol(col("doc_id"), nBuckets).as("b")),
-        extraGate = storedBuckets.isDefined, maxVersionChain)
+        newIds.select(VersionedIndex.bucketCol(col("doc_id"), nBuckets).as("b")),
+        maxVersionChain)
       // the drift probe's overlap count runs on the BANDS member's
       // doc ids (a fixed `bands` rows/doc — far narrower than the
       // shingle fan-out); the shingle member keeps exactly its two
@@ -590,19 +551,16 @@ object Dedup {
       // it (materializing the whole pruned shingle set cost more
       // than the second scan on the q116 funnel trigger)
       if (!plan.ok) {
-        // full rewrite: legacy/unbucketed index, or compaction point
+        // full rewrite: compaction point, or an emptied index
         val drift = measureLshDrift(readLshTable(spark, path, "shingles"),
           readLshTable(spark, path, "bands").select(col("doc_id")).distinct(),
           ds, bands, numHashes / bands, params, path)
+        def merged(table: String, fresh: DataFrame): DataFrame =
+          withIdxBucket(readLshTable(spark, path, table)
+            .join(newIds, Seq("doc_id"), "left_anti"), nBuckets)
+            .unionByName(fresh)
         commitLshVersion(spark, path,
-          readLshTable(spark, path, "shingles")
-            .join(newIds, Seq("doc_id"), "left_anti")
-            .withColumn("idx_bucket", idxBucketCol(col("doc_id"), nBuckets))
-            .unionByName(shNew),
-          readLshTable(spark, path, "bands")
-            .join(newIds, Seq("doc_id"), "left_anti")
-            .withColumn("idx_bucket", idxBucketCol(col("doc_id"), nBuckets))
-            .unionByName(bandsNew),
+          merged("shingles", shNew), merged("bands", bandsNew),
           n, numHashes, bands, nBuckets, extraParams = drift)
       } else {
         if (plan.touched.isEmpty) return // empty batch — nothing to commit
@@ -641,31 +599,27 @@ object Dedup {
     * buckets), not O(index). Deletion removes current rows — a later
     * upsert of the same doc_id re-inserts it. No hash parameters are
     * taken: deletion never hashes text, and the stored params carry
-    * forward unchanged. Pre-bucketing indexes (no `idxBuckets` param)
-    * take a full rewrite, which migrates them. */
+    * forward unchanged. */
   def deleteFromLshIndex(deleteIds: DataFrame, path: String,
       maxVersionChain: Int = 8): Unit = {
     val spark = deleteIds.sparkSession
-    val curDir = currentLshIndexDir(spark, path)
-    val params = VersionedIndex.readParams(spark, curDir)
+    val params = VersionedIndex.current(spark, path)
     val (n, numHashes, bandCount) = (params("n").toInt,
       params("numHashes").toInt, params("bands").toInt)
-    val storedBuckets = params.get("idxBuckets").map(_.toInt)
-    val nBuckets = storedBuckets.getOrElse(64)
+    val nBuckets = params("idxBuckets").toInt
     val ids = deleteIds.select(col("doc_id")).distinct()
     val plan = VersionedIndex.planPartialRewrite(spark, path,
       Seq("shingles", "bands"),
-      ids.select(idxBucketCol(col("doc_id"), nBuckets).as("b")),
-      extraGate = storedBuckets.isDefined, maxVersionChain)
+      ids.select(VersionedIndex.bucketCol(col("doc_id"), nBuckets).as("b")),
+      maxVersionChain)
     // deleting only ABSENT ids commits NOTHING (no new version) — the
     // streaming takedown sink's documented replay/no-op contract; one
     // bounded semi-join over partitions the rewrite would read anyway
     def anyPresent(existing: DataFrame): Boolean =
       !existing.join(ids, Seq("doc_id"), "left_semi").isEmpty
     def bucketed(table: String): DataFrame =
-      readLshTable(spark, path, table)
-        .join(ids, Seq("doc_id"), "left_anti")
-        .withColumn("idx_bucket", idxBucketCol(col("doc_id"), nBuckets))
+      withIdxBucket(readLshTable(spark, path, table)
+        .join(ids, Seq("doc_id"), "left_anti"), nBuckets)
     if (!plan.ok) {
       if (!anyPresent(readLshTable(spark, path, "shingles"))) return
       commitLshVersion(spark, path,
@@ -721,8 +675,7 @@ object Dedup {
       // the r17 re-crawl drift loop: last measured same-doc version
       // Jaccard, the banding s90 floor it was judged against, the
       // alarm state ("ok"/"below-s90") and the last state transition
-      // — None until an upsert has measured one (incl. every legacy
-      // unversioned layout, which has no params to carry them in)
+      // — None until an upsert has measured one
       driftJaccard: Option[Double] = None,
       driftFloor: Option[Double] = None,
       driftAlarm: Option[String] = None,
@@ -732,9 +685,8 @@ object Dedup {
     * (never the shingles), plus a ≤1-row stats reduce. */
   def lshIndexStats(spark: org.apache.spark.sql.SparkSession, path: String,
       hotThreshold: Long = 64): LshStats = {
-    val curDir = currentLshIndexDir(spark, path)
-    val params = VersionedIndex.readParams(spark, curDir)
-    val bandCount = params.getOrElse("bands", "16").toLong
+    val params = VersionedIndex.current(spark, path)
+    val bandCount = params("bands").toLong
     val (dJ, dF, dA, dB) = (params.get("driftJaccard").map(_.toDouble),
       params.get("driftFloor").map(_.toDouble),
       params.get("driftAlarm"), params.get("driftBoundary"))
@@ -779,8 +731,8 @@ object Dedup {
       indexPath: String, n: Int = 3, numHashes: Int = 64, bands: Int = 16,
       threshold: Double = 0.8): DataFrame = {
     val spark = newDocs.sparkSession
-    val curDir = currentLshIndexDir(spark, indexPath)
-    requireLshParams(spark, curDir, n, numHashes, bands)
+    requireLshParams(indexPath, VersionedIndex.current(spark, indexPath),
+      n, numHashes, bands)
     incrementalAgainst(newDocs, id, text,
       prunedOldShingles(spark, indexPath),
       readLshTable(spark, indexPath, "bands"),
@@ -1009,7 +961,7 @@ object Dedup {
     * `a.vec_id =!= b.vec_id` join condition discards its candidate
     * rows) — raise loudly on BOTH at first execution, mirroring the
     * NULL-specific message the eager boundaries use
-    * ([[Similarity.requireUniqueVecIds]]). The window shuffle is
+    * ([[VersionedIndex.requireUniqueIds]]). The window shuffle is
     * batch-sized (NULLs all land in one window partition, but a batch
     * is per-round small by contract). */
   private def requireUniqueBatchVecIds(newVecs: DataFrame,
@@ -1043,9 +995,7 @@ object Dedup {
       threshold: Double, tables: Int = 4, window: Int = 16): DataFrame = {
     val spark = newVecs.sparkSession
     graft.plans.GraftFunctions.register(spark)
-    val curDir = VersionedIndex.currentDir(spark, indexPath).getOrElse(
-      sys.error(s"no committed sketch index at $indexPath"))
-    val params = VersionedIndex.readParams(spark, curDir)
+    val params = VersionedIndex.current(spark, indexPath)
     val (dim, nBits) = (params("dim").toInt, params("nBits").toInt)
     val corpus = Similarity.readSketchTable(spark, indexPath)
     val guarded = requireUniqueBatchVecIds(newVecs, "embeddingNearDupIndexed")
@@ -1529,8 +1479,6 @@ object Dedup {
     * upgrades in place the first time the graph crosses the gate.
     * Stored in params; reads resolve it from there. */
   private[graft] val CcStateBuckets = 64
-  private def ccBucketCol(c: Column, n: Int): Column =
-    pmod(xxhash64(c), lit(n.toLong)).cast("int")
   /** Bucket count of the COMMITTED layout at `path`: None = the
     * unpartitioned (r15) layout. */
   private[graft] def ccStateBucketsOf(
@@ -1542,11 +1490,11 @@ object Dedup {
   private def ccClustersStaged(state: DataFrame, n: Int): DataFrame =
     if (n <= 0) state.select(col("doc_id"), col("cluster"), col("csize"))
     else state.select(col("doc_id"), col("cluster"), col("csize"),
-      ccBucketCol(col("cluster"), n).as("idx_bucket"))
+      VersionedIndex.bucketCol(col("cluster"), n).as("idx_bucket"))
   private def ccPairsStaged(pairsAcc: DataFrame, n: Int): DataFrame =
     if (n <= 0) pairsAcc.select(col("doc_a"), col("doc_b"))
     else pairsAcc.select(col("doc_a"), col("doc_b"),
-      ccBucketCol(col("doc_a"), n).as("idx_bucket"))
+      VersionedIndex.bucketCol(col("doc_a"), n).as("idx_bucket"))
   private def ccPartitionBy(n: Int): Map[String, Seq[String]] =
     if (n <= 0) Map.empty
     else Map("clusters" -> Seq("idx_bucket"), "pairs" -> Seq("idx_bucket"))
@@ -1600,12 +1548,9 @@ object Dedup {
       partitionBy = ccPartitionBy(buckets),
       clusterBy = CcClusterBy)
 
-  private def dropBucket(df: DataFrame): DataFrame =
-    if (df.columns.contains("idx_bucket")) df.drop("idx_bucket") else df
-
   /** Current committed cluster state at `path` (see
     * [[writeClusterState]]); the internal bucket column is stripped.
-    * Pre-r16 unbucketed states read as-is. */
+    * Unpartitioned (`buckets = 0`) states read as-is. */
   def readClusterState(spark: org.apache.spark.sql.SparkSession,
       path: String): DataFrame =
     dropBucket(VersionedIndex.readTable(spark, path, "clusters"))
@@ -1625,7 +1570,7 @@ object Dedup {
     val raw = VersionedIndex.readTable(spark, path, "clusters")
     val pruned = ccStateBucketsOf(spark, path) match {
       case Some(n) if raw.columns.contains("idx_bucket") =>
-        raw.filter(col("idx_bucket") === ccBucketCol(lit(cluster), n))
+        raw.filter(col("idx_bucket") === VersionedIndex.bucketCol(lit(cluster), n))
       case _ => raw // unpartitioned layout: row-group stats only
     }
     dropBucket(pruned.filter(col("cluster") === cluster))
@@ -1652,8 +1597,8 @@ object Dedup {
     * ([[VersionedIndex.planPartialRewrite]], the sketch/LSH
     * protocol, per-table touched sets). Falls back to the whole
     * rewrite when the manifest cannot support a partial commit
-    * (legacy/whole-table owners, emptied state, version chain at the
-    * cap) — a route choice, identical content either way.
+    * (whole-table owners, emptied state, version chain at the cap) —
+    * a route choice, identical content either way.
     *
     * Inputs are the trigger's frames: `lbls`/`reclosed` from
     * [[recloseParts]]' incremental arm, `ids` the batch ids,
@@ -1667,8 +1612,8 @@ object Dedup {
       ids: DataFrame, newPairs: DataFrame,
       fullPairs: => DataFrame, maxVersionChain: Int = 8): Unit = {
     // the committed layout must be BUCKETED for a partial commit to
-    // have a rewrite unit; an unpartitioned (r15 / below-crossover)
-    // layout upgrades in place through the whole-write fallback, and
+    // have a rewrite unit; an unpartitioned (below-crossover) layout
+    // upgrades in place through the whole-write fallback, and
     // the NEXT trigger commits partially
     val n = ccStateBucketsOf(spark, path).getOrElse(0)
     if (n <= 0) {
@@ -1687,8 +1632,8 @@ object Dedup {
     try {
     // touched cluster-buckets: buckets of (affected ∪ re-closed)
     // labels — ≤ n ints via a Spark distinct, never a label collect
-    val cBuckets = lbls.select(ccBucketCol(col("_aff_lbl"), n).as("b"))
-      .unionByName(reclosedCk.select(ccBucketCol(col("cluster"), n).as("b")))
+    val cBuckets = lbls.select(VersionedIndex.bucketCol(col("_aff_lbl"), n).as("b"))
+      .unionByName(reclosedCk.select(VersionedIndex.bucketCol(col("cluster"), n).as("b")))
     // touched pair-buckets, as a SUPERSET from already-bounded frames
     // (no pairs-member scan — the first cut found the touched set
     // exactly via two semi-joins over the member and paid ~2 s of
@@ -1702,11 +1647,11 @@ object Dedup {
     val pBuckets = ids.select(col("vec_id").as("k"))
       .unionByName(members.select(col("doc_id").as("k")))
       .unionByName(newPairs.select(col("doc_a").as("k")))
-      .select(ccBucketCol(col("k"), n).as("b"))
+      .select(VersionedIndex.bucketCol(col("k"), n).as("b"))
     val planC = VersionedIndex.planPartialRewrite(spark, path,
-      Seq("clusters"), cBuckets, extraGate = true, maxVersionChain)
+      Seq("clusters"), cBuckets, maxVersionChain)
     val planP = VersionedIndex.planPartialRewrite(spark, path,
-      Seq("pairs"), pBuckets, extraGate = true, maxVersionChain)
+      Seq("pairs"), pBuckets, maxVersionChain)
     if (!planC.ok || !planP.ok) {
       writeClusterStateWithPairs(
         assembleReclosed(readClusterState(spark, path), lbls, reclosedCk),
@@ -1815,7 +1760,7 @@ object Dedup {
     * column with raise_error, so a duplicate-id corpus fails loudly at
     * first execution instead of silently emitting conflicting
     * (doc_a, doc_b, hamming) rows (the same loud contract the MinHash
-    * persisted boundary enforces via requireUniqueDocIds, kept LAZY
+    * persisted boundary enforces via VersionedIndex.requireUniqueIds, kept LAZY
     * here because this is a plan-building API). The guard's shuffle is
     * over the docs × 16-byte signature frame and is paid once — the
     * localCheckpoint materializes the validated frame before the

@@ -14,7 +14,7 @@ import org.apache.spark.sql.functions.{col, count, lit, max, percentile_approx}
   * ladder measured in SimilaritySpec).
   *
   * Kinds, by manifest evidence:
-  *  - `pq` / `pq_codebook` member tables (or a `pqM` param) →
+  *  - `pq` member table →
   *    [[Index.IvfPq]] — ADC serving, batch serving, mutations, drift
   *    stats, codebook-retraining rebuild;
   *  - `lists` member table → [[Index.Ivf]] — exact-cosine probe
@@ -27,10 +27,8 @@ import org.apache.spark.sql.functions.{col, count, lit, max, percentile_approx}
   * bounded driver-side serving state it pins: the ≤ m·kPq codebook
   * rows, the ≤ nLists centroid-geometry rows and the ≤ nLists
   * list-size histogram (the ratio-derived shortlist default). It
-  * never reads VECTOR data — except on a legacy IVF-PQ index written
-  * before the `centroids` member table existed, where the geometry
-  * falls back to a seed-row scan of the lists table (migrated away at
-  * that index's next full rewrite).
+  * never reads VECTOR data. An index in another on-disk format is
+  * refused ([[VersionedIndex.current]]).
   */
 object Index {
 
@@ -224,29 +222,19 @@ object Index {
   /** Open whatever index lives at `path`; throws with a layout dump if
     * nothing recognizable is committed there. */
   def open(spark: SparkSession, path: String): Opened = {
-    val cur = VersionedIndex.currentDir(spark, path).getOrElse(
-      sys.error(s"no committed index at $path"))
+    val params = VersionedIndex.current(spark, path)
     val mf = VersionedIndex.manifest(spark, path)
-    val params = VersionedIndex.readParams(spark, cur)
-    if (mf.contains("pq") || mf.contains("pq_codebook") || params.contains("pqM"))
-      new IvfPq(spark, path, Similarity.readPqCodebook(spark, path),
-        params.getOrElse("nLists", sys.error(s"index at $path missing nLists")).toInt,
+    def p(key: String): Int = params.getOrElse(key,
+      sys.error(s"index at $path missing $key")).toInt
+    if (mf.contains("pq"))
+      new IvfPq(spark, path, Similarity.readPqCodebook(spark, path), p("nLists"),
         // corpus size from the maintained histogram (≤ nLists rows) —
         // feeds the ratio-derived shortlist default
         Similarity.ivfListSizes(spark, path).values.sum)
-    else if (mf.contains("lists"))
-      new Ivf(spark, path,
-        params.getOrElse("nLists", sys.error(s"index at $path missing nLists")).toInt)
-    else if (mf.contains("shingles") || mf.contains("bands")) {
-      def p(key: String): Int = params.getOrElse(key,
-        sys.error(s"index at $path missing $key")).toInt
+    else if (mf.contains("lists")) new Ivf(spark, path, p("nLists"))
+    else if (mf.contains("shingles"))
       new Lsh(spark, path, p("n"), p("numHashes"), p("bands"))
-    }
-    else if (mf.contains("sketch")) {
-      def p(key: String): Int = params.getOrElse(key,
-        sys.error(s"index at $path missing $key")).toInt
-      new Sketch(spark, path, p("dim"), p("nBits"))
-    }
+    else if (mf.contains("sketch")) new Sketch(spark, path, p("dim"), p("nBits"))
     else sys.error(s"unrecognized index layout at $path: " +
       s"tables=${mf.keys.toSeq.sorted.mkString(",")}")
   }
@@ -306,8 +294,8 @@ object Index {
       // Jaccard; ivf = centroid-staleness excess
       // (ivfDistRecent/ivfDistBuild − 1); ivf-pq = codebook-error
       // excess (pqErrRecent/pqErrBuild − 1). None until a mutation
-      // has measured one (and for layouts predating the relevant
-      // baseline). Band/boundary/alarm detail stays kind-specific on
+      // has measured one (and for an IVF build with no baseline).
+      // Band/boundary/alarm detail stays kind-specific on
       // [[Similarity.SketchStats]]/[[Dedup.LshStats]]/params.
       drift: Option[Double] = None)
 
@@ -333,35 +321,10 @@ object Index {
     * Covers the cluster-state layout ([[Dedup.writeClusterState]])
     * too — the one committed layout [[open]] deliberately doesn't
     * serve (its front door is [[Dedup.readClusterState]]). */
-  def stats(spark: SparkSession, path: String): IndexStats =
-    VersionedIndex.currentDir(spark, path) match {
-      case Some(cur) => statsVersioned(spark, path, cur)
-      case None =>
-        // the legacy unversioned LSH layout (<path>/shingles, no
-        // manifest) is still a served data path (readLshTable reads
-        // it), so health polling must not error on an index queries
-        // answer from — lshIndexStats resolves the same legacy dir
-        // itself; carry is 0 by construction (no versions to carry
-        // across). A plain match arm, not a non-local return from a
-        // getOrElse closure: that form rides NonLocalReturnControl
-        // in Scala 2 (swallowed by any future catch-all) and is gone
-        // in Scala 3.
-        val legacy = new org.apache.hadoop.fs.Path(path, "shingles")
-        val fs = legacy.getFileSystem(spark.sparkContext.hadoopConfiguration)
-        if (fs.exists(legacy)) {
-          val s = Dedup.lshIndexStats(spark, path)
-          IndexStats("lsh", s.nBandedDocs, s.nBuckets, s.maxBucket,
-            s.medianBucket, s.skew, 0, 0, emptied = s.nBuckets == 0L)
-        } else sys.error(s"no committed index at $path (and no legacy " +
-          "unversioned LSH layout — expected <path>/shingles)")
-    }
-
-  private def statsVersioned(spark: SparkSession, path: String,
-      cur: String): IndexStats = {
+  def stats(spark: SparkSession, path: String): IndexStats = {
+    val params = VersionedIndex.current(spark, path)
     val mf = VersionedIndex.manifest(spark, path)
-    val params = VersionedIndex.readParams(spark, cur)
-    val isPq = mf.contains("pq") || mf.contains("pq_codebook") ||
-      params.contains("pqM")
+    val isPq = mf.contains("pq")
     if (isPq || mf.contains("lists")) {
       // carry is judged over EVERY partitioned member leg an IVF
       // partial commit touches independently — lists, the vec_map
@@ -376,7 +339,7 @@ object Index {
       // ingest fits the pinned codewords exactly like the build
       // corpus did) — the signal retrainErrRatio alarms on, in the
       // same 0-is-healthy direction as the sketch flip rate and the
-      // lsh shift rate. None for PQ layouts predating the baseline.
+      // lsh shift rate.
       val pqDrift = for {
         b <- params.get("pqErrBuild").map(_.toLong) if b > 0L
         r <- params.get("pqErrRecent").map(_.toLong)
@@ -386,8 +349,8 @@ object Index {
       // over the build baseline (ivfDistRecent/ivfDistBuild − 1, the
       // same EWMA-vs-baseline shape as the PQ signal on the geometry
       // axis; a re-centering rebuild re-baselines it to 0.0). None
-      // for indexes built before the baseline existed — their next
-      // full rebuild writes one.
+      // for a build with no baseline — its next full rebuild writes
+      // one.
       val ivfDrift = for {
         b <- params.get("ivfDistBuild").map(_.toLong) if b > 0L
         r <- params.get("ivfDistRecent").map(_.toLong)
@@ -415,7 +378,7 @@ object Index {
           d.medianSize, d.skew, cd, cp, emptied = false,
           drift = if (isPq) pqDrift else ivfDrift)
       }
-    } else if (mf.contains("shingles") || mf.contains("bands")) {
+    } else if (mf.contains("shingles")) {
       val s = Dedup.lshIndexStats(spark, path)
       val (cd, cp) = carryOf(spark, path, Seq("shingles", "bands"))
       IndexStats("lsh", s.nBandedDocs, s.nBuckets, s.maxBucket,

@@ -285,9 +285,9 @@ object Similarity {
     * mean micro-distance into the `ivfDist` EWMA, judge the excess
     * over the build baseline, and persist the ok/stale state through
     * the shared [[VersionedIndex.Drift]] machine (boundary crossings
-    * carried, WARN on entering stale). Indexes built before the
-    * baseline existed measure nothing (no denominator) until their
-    * next full rebuild writes one. */
+    * carried, WARN on entering stale). An index without a baseline
+    * (an empty build corpus) measures nothing (no denominator) until
+    * its next full rebuild writes one. */
   private def ivfDistParams(assigned: DataFrame,
       params: Map[String, String], path: String): Map[String, String] =
     centroidDistValue(assigned).map { case (n, v, x) =>
@@ -353,10 +353,9 @@ object Similarity {
     * PARAMS only (no data scan — a monitoring loop polls it for
     * free); `state`/`boundary` surface the persisted ok/stale machine
     * (None until an upsert has measured). Errors loudly on an index
-    * built before the baseline existed — its next full rebuild writes
-    * one (the pqCodebookStats contract). DELETES leave the signal
-    * untouched by design: it measures how recent INGEST fits the
-    * pinned geometry. */
+    * without a usable baseline — its next full rebuild writes one.
+    * DELETES leave the signal untouched by design: it measures how
+    * recent INGEST fits the pinned geometry. */
   final case class IvfCentroidStats(buildDist: Long, recentDist: Long,
       excess: Double, needsRecenter: Boolean,
       state: Option[String], boundary: Option[String])
@@ -380,11 +379,9 @@ object Similarity {
   def ivfCentroidStats(spark: org.apache.spark.sql.SparkSession,
       path: String,
       staleExcess: Double = DefaultIvfStaleExcess): IvfCentroidStats = {
-    val params = VersionedIndex.currentDir(spark, path)
-      .map(VersionedIndex.readParams(spark, _)).getOrElse(Map.empty)
-    ivfCentroidStatsFrom(params, staleExcess).getOrElse(
+    ivfCentroidStatsFrom(VersionedIndex.current(spark, path), staleExcess).getOrElse(
       sys.error(s"index at $path has no usable centroid-fit baseline " +
-        "(ivfDistBuild missing — built before the axis existed — or " +
+        "(ivfDistBuild missing — an empty build corpus — or " +
         "degenerate: the sampled build corpus fit its centroids " +
         "exactly); a full rebuild over real ingest writes one"))
   }
@@ -428,12 +425,10 @@ object Similarity {
     * that scale raises B so one discovery read stays a few GB. */
   val DefaultVecMapBuckets = 64
 
-  /** vec_map bucket key — a PURE function of the vec id (the LSH
-    * `idx_bucket` contract, `Dedup.idxBucketCol`): a mutation batch
-    * knows its touched vec_map partitions from the batch alone, with
-    * no index read. */
+  /** vec_map bucket key — [[VersionedIndex.bucketCol]] of the vec id
+    * cast to long, so int and long batches of one id share a bucket. */
   private def vbCol(id: Column, buckets: Int): Column =
-    pmod(xxhash64(id.cast("long")), lit(buckets.toLong)).cast("int")
+    VersionedIndex.bucketCol(id.cast("long"), buckets)
 
   /** Derived-table writer for `vec_map`: a column-pruned projection of
     * the lists table STAGED THIS COMMIT — the expensive assignment
@@ -496,64 +491,34 @@ object Similarity {
   }
 
   /** Current committed lists table, manifest-resolved (partial commits
-    * leave untouched list partitions in earlier versions); legacy flat
-    * layout (pre-versioning `<path>/list_id=…`) falls back to a plain
-    * read of `path`. */
+    * leave untouched list partitions in earlier versions). */
   private def readIvfLists(spark: org.apache.spark.sql.SparkSession,
       path: String): DataFrame =
-    if (VersionedIndex.currentDir(spark, path).isDefined)
-      VersionedIndex.readTable(spark, path, "lists")
-    else spark.read.parquet(path)
+    VersionedIndex.readTable(spark, path, "lists")
 
   /** The index's list GEOMETRY — (list_id, c_emb), nLists rows. The
     * authoritative `centroids` member table makes probe selection an
     * O(nLists) read instead of an O(index) lists scan, and survives
     * DELETION of seed vectors (a takedown removes the data row from
-    * `lists`; the geometry row here is not corpus data and stays).
-    * Indexes committed before the table existed derive it from the
-    * `vec_id == list_id` seed rows — correct there, because without a
-    * deletion path every seed row is still present. */
+    * `lists`; the geometry row here is not corpus data and stays). */
   def readIvfCentroids(spark: org.apache.spark.sql.SparkSession,
-      path: String): DataFrame = {
-    val hasTable = VersionedIndex.currentDir(spark, path).isDefined &&
-      VersionedIndex.manifest(spark, path).contains("centroids")
-    if (hasTable) VersionedIndex.readTable(spark, path, "centroids")
-    else readIvfLists(spark, path)
-      .filter(col("vec_id") === col("list_id"))
-      .select(col("list_id").cast("long").as("list_id"),
-        col("embedding").as("c_emb"))
-  }
-
-  /** The committed vec_map side table, if this index has one (indexes
-    * built before it existed migrate at their next full rewrite). */
-  private def readVecMap(spark: org.apache.spark.sql.SparkSession,
-      path: String): Option[DataFrame] =
-    if (VersionedIndex.currentDir(spark, path).isDefined &&
-        VersionedIndex.manifest(spark, path).contains("vec_map"))
-      Some(VersionedIndex.readTable(spark, path, "vec_map"))
-    else None
+      path: String): DataFrame =
+    VersionedIndex.readTable(spark, path, "centroids")
 
   /** Mutation-discovery read: index rows whose vec_id is in `ids`, as
     * (vec_id, list_id, vb), plus the batch's vb partition set. Reads
     * ONLY those vb partitions of the vec_map side table — O(batch) per
     * trigger, with the vb literals in PartitionFilters (LayoutSpec
-    * asserts the pruning) — never the lists table. None when the index
-    * predates vec_map; callers fall back to a (vec_id, list_id)
-    * column-pruned scan of the whole lists table until the next full
-    * rewrite migrates the layout. */
+    * asserts the pruning) — never the lists table. */
   private[graft] def vecMapHits(spark: org.apache.spark.sql.SparkSession,
-      path: String, ids: DataFrame): Option[(DataFrame, Seq[Int])] =
-    readVecMap(spark, path).map { vm =>
-      val buckets = VersionedIndex.currentDir(spark, path)
-        .map(VersionedIndex.readParams(spark, _)).flatMap(_.get("vecMapBuckets"))
-        .getOrElse(sys.error(s"index at $path has vec_map but no " +
-          "vecMapBuckets param")).toInt
-      val vbs = ids.select(vbCol(col("vec_id"), buckets).as("vb"))
-        .distinct().collect().map(_.getInt(0)).toSeq // ≤ buckets values
-      val hits = vm.filter(col("vb").isin(vbs.map(Int.box): _*))
-        .join(broadcast(ids.select(col("vec_id"))), Seq("vec_id"))
-      (hits, vbs)
-    }
+      path: String, ids: DataFrame, buckets: Int): (DataFrame, Seq[Int]) = {
+    val vbs = ids.select(vbCol(col("vec_id"), buckets).as("vb"))
+      .distinct().collect().map(_.getInt(0)).toSeq // ≤ buckets values
+    val hits = VersionedIndex.readTable(spark, path, "vec_map")
+      .filter(col("vb").isin(vbs.map(Int.box): _*))
+      .join(broadcast(ids.select(col("vec_id"))), Seq("vec_id"))
+    (hits, vbs)
+  }
 
   /** UPSERT a batch of vectors into a persisted IVF index — the
     * per-crawl-round form of buildIvfIndex, the ANN twin of
@@ -580,16 +545,11 @@ object Similarity {
     * partitions rewrite, the rest carry. Once the manifest references
     * `maxVersionChain` distinct versions, the upsert compacts with one
     * full rewrite, bounding read fan-out and letting old versions
-    * sweep (which also migrates pre-vec_map indexes to the new
-    * layout). */
+    * sweep. */
   def upsertIvfIndex(newEmb: DataFrame, path: String,
       maxVersionChain: Int = 8): Unit = {
     val spark = newEmb.sparkSession
-    val vdir = VersionedIndex.currentDir(spark, path)
-    val raw = readIvfLists(spark, path)
-    val index = raw
-      .select(col("vec_id"), col("label"), col("embedding"),
-        col("list_id").cast("long").as("list_id"))
+    val params = VersionedIndex.current(spark, path)
     val centroids = readIvfCentroids(spark, path)
       .select(col("list_id").as("centroid_id"), col("c_emb"))
     val w = org.apache.spark.sql.expressions.Window
@@ -613,21 +573,17 @@ object Similarity {
       .cache()
     try {
       val newIds = newEmb.select(col("vec_id")).distinct()
-      val params = vdir.map(VersionedIndex.readParams(spark, _))
-        .getOrElse(Map.empty)
-      val buckets = params.get("vecMapBuckets").map(_.toInt)
-        .getOrElse(DefaultVecMapBuckets)
+      val buckets = params("vecMapBuckets").toInt
       // per-list adds/removes of this batch — bounded by nLists, so
       // the collects are driver-side plan steps; they yield BOTH the
       // touched-partition set and the incrementally-maintained list
       // histogram persisted for drift detection (ivfIndexStats).
       // Discovery is vb-pruned through vec_map — O(batch), never an
-      // index scan (legacy fallback until the next full rewrite).
-      val hits = vecMapHits(spark, path, newIds)
+      // index scan.
+      val (hits, vbs) = vecMapHits(spark, path, newIds, buckets)
       val adds = assignedNew.groupBy(col("list_id")).count()
         .collect().map(r => r.getLong(0) -> r.getLong(1)).toMap
-      val removes = hits.map(_._1)
-        .getOrElse(index.join(broadcast(newIds), Seq("vec_id")))
+      val removes = hits
         .groupBy(col("list_id")).count()
         .collect().map(r => r.getLong(0) -> r.getLong(1)).toMap
       val prevSizes = ivfListSizes(spark, path)
@@ -635,19 +591,9 @@ object Similarity {
         l -> (prevSizes.getOrElse(l, 0L) - removes.getOrElse(l, 0L) +
           adds.getOrElse(l, 0L))
       }.toMap.filter(_._2 > 0)
-      val statsParams = (params - "listSizes") ++ skewParam(newSizes) +
-        ("vecMapBuckets" -> buckets.toString)
-      val fullMf = vdir.map(_ => VersionedIndex.manifest(spark, path))
-        .getOrElse(Map.empty)
-      val prevMf = fullMf.getOrElse("lists", Map.empty)
-      val centroidsMf = fullMf.getOrElse("centroids", Map.empty)
-      val vmMf = fullMf.getOrElse("vec_map", Map.empty)
-      val pqMf = fullMf.getOrElse("pq", Map.empty)
-      val pqCbMf = fullMf.getOrElse("pq_codebook", Map.empty)
       // IVF-PQ layer: new rows code against the PINNED codebook (like
       // assignment against pinned centroids); re-training is a rebuild
-      val pqCb = if (pqMf.nonEmpty || pqCbMf.nonEmpty)
-        Some(readPqCodebook(spark, path)) else None
+      val pqCb = pqCodebookOf(spark, path, params)
       // codebook-staleness EWMA (shared batch-weighted fold,
       // [[VersionedIndex.Drift.ewma]]) — O(batch), no index scan;
       // pqCodebookStats turns it into the needsRetrain signal
@@ -661,83 +607,93 @@ object Similarity {
       // batch, measured against the PINNED list geometry — the drift
       // axis Index.stats surfaces for the plain-IVF kind
       val distParams = ivfDistParams(assignedNew, params, path)
-      // chain length if we carried: prior owners (any table) + new
-      val chainOwners = prevMf.values.toSet ++ vmMf.values.toSet ++
-        pqMf.values.toSet
-      val partialOk = prevMf.nonEmpty && !prevMf.contains(VersionedIndex.WholeTable) &&
-        (chainOwners.size + 1) <= maxVersionChain
-      if (!partialOk) {
-        // full rewrite: legacy layout, or compaction point reached —
-        // also (re)writes the authoritative centroids table and the
-        // vec_map/list_sizes (and pq, if present) side tables,
-        // migrating older indexes
-        val merged = index.join(newIds, Seq("vec_id"), "left_anti")
-          .unionByName(assignedNew.drop("c_sim"))
-        VersionedIndex.commit(spark, path,
-          Seq("lists" -> merged, "centroids" -> readIvfCentroids(spark, path),
-            "list_sizes" -> sizesDf(spark, newSizes)) ++
-            pqCb.map(cb => "pq_codebook" -> codebookDf(spark, cb)).toSeq,
-          statsParams ++ pqErrParams ++ distParams,
-          partitionBy = Map("lists" -> Seq("list_id"), "vec_map" -> Seq("vb"),
-            "pq" -> Seq("list_id")),
-          derive = Seq("vec_map" -> deriveVecMap(spark, buckets) _) ++
-            pqCb.map(cb => "pq" -> derivePq(spark, cb) _).toSeq)
-      } else {
-        // touched = lists gaining rows ∪ lists losing superseded rows
-        val touched = (adds.keySet ++ removes.keySet).toArray
-        if (touched.isEmpty) return // empty batch — nothing to commit
-        val touchedSet = touched.toSet
-        // prune on the RAW partition column with literals of its exact
-        // type — a CAST on the partition column would defeat pruning
-        val inVals: Seq[Any] =
-          if (raw.schema("list_id").dataType ==
-              org.apache.spark.sql.types.IntegerType)
-            touched.toSeq.map(v => Int.box(v.toInt))
-          else touched.toSeq.map(Long.box)
-        val rewritten = raw
-          .filter(col("list_id").isin(inVals: _*))
-          .select(col("vec_id"), col("label"), col("embedding"),
-            col("list_id").cast("long").as("list_id"))
-          .join(newIds, Seq("vec_id"), "left_anti")
-          .unionByName(assignedNew.drop("c_sim"))
-        val carry = prevMf.filter { case (dir, _) =>
-          scala.util.Try(dir.stripPrefix("list_id=").toLong).toOption
-            .forall(v => !touchedSet.contains(v))
-        }
-        // vec_map rides the same partial commit: its touched
-        // partitions are the batch ids' vb values — known from the
-        // batch alone — rewritten minus superseded ids plus the new
-        // assignments; every other vb partition carries
-        val vbs = hits.map(_._2).getOrElse(Seq.empty)
-        val vbSet = vbs.toSet
-        val vmWrite: Seq[(String, DataFrame)] = readVecMap(spark, path).toSeq.map { vm =>
-          "vec_map" -> vm.filter(col("vb").isin(vbs.map(Int.box): _*))
-            .join(newIds, Seq("vec_id"), "left_anti")
-            .unionByName(assignedNew.select(col("vec_id"), col("list_id"))
-              .withColumn("vb", vbCol(col("vec_id"), buckets)))
-        }
-        val vmCarry = vmMf.filter { case (dir, _) =>
-          scala.util.Try(dir.stripPrefix("vb=").toInt).toOption
-            .forall(v => !vbSet.contains(v))
-        }
+      // touched lists = lists gaining rows ∪ lists losing superseded
+      // rows; touched vb partitions = the batch ids' vb values, known
+      // from the batch alone
+      commitIvfMutation(spark, path, pqCb,
+        params ++ skewParam(newSizes) ++ pqErrParams ++ distParams,
+        newSizes, maxVersionChain, (adds.keySet ++ removes.keySet).toSeq, vbs,
+        _.join(newIds, Seq("vec_id"), "left_anti")
+          .unionByName(assignedNew.drop("c_sim")),
+        _.join(newIds, Seq("vec_id"), "left_anti")
+          .unionByName(assignedNew.select(col("vec_id"), col("list_id"))
+            .withColumn("vb", vbCol(col("vec_id"), buckets))))
+    } finally assignedNew.unpersist()
+  }
+
+  /** The pinned codebook of an IVF-PQ index; None for plain IVF. */
+  private def pqCodebookOf(spark: org.apache.spark.sql.SparkSession,
+      path: String, params: Map[String, String]): Option[Quantization.PqCodebook] =
+    if (params.contains("pqM")) Some(readPqCodebook(spark, path)) else None
+
+  /** ONE commit of an IVF mutation (upsert or delete). PARTIAL when the
+    * manifest allows it: only the `touched` list partitions (and, for
+    * IVF-PQ, their `pq` code partitions, derived from the staged lists
+    * bytes) and the `vbs` vec_map partitions rewrite — each read
+    * partition-pruned and passed through `mergeLists` / `mergeVecMap`
+    * — and every other partition carries by manifest reference,
+    * byte-identical. A full rewrite of every member (`mergeLists` over
+    * the whole lists table, vec_map and pq derived from it) happens at
+    * the compaction point (`maxVersionChain`) or when a full takedown
+    * left whole-table members. An empty `touched` set commits nothing
+    * on the partial route. */
+  private def commitIvfMutation(spark: org.apache.spark.sql.SparkSession,
+      path: String, pqCb: Option[Quantization.PqCodebook],
+      params: Map[String, String], newSizes: Map[Long, Long],
+      maxVersionChain: Int, touched: Seq[Long], vbs: Seq[Int],
+      mergeLists: DataFrame => DataFrame,
+      mergeVecMap: DataFrame => DataFrame): Unit = {
+    val mf = VersionedIndex.manifest(spark, path)
+    def entries(t: String): Map[String, Int] = mf.getOrElse(t, Map.empty)
+    val raw = readIvfLists(spark, path)
+    def rows(lists: DataFrame): DataFrame =
+      lists.select(col("vec_id"), col("label"), col("embedding"),
+        col("list_id").cast("long").as("list_id"))
+    val partitionBy = Map("lists" -> Seq("list_id"), "vec_map" -> Seq("vb"),
+      "pq" -> Seq("list_id"))
+    val derivePqTable = pqCb.map(cb => "pq" -> derivePq(spark, cb) _).toSeq
+    // chain length if we carried: prior owners (any table) + new
+    val chainOwners = Seq("lists", "vec_map", "pq").flatMap(entries(_).values).toSet
+    val partialOk = entries("lists").nonEmpty &&
+      !entries("lists").contains(VersionedIndex.WholeTable) &&
+      (chainOwners.size + 1) <= maxVersionChain
+    if (!partialOk)
+      VersionedIndex.commit(spark, path,
+        Seq("lists" -> mergeLists(rows(raw)),
+          "centroids" -> readIvfCentroids(spark, path),
+          "list_sizes" -> sizesDf(spark, newSizes)) ++
+          pqCb.map(cb => "pq_codebook" -> codebookDf(spark, cb)).toSeq,
+        params, partitionBy,
+        derive = Seq("vec_map" -> deriveVecMap(spark, params("vecMapBuckets").toInt) _) ++
+          derivePqTable)
+    else if (touched.nonEmpty) {
+      val touchedSet = touched.toSet
+      val vbSet = vbs.toSet
+      // prune on the RAW partition column with literals of its exact
+      // type — a CAST on the partition column would defeat pruning
+      val inVals: Seq[Any] =
+        if (raw.schema("list_id").dataType == org.apache.spark.sql.types.IntegerType)
+          touched.map(v => Int.box(v.toInt))
+        else touched.map(Long.box)
+      def untouched(t: String, key: String, hit: String => Boolean): Map[String, Int] =
+        entries(t).filter { case (dir, _) => !hit(dir.stripPrefix(s"$key=")) }
+      def listHit(v: String) = scala.util.Try(v.toLong).toOption.exists(touchedSet)
+      VersionedIndex.commit(spark, path,
+        Seq("lists" -> mergeLists(rows(raw.filter(col("list_id").isin(inVals: _*)))),
+          "list_sizes" -> sizesDf(spark, newSizes),
+          "vec_map" -> mergeVecMap(VersionedIndex.readTable(spark, path, "vec_map")
+            .filter(col("vb").isin(vbs.map(Int.box): _*)))),
+        params, partitionBy,
         // pq mirrors lists partition-for-partition: derive codes from
         // the staged (touched-only) lists bytes, carry the rest
-        val pqCarry = pqMf.filter { case (dir, _) =>
-          scala.util.Try(dir.stripPrefix("list_id=").toLong).toOption
-            .forall(v => !touchedSet.contains(v))
-        }
-        VersionedIndex.commit(spark, path,
-          Seq("lists" -> rewritten,
-            "list_sizes" -> sizesDf(spark, newSizes)) ++ vmWrite,
-          statsParams ++ pqErrParams ++ distParams,
-          partitionBy = Map("lists" -> Seq("list_id"), "vec_map" -> Seq("vb"),
-            "pq" -> Seq("list_id")),
-          derive = pqCb.map(cb => "pq" -> derivePq(spark, cb) _).toSeq,
-          carry = Map("lists" -> carry, "centroids" -> centroidsMf,
-            "vec_map" -> vmCarry, "pq" -> pqCarry,
-            "pq_codebook" -> pqCbMf).filter(_._2.nonEmpty))
-      }
-    } finally assignedNew.unpersist()
+        derive = derivePqTable,
+        carry = Map("lists" -> untouched("lists", "list_id", listHit),
+          "centroids" -> entries("centroids"),
+          "vec_map" -> untouched("vec_map", "vb",
+            v => scala.util.Try(v.toInt).toOption.exists(vbSet)),
+          "pq" -> untouched("pq", "list_id", listHit),
+          "pq_codebook" -> entries("pq_codebook")).filter(_._2.nonEmpty))
+    }
   }
 
   /** DELETE vectors from a persisted IVF index — the takedown/opt-out
@@ -747,121 +703,38 @@ object Similarity {
     * carried by manifest reference, byte-identical, so a takedown of b
     * documents costs O(lists holding them), not O(index). Discovery of
     * those lists is O(batch): the `vec_map` side table prunes to the
-    * deleted ids' vb partitions (legacy indexes fall back to a
-    * (vec_id, list_id) column-pruned scan until their next full
-    * rewrite). vec_map partitions actually HOLDING deleted rows
-    * rewrite minus the ids in the same transaction; the rest carry.
-    * Deleting a seed vector removes its DATA row; the list geometry
-    * lives in the authoritative `centroids` table and is unaffected
-    * (probes of its list keep working). A later upsert of a deleted
-    * vec_id re-inserts it — deletion removes current rows, it is not a
-    * tombstone. The list-size histogram and skew stats update
-    * incrementally, same as upsert. Indexes without a `centroids`
-    * table (pre-deletion-era) take the full-rewrite path, which writes
-    * it — after the first delete the geometry no longer depends on
-    * seed rows being present. */
+    * deleted ids' vb partitions. vec_map partitions actually HOLDING
+    * deleted rows rewrite minus the ids in the same transaction; the
+    * rest carry. Deleting a seed vector removes its DATA row; the list
+    * geometry lives in the authoritative `centroids` table and is
+    * unaffected (probes of its list keep working). A later upsert of a
+    * deleted vec_id re-inserts it — deletion removes current rows, it
+    * is not a tombstone. The list-size histogram and skew stats update
+    * incrementally, same as upsert. */
   def deleteFromIvfIndex(deleteIds: DataFrame, path: String,
       maxVersionChain: Int = 8): Unit = {
     val spark = deleteIds.sparkSession
-    val vdir = VersionedIndex.currentDir(spark, path)
-    val raw = readIvfLists(spark, path)
-    val index = raw
-      .select(col("vec_id"), col("label"), col("embedding"),
-        col("list_id").cast("long").as("list_id"))
+    val params = VersionedIndex.current(spark, path)
     val ids = deleteIds.select(col("vec_id")).distinct()
-    val params = vdir.map(VersionedIndex.readParams(spark, _))
-      .getOrElse(Map.empty)
-    val buckets = params.get("vecMapBuckets").map(_.toInt)
-      .getOrElse(DefaultVecMapBuckets)
     // (list_id, vb, n) of rows holding deleted ids — bounded by
     // touched lists × touched buckets; vb-pruned through vec_map
-    val hits = vecMapHits(spark, path, ids)
-    val pairs = hits.map(_._1)
-      .getOrElse(index.join(broadcast(ids), Seq("vec_id"))
-        .withColumn("vb", lit(-1)))
+    val pairs = vecMapHits(spark, path, ids, params("vecMapBuckets").toInt)._1
       .groupBy(col("list_id"), col("vb")).count()
       .collect().map(r => (r.getLong(0), r.getInt(1), r.getLong(2)))
     val removes = pairs.groupBy(_._1).map { case (l, es) =>
       l -> es.map(_._3).sum
     }
     if (removes.isEmpty) return // nothing present to delete
-    val prevSizes = ivfListSizes(spark, path)
-    val newSizes = prevSizes.map { case (l, n) =>
+    val newSizes = ivfListSizes(spark, path).map { case (l, n) =>
       l -> (n - removes.getOrElse(l, 0L))
     }.filter(_._2 > 0)
-    val statsParams = (params - "listSizes") ++ skewParam(newSizes) +
-      ("vecMapBuckets" -> buckets.toString)
-    val fullMf = vdir.map(_ => VersionedIndex.manifest(spark, path))
-      .getOrElse(Map.empty)
-    val prevMf = fullMf.getOrElse("lists", Map.empty)
-    val centroidsMf = fullMf.getOrElse("centroids", Map.empty)
-    val vmMf = fullMf.getOrElse("vec_map", Map.empty)
-    val pqMf = fullMf.getOrElse("pq", Map.empty)
-    val pqCbMf = fullMf.getOrElse("pq_codebook", Map.empty)
-    val pqCb = if (pqMf.nonEmpty || pqCbMf.nonEmpty)
-      Some(readPqCodebook(spark, path)) else None
-    // partial deletes require the authoritative centroids table: once
-    // seed rows can be absent, geometry must not derive from them
-    val chainOwners = prevMf.values.toSet ++ vmMf.values.toSet ++
-      pqMf.values.toSet
-    val partialOk = prevMf.nonEmpty && centroidsMf.nonEmpty &&
-      !prevMf.contains(VersionedIndex.WholeTable) &&
-      (chainOwners.size + 1) <= maxVersionChain
-    if (!partialOk) {
-      VersionedIndex.commit(spark, path,
-        Seq("lists" -> index.join(ids, Seq("vec_id"), "left_anti"),
-          "centroids" -> readIvfCentroids(spark, path),
-          "list_sizes" -> sizesDf(spark, newSizes)) ++
-          pqCb.map(cb => "pq_codebook" -> codebookDf(spark, cb)).toSeq,
-        statsParams,
-        partitionBy = Map("lists" -> Seq("list_id"), "vec_map" -> Seq("vb"),
-          "pq" -> Seq("list_id")),
-        derive = Seq("vec_map" -> deriveVecMap(spark, buckets) _) ++
-          pqCb.map(cb => "pq" -> derivePq(spark, cb) _).toSeq)
-    } else {
-      val touched = removes.keySet.toArray
-      val inVals: Seq[Any] =
-        if (raw.schema("list_id").dataType ==
-            org.apache.spark.sql.types.IntegerType)
-          touched.toSeq.map(v => Int.box(v.toInt))
-        else touched.toSeq.map(Long.box)
-      val rewritten = raw
-        .filter(col("list_id").isin(inVals: _*))
-        .select(col("vec_id"), col("label"), col("embedding"),
-          col("list_id").cast("long").as("list_id"))
-        .join(ids, Seq("vec_id"), "left_anti")
-      val touchedSet = touched.toSet
-      val carry = prevMf.filter { case (dir, _) =>
-        scala.util.Try(dir.stripPrefix("list_id=").toLong).toOption
-          .forall(v => !touchedSet.contains(v))
-      }
-      // only vb partitions that actually HELD deleted rows rewrite (a
-      // pure delete adds nothing elsewhere); the rest carry
-      val vbs = pairs.map(_._2).distinct.toSeq
-      val vbSet = vbs.toSet
-      val vmWrite: Seq[(String, DataFrame)] = readVecMap(spark, path).toSeq.map { vm =>
-        "vec_map" -> vm.filter(col("vb").isin(vbs.map(Int.box): _*))
-          .join(ids, Seq("vec_id"), "left_anti")
-      }
-      val vmCarry = vmMf.filter { case (dir, _) =>
-        scala.util.Try(dir.stripPrefix("vb=").toInt).toOption
-          .forall(v => !vbSet.contains(v))
-      }
-      val pqCarry = pqMf.filter { case (dir, _) =>
-        scala.util.Try(dir.stripPrefix("list_id=").toLong).toOption
-          .forall(v => !touchedSet.contains(v))
-      }
-      VersionedIndex.commit(spark, path,
-        Seq("lists" -> rewritten,
-          "list_sizes" -> sizesDf(spark, newSizes)) ++ vmWrite,
-        statsParams,
-        partitionBy = Map("lists" -> Seq("list_id"), "vec_map" -> Seq("vb"),
-          "pq" -> Seq("list_id")),
-        derive = pqCb.map(cb => "pq" -> derivePq(spark, cb) _).toSeq,
-        carry = Map("lists" -> carry, "centroids" -> centroidsMf,
-          "vec_map" -> vmCarry, "pq" -> pqCarry,
-          "pq_codebook" -> pqCbMf).filter(_._2.nonEmpty))
-    }
+    // only vb partitions that actually HELD deleted rows rewrite (a
+    // pure delete adds nothing elsewhere); the rest carry
+    commitIvfMutation(spark, path, pqCodebookOf(spark, path, params),
+      params ++ skewParam(newSizes), newSizes, maxVersionChain,
+      removes.keySet.toSeq, pairs.map(_._2).distinct.toSeq,
+      _.join(ids, Seq("vec_id"), "left_anti"),
+      _.join(ids, Seq("vec_id"), "left_anti"))
   }
 
   /** The committed index's vector rows (vec_id, label, embedding) —
@@ -899,37 +772,13 @@ object Similarity {
     Map("listSkew" -> f"$skew%.3f")
   }
 
-  /** Legacy format: sizes serialized as one `params` text line
-    * (pre-`list_sizes`-table indexes only). */
-  private def parseSizes(s: String): Map[Long, Long] =
-    s.split(",").iterator.filter(_.contains(":")).map { e =>
-      val Array(l, n) = e.split(":", 2); l.toLong -> n.toLong
-    }.toMap
-
-  /** Per-list cardinalities of the committed index, maintained
-    * incrementally from each batch's adds and removes — O(batch),
-    * never an index scan. Read order: the `list_sizes` member table
-    * (current layout, ≤ nLists rows), then the legacy `listSizes`
-    * params line, then — for indexes predating both — one aggregation
-    * over the lists table that reads ONLY the partition column, which
-    * parquet answers from file metadata with no vector data I/O. */
+  /** Per-list cardinalities of the committed index: the `list_sizes`
+    * member table (≤ nLists rows), maintained incrementally from each
+    * batch's adds and removes — O(batch), never an index scan. */
   def ivfListSizes(spark: org.apache.spark.sql.SparkSession,
-      path: String): Map[Long, Long] = {
-    val hasTable = VersionedIndex.currentDir(spark, path).isDefined &&
-      VersionedIndex.manifest(spark, path).contains("list_sizes")
-    if (hasTable)
-      VersionedIndex.readTable(spark, path, "list_sizes")
-        .collect().map(r => r.getLong(0) -> r.getLong(1)).toMap // ≤ nLists rows
-    else VersionedIndex.currentDir(spark, path)
-      .flatMap(d => VersionedIndex.readParams(spark, d).get("listSizes"))
-      .map(parseSizes)
-      .getOrElse {
-        readIvfLists(spark, path)
-          .groupBy(col("list_id").cast("long").as("list_id"))
-          .count().collect()
-          .map(r => r.getLong(0) -> r.getLong(1)).toMap // ≤ nLists rows
-      }
-  }
+      path: String): Map[Long, Long] =
+    VersionedIndex.readTable(spark, path, "list_sizes")
+      .collect().map(r => r.getLong(0) -> r.getLong(1)).toMap // ≤ nLists rows
 
   /** Skew statistic + rebuild decision for the committed IVF index. */
   /** The rebuild trigger's default: max/median list skew beyond this
@@ -966,9 +815,8 @@ object Similarity {
     * the many O(batch) mutations between rebuilds. Layout-aware: a
     * plain IVF index rebuilds with [[buildIvfIndex]]; an IVF-PQ index
     * rebuilds with [[buildIvfPqIndex]], which RETRAINS the PQ
-    * codebook from the current corpus (same m; kPq from the persisted
-    * `pqK` param, falling back to the current codebook's size for
-    * pre-round-10 indexes). The codebook is pinned at build time
+    * codebook from the current corpus (same m and persisted `pqK`,
+    * training rounds and sample). The codebook is pinned at build time
     * exactly like the centroid geometry, so the drift policy must
     * refresh both: after heavy upsert drift the old codewords
     * describe a corpus that no longer exists and ADC quality degrades
@@ -984,22 +832,16 @@ object Similarity {
     * deliberately re-shard. */
   def rebuildIvfIndex(spark: org.apache.spark.sql.SparkSession,
       path: String, nLists: Option[Int] = None): Unit = {
+    val params = VersionedIndex.current(spark, path)
     val rows = readIvfIndexRows(spark, path)
-    val params = VersionedIndex.currentDir(spark, path)
-      .map(VersionedIndex.readParams(spark, _)).getOrElse(Map.empty)
-    val buckets = params.get("vecMapBuckets").map(_.toInt)
-      .getOrElse(DefaultVecMapBuckets)
-    val lists = nLists.orElse(params.get("nLists").map(_.toInt)).getOrElse(
-      sys.error(s"index at $path has no persisted nLists; pass nLists explicitly"))
-    if (params.contains("pqM")) {
-      val cb = readPqCodebook(spark, path)
-      val kPq = params.get("pqK").map(_.toInt)
-        .getOrElse(cb.codes.head.length)
-      buildIvfPqIndex(rows, lists, path, pqM = cb.m, pqK = kPq,
-        vecMapBuckets = buckets,
-        trainRounds = params.get("pqTrainRounds").map(_.toInt).getOrElse(2),
-        trainSample = params.get("pqTrainSample").map(_.toInt).getOrElse(4096))
-    } else buildIvfIndex(rows, lists, path, vecMapBuckets = buckets)
+    val buckets = params("vecMapBuckets").toInt
+    val lists = nLists.getOrElse(params("nLists").toInt)
+    if (params.contains("pqM"))
+      buildIvfPqIndex(rows, lists, path, pqM = params("pqM").toInt,
+        pqK = params("pqK").toInt, vecMapBuckets = buckets,
+        trainRounds = params("pqTrainRounds").toInt,
+        trainSample = params("pqTrainSample").toInt)
+    else buildIvfIndex(rows, lists, path, vecMapBuckets = buckets)
   }
 
   /** Search the persisted index. Centroid ranking (the rows where
@@ -1015,8 +857,7 @@ object Similarity {
     val q = index.filter(col("vec_id") === queryId)
       .select(col("embedding").as("q_emb"))
     // probe selection reads the nLists-row centroids table, never the
-    // lists data (pre-centroids indexes fall back to the seed-row
-    // scan); a handle passes its preloaded geometry instead
+    // lists data; a handle passes its preloaded geometry instead
     val probes = centroids.getOrElse(readIvfCentroids(spark, indexPath))
       .crossJoin(broadcast(q))
       .withColumn("c_sim", Vectors.cosine(col("c_emb"), col("q_emb")))
@@ -1106,10 +947,10 @@ object Similarity {
 
   def pqCodebookStats(spark: org.apache.spark.sql.SparkSession, path: String,
       retrainRatio: Double = 1.5): PqDriftStats = {
-    val params = VersionedIndex.currentDir(spark, path)
-      .map(VersionedIndex.readParams(spark, _)).getOrElse(Map.empty)
+    val params = VersionedIndex.current(spark, path)
     val build = params.getOrElse("pqErrBuild",
-      sys.error(s"index at $path has no codebook error baseline")).toLong
+      sys.error(s"index at $path has no codebook error baseline " +
+        "(not an IVF-PQ index)")).toLong
     val recent = params.get("pqErrRecent").map(_.toLong).getOrElse(build)
     val ratio = recent.toDouble / math.max(build, 1L)
     PqDriftStats(build, recent, ratio, ratio >= retrainRatio)
@@ -1167,8 +1008,7 @@ object Similarity {
   /** The persisted codebook of an IVF-PQ index. */
   def readPqCodebook(spark: org.apache.spark.sql.SparkSession,
       path: String): Quantization.PqCodebook = {
-    val params = VersionedIndex.currentDir(spark, path)
-      .map(VersionedIndex.readParams(spark, _)).getOrElse(Map.empty)
+    val params = VersionedIndex.current(spark, path)
     val m = params.getOrElse("pqM",
       sys.error(s"index at $path has no PQ layer (pqM missing)")).toInt
     val subDim = params("pqSubDim").toInt
@@ -2064,29 +1904,12 @@ object Similarity {
   // plane-dot kernel only on the batch
   // ([[Dedup.embeddingNearDupIndexed]]).
 
-  private def sketchBucketCol(id: Column, nBuckets: Int): Column =
-    pmod(xxhash64(id), lit(nBuckets.toLong)).cast("int")
-
   private def sketchRows(emb: DataFrame, dim: Int, nBits: Int,
       nBuckets: Int): DataFrame =
     emb.select(col("vec_id"),
         graft.functions.Vectors.lshBucket(col("embedding"), dim, nBits).as("canon"),
         col("embedding"))
-      .withColumn("idx_bucket", sketchBucketCol(col("vec_id"), nBuckets))
-
-  /** The persisted boundary validates ids loudly (the ivfSeeds
-    * contract: validate where state commits): NULL and duplicate
-    * vec_ids each get their own message. Returns the batch row count
-    * so callers can no-op on empty batches without a second pass. */
-  private def requireUniqueVecIds(emb: DataFrame, where: String): Long = {
-    val r = emb.agg(count(lit(1)), count_distinct(col("vec_id")),
-      count(col("vec_id"))).head()
-    require(r.getLong(2) == r.getLong(0),
-      s"$where: ${r.getLong(0) - r.getLong(2)} NULL vec_id rows — vec_ids must be non-null")
-    require(r.getLong(1) == r.getLong(0),
-      s"$where: ${r.getLong(0) - r.getLong(1)} duplicate vec_id rows — vec_ids must be unique")
-    r.getLong(0)
-  }
+      .withColumn("idx_bucket", VersionedIndex.bucketCol(col("vec_id"), nBuckets))
 
   private def commitSketchVersion(spark: org.apache.spark.sql.SparkSession,
       path: String, sketch: DataFrame, dim: Int, nBits: Int, idxBuckets: Int,
@@ -2095,9 +1918,6 @@ object Similarity {
     VersionedIndex.commit(spark, path, Seq("sketch" -> sketch),
       Map("dim" -> dim.toString, "nBits" -> nBits.toString,
         "idxBuckets" -> idxBuckets.toString) ++ extraParams,
-      // no legacySweep: the sketch kind postdates versioning, so no
-      // pre-version layout can exist (sweeping would instead delete an
-      // unrelated user dir that happens to be named "sketch")
       partitionBy = Map("sketch" -> Seq("idx_bucket")),
       carry = carry)
 
@@ -2123,7 +1943,7 @@ object Similarity {
       nBits: Int = 32, idxBuckets: Int = 64): Unit = {
     require(nBits >= 1 && nBits <= 62)
     graft.plans.GraftFunctions.register(emb.sparkSession)
-    requireUniqueVecIds(emb, "writeSketchIndex")
+    VersionedIndex.requireUniqueIds(emb, "vec_id", "writeSketchIndex")
     commitSketchVersion(emb.sparkSession, path,
       sketchRows(emb, dim, nBits, idxBuckets), dim, nBits, idxBuckets)
   }
@@ -2211,23 +2031,21 @@ object Similarity {
       maxVersionChain: Int = 8): Unit = {
     val spark = newVecs.sparkSession
     graft.plans.GraftFunctions.register(spark)
-    val curDir = VersionedIndex.currentDir(spark, path).getOrElse(
-      sys.error(s"no committed sketch index at $path"))
-    val params = VersionedIndex.readParams(spark, curDir)
+    val params = VersionedIndex.current(spark, path)
     val (dim, nBits) = (params("dim").toInt, params("nBits").toInt)
-    val nBuckets = params.get("idxBuckets").map(_.toInt).getOrElse(64)
+    val nBuckets = params("idxBuckets").toInt
     // empty batch = no-op on BOTH branches: without this, a post-
     // takedown upsert (WholeTable manifest → !plan.ok full rewrite)
     // would commit a content-identical empty version per call — a
     // streaming ingest sink receiving empty micro-batches would grow
     // the version chain for nothing (the delete path's anyPresent
     // contract, mirrored)
-    if (requireUniqueVecIds(newVecs, "upsertSketchIndex") == 0L) return
+    if (VersionedIndex.requireUniqueIds(newVecs, "vec_id", "upsertSketchIndex") == 0L) return
     val newIds = newVecs.select(col("vec_id")).distinct()
     val fresh = sketchRows(newVecs, dim, nBits, nBuckets)
     val plan = VersionedIndex.planPartialRewrite(spark, path, Seq("sketch"),
-      newIds.select(sketchBucketCol(col("vec_id"), nBuckets).as("b")),
-      extraGate = true, maxVersionChain)
+      newIds.select(VersionedIndex.bucketCol(col("vec_id"), nBuckets).as("b")),
+      maxVersionChain)
     // the prior rows have TWO consumers per branch — the drift probe
     // and the commit's anti-join — so they are cached across the two
     // jobs instead of scanning the (pruned) partitions twice per
@@ -2240,7 +2058,7 @@ object Similarity {
           prior
             .join(newIds, Seq("vec_id"), "left_anti")
             .drop("idx_bucket")
-            .withColumn("idx_bucket", sketchBucketCol(col("vec_id"), nBuckets))
+            .withColumn("idx_bucket", VersionedIndex.bucketCol(col("vec_id"), nBuckets))
             .unionByName(fresh),
           dim, nBits, nBuckets, extraParams = drift)
       } finally prior.unpersist()
@@ -2272,15 +2090,13 @@ object Similarity {
   def deleteFromSketchIndex(deleteIds: DataFrame, path: String,
       maxVersionChain: Int = 8): Unit = {
     val spark = deleteIds.sparkSession
-    val curDir = VersionedIndex.currentDir(spark, path).getOrElse(
-      sys.error(s"no committed sketch index at $path"))
-    val params = VersionedIndex.readParams(spark, curDir)
+    val params = VersionedIndex.current(spark, path)
     val (dim, nBits) = (params("dim").toInt, params("nBits").toInt)
-    val nBuckets = params.get("idxBuckets").map(_.toInt).getOrElse(64)
+    val nBuckets = params("idxBuckets").toInt
     val ids = deleteIds.select(col("vec_id")).distinct()
     val plan = VersionedIndex.planPartialRewrite(spark, path, Seq("sketch"),
-      ids.select(sketchBucketCol(col("vec_id"), nBuckets).as("b")),
-      extraGate = true, maxVersionChain)
+      ids.select(VersionedIndex.bucketCol(col("vec_id"), nBuckets).as("b")),
+      maxVersionChain)
     // deleting only ABSENT ids commits NOTHING (no new version) — the
     // replay/no-op contract the streaming takedown sink documents; the
     // presence probe is one bounded semi-join over the partitions the
@@ -2294,7 +2110,7 @@ object Similarity {
         existing
           .join(ids, Seq("vec_id"), "left_anti")
           .drop("idx_bucket")
-          .withColumn("idx_bucket", sketchBucketCol(col("vec_id"), nBuckets)),
+          .withColumn("idx_bucket", VersionedIndex.bucketCol(col("vec_id"), nBuckets)),
         dim, nBits, nBuckets,
         // a takedown measures no drift; the last regime reading carries
         extraParams = VersionedIndex.Drift.carried(params))
@@ -2352,10 +2168,8 @@ object Similarity {
 
   def sketchIndexStats(spark: org.apache.spark.sql.SparkSession,
       path: String): SketchStats = {
-    val curDir = VersionedIndex.currentDir(spark, path).getOrElse(
-      sys.error(s"no committed sketch index at $path"))
-    val params = VersionedIndex.readParams(spark, curDir)
-    val idxBuckets = params.get("idxBuckets").map(_.toInt).getOrElse(64)
+    val params = VersionedIndex.current(spark, path)
+    val idxBuckets = params("idxBuckets").toInt
     val (dRate, dBand, dCross) = (params.get("driftFlipRate").map(_.toDouble),
       params.get("driftBand"), params.get("driftBoundary"))
     val cur = VersionedIndex.currentVersion(spark, path).getOrElse(

@@ -2,7 +2,8 @@ package graft.operators
 
 import org.apache.hadoop.fs.{FileSystem, Path}
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.{Column, DataFrame, SparkSession}
+import org.apache.spark.sql.functions.{col, count, count_distinct, lit, pmod, xxhash64}
 
 /** Generic versioned on-disk index with atomic commits and
   * Iceberg-style partial commits — the persistence contract shared by
@@ -45,12 +46,27 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
   * Every FileSystem mutation checks its boolean return and throws —
   * HDFS reports rename/delete failure by returning false, not by
   * exception.
+  *
+  * ONE on-disk format: every commit writes `format=`[[Format]] into
+  * the version params, and every read resolves the current version
+  * through [[currentVersion]], which refuses a version with a missing
+  * or different format (and [[current]] refuses a path with no
+  * committed version, an unversioned layout included) — an index in
+  * another format is an error naming the path and the format found,
+  * never a silent migration. The decisions every index kind shares
+  * live here too: the bucket key ([[bucketCol]]), the eager id check
+  * at commit ([[requireUniqueIds]]) and the params check
+  * ([[requireParams]]).
   */
 object VersionedIndex {
 
   val CommitMarker = "_GRAFT_COMMITTED"
   val ParamsFile = "params"
   val ManifestFile = "MANIFEST"
+  /** Params key of the on-disk format, and the one format this build
+    * writes and reads. */
+  val FormatKey = "format"
+  val Format = "1"
 
   /** Staging dirs older than this (by mtime) are treated as crashed
     * writers and swept at the next commit. Younger ones may belong to
@@ -88,72 +104,121 @@ object VersionedIndex {
           .map(v => v -> fs.exists(new Path(st.getPath, CommitMarker)))
       }.sortBy(_._1)
 
-  /** Number of the current committed version, if any. */
-  def currentVersion(spark: SparkSession, path: String): Option[Int] = {
-    val (fs, root) = fsFor(spark, path)
-    versions(fs, root).filter(_._2).lastOption.map(_._1)
-  }
-
-  /** Directory of the current committed version, if any. */
-  def currentDir(spark: SparkSession, path: String): Option[String] =
-    currentVersion(spark, path).map(v => s"$path/v=$v")
-
-  def readParams(spark: SparkSession, dir: String): Map[String, String] = {
-    val (fs, _) = fsFor(spark, dir)
-    val p = new Path(dir, ParamsFile)
+  private def paramsAt(fs: FileSystem, vdir: Path): Map[String, String] = {
+    val p = new Path(vdir, ParamsFile)
     if (!fs.exists(p)) Map.empty
     else readSmallText(fs, p).linesIterator.filter(_.contains("=")).map { l =>
       val Array(k, v) = l.split("=", 2); k -> v.trim
     }.toMap
   }
 
-  /** Fail fast when the caller's parameters disagree with the ones the
-    * index was built with (only keys present in the stored params are
-    * compared — legacy indexes without params pass). */
-  def requireParams(spark: SparkSession, dir: String,
-      expected: Map[String, String]): Unit = {
-    val stored = readParams(spark, dir)
-    expected.foreach { case (k, v) =>
-      stored.get(k).foreach(s => require(s == v,
-        s"index at $dir was written with $k=$s; got $k=$v"))
+  /** The current committed version and its params, if any. Refuses a
+    * current version whose params carry a missing or different
+    * [[FormatKey]]: every read path resolves through here, so no
+    * reader ever serves another format. */
+  private def currentAt(spark: SparkSession,
+      path: String): Option[(Int, Map[String, String])] = {
+    val (fs, root) = fsFor(spark, path)
+    versions(fs, root).filter(_._2).lastOption.map { case (v, _) =>
+      val params = paramsAt(fs, new Path(root, s"v=$v"))
+      val found = params.get(FormatKey)
+      if (!found.contains(Format))
+        sys.error(s"index at $path (v=$v) has " +
+          found.fold(s"no $FormatKey param")(f => s"$FormatKey=$f") +
+          s"; this build reads only $FormatKey=$Format — rebuild the index")
+      (v, params)
     }
   }
 
+  /** Number of the current committed version, if any; a version in
+    * another format is refused. */
+  def currentVersion(spark: SparkSession, path: String): Option[Int] =
+    currentAt(spark, path).map(_._1)
+
+  /** Directory of the current committed version, if any. */
+  def currentDir(spark: SparkSession, path: String): Option[String] =
+    currentVersion(spark, path).map(v => s"$path/v=$v")
+
+  def readParams(spark: SparkSession, dir: String): Map[String, String] = {
+    val (fs, vdir) = fsFor(spark, dir)
+    paramsAt(fs, vdir)
+  }
+
+  /** Params of the current committed version — the entry every index
+    * read starts from. Throws, naming the path, when nothing is
+    * committed there; a directory holding files but no committed
+    * `v=N` (an unversioned layout) is reported with what was found. */
+  def current(spark: SparkSession, path: String): Map[String, String] =
+    currentAt(spark, path).map(_._2).getOrElse {
+      val (fs, root) = fsFor(spark, path)
+      val found =
+        if (!fs.exists(root)) Seq.empty
+        else fs.listStatus(root).toSeq.map(_.getPath.getName).sorted
+      sys.error(s"no committed index at $path" +
+        (if (found.isEmpty) ""
+         else s" (found ${found.mkString(", ")} but no committed v=N " +
+           s"version: an unversioned layout; this build reads only " +
+           s"$FormatKey=$Format — rebuild the index)"))
+    }
+
+  /** Fail fast when the caller's parameters disagree with the ones the
+    * index at `path` was built with (`stored` = its [[current]]
+    * params). A key missing from the stored params fails too. */
+  def requireParams(path: String, stored: Map[String, String],
+      expected: Map[String, String]): Unit =
+    expected.foreach { case (k, v) =>
+      val s = stored.getOrElse(k,
+        sys.error(s"index at $path has no $k param (expected $k=$v)"))
+      require(s == v, s"index at $path was written with $k=$s; got $k=$v")
+    }
+
+  /** THE bucket key of every hash-bucketed index member (the LSH and
+    * sketch `idx_bucket`, the IVF `vec_map` `vb`, the dup-cluster
+    * state): a pure function of the id, so a mutation batch knows its
+    * touched partitions from the batch alone, with no index read.
+    * xxhash64 hashes the id's physical type — an int and the same
+    * value as a long land in different buckets — so a kind whose ids
+    * may arrive as either casts before calling (IVF `vec_map` casts
+    * to long). */
+  def bucketCol(id: Column, nBuckets: Int): Column =
+    pmod(xxhash64(id), lit(nBuckets.toLong)).cast("int")
+
+  /** The eager id check where index state commits: one aggregation
+    * (it doubles as the materialization of a cached input, so it is
+    * ~free) rejecting NULL ids and duplicate ids, each with its own
+    * message — `count_distinct` skips NULLs, so folding them into the
+    * duplicate count would misreport a NULL as a duplicate. Returns
+    * the row count so callers can no-op on an empty batch. */
+  def requireUniqueIds(df: DataFrame, id: String, where: String): Long = {
+    val r = df.agg(count(lit(1)), count(col(id)), count_distinct(col(id))).head()
+    val (rows, nonNull, distinct) = (r.getLong(0), r.getLong(1), r.getLong(2))
+    require(nonNull == rows,
+      s"$where: ${rows - nonNull} NULL $id rows — ids must be non-null")
+    require(distinct == nonNull,
+      s"$where: ${nonNull - distinct} duplicate $id rows — ids must be " +
+        "unique (one row per item)")
+    rows
+  }
+
   /** The current committed version's manifest:
-    * table → (partition dir name → owner version). Versions written
-    * before manifests existed report every member table as wholly
-    * owned by the current version (their layout is exactly that). */
-  def manifest(spark: SparkSession, path: String): Map[String, Map[String, Int]] = {
+    * table → (partition dir name → owner version). */
+  def manifest(spark: SparkSession, path: String): Map[String, Map[String, Int]] =
+    currentVersion(spark, path).fold(Map.empty[String, Map[String, Int]])(
+      manifestAt(spark, path, _))
+
+  private def manifestAt(spark: SparkSession, path: String,
+      v: Int): Map[String, Map[String, Int]] = {
     val (fs, root) = fsFor(spark, path)
-    versions(fs, root).filter(_._2).lastOption match {
-      case None => Map.empty
-      case Some((v, _)) =>
-        val vdir = new Path(root, s"v=$v")
-        val mf = new Path(vdir, ManifestFile)
-        if (fs.exists(mf)) {
-          readSmallText(fs, mf).linesIterator.filter(_.contains("\t")).toSeq.map { l =>
-            val Array(key, owner) = l.split("\t", 2)
-            val (table, part) = key.split("/", 2) match {
-              case Array(t, p) => (t, p)
-              case Array(t) => (t, WholeTable)
-            }
-            (table, part, owner.trim.toInt)
-          }.groupBy(_._1).map { case (t, es) =>
-            t -> es.map(e => e._2 -> e._3).toMap
-          }
-        } else {
-          // legacy full-version layout: synthesize from the listing
-          fs.listStatus(vdir).toSeq
-            .filter(st => st.isDirectory)
-            .map { st =>
-              val partDirs = fs.listStatus(st.getPath).toSeq
-                .filter(c => c.isDirectory && c.getPath.getName.contains("="))
-                .map(_.getPath.getName)
-              st.getPath.getName ->
-                (if (partDirs.isEmpty) Map(WholeTable -> v)
-                 else partDirs.map(_ -> v).toMap)
-            }.toMap
-        }
+    val mf = new Path(new Path(root, s"v=$v"), ManifestFile)
+    readSmallText(fs, mf).linesIterator.filter(_.contains("\t")).toSeq.map { l =>
+      val Array(key, owner) = l.split("\t", 2)
+      val (table, part) = key.split("/", 2) match {
+        case Array(t, p) => (t, p)
+        case Array(t) => (t, WholeTable)
+      }
+      (table, part, owner.trim.toInt)
+    }.groupBy(_._1).map { case (t, es) =>
+      t -> es.map(e => e._2 -> e._3).toMap
     }
   }
 
@@ -168,7 +233,7 @@ object VersionedIndex {
   def readTable(spark: SparkSession, path: String, table: String): DataFrame = {
     val cur = currentVersion(spark, path).getOrElse(
       sys.error(s"no committed version at $path"))
-    val parts = manifest(spark, path).getOrElse(table,
+    val parts = manifestAt(spark, path, cur).getOrElse(table,
       sys.error(s"table $table not in manifest at $path"))
     val owners = parts.values.toSet
     if (owners == Set(cur)) spark.read.parquet(s"$path/v=$cur/$table")
@@ -206,12 +271,10 @@ object VersionedIndex {
     * already written this commit. Derived tables join the manifest and
     * the atomic rename exactly like primary ones.
     *
-    * `legacySweep` names top-level dirs from a pre-version layout to
-    * remove after the first successful commit. */
+    * `params` are written with `format=`[[Format]] added. */
   def commit(spark: SparkSession, path: String,
       tables: Seq[(String, DataFrame)], params: Map[String, String],
       partitionBy: Map[String, Seq[String]] = Map.empty,
-      legacySweep: Seq[String] = Seq.empty,
       carry: Map[String, Map[String, Int]] = Map.empty,
       derive: Seq[(String, String => DataFrame)] = Seq.empty,
       onStaged: () => Unit = () => (),
@@ -268,8 +331,7 @@ object VersionedIndex {
       // key-SET probes keep a stats fallback when a chunk's
       // dictionary lapses (the dictionary is the primary set-probe
       // skip — LayoutProbe --lsh measures the decomposition). Any
-      // change here is an index LAYOUT change — bump the affected
-      // graft-* cache key versions (the r14 staging rule).
+      // change here is an index LAYOUT change — bump [[Format]].
       val ccols = clusterBy.getOrElse(name, Seq.empty)
       val sorted =
         if (ccols.isEmpty) out
@@ -312,9 +374,9 @@ object VersionedIndex {
         // schema survives in the part file's footer, the manifest
         // keeps the table (whole-owned), readers see zero typed rows,
         // and the next mutation routes through the full-rewrite branch
-        // exactly like a legacy layout — full takedown followed by
-        // re-ingest works for EVERY index kind (r13; pinned by the
-        // IVF/LSH/sketch takedown-then-reingest specs).
+        // — full takedown followed by re-ingest works for EVERY index
+        // kind (r13; pinned by the IVF/LSH/sketch
+        // takedown-then-reingest specs).
         val emptiedPartitioned =
           partDirs.isEmpty && partitionBy.get(name).exists(_.nonEmpty)
         if (emptiedPartitioned && carry.getOrElse(name, Map.empty).isEmpty) {
@@ -337,7 +399,7 @@ object VersionedIndex {
     }.mkString.getBytes("UTF-8"))
     finally mfOut.close()
     val out = fs.create(new Path(staging, ParamsFile), true)
-    try out.write(params.toSeq.sortBy(_._1)
+    try out.write((params + (FormatKey -> Format)).toSeq.sortBy(_._1)
       .map { case (k, v) => s"$k=$v\n" }.mkString.getBytes("UTF-8"))
     finally out.close()
     // the marker carries a writer-unique token: rename alone is not
@@ -368,17 +430,13 @@ object VersionedIndex {
         "already live (staging was renamed into it and has been removed)")
     }
 
-    // committed — sweep versions no longer referenced, plus any legacy layout
+    // committed — sweep versions no longer referenced
     val referenced = mf.values.flatMap(_.values).toSet + next
     vs.filter { case (v, committed) => committed && !referenced.contains(v) }
       .foreach { case (v, _) =>
         val d = new Path(root, s"v=$v")
         require(fs.delete(d, true), s"failed to sweep superseded $d")
       }
-    legacySweep.foreach { name =>
-      val d = new Path(root, name)
-      if (fs.exists(d)) require(fs.delete(d, true), s"failed to sweep legacy $d")
-    }
   }
 
   /** Floor for [[recommendIdxBuckets]]: below ~32 MB per bucket the
@@ -477,9 +535,8 @@ object VersionedIndex {
     *
     * `ok` iff the manifest supports a partial rewrite of `tables`:
     * every table present, no whole-table owner, and the version chain
-    * (prior owners + the next version) within `maxVersionChain`;
-    * `extraGate` lets callers add kind-specific conditions (the LSH
-    * legacy-layout check). When `ok`, `touched` holds the ≤ nBuckets
+    * (prior owners + the next version) within `maxVersionChain`.
+    * When `ok`, `touched` holds the ≤ nBuckets
     * bucket ids the mutation's key set maps to (one bounded driver
     * collect — a pure function of the keys, no index read),
     * `touchedDirs` their partition-dir names, and `carryFor(table)`
@@ -489,13 +546,13 @@ object VersionedIndex {
       touched: Seq[Int], carryFor: String => Map[String, Int])
 
   private[operators] def planPartialRewrite(spark: SparkSession, path: String,
-      tables: Seq[String], keyBuckets: DataFrame, extraGate: Boolean,
+      tables: Seq[String], keyBuckets: DataFrame,
       maxVersionChain: Int): PartialRewrite = {
     val mfAll = manifest(spark, path)
     val mfs = tables.map(t => t -> mfAll.getOrElse(t, Map.empty[String, Int]))
     val chainOk =
       (mfs.flatMap(_._2.values).toSet + -1).size <= maxVersionChain
-    val ok = extraGate && chainOk &&
+    val ok = chainOk &&
       mfs.forall { case (_, m) => m.nonEmpty && !m.contains(WholeTable) }
     if (!ok) PartialRewrite(ok = false, Nil, _ => Map.empty)
     else {

@@ -140,24 +140,21 @@ object CdcQueries {
       |WHERE NOT (tbl = 'media' AND is_deleted)
       |GROUP BY tbl, is_deleted
       |ORDER BY tbl, is_deleted""".stripMargin) { (s, d) =>
-    val dir = java.nio.file.Files.createTempDirectory("graft-q120").toString + "/m"
     // ONE shared build definition (buildReferenceMirror, also behind
-    // q145's cache and LayoutProbe --mirror); the deletes-against-live-
+    // q145 and LayoutProbe --mirror); the deletes-against-live-
     // mirror path (hard deletes removing rows already on disk) is
     // covered by SyncMirrorSpec's multi-batch streaming rounds.
-    buildReferenceMirror(s, d, dir)
-    val out = s.read.parquet(dir)
-      .groupBy(col("table").as("tbl"), col("is_deleted"))
-      .agg(count(lit(1)).as("n"), sum(col("id")).as("id_sum"))
-      .orderBy(col("tbl"), col("is_deleted"))
-      .localCheckpoint() // materialize before the temp mirror is removed
-    val p = new org.apache.hadoop.fs.Path(dir)
-    p.getFileSystem(s.sparkContext.hadoopConfiguration).delete(p.getParent, true)
-    out
+    QueryDef.withScratchDir(s, "graft-q120") { dir =>
+      buildReferenceMirror(s, d, dir)
+      s.read.parquet(dir)
+        .groupBy(col("table").as("tbl"), col("is_deleted"))
+        .agg(count(lit(1)).as("n"), sum(col("id")).as("id_sum"))
+        .orderBy(col("tbl"), col("is_deleted"))
+    }
   }
 
   /** THE reference-policy mirror build — one definition shared by the
-    * q120 runner, the q145 cache and `LayoutProbe --mirror`, so the
+    * q120 runner, q145 and `LayoutProbe --mirror`, so the
     * "q145 is gated against exactly q120's build" claim cannot drift:
     * keyed envelopes parsed and applied as ONE batch under the
     * reference routing policy.
@@ -182,34 +179,6 @@ object CdcQueries {
     Pipelines.applyCdcBatch(s, Cdc.parse(synthesizedKeyed(s, d), col("value")),
       mirrorDir, Pipelines.MirrorBuckets, Pipelines.ReferenceTablePolicy,
       Pipelines.TablePolicy.SkipTable, maxRecordsPerFile)
-  }
-
-  /** Build-once mirror cache for q145 (atomic-rename publish, the
-    * VectorQueries index pattern): [[buildReferenceMirror]] left on
-    * disk so the range-read query pays only the read. The "1" in the
-    * key is the mirror LAYOUT/SEMANTICS version (the graft-ivfpq2
-    * lesson) — bump it with any applyCdcBatch merge/routing/layout
-    * change or a stale cached mirror survives the content
-    * fingerprint. */
-  private[queries] def mirrorIdx(s: SparkSession, d: String): String = {
-    // "2": r21 replaced the dropDuplicates+rank merge with the
-    // struct-max aggregation — same winner per (table, id), but ties on
-    // (ts_ms, is_deleted) now resolve by value-max instead of
-    // arbitrarily, so the cached bytes may differ.
-    // "3": r22 folded the upsert/delete passes into one batch — winners
-    // provably identical (max is associative), but the build path
-    // changed, so the key bumps per the documented contract.
-    val idx = new java.io.File(System.getProperty("java.io.tmpdir"),
-      "graft-mirror3-" + QueryDef.sourceFingerprint(d, "events.parquet")).getPath
-    if (!new java.io.File(idx).exists()) {
-      val tmpRoot = new java.io.File(idx + ".build-" +
-        java.util.UUID.randomUUID().toString.take(8))
-      val tmp = new java.io.File(tmpRoot, "m")
-      buildReferenceMirror(s, d, tmp.getPath)
-      if (!tmp.renameTo(new java.io.File(idx))) QueryDef.deleteRecursively(tmpRoot)
-      else { tmpRoot.delete(); () }
-    }
-    idx
   }
 
   // The mirror as a SERVING table — the reference's SyncService read
@@ -246,10 +215,13 @@ object CdcQueries {
       |SELECT id, ts_ms, is_deleted FROM last
       |WHERE tbl = 'articles' AND id BETWEEN 40 AND 120
       |ORDER BY id""".stripMargin) { (s, d) =>
-    s.read.parquet(mirrorIdx(s, d))
-      .filter(col("table") === "articles" && col("id").between(40L, 120L))
-      .select(col("id"), col("ts_ms"), col("is_deleted"))
-      .orderBy(col("id"))
+    QueryDef.withScratchDir(s, "graft-q145") { dir =>
+      buildReferenceMirror(s, d, dir)
+      s.read.parquet(dir)
+        .filter(col("table") === "articles" && col("id").between(40L, 120L))
+        .select(col("id"), col("ts_ms"), col("is_deleted"))
+        .orderBy(col("id"))
+    }
   }
 
   val all: Seq[QueryDef] = Seq(q45, q46, q120, q145)

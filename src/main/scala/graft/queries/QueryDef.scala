@@ -20,27 +20,15 @@ object QueryDef {
   def rowsOnly(name: String)(run: (SparkSession, String) => DataFrame): QueryDef =
     QueryDef(name, run, None)
 
-  /** FNV-1a over `tableFile`'s (name, length, mtime) under `dir`: the
-    * build-once cache key for fingerprint-keyed artifacts (indexes,
-    * mirrors) — tracks the source table CONTENT so a regenerated
-    * testdata dir gets a fresh build instead of silently reusing a
-    * stale one. Shared by every cache in this package (one definition;
-    * a fix here reaches all of them). */
-  private[queries] def sourceFingerprint(dir: String, tableFile: String): String = {
-    val root = new java.io.File(dir, tableFile)
-    val files = (if (root.isDirectory) Option(root.listFiles()).map(_.toSeq).getOrElse(Nil)
-                 else Seq(root)).filter(_.isFile).sortBy(_.getName)
-    var fp = 0xcbf29ce484222325L
-    files.foreach { f =>
-      s"${f.getName}:${f.length}:${f.lastModified}".foreach { ch =>
-        fp = (fp ^ ch) * 0x100000001b3L
-      }
-    }
-    java.lang.Long.toHexString(fp)
-  }
-
-  private[queries] def deleteRecursively(f: java.io.File): Unit = {
-    if (f.isDirectory) Option(f.listFiles()).foreach(_.foreach(deleteRecursively))
-    f.delete(); ()
+  /** Run `f` against a fresh scratch path (inside a new temp dir),
+    * materialize its result, then delete the dir: a query that builds
+    * an on-disk artifact (an index, a mirror) pays the build itself,
+    * and no artifact outlives the query to be read by a later run. */
+  private[queries] def withScratchDir(s: SparkSession, prefix: String)(
+      f: String => DataFrame): DataFrame = {
+    val root = new org.apache.hadoop.fs.Path(
+      java.nio.file.Files.createTempDirectory(prefix).toString)
+    try f(s"$root/d").localCheckpoint() // materialize before the delete
+    finally root.getFileSystem(s.sparkContext.hadoopConfiguration).delete(root, true)
   }
 }

@@ -1,6 +1,6 @@
 package graft.queries
 
-import org.apache.spark.sql.SparkSession
+import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
 import graft.functions.Vectors
@@ -164,49 +164,21 @@ object VectorQueries {
 
   // IVF with full probe must recover the brute-force result exactly —
   // same oracle as q37; partial-probe recall is covered in
-  // SimilaritySpec. Runs through the PERSISTED index path: the index
-  // is built once per sf dir (list_id-partitioned parquet) and the
-  // search reads only probed partitions — no per-query index build or
-  // corpus-wide driver action.
-  /** Embeddings-table content fingerprint (the shared QueryDef
-    * helper): index cache keys track table CONTENT, so a regenerated
-    * testdata dir gets a fresh index instead of silently reusing a
-    * stale one. */
-  private def sourceFingerprint(dir: String): String =
-    QueryDef.sourceFingerprint(dir, "embeddings.parquet")
-
-  private def deleteRecursively(f: java.io.File): Unit =
-    QueryDef.deleteRecursively(f)
-
-  /** Build-once plain-IVF index cache shared by q55/q137. Build into
-    * a private temp dir, then publish with an atomic rename: a
-    * concurrent run can never observe a half-built index, and
-    * whichever builder loses the rename race discards its copy.
-    * The "3" is the index LAYOUT/SEMANTICS version (the graft-ivfpq2
-    * lesson; 2 retired the tasks×dirs staging layout, r14; 3 = the
-    * r19 dist_micro round-6 requantization — persisted ivfDist
-    * baselines under the old floor definition must not mix with new
-    * folds): bump it
-    * with any IVF build/layout/geometry change — the fingerprint
-    * tracks DATA only. "Layout" includes the SESSION CONFS the write
-    * ran under: an artifact cached before a writer-conf change keeps
-    * the old encoding silently (the r14 INT96 case — a
-    * timestamp-keyed cache written pre-TIMESTAMP_MICROS would carry
-    * dead row-group stats forever; audited r15: no current graft-*
-    * cache has a timestamp column, so no bump was needed). */
-  private def ivfIdx(s: SparkSession, d: String): String = {
-    val idx = new java.io.File(System.getProperty("java.io.tmpdir"),
-      "graft-ivf3-" + sourceFingerprint(d)).getPath
-    if (!new java.io.File(idx).exists()) {
-      val tmp = new java.io.File(idx + ".build-" + java.util.UUID.randomUUID().toString.take(8))
-      Similarity.buildIvfIndex(Tables.embeddings(s, d), 16, tmp.getPath)
-      if (!tmp.renameTo(new java.io.File(idx))) deleteRecursively(tmp)
+  // SimilaritySpec. Runs through the PERSISTED index path: the query
+  // builds the index (list_id-partitioned parquet) and the search
+  // reads only probed partitions.
+  /** Runs `f` against a plain-IVF index (nLists=16) built over the
+    * whole corpus in a scratch dir that is deleted after the result
+    * materializes — shared by q55/q137. */
+  private def withIvfIdx(s: SparkSession, d: String)(
+      f: String => DataFrame): DataFrame =
+    QueryDef.withScratchDir(s, "graft-ivf") { idx =>
+      Similarity.buildIvfIndex(Tables.embeddings(s, d), 16, idx)
+      f(idx)
     }
-    idx
-  }
 
-  val q55 = QueryDef("q55_ivf_full_probe", (s, d) => {
-    Similarity.ivfSearchIndexed(s, ivfIdx(s, d), 16, 0L, 10)
+  val q55 = QueryDef("q55_ivf_full_probe", (s, d) => withIvfIdx(s, d) { idx =>
+    Similarity.ivfSearchIndexed(s, idx, 16, 0L, 10)
       .select(col("vec_id"), col("label"), col("sim"))
   }, q37.oracle)
 
@@ -215,23 +187,15 @@ object VectorQueries {
   // then a full probe must STILL equal the brute-force ground truth —
   // the upsert path produces an index indistinguishable from a fresh
   // build for search purposes.
-  val q126 = QueryDef("q126_ivf_upsert_full_probe", (s, d) => {
-    // "3" = layout/semantics version (2 retired the tasks×dirs
-    // staging layout, r14; 3 = the r19 dist_micro round-6
-    // requantization); bump with any build/upsert change
-    val idx = new java.io.File(System.getProperty("java.io.tmpdir"),
-      "graft-ivfups3-" + sourceFingerprint(d)).getPath
-    if (!new java.io.File(idx).exists()) {
-      val tmp = new java.io.File(idx + ".build-" + java.util.UUID.randomUUID().toString.take(8))
+  val q126 = QueryDef("q126_ivf_upsert_full_probe", (s, d) =>
+    QueryDef.withScratchDir(s, "graft-ivfups") { idx =>
       val emb = Tables.embeddings(s, d)
-      Similarity.buildIvfIndex(emb.filter(col("vec_id") < 300), 16, tmp.getPath)
+      Similarity.buildIvfIndex(emb.filter(col("vec_id") < 300), 16, idx)
       Similarity.upsertIvfIndex(
         emb.filter(col("vec_id") >= 300)
-          .unionByName(emb.filter(col("vec_id") === 7L)), tmp.getPath)
-      if (!tmp.renameTo(new java.io.File(idx))) deleteRecursively(tmp)
-    }
-    Similarity.ivfSearchIndexed(s, idx, 16, 0L, 10)
-      .select(col("vec_id"), col("label"), col("sim"))
+          .unionByName(emb.filter(col("vec_id") === 7L)), idx)
+      Similarity.ivfSearchIndexed(s, idx, 16, 0L, 10)
+        .select(col("vec_id"), col("label"), col("sim"))
   }, q37.oracle)
 
   // The DELETION (takedown/opt-out) contract hash-gated: build the
@@ -240,24 +204,16 @@ object VectorQueries {
   // its seed rows — then upsert the rest, and a full probe must equal
   // brute force over EXACTLY the surviving vectors: deleted rows are
   // unfindable, everything else is undisturbed.
-  val q130 = QueryDef("q130_ivf_delete_probe", (s, d) => {
-    // "3" = layout/semantics version (2 retired the tasks×dirs
-    // staging layout, r14; 3 = the r19 dist_micro round-6
-    // requantization); bump with any build/delete change
-    val idx = new java.io.File(System.getProperty("java.io.tmpdir"),
-      "graft-ivfdel3-" + sourceFingerprint(d)).getPath
-    if (!new java.io.File(idx).exists()) {
-      val tmp = new java.io.File(idx + ".build-" + java.util.UUID.randomUUID().toString.take(8))
+  val q130 = QueryDef("q130_ivf_delete_probe", (s, d) =>
+    QueryDef.withScratchDir(s, "graft-ivfdel") { idx =>
       val emb = Tables.embeddings(s, d)
-      Similarity.buildIvfIndex(emb.filter(col("vec_id") < 1500), 16, tmp.getPath)
+      Similarity.buildIvfIndex(emb.filter(col("vec_id") < 1500), 16, idx)
       Similarity.deleteFromIvfIndex(
         emb.filter(col("vec_id") < 1500 && col("vec_id") % 7 === 3)
-          .select(col("vec_id")), tmp.getPath)
-      Similarity.upsertIvfIndex(emb.filter(col("vec_id") >= 1500), tmp.getPath)
-      if (!tmp.renameTo(new java.io.File(idx))) deleteRecursively(tmp)
-    }
-    Similarity.ivfSearchIndexed(s, idx, 16, 0L, 10)
-      .select(col("vec_id"), col("label"), col("sim"))
+          .select(col("vec_id")), idx)
+      Similarity.upsertIvfIndex(emb.filter(col("vec_id") >= 1500), idx)
+      Similarity.ivfSearchIndexed(s, idx, 16, 0L, 10)
+        .select(col("vec_id"), col("label"), col("sim"))
   }, Some(
     """WITH q AS (SELECT embedding AS qe FROM embeddings WHERE vec_id = 0),
       |s AS (SELECT vec_id, label, round(
@@ -636,28 +592,18 @@ object VectorQueries {
          |ORDER BY doc_a, doc_b""".stripMargin
     }) { (s, d) =>
     val docs = Tables.documents(s, d)
-    // "3" = layout/semantics version (2 retired the tasks×dirs
-    // staging layout, r14; 3 added doc_id/band-key clustering of the
-    // member tables, r15); bump with any LSH index
-    // build/upsert/delete change. Fingerprint tracks documents.parquet
-    // (this index's actual source — the file-local sourceFingerprint
-    // helper tracks embeddings, which this query never reads).
-    val idx = new java.io.File(System.getProperty("java.io.tmpdir"),
-      "graft-lshdel3-" + QueryDef.sourceFingerprint(d, "documents.parquet")).getPath
-    if (!new java.io.File(idx).exists()) {
-      val tmp = new java.io.File(idx + ".build-" + java.util.UUID.randomUUID().toString.take(8))
-      graft.operators.Dedup.writeLshIndex(
-        docs.filter(col("doc_id") % 3 === 0), col("doc_id"), col("text"), tmp.getPath)
-      graft.operators.Dedup.upsertLshIndex(
-        docs.filter(col("doc_id") % 3 === 1), col("doc_id"), col("text"), tmp.getPath)
-      graft.operators.Dedup.deleteFromLshIndex(
+    QueryDef.withScratchDir(s, "graft-lshdel") { idx =>
+      Dedup.writeLshIndex(
+        docs.filter(col("doc_id") % 3 === 0), col("doc_id"), col("text"), idx)
+      Dedup.upsertLshIndex(
+        docs.filter(col("doc_id") % 3 === 1), col("doc_id"), col("text"), idx)
+      Dedup.deleteFromLshIndex(
         docs.filter(col("doc_id") % 3 =!= 2 && col("doc_id") % 5 === 2)
-          .select(col("doc_id")), tmp.getPath)
-      if (!tmp.renameTo(new java.io.File(idx))) deleteRecursively(tmp)
+          .select(col("doc_id")), idx)
+      Dedup.incrementalLshPairsIndexed(
+        docs.filter(col("doc_id") % 3 === 2), col("doc_id"), col("text"), idx)
+        .orderBy(col("doc_a"), col("doc_b"))
     }
-    graft.operators.Dedup.incrementalLshPairsIndexed(
-      docs.filter(col("doc_id") % 3 === 2), col("doc_id"), col("text"), idx)
-      .orderBy(col("doc_a"), col("doc_b"))
   }
 
   // Hybrid retrieval: BM25 lexical top-10 (q93) + dense cosine top-10
@@ -763,25 +709,18 @@ object VectorQueries {
   // probed list partitions only (LayoutSpec pins the plan), and the
   // result must be IDENTICAL to the ad-hoc composition, so the oracle
   // is q134's four-stage replay, unchanged (the q55-vs-q37 move).
-  /** Build-once IVF-PQ index cache for q135/q136 (atomic-rename
-    * publish, q55's pattern). The number in the name is the
-    * layout/semantics version — "2" retired the pre-trained-codebook
-    * (round-9) layout, "3" the tasks×dirs staging file explosion
-    * (r14), "4" the r19 dist_micro round-6 requantization; bump with
-    * any codebook/build/layout change. */
-  private def ivfPqIdx(s: SparkSession, d: String): String = {
-    val idx = new java.io.File(System.getProperty("java.io.tmpdir"),
-      "graft-ivfpq4-" + sourceFingerprint(d)).getPath
-    if (!new java.io.File(idx).exists()) {
-      val tmp = new java.io.File(idx + ".build-" + java.util.UUID.randomUUID().toString.take(8))
-      Similarity.buildIvfPqIndex(Tables.embeddings(s, d), 16, tmp.getPath)
-      if (!tmp.renameTo(new java.io.File(idx))) deleteRecursively(tmp)
+  /** Runs `f` against an IVF-PQ index (nLists=16) built over the
+    * whole corpus in a scratch dir that is deleted after the result
+    * materializes — shared by q135/q136/q141/q144. */
+  private def withIvfPqIdx(s: SparkSession, d: String)(
+      f: String => DataFrame): DataFrame =
+    QueryDef.withScratchDir(s, "graft-ivfpq") { idx =>
+      Similarity.buildIvfPqIndex(Tables.embeddings(s, d), 16, idx)
+      f(idx)
     }
-    idx
-  }
 
-  val q135 = QueryDef("q135_ivf_pq_indexed", (s, d) => {
-    Similarity.ivfPqSearchIndexed(s, ivfPqIdx(s, d), 4, 0L, 10, 100)
+  val q135 = QueryDef("q135_ivf_pq_indexed", (s, d) => withIvfPqIdx(s, d) { idx =>
+    Similarity.ivfPqSearchIndexed(s, idx, 4, 0L, 10, 100)
       .select(col("vec_id"), col("label"), col("sim"))
   }, q134.oracle)
 
@@ -846,7 +785,7 @@ object VectorQueries {
     val queries = Tables.embeddings(s, d)
       .filter(col("vec_id").isin(0L, 3L, 7L, 11L))
       .select(col("vec_id").as("query_id"), col("embedding"))
-    Similarity.ivfPqSearchIndexedBatch(s, ivfPqIdx(s, d), 4, queries, 10, 100)
+    withIvfPqIdx(s, d)(Similarity.ivfPqSearchIndexedBatch(s, _, 4, queries, 10, 100))
   }
 
   // BATCHED plain-IVF serving over q55's persisted index: the same
@@ -867,11 +806,11 @@ object VectorQueries {
          |  FROM rb) z WHERE rn <= 10
          |ORDER BY query_id, sim DESC, vec_id""".stripMargin
     }) { (s, d) =>
-    val idx = ivfIdx(s, d) // q55's cached index (same geometry, nLists=16)
     val queries = Tables.embeddings(s, d)
       .filter(col("vec_id").isin(0L, 3L, 7L, 11L))
       .select(col("vec_id").as("query_id"), col("embedding"))
-    Similarity.ivfSearchIndexedBatch(s, idx, 4, queries, 10)
+    // q55's index shape (same geometry, nLists=16)
+    withIvfIdx(s, d)(Similarity.ivfSearchIndexedBatch(s, _, 4, queries, 10))
   }
 
   // Johnson-Lindenstrauss projected-space retrieval: embeddings
@@ -957,11 +896,13 @@ object VectorQueries {
          |  FROM embeddings e JOIN sl USING (vec_id), qv)
          |SELECT vec_id, label, sim FROM r ORDER BY sim DESC, vec_id LIMIT 10""".stripMargin
     }) { (s, d) =>
-    val h = graft.operators.Index.open(s, ivfPqIdx(s, d))
-      .asInstanceOf[graft.operators.Index.IvfPq]
     val e0 = Tables.embeddings(s, d).filter(col("vec_id") === 0L)
       .select(col("embedding")).head.getSeq[Float](0)
-    h.searchVector(e0.map(x => -x), 10, 4, 100)
+    withIvfPqIdx(s, d) { idx =>
+      graft.operators.Index.open(s, idx)
+        .asInstanceOf[graft.operators.Index.IvfPq]
+        .searchVector(e0.map(x => -x), 10, 4, 100)
+    }
   }
 
   // Size-capped blocked k-NN with the cap LOW enough (maxBlock=4,
@@ -1033,12 +974,14 @@ object VectorQueries {
       "WITH " + autoCte + base.substring("WITH ".length)
         .replace("rn <= 100", "rn <= (SELECT sl FROM auto)")
     }) { (s, d) =>
-    val h = graft.operators.Index.open(s, ivfPqIdx(s, d))
-      .asInstanceOf[graft.operators.Index.IvfPq]
     val queries = Tables.embeddings(s, d)
       .filter(col("vec_id").isin(0L, 3L, 7L, 11L))
       .select(col("vec_id").as("query_id"), col("embedding"))
-    h.searchBatch(queries, 10, 4) // shortlist: the handle's derived default
+    withIvfPqIdx(s, d) { idx =>
+      graft.operators.Index.open(s, idx)
+        .asInstanceOf[graft.operators.Index.IvfPq]
+        .searchBatch(queries, 10, 4) // shortlist: the handle's derived default
+    }
   }
 
   /** The recursive transitive-closure tail every CC-gated oracle
@@ -1185,25 +1128,18 @@ object VectorQueries {
          |ORDER BY vec_a, vec_b""".stripMargin
     }) { (s, d) =>
     val emb = Tables.embeddings(s, d)
-    // "2" = sketch layout/canon-semantics version (2 retired the
-    // tasks×dirs staging layout, r14); bump with any change to
-    // sketchRows/canon/bucketing or the commit layout
-    val idx = new java.io.File(System.getProperty("java.io.tmpdir"),
-      "graft-sketch2-" + sourceFingerprint(d)).getPath
-    if (!new java.io.File(idx).exists()) {
-      val tmp = new java.io.File(idx + ".build-" + java.util.UUID.randomUUID().toString.take(8))
+    QueryDef.withScratchDir(s, "graft-sketch") { idx =>
       Similarity.writeSketchIndex(
-        emb.filter(col("vec_id") % 3 === 0), tmp.getPath, 64)
+        emb.filter(col("vec_id") % 3 === 0), idx, 64)
       Similarity.upsertSketchIndex(
-        emb.filter(col("vec_id") % 3 === 1), tmp.getPath)
+        emb.filter(col("vec_id") % 3 === 1), idx)
       Similarity.deleteFromSketchIndex(
         emb.filter(col("vec_id") % 3 =!= 2 && col("vec_id") % 5 === 2)
-          .select(col("vec_id")), tmp.getPath)
-      if (!tmp.renameTo(new java.io.File(idx))) deleteRecursively(tmp)
+          .select(col("vec_id")), idx)
+      Dedup.embeddingNearDupIndexed(
+          emb.filter(col("vec_id") % 3 === 2), idx, 0.35)
+        .orderBy(col("vec_a"), col("vec_b"))
     }
-    Dedup.embeddingNearDupIndexed(
-        emb.filter(col("vec_id") % 3 === 2), idx, 0.35)
-      .orderBy(col("vec_a"), col("vec_b"))
   }
 
   // The recommended NOISY-regime sizing (recommendSketch's third row,
@@ -1320,9 +1256,9 @@ object VectorQueries {
   // closure per run (q149's measured 3.7× fixed-batch slope). Three
   // rounds: bootstrap {v%3=0} (full sorted-sketch clustering, the
   // one-time cost), round 1 folds {v%3=1} via the index, round 2
-  // folds {v%3=2}. Rounds 0–1 and the upserted index are cached
-  // build artifacts (the q148 pattern); the LIVE run is exactly one
-  // deployment round: index probe + state fold. The oracle replays
+  // folds {v%3=2}. Rounds 0–1 and the upserted index build in a
+  // scratch dir inside the query (the q148 pattern); the last round is
+  // exactly one deployment round: index probe + state fold. The oracle replays
   // each round's pair set over its own corpus restriction (prefixed
   // CTE sets — the union the index held at that round), unions the
   // accumulated pairs, and takes q149's recursive closure: CC over
@@ -1344,14 +1280,9 @@ object VectorQueries {
          |""".stripMargin + ccClosureSql
     }) { (s, d) =>
     val emb = Tables.embeddings(s, d)
-    // "1" = state/layout version; bump with any change to the sketch
-    // index layout, canon semantics, or the cluster-state schema
-    val root = new java.io.File(System.getProperty("java.io.tmpdir"),
-      "graft-ccstate1-" + sourceFingerprint(d)).getPath
-    if (!new java.io.File(root).exists()) {
-      val tmp = new java.io.File(root + ".build-" + java.util.UUID.randomUUID().toString.take(8))
-      val idx = tmp.getPath + "/idx"
-      val st = tmp.getPath + "/state"
+    QueryDef.withScratchDir(s, "graft-ccstate") { root =>
+      val idx = s"$root/idx"
+      val st = s"$root/state"
       // round 0: bootstrap — full block-less clustering of the initial
       // corpus + its sketch index (the q149 one-time cost)
       Similarity.writeSketchIndex(
@@ -1367,18 +1298,17 @@ object VectorQueries {
         a = "vec_a", b = "vec_b")
       Similarity.upsertSketchIndex(emb.filter(col("vec_id") % 3 === 1), idx)
       Dedup.writeClusterState(state1, st)
-      if (!tmp.renameTo(new java.io.File(root))) deleteRecursively(tmp)
+      // the LIVE round — what every subsequent crawl round costs:
+      // O(batch)-kernel pair detection against the persisted index +
+      // one fold of graph-sized edges into the persisted state
+      val pairs2 = Dedup.embeddingNearDupIndexed(
+        emb.filter(col("vec_id") % 3 === 2), idx, 0.35)
+      Dedup.mergePairsIntoClusters(
+          Dedup.readClusterState(s, st), pairs2,
+          a = "vec_a", b = "vec_b")
+        .select(col("doc_id").as("vec_id"), col("cluster"), col("csize"))
+        .orderBy(col("vec_id"))
     }
-    // the LIVE round — what every subsequent crawl round costs:
-    // O(batch)-kernel pair detection against the persisted index +
-    // one fold of graph-sized edges into the persisted state
-    val pairs2 = Dedup.embeddingNearDupIndexed(
-      emb.filter(col("vec_id") % 3 === 2), s"$root/idx", 0.35)
-    Dedup.mergePairsIntoClusters(
-        Dedup.readClusterState(s, s"$root/state"), pairs2,
-        a = "vec_a", b = "vec_b")
-      .select(col("doc_id").as("vec_id"), col("cluster"), col("csize"))
-      .orderBy(col("vec_id"))
   }
 
   // The centroid-staleness drift loop's kernel math hash-gated (r18,

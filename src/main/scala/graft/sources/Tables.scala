@@ -48,14 +48,18 @@ object Tables {
     *    (files ≫ cores), so at scale the helper is now metadata-only.
     *  - probe memo: below the gate (few files — the local/testdata
     *    case), the planned partition count is cached per (context,
-    *    parallelism, canonicalized-plan hash), so the many queries
-    *    wrapping the same loader subtree in one session (a bench
-    *    sweep, the composition chains) plan the probe once. Only
-    *    file-backed plans are memoized — an in-memory input keeps the
-    *    direct probe, exactly as before (same decision either way; the
-    *    memo exists purely to not re-pay physical planning). */
+    *    parallelism, canonicalized-plan hash, input-file count), so
+    *    the many queries wrapping the same loader subtree in one
+    *    session (a bench sweep, the composition chains) plan the probe
+    *    once. Only file-backed plans are memoized — an in-memory input
+    *    keeps the direct probe, exactly as before (same decision
+    *    either way; the memo exists purely to not re-pay physical
+    *    planning). The file count is in the key because a file index
+    *    compares by root path: a directory whose file set changes
+    *    within a session keeps its plan hash and must be probed
+    *    again. */
   private[graft] val fanOutProbeCache =
-    new java.util.concurrent.ConcurrentHashMap[(Int, Int, Int), Int]()
+    new java.util.concurrent.ConcurrentHashMap[(Int, Int, Int, Int), Int]()
 
   def fanOutForKernels(df: DataFrame): DataFrame = {
     val sc = df.sparkSession.sparkContext
@@ -67,7 +71,7 @@ object Tables {
         if (files.isEmpty) df.rdd.getNumPartitions
         else fanOutProbeCache.computeIfAbsent(
           (System.identityHashCode(sc), p,
-            df.queryExecution.analyzed.semanticHash()),
+            df.queryExecution.analyzed.semanticHash(), files.length),
           _ => df.rdd.getNumPartitions)
       if (n < p) df.repartition(p) else df
     }

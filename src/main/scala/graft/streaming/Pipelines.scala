@@ -803,8 +803,7 @@ object Pipelines {
       // otherwise turn a redelivered doc into a stream-killing raise
       .dropDuplicates(Seq("doc_id"))
       .localCheckpoint()
-    val hasIndex =
-      scala.util.Try(Dedup.currentLshIndexDir(spark, indexPath)).isSuccess
+    val hasIndex = graft.operators.VersionedIndex.currentDir(spark, indexPath).isDefined
     val pairs =
       if (hasIndex) Dedup.incrementalLshPairsIndexed(curated, col("doc_id"),
         col("scrubbed"), indexPath, threshold = threshold)
@@ -920,19 +919,18 @@ object Pipelines {
     var warnedNoCodebook = false
     var warnedNoDistBaseline = false
     // centroid-staleness trigger, shared by both IVF kinds: armed only
-    // once the index carries the ivfDist baseline (pre-axis layouts
-    // warn once and stay unmonitored until a rebuild writes one — the
-    // pqErrBuild guard's contract); the check itself reads params only
+    // once the index carries a usable ivfDist baseline (otherwise warn
+    // once and stay unmonitored until a rebuild writes one); the
+    // check itself reads params only
     def geometryStale(): Boolean = recenterExcess.exists { r =>
       // ONE params read serves the armed gate AND the excess math
-      // (ivfCentroidStatsFrom): None = unarmed — a layout predating
-      // the baseline, or a degenerate (zero) baseline whose excess
+      // (ivfCentroidStatsFrom): None = unarmed — no baseline (an empty
+      // build corpus), or a degenerate (zero) baseline whose excess
       // would be garbage and could lock this trigger into
       // rebuild-every-batch; warn once, stay unmonitored until a
       // rebuild over real ingest writes a usable baseline
-      val stats = VersionedIndex.currentDir(spark, indexPath)
-        .map(VersionedIndex.readParams(spark, _))
-        .flatMap(Similarity.ivfCentroidStatsFrom(_, r))
+      val stats = Similarity.ivfCentroidStatsFrom(
+        VersionedIndex.current(spark, indexPath), r)
       if (stats.isEmpty && !warnedNoDistBaseline) {
         warnedNoDistBaseline = true
         org.slf4j.LoggerFactory.getLogger(getClass).warn(
@@ -962,24 +960,7 @@ object Pipelines {
             case i: Index.IvfPq =>
               i.upsert(batch)
               val skewed = rebuildSkewThreshold.exists(t => i.stats(t).needsRebuild)
-              // an IVF-PQ layout committed before the staleness signal
-              // existed has no pqErrBuild baseline — skip (and warn
-              // once) instead of sys.error-ing the stream; the first
-              // rebuild writes the baseline and arms the trigger
-              val stale = retrainErrRatio.exists { r =>
-                val armed = VersionedIndex.currentDir(spark, indexPath)
-                  .map(VersionedIndex.readParams(spark, _))
-                  .exists(_.contains("pqErrBuild"))
-                if (!armed && !warnedNoCodebook) {
-                  warnedNoCodebook = true
-                  org.slf4j.LoggerFactory.getLogger(getClass).warn(
-                    s"vectorIngestSink: retrainErrRatio is set but the " +
-                      s"IVF-PQ index at $indexPath predates the " +
-                      "codebook-error baseline (no pqErrBuild param) — " +
-                      "staleness is unmonitored until the next rebuild")
-                }
-                armed && i.codebookStats(r).needsRetrain
-              }
+              val stale = retrainErrRatio.exists(i.codebookStats(_).needsRetrain)
               if (skewed || stale || geometryStale()) i.rebuild()
             case i: Index.Ivf =>
               if (retrainErrRatio.isDefined && !warnedNoCodebook) {

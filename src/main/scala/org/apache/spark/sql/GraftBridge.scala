@@ -19,12 +19,6 @@ object GraftBridge {
   def expression(c: Column): org.apache.spark.sql.catalyst.expressions.Expression =
     classic.ExpressionUtils.expression(c)
 
-  /** Drain the listener bus (private[spark]) — measurement mains that
-    * aggregate task metrics via a listener must flush queued events
-    * before reading their accumulators (CpuProbe). */
-  def waitListenerBusEmpty(spark: SparkSession, timeoutMs: Long): Unit =
-    spark.sparkContext.listenerBus.waitUntilEmpty(timeoutMs)
-
   /** Drop the block-manager storage behind a localCheckpoint'd frame.
     * `Dataset.unpersist` only consults the CacheManager, which never
     * sees RDD-level checkpoints — without this, an iterative operator

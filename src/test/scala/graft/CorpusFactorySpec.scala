@@ -60,7 +60,7 @@ class CorpusFactorySpec extends SparkSuite {
       (3L, docB), (4L, "too short"))
     q.processAllAvailable()
     assert(landedIds(s"$land/batch=0") == Set(1L, 3L))
-    assert(Dedup.currentLshIndexDir(spark, idx).endsWith("/v=1"))
+    assert(graft.operators.VersionedIndex.currentDir(spark, idx).exists(_.endsWith("/v=1")))
     assert(indexIds(idx) == Set(1L, 3L))
 
     // batch 1: doc 5 near-dups the INDEXED doc 3 (drops even though

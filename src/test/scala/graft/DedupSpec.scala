@@ -287,16 +287,30 @@ class DedupSpec extends SparkSuite {
       "v1 copy matches nothing — the superseded rows are gone")
   }
 
+  test("LSH index write rejects a NULL doc_id with a NULL-specific message") {
+    // count_distinct skips NULLs: without the dedicated non-null count
+    // a NULL id reads as "1 duplicate doc_id rows"
+    val dir = java.nio.file.Files.createTempDirectory("lshnull").toString
+    val t = "alpha beta gamma delta epsilon zeta eta theta iota kappa"
+    val docs = spark.createDataFrame(java.util.Arrays.asList(
+        org.apache.spark.sql.Row(1L, t), org.apache.spark.sql.Row(null, t + " mu")),
+      org.apache.spark.sql.types.StructType.fromDDL("doc_id BIGINT, text STRING"))
+    val e = intercept[IllegalArgumentException](
+      Dedup.writeLshIndex(docs, col("doc_id"), col("text"), dir))
+    assert(e.getMessage.contains("1 NULL doc_id rows") &&
+      !e.getMessage.contains("duplicate"), e.getMessage)
+  }
+
   test("LSH index versioning: upsert commits atomically, sweeps superseded versions") {
     import spark.implicits._
     val dir = java.nio.file.Files.createTempDirectory("lshver").toString
     val t1 = "alpha beta gamma delta epsilon zeta eta theta iota kappa"
     Dedup.writeLshIndex(Seq((1L, t1)).toDF("doc_id", "text"),
       col("doc_id"), col("text"), dir)
-    assert(Dedup.currentLshIndexDir(spark, dir).endsWith("/v=1"))
+    assert(graft.operators.VersionedIndex.currentDir(spark, dir).exists(_.endsWith("/v=1")))
     Dedup.upsertLshIndex(Seq((2L, t1 + " lambda")).toDF("doc_id", "text"),
       col("doc_id"), col("text"), dir)
-    assert(Dedup.currentLshIndexDir(spark, dir).endsWith("/v=2"))
+    assert(graft.operators.VersionedIndex.currentDir(spark, dir).exists(_.endsWith("/v=2")))
     // the partial commit CARRIES doc 1's untouched bucket from v=1 —
     // v=1 must survive (it is referenced by the v=2 manifest) and the
     // manifest-resolved read must see both docs in both tables
@@ -313,7 +327,7 @@ class DedupSpec extends SparkSuite {
     // and v=2 both sweep after it commits v=3
     Dedup.writeLshIndex(Seq((1L, t1), (2L, t1 + " lambda")).toDF("doc_id", "text"),
       col("doc_id"), col("text"), dir)
-    assert(Dedup.currentLshIndexDir(spark, dir).endsWith("/v=3"))
+    assert(graft.operators.VersionedIndex.currentDir(spark, dir).exists(_.endsWith("/v=3")))
     assert(!java.nio.file.Files.exists(java.nio.file.Paths.get(dir, "v=1")))
     assert(!java.nio.file.Files.exists(java.nio.file.Paths.get(dir, "v=2")))
   }
@@ -328,12 +342,12 @@ class DedupSpec extends SparkSuite {
     // but NO commit marker
     val orphan = java.nio.file.Paths.get(dir, "v=2", "shingles")
     java.nio.file.Files.createDirectories(orphan)
-    assert(Dedup.currentLshIndexDir(spark, dir).endsWith("/v=1"),
+    assert(graft.operators.VersionedIndex.currentDir(spark, dir).exists(_.endsWith("/v=1")),
       "reader must stay on the last committed version")
     // next upsert sweeps the orphan and commits cleanly as v=2
     Dedup.upsertLshIndex(Seq((2L, t1 + " mu")).toDF("doc_id", "text"),
       col("doc_id"), col("text"), dir)
-    assert(Dedup.currentLshIndexDir(spark, dir).endsWith("/v=2"))
+    assert(graft.operators.VersionedIndex.currentDir(spark, dir).exists(_.endsWith("/v=2")))
     assert(Dedup.readLshTable(spark, dir, "shingles").select("doc_id")
       .distinct().count() == 2)
   }

@@ -69,7 +69,7 @@ class LayoutSpec extends SparkSuite {
     // (present, recent==build at a fresh build, full-memory window)
     val v2params = VersionedIndex.readParams(spark, s"$idx/v=2")
     assert(v2params - "ivfDistBuild" - "ivfDistRecent" - "ivfDistWindow" ==
-      Map("nLists" -> "8", "vecMapBuckets" -> "64"))
+      Map("format" -> "1", "nLists" -> "8", "vecMapBuckets" -> "64"))
     assert(v2params.get("ivfDistBuild").exists(_.toLong > 0L) &&
       v2params.get("ivfDistRecent") == v2params.get("ivfDistBuild") &&
       v2params.get("ivfDistWindow").contains("256"))
@@ -248,7 +248,8 @@ class LayoutSpec extends SparkSuite {
     // DISCOVERY: the mutation-scope read carries a vb partition filter —
     // it reads the batch's buckets, never the index
     val ids = emb.filter(col("vec_id").isin(7L, 13L)).select("vec_id")
-    val (hits, vbs) = Similarity.vecMapHits(spark, idx, ids).get
+    val (hits, vbs) = Similarity.vecMapHits(spark, idx, ids,
+      Similarity.DefaultVecMapBuckets)
     assert(vbs.size <= 2, s"two ids touch at most two buckets: $vbs")
     // match per-scan tree-string lines (robust under AQE, where
     // collectLeaves can return one AdaptiveSparkPlan leaf)
@@ -364,16 +365,71 @@ class LayoutSpec extends SparkSuite {
     assert(got3.nonEmpty && want3.nonEmpty)
   }
 
-  test("ivfListSizes: legacy params line readable; mutations migrate to the list_sizes table") {
-    import graft.operators.{Similarity, VersionedIndex}
-    import spark.implicits._
-    // an index written by the pre-table format: histogram in params
-    val dir = Files.createTempDirectory("lsizes").toString + "/index"
-    VersionedIndex.commit(spark, dir,
-      Seq("lists" -> Seq((1L, 0L), (2L, 0L), (3L, 5L)).toDF("vec_id", "list_id")),
-      Map("nLists" -> "8", "listSizes" -> "0:2,5:1"))
-    assert(Similarity.ivfListSizes(spark, dir) == Map(0L -> 2L, 5L -> 1L),
-      "legacy params histogram must stay readable")
+  /** Rewrite the params of `dir`'s current version through `edit`
+    * (dropping the local FS checksum sidecar so the edited file reads
+    * cleanly). */
+  private def editParams(dir: String)(edit: Seq[String] => Seq[String]): Unit = {
+    val vdir = graft.operators.VersionedIndex.versions(
+      new org.apache.hadoop.fs.Path(dir).getFileSystem(spark.sparkContext.hadoopConfiguration),
+      new org.apache.hadoop.fs.Path(dir)).filter(_._2).last._1
+    val pfile = java.nio.file.Paths.get(dir, s"v=$vdir",
+      graft.operators.VersionedIndex.ParamsFile)
+    val lines = Files.readAllLines(pfile).toArray.map(_.toString).toSeq
+    Files.write(pfile, edit(lines).mkString("", "\n", "\n").getBytes("UTF-8"))
+    Files.deleteIfExists(pfile.getParent.resolve(
+      "." + graft.operators.VersionedIndex.ParamsFile + ".crc"))
+  }
+
+  private def copyTree(src: String, dst: String): Unit = {
+    val from = java.nio.file.Paths.get(src)
+    val walk = Files.walk(from)
+    try walk.forEach { p =>
+      Files.copy(p, java.nio.file.Paths.get(dst).resolve(from.relativize(p).toString))
+    } finally walk.close()
+  }
+
+  test("index format: open and stats refuse unversioned, format-less and format=2 indexes") {
+    import graft.operators.{Dedup, Index, Similarity, VersionedIndex}
+    val root = Files.createTempDirectory("idxformat").toString
+    val emb = Tables.embeddings(spark, sf0001).filter(col("vec_id") < 200)
+    val docs = Tables.documents(spark, sf0001).filter(col("doc_id") < 200)
+    Similarity.buildIvfIndex(emb, 4, s"$root/ivf")
+    Similarity.buildIvfPqIndex(emb, 4, s"$root/ivf-pq", pqM = 4, pqK = 4)
+    Dedup.writeLshIndex(docs, col("doc_id"), col("text"), s"$root/lsh")
+    Similarity.writeSketchIndex(emb, s"$root/sketch", 64)
+    for (kind <- Seq("ivf", "ivf-pq", "lsh", "sketch")) {
+      val good = s"$root/$kind"
+      assert(VersionedIndex.current(spark, good)(VersionedIndex.FormatKey) == "1")
+      assert(Index.open(spark, good).kind == kind && Index.stats(spark, good).kind == kind)
+      // (1) unversioned: the member tables at the top level, no v=N
+      val unversioned = s"$root/$kind-unversioned"
+      copyTree(s"$good/v=1", unversioned)
+      // (2) a committed version whose params lack the format key —
+      // the shape of every index written before the key existed
+      // (e.g. the `listSizes` params-line era)
+      val formatless = s"$root/$kind-formatless"
+      copyTree(good, formatless)
+      editParams(formatless)(_.filterNot(_.startsWith("format=")))
+      // (3) a format this build does not know
+      val future = s"$root/$kind-format2"
+      copyTree(good, future)
+      editParams(future)(_.map(l => if (l.startsWith("format=")) "format=2" else l))
+      for ((dir, want) <- Seq(unversioned -> "unversioned layout",
+          formatless -> "no format param", future -> "format=2")) {
+        for ((what, read) <- Seq[(String, () => Any)](
+            "open" -> (() => Index.open(spark, dir)),
+            "stats" -> (() => Index.stats(spark, dir)))) {
+          val e = intercept[RuntimeException](read())
+          assert(e.getMessage.contains(dir) && e.getMessage.contains(want),
+            s"$kind $what of $dir: ${e.getMessage}")
+        }
+      }
+    }
+    // the kind-level readers refuse through the same check — the IVF
+    // histogram read no longer falls back to a params line
+    val e = intercept[RuntimeException](
+      Similarity.ivfListSizes(spark, s"$root/ivf-formatless"))
+    assert(e.getMessage.contains("no format param"), e.getMessage)
   }
 
   test("index commit: dead staging dir is invisible to readers and swept by the next writer") {
@@ -479,7 +535,8 @@ class LayoutSpec extends SparkSuite {
     // the DISCOVERY read keeps its vb partition filter in every leg of
     // the chained vec_map too (same manifest mechanism as lists)
     val (hits, _) = Similarity.vecMapHits(spark, idx,
-      emb.filter(col("vec_id").isin(7L, 13L)).select("vec_id")).get
+      emb.filter(col("vec_id").isin(7L, 13L)).select("vec_id"),
+      Similarity.DefaultVecMapBuckets)
     val vmLegs = hits.queryExecution.executedPlan.toString
       .linesIterator.filter(s => s.contains("FileScan") && s.contains("vec_map"))
       .toSeq
@@ -1050,26 +1107,16 @@ class LayoutSpec extends SparkSuite {
     assert(ids == Set(1L, 3L), s"takedown through the sink left $ids")
   }
 
-  test("ingest sink survives a legacy IVF-PQ index without the pqErrBuild baseline") {
-    import graft.operators.{Similarity, VersionedIndex}
-    import org.apache.spark.sql.functions.col
+  test("ingest sink refuses an IVF-PQ index in another format") {
+    import graft.operators.Similarity
     implicit val sqlCtx = spark.sqlContext
-    val base = Files.createTempDirectory("vecinglegacy").toString
+    val base = Files.createTempDirectory("vecingformat").toString
     val idx = s"$base/index"
     val emb = Tables.embeddings(spark, sf0001)
     Similarity.buildIvfPqIndex(emb.filter(col("vec_id") < 200), 8, idx)
-    // simulate a pre-staleness-round index: strip the error baseline
-    val vdir = VersionedIndex.currentDir(spark, idx).get
-    val pfile = java.nio.file.Paths.get(
-      vdir.stripPrefix("file:"), VersionedIndex.ParamsFile)
-    val kept = java.nio.file.Files.readAllLines(pfile).toArray.map(_.toString)
-      .filterNot(_.startsWith("pqErr"))
-    java.nio.file.Files.write(pfile, String.join("\n", kept: _*).getBytes)
-    // the local FS keeps a .params.crc sidecar — drop it so the
-    // hand-edited file reads cleanly
-    java.nio.file.Files.deleteIfExists(
-      pfile.getParent.resolve("." + VersionedIndex.ParamsFile + ".crc"))
-    assert(!VersionedIndex.readParams(spark, vdir).contains("pqErrBuild"))
+    // an index without the format key (the era that also lacked the
+    // pqErrBuild baseline) must stop the stream loudly, not be served
+    editParams(idx)(_.filterNot(_.startsWith("format=")))
     val rows = emb.filter(col("vec_id") >= 200 && col("vec_id") < 260)
       .select("vec_id", "label", "embedding").collect().map(r =>
         (r.getLong(0), r.getInt(1), r.getSeq[Float](2)))
@@ -1080,11 +1127,12 @@ class LayoutSpec extends SparkSuite {
       nLists = 8, retrainErrRatio = Some(1.5),
       trigger = org.apache.spark.sql.streaming.Trigger.ProcessingTime(0))
     stream.addData(rows.toIndexedSeq)
-    q.processAllAvailable() // must NOT die on the missing baseline
-    assert(q.exception.isEmpty,
-      s"legacy index killed the stream: ${q.exception}")
+    intercept[Exception](q.processAllAvailable())
     q.stop()
-    assert(Similarity.ivfPqSearchIndexed(spark, idx, 4, 210L, 5, 25).count() == 5)
+    val msgs = q.exception.toSeq.flatMap(e => Iterator
+      .iterate[Throwable](e)(_.getCause).takeWhile(_ != null).map(_.getMessage))
+    assert(msgs.exists(m => m.contains(idx) && m.contains("no format param")),
+      s"expected a format refusal, got ${msgs.mkString(" | ")}")
   }
 
   test("streaming dedup by natural key drops duplicates across batches") {
@@ -1368,19 +1416,18 @@ class LayoutSpec extends SparkSuite {
     val lshDetail = Dedup.lshIndexStats(spark, s"$root/lsh")
     assert(lsh.rows == lshDetail.nBandedDocs &&
       lsh.partitions == lshDetail.nBuckets && lsh.skew == lshDetail.skew)
-    // the legacy unversioned LSH layout (<path>/shingles, no manifest)
-    // is still a served data path (readLshTable reads it) — health
-    // polling must not error on an index queries answer from; carry is
-    // structurally 0 (no versions to carry across)
+    // an unversioned LSH layout (<path>/shingles, no manifest) is not
+    // an index of this format: health polling refuses it, naming the
+    // path and what it found, instead of serving it
     val legacyDir = s"$root/legacylsh"
     Dedup.readLshTable(spark, s"$root/lsh", "shingles")
       .write.parquet(s"$legacyDir/shingles")
     Dedup.readLshTable(spark, s"$root/lsh", "bands")
       .write.parquet(s"$legacyDir/bands")
-    val leg = Index.stats(spark, legacyDir)
-    assert(leg.kind == "lsh" && !leg.emptied &&
-      leg.rows == lsh.rows && leg.partitions == lsh.partitions &&
-      leg.carryDepth == 0 && leg.carriedParts == 0)
+    val leg = intercept[RuntimeException](Index.stats(spark, legacyDir))
+    assert(leg.getMessage.contains(s"no committed index at $legacyDir") &&
+      leg.getMessage.contains("shingles") &&
+      leg.getMessage.contains("unversioned layout"), leg.getMessage)
 
     Similarity.writeSketchIndex(emb, s"$root/sk", 64)
     val sk0 = Index.stats(spark, s"$root/sk")

@@ -252,6 +252,16 @@ class PlanAssertionsSpec extends SparkSuite {
     // same plan again: memo hit (no growth), same decision
     graft.sources.Tables.fanOutForKernels(spark.read.parquet(s"$dir/one"))
     assert(graft.sources.Tables.fanOutProbeCache.size == 1)
+    // same directory, one more file: the plan hash is unchanged (the
+    // file index compares by root path) but the file count keys a
+    // fresh probe instead of a stale memo hit
+    spark.range(1000, 1010).coalesce(1).write.mode("append").parquet(s"$dir/one")
+    val grown = spark.read.parquet(s"$dir/one")
+    assert(grown.inputFiles.length == 2 && 2 < p)
+    val outGrown = graft.sources.Tables.fanOutForKernels(grown)
+    assert(graft.sources.Tables.fanOutProbeCache.size == 2,
+      "a changed file set must be probed again, not served from the memo")
+    assert(outGrown.collect().length == 1010)
   }
 
   test("bucketed co-located join is shuffle-free") {

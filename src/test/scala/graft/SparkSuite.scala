@@ -21,9 +21,11 @@ import org.scalatest.funsuite.AnyFunSuite
   *
   * Two defenses:
   *  - the accessor re-checks `sparkContext.isStopped` per call and
-  *    builds a FRESH session when the shared one has died, so a
-  *    context death costs at most the test that was running when it
-  *    happened, never the rest of the run;
+  *    builds a FRESH session when the shared one has died. Recovery
+  *    is per suite, not per test: each suite caches the session in
+  *    its `lazy val spark` at first use, so a context death poisons
+  *    the rest of the suite instance that is running; only suites
+  *    that start later resolve the fresh session;
   *  - `spark.cleaner.periodicGC.interval=2min` (default 30min —
   *    longer than the whole test run): 522 tests through one session
   *    accumulate unreferenced localCheckpoint/cache blocks that the
@@ -36,7 +38,8 @@ trait SparkSuite extends AnyFunSuite {
   // lazy val, not def: suites `import spark.implicits._`, which needs
   // a stable identifier. Each suite instance resolves the shared
   // session through the self-healing factory at its own first use, so
-  // a context death in an earlier suite never leaks into this one.
+  // a context death in an earlier suite never leaks into this one —
+  // but one during this suite stays with it until it ends.
   lazy val spark: SparkSession = SparkSuite.session()
 
   lazy val sf0001 = "/root/testdata/sf0.001"
