@@ -1483,9 +1483,8 @@ object Dedup {
     * unpartitioned (r15) layout. */
   private[graft] def ccStateBucketsOf(
       spark: org.apache.spark.sql.SparkSession, path: String): Option[Int] =
-    VersionedIndex.currentDir(spark, path)
-      .flatMap(d => VersionedIndex.readParams(spark, d)
-        .get("ccBuckets").map(_.toInt))
+    VersionedIndex.currentAt(spark, path)
+      .flatMap(_._2.get("ccBuckets").map(_.toInt))
 
   private def ccClustersStaged(state: DataFrame, n: Int): DataFrame =
     if (n <= 0) state.select(col("doc_id"), col("cluster"), col("csize"))

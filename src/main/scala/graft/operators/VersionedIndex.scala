@@ -116,7 +116,7 @@ object VersionedIndex {
     * current version whose params carry a missing or different
     * [[FormatKey]]: every read path resolves through here, so no
     * reader ever serves another format. */
-  private def currentAt(spark: SparkSession,
+  def currentAt(spark: SparkSession,
       path: String): Option[(Int, Map[String, String])] = {
     val (fs, root) = fsFor(spark, path)
     versions(fs, root).filter(_._2).lastOption.map { case (v, _) =>
@@ -139,7 +139,9 @@ object VersionedIndex {
   def currentDir(spark: SparkSession, path: String): Option[String] =
     currentVersion(spark, path).map(v => s"$path/v=$v")
 
-  def readParams(spark: SparkSession, dir: String): Map[String, String] = {
+  /** Params of an explicit version dir, unchecked — for tests that
+    * inspect a given `v=N`; reads go through [[current]]. */
+  private[graft] def readParams(spark: SparkSession, dir: String): Map[String, String] = {
     val (fs, vdir) = fsFor(spark, dir)
     paramsAt(fs, vdir)
   }
@@ -160,6 +162,22 @@ object VersionedIndex {
            s"version: an unversioned layout; this build reads only " +
            s"$FormatKey=$Format — rebuild the index)"))
     }
+
+  /** Whether an index is at `path` — the bootstrap-or-mutate test of
+    * the streaming sinks. False only when nothing is there but writer
+    * leftovers (`.staging-*` dirs, uncommitted `v=N` dirs); anything
+    * else resolves through [[current]], so an unversioned layout or a
+    * version in another format is refused, never read as "no index"
+    * and built over. */
+  def exists(spark: SparkSession, path: String): Boolean = {
+    val (fs, root) = fsFor(spark, path)
+    val uncommitted = versions(fs, root).filterNot(_._2).map(v => s"v=${v._1}").toSet
+    val found =
+      if (!fs.exists(root)) Seq.empty
+      else fs.listStatus(root).toSeq.map(_.getPath.getName)
+        .filterNot(n => n.startsWith(".staging-") || uncommitted(n))
+    found.nonEmpty && { current(spark, path); true }
+  }
 
   /** Fail fast when the caller's parameters disagree with the ones the
     * index at `path` was built with (`stored` = its [[current]]

@@ -803,7 +803,7 @@ object Pipelines {
       // otherwise turn a redelivered doc into a stream-killing raise
       .dropDuplicates(Seq("doc_id"))
       .localCheckpoint()
-    val hasIndex = graft.operators.VersionedIndex.currentDir(spark, indexPath).isDefined
+    val hasIndex = graft.operators.VersionedIndex.exists(spark, indexPath)
     val pairs =
       if (hasIndex) Dedup.incrementalLshPairsIndexed(curated, col("doc_id"),
         col("scrubbed"), indexPath, threshold = threshold)
@@ -942,7 +942,7 @@ object Pipelines {
       stats.exists(_.needsRecenter)
     }
     foreachBatchSink(vectors, checkpoint, trigger) { (batch, _) =>
-        if (VersionedIndex.currentDir(spark, indexPath).isEmpty) {
+        if (!VersionedIndex.exists(spark, indexPath)) {
           if (pq) Similarity.buildIvfPqIndex(batch, nLists, indexPath)
           else Similarity.buildIvfIndex(batch, nLists, indexPath)
         } else {
@@ -1010,7 +1010,7 @@ object Pipelines {
       .longAccumulator("graft.vectorDeleteSink.skippedBatches")
     var handle: Option[Index.Opened] = None // opened once, after the index exists
     foreachBatchSink(deletes, checkpoint, trigger) { (batch, batchId) =>
-        if (VersionedIndex.currentDir(spark, indexPath).isDefined) {
+        if (VersionedIndex.exists(spark, indexPath)) {
           val h = handle.getOrElse {
             val o = Index.open(spark, indexPath); handle = Some(o); o
           }
@@ -1055,7 +1055,7 @@ object Pipelines {
     val spark = vectors.sparkSession
     import graft.operators.{Similarity, VersionedIndex}
     foreachBatchSink(vectors, checkpoint, trigger) { (batch, _) =>
-      if (VersionedIndex.currentDir(spark, indexPath).isEmpty) {
+      if (!VersionedIndex.exists(spark, indexPath)) {
         if (!batch.isEmpty) Similarity.writeSketchIndex(batch, indexPath, dim, nBits)
       } else Similarity.upsertSketchIndex(batch, indexPath)
     }
@@ -1115,8 +1115,8 @@ object Pipelines {
     // value from the redelivered batch. A WARN names it in case it
     // was a misconfiguration instead (fresh index path over an old
     // state would discard its clusters).
-    val haveIndex = VersionedIndex.currentDir(spark, indexPath).isDefined
-    val haveState = VersionedIndex.currentDir(spark, statePath).isDefined
+    val haveIndex = VersionedIndex.exists(spark, indexPath)
+    val haveState = VersionedIndex.exists(spark, statePath)
     require(!(haveIndex && !haveState),
       s"dupClusterSink: sketch index exists at $indexPath but no " +
         s"cluster state at $statePath — an offline-built index has " +

@@ -1135,6 +1135,54 @@ class LayoutSpec extends SparkSuite {
       s"expected a format refusal, got ${msgs.mkString(" | ")}")
   }
 
+  test("streaming sinks stop on an unversioned index dir; writer leftovers alone bootstrap") {
+    import graft.operators.{Dedup, Similarity, VersionedIndex}
+    val base = Files.createTempDirectory("sinkformat").toString
+    val docs = Tables.documents(spark, sf0001).filter(col("doc_id") < 40)
+    val emb = Tables.embeddings(spark, sf0001)
+    Dedup.writeLshIndex(docs, col("doc_id"), col("text"), s"$base/lsh")
+    Similarity.buildIvfIndex(emb.filter(col("vec_id") < 200), 8, s"$base/ivf")
+    assert(VersionedIndex.exists(spark, s"$base/lsh"))
+    // only a crashed writer's staging dir and an uncommitted v=N: no index
+    val leftovers = s"$base/leftovers"
+    Files.createDirectories(java.nio.file.Paths.get(leftovers, ".staging-deadbeef"))
+    Files.createDirectories(java.nio.file.Paths.get(leftovers, "v=1"))
+    assert(!VersionedIndex.exists(spark, leftovers))
+    assert(!VersionedIndex.exists(spark, s"$base/absent"))
+    def refusal(dir: String, msgs: Seq[String]): Unit =
+      assert(msgs.exists(m => m != null && m.contains(dir) &&
+        m.contains("unversioned layout")),
+        s"expected a refusal naming $dir, got ${msgs.mkString(" | ")}")
+    // corpus factory over an unversioned LSH dir: refused, not treated
+    // as "no index" (which would bootstrap beside it and forget the
+    // corpus it holds, letting near-duplicates of it through)
+    val lshOld = s"$base/lsh-unversioned"
+    copyTree(s"$base/lsh/v=1", lshOld)
+    val e = intercept[RuntimeException](Pipelines.applyCorpusFactoryBatch(
+      spark, docs.select("doc_id", "text"), 0L, lshOld, s"$base/land"))
+    refusal(lshOld, Seq(e.getMessage))
+    assert(!Files.exists(java.nio.file.Paths.get(lshOld, "v=1")))
+    // vector ingest over an unversioned IVF dir: the stream stops
+    implicit val sqlCtx = spark.sqlContext
+    val ivfOld = s"$base/ivf-unversioned"
+    copyTree(s"$base/ivf/v=1", ivfOld)
+    val rows = emb.filter(col("vec_id") >= 200 && col("vec_id") < 260)
+      .select("vec_id", "label", "embedding").collect().map(r =>
+        (r.getLong(0), r.getInt(1), r.getSeq[Float](2)))
+    val stream = org.apache.spark.sql.execution.streaming.runtime
+      .MemoryStream[(Long, Int, Seq[Float])]
+    val q = graft.streaming.Pipelines.vectorIngestSink(
+      stream.toDF().toDF("vec_id", "label", "embedding"), ivfOld, s"$base/ckpt",
+      nLists = 8,
+      trigger = org.apache.spark.sql.streaming.Trigger.ProcessingTime(0))
+    stream.addData(rows.toIndexedSeq)
+    intercept[Exception](q.processAllAvailable())
+    q.stop()
+    refusal(ivfOld, q.exception.toSeq.flatMap(e => Iterator
+      .iterate[Throwable](e)(_.getCause).takeWhile(_ != null).map(_.getMessage)))
+    assert(!Files.exists(java.nio.file.Paths.get(ivfOld, "v=1")))
+  }
+
   test("streaming dedup by natural key drops duplicates across batches") {
     implicit val sqlCtx = spark.sqlContext
     val stream = MemoryStream[(Timestamp, String)](11, spark, None)

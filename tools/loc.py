@@ -9,7 +9,8 @@ code base has none outside comments.
 
 Usage:
   python3 tools/loc.py [PATH ...]     # files or directories, default src/main/scala
-  python3 tools/loc.py --total PATH   # print only the total
+
+Prints one line per file and a total line last.
 """
 
 import os
@@ -60,15 +61,13 @@ def scala_files(paths):
 
 
 def main(argv):
-    total_only = "--total" in argv
-    paths = [a for a in argv if a != "--total"] or ["src/main/scala"]
+    paths = argv or ["src/main/scala"]
     total = 0
     for f in sorted(scala_files(paths)):
         with open(f, encoding="utf-8") as fh:
             n = code_lines(fh.read())
         total += n
-        if not total_only:
-            print(f"{n:6d}  {f}")
+        print(f"{n:6d}  {f}")
     print(f"{total:6d}  total")
 
 
