@@ -36,15 +36,26 @@ object Bench {
     def r(v: Double) = math.rint(v * 1000) / 1000
     s"""{"metric":"total","value":${r(total)},"unit":"sec","runs":$nRuns,""" +
       s""""run_totals":${runTotals.map(r).mkString("[", ",", "]")},""" +
-      s""""errors":${errors.map("\"" + _ + "\"").mkString("[", ",", "]")},""" +
-      s""""n_queries":$nQueries,"queries_file":"$queriesFile","sf":"$sfDir"}"""
+      s""""errors":${errors.map(jsonStr).mkString("[", ",", "]")},""" +
+      s""""n_queries":$nQueries,"queries_file":${jsonStr(queriesFile)},""" +
+      s""""sf":${jsonStr(sfDir)}}"""
   }
 
-  /** ONE median definition for the full suite and the warm sweep —
-    * averaging the middle pair on even counts. (The warm sweep's
-    * first cut took the upper-middle element, so a warm table built
-    * with an even SPARK_GRAFT_WARM_RUNS read biased-high vs the full
-    * suite it arbitrates.) */
+  /** A JSON string literal: quotes, backslashes and control characters
+    * escaped, so a path or error message cannot break the record. */
+  private def jsonStr(v: String): String = {
+    val b = new StringBuilder("\"")
+    v.foreach {
+      case '"' => b ++= "\\\""
+      case '\\' => b ++= "\\\\"
+      case c if c < ' ' => b ++= f"\\u${c.toInt}%04x"
+      case c => b += c
+    }
+    (b += '"').result()
+  }
+
+  /** Per-query median over the suite runs, averaging the middle pair
+    * on even counts. */
   private def median(xs: Seq[Double]): Double = {
     val s = xs.sorted
     if (s.isEmpty) -1.0
@@ -52,8 +63,7 @@ object Bench {
     else (s(s.size / 2 - 1) + s(s.size / 2)) / 2
   }
 
-  /** Table footer/schema + noop-sink warm-up shared by both modes —
-    * the warm sweep must warm exactly like the suite it arbitrates. */
+  /** Table footer/schema + noop-sink warm-up before any timing. */
   private def warmTables(spark: SparkSession, sfDir: String): Unit = {
     graft.sources.Tables.names.foreach { n =>
       try {
@@ -65,173 +75,13 @@ object Bench {
     spark.range(1).write.format("noop").mode("overwrite").save()
   }
 
-  /** Hand JSON scan of a full-bench record's flat "queries" object
-    * (no JSON lib in scope) — (query → median seconds), failed (-1)
-    * entries dropped. */
-  private[graft] def parseBenchQueries(text: String): Map[String, Double] = {
-    val tag = "\"queries\":{"
-    val qstart = text.indexOf(tag)
-    if (qstart < 0) Map.empty
-    else text.substring(qstart + tag.length, text.indexOf('}', qstart))
-      .split(",").toSeq
-      .flatMap(_.split(":") match {
-        case Array(k, v) => scala.util.Try(
-          k.trim.stripPrefix("\"").stripSuffix("\"") -> v.trim.toDouble).toOption
-        case _ => None
-      })
-      .filter(_._2 >= 0)
-      .toMap
-  }
-
-  /** The warm sweep's selection rule, pure so BenchSpec can pin it:
-    * the top `topN` queries of the CURRENT committed record by median
-    * wall time, PLUS (r19) the top `topMovers` RATIO-movers vs the
-    * PREVIOUS committed record — |log(cur/prev)| ranked, considered
-    * only when either side is ≥ `floorSec` (sub-floor queries move
-    * ±3× on pure noise). The movers arm exists because absolute-top-N
-    * alone let q89 escape at r18: a formerly-cheap query (1.68 s,
-    * never in the top 10) regressed 3.9× in the driver run and the
-    * protocol built to arbitrate exactly that had no warm number for
-    * it. Wall-time picks keep their order; movers append by
-    * descending |log ratio|. Queries already selected by wall time
-    * are excluded BEFORE the mover cut (r20 advisor fix): the heavy
-    * queries dominate |log ratio| under uniform host drift, so
-    * deduplicating after take() could hand every mover slot to
-    * already-selected queries and let a cheap-query regression —
-    * exactly the q89 class this arm exists for — escape again. */
-  private[graft] def selectWarmSet(cur: Map[String, Double],
-      prev: Map[String, Double], topN: Int, topMovers: Int,
-      floorSec: Double): Seq[String] = {
-    val byTime = cur.toSeq.sortBy { case (k, v) => (-v, k) }.take(topN).map(_._1)
-    val byTimeSet = byTime.toSet
-    val movers = cur.keySet.intersect(prev.keySet).toSeq
-      .filterNot(byTimeSet.contains)
-      .filter(k => cur(k) >= floorSec || prev(k) >= floorSec)
-      .map(k => k -> math.abs(math.log(cur(k).max(1e-3) / prev(k).max(1e-3))))
-      .sortBy { case (k, r) => (-r, k) }
-      .take(topMovers).map(_._1)
-    byTime ++ movers
-  }
-
-  /** The previous COMMITTED version of `outPath` for the movers arm:
-    * the newest git revision of the file whose content differs from
-    * the current bytes (the current bytes are the just-committed
-    * latest run at round open, so "first differing" = last round's).
-    * None when git/history is unavailable — the sweep then degrades
-    * to the absolute-top-N rule, loudly. */
-  private def previousCommitted(outPath: String, curText: String): Option[String] = {
-    import scala.sys.process._
-    val f = java.nio.file.Paths.get(outPath)
-    val dir = f.getParent.toString
-    val name = f.getFileName.toString
-    scala.util.Try {
-      val logCmd = Seq("git", "-C", dir, "log", "--format=%H", "-n", "10", "--", name)
-      val devNull = ProcessLogger(_ => ())
-      logCmd.!!(devNull).split("\n").toSeq.map(_.trim).filter(_.nonEmpty)
-        .view
-        // ./name: git resolves a bare `rev:path` relative to the repo
-        // ROOT regardless of -C; the ./ prefix anchors it to -C's
-        // directory so a BENCH_OUT inside a subdirectory still resolves
-        .map(h => Seq("git", "-C", dir, "show", s"$h:./$name").!!(devNull))
-        .find(_ != curText)
-    }.toOption.flatten
-  }
-
-  /** `--warm` (r18): the warm-median arbitration protocol as a
-    * standing mode instead of per-round reactive work. Three rounds
-    * running (q131@r15, q120@r16, q148/q150@r17), one query's driver
-    * bench number cost a round-open arbitration that always concluded
-    * "host noise", resolved each time by the same hand-run recipe:
-    * warm the query once, take a 5-run back-to-back median. This mode
-    * IS that recipe: it reads the committed full-bench record
-    * (SPARK_GRAFT_BENCH_OUT), picks the top SPARK_GRAFT_WARM_TOP
-    * (default 10) queries by median wall time PLUS the top
-    * SPARK_GRAFT_WARM_MOVERS (default 5) ratio-movers vs the previous
-    * committed record (see [[selectWarmSet]] — the r18 q89 escape),
-    * and times each with 1 discarded warm-up + SPARK_GRAFT_WARM_RUNS
-    * (default 5) timed runs, reporting per-query medians. Per-query
-    * BACK-TO-BACK on purpose, opposite of the full suite's
-    * suite-level repetition: arbitration wants minimum variance for
-    * one query, not de-correlation across a 150-query sweep. The
-    * markdown table on stderr is the SCALE.md round-close artifact;
-    * rounds compare warm-vs-warm tables and skip per-query
-    * arbitration. SPARK_GRAFT_ONLY overrides the query set (prefix
-    * match) for targeted A/Bs. */
-  private def warmMain(spark: SparkSession, sfDir: String): Unit = {
-    val outPath = sys.env.getOrElse("SPARK_GRAFT_BENCH_OUT",
-      "/root/repo/BENCH_FULL.json")
-    val topN = sys.env.getOrElse("SPARK_GRAFT_WARM_TOP", "10").toInt
-    val topMovers = sys.env.getOrElse("SPARK_GRAFT_WARM_MOVERS", "5").toInt
-    val nRuns = sys.env.getOrElse("SPARK_GRAFT_WARM_RUNS", "5").toInt.max(1)
-    val only = sys.env.get("SPARK_GRAFT_ONLY").map(_.split(",").toSeq)
-    val names: Seq[String] = only match {
-      case Some(pres) =>
-        SparkEntry.queries.keys.toSeq.sorted.filter(n => pres.exists(n.startsWith))
-      case None =>
-        val text = new String(java.nio.file.Files.readAllBytes(
-          java.nio.file.Paths.get(outPath)), "UTF-8")
-        val cur = parseBenchQueries(text).filter { case (k, _) =>
-          SparkEntry.queries.contains(k) }
-        require(cur.nonEmpty,
-          s"no queries object in $outPath — run a full Bench first or set SPARK_GRAFT_ONLY")
-        val prev = previousCommitted(outPath, text)
-          .map(parseBenchQueries).getOrElse {
-            System.err.println(
-              "[warm] no previous committed record found — movers arm skipped")
-            Map.empty[String, Double]
-          }
-        selectWarmSet(cur, prev, topN, topMovers, floorSec = 0.5)
-    }
-    require(names.nonEmpty, "no queries selected for the warm sweep")
-    val rows = names.map { name =>
-      val fn = SparkEntry.queries(name)
-      // guarded like the full suite: one failing query reports -1 and
-      // the remaining top-N medians still land (a bare throw here used
-      // to abort the whole arbitration sweep with no table)
-      def once(): Double = {
-        val t0 = System.nanoTime()
-        try { fn(spark, sfDir).write.format("noop").mode("overwrite").save()
-          (System.nanoTime() - t0) / 1e9 }
-        catch { case e: Throwable =>
-          System.err.println(
-            s"[warm] $name FAILED: ${e.getClass.getSimpleName}: ${e.getMessage}")
-          -1.0 }
-      }
-      once() // warm-up, discarded
-      val ts = (1 to nRuns).map(_ => once())
-      val med = median(ts.filter(_ >= 0)) // -1 when every run failed
-      System.err.println(
-        f"[warm] $name%-34s median $med%6.2f s  (${ts.map(t => f"$t%.2f").mkString(" ")})")
-      (name, med, ts)
-    }
-    // the SCALE.md paste-ready table
-    System.err.println("| query | warm median (s) | runs (s) |")
-    System.err.println("|---|---|---|")
-    rows.foreach { case (n, med, ts) =>
-      System.err.println(
-        f"| $n | $med%.2f | ${ts.map(t => f"$t%.2f").mkString(", ")} |")
-    }
-    println(s"""{"metric":"warm","runs":$nRuns,"queries":{""" +
-      rows.map { case (n, med, _) =>
-        "\"" + n + "\":" + math.rint(med * 1000) / 1000 }.mkString(",") +
-      s"""},"sf":"$sfDir"}""")
-  }
-
   def main(args: Array[String]): Unit = {
-    val warm = args.contains("--warm")
-    MainFlags.requireKnown(args, Set("--warm"))
+    MainFlags.requireKnown(args, Set.empty)
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
     val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
     val spark = GraftSession.probeSession("graft-bench", cpus)
     spark.sparkContext.setLogLevel("ERROR")
     graft.plans.GraftFunctions.register(spark)
-    if (warm) {
-      warmTables(spark, sfDir) // exactly the full suite's warm-up
-      warmMain(spark, sfDir)
-      spark.stop()
-      return
-    }
-
     // Touch each table once (parquet footer + JVM warm-up) before
     // timing, plus the noop sink, so the alphabetically-first query
     // doesn't absorb one-time initialization. Measured: fully caching
@@ -266,8 +116,8 @@ object Bench {
       name -> median(runs.flatMap(r => Some(r(i)._2).filter(_ >= 0)))
     }
     def qjson(kvs: Seq[(String, Double)]): String =
-      kvs.map { case (k, v) => "\"" + k + "\":" + v }.mkString("{", ",", "}")
-    val errs = errors.map("\"" + _ + "\"").mkString("[", ",", "]")
+      kvs.map { case (k, v) => jsonStr(k) + ":" + v }.mkString("{", ",", "}")
+    val errs = errors.map(jsonStr).mkString("[", ",", "]")
     val total = medians.map(_._2).filter(_ >= 0).sum
     val runTotals = runs.map(_.map(_._2).filter(_ >= 0).sum)
       .mkString("[", ",", "]")
@@ -276,7 +126,7 @@ object Bench {
     def mkHead(fmt: Double => Double): String =
       s""""metric":"total","value":${fmt(total)},"unit":"sec","runs":$nRuns,""" +
         s""""run_totals":$runTotals,"queries":${qjson(medians.map { case (k, v) => k -> fmt(v) })},""" +
-        s""""errors":$errs,"sf":"$sfDir""""
+        s""""errors":$errs,"sf":${jsonStr(sfDir)}"""
     // Full record (per-run matrix) to a file the driver can't truncate.
     val outPath = sys.env.getOrElse("SPARK_GRAFT_BENCH_OUT", "/root/repo/BENCH_FULL.json")
     val detail = runs.map(qjson).mkString("[", ",", "]")

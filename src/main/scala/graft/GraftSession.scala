@@ -30,8 +30,8 @@ object GraftSession {
     *    pushed IN to a min/max RANGE filter, which prunes nothing over
     *    hash-distributed keys — the candidate-id probes of index
     *    members (Dedup.prunedOldShingles) need the literal set to
-    *    reach parquet's row-group dictionaries/stats (LayoutProbe
-    *    --lsh). Derived, not hand-synced: a wider threshold would let
+    *    reach parquet's row-group dictionaries/stats (SCALE.md,
+    *    "What actually skips bytes under the pushed IN"). Derived, not hand-synced: a wider threshold would let
     *    OTHER isin/IN sites push predicate trees deeper than the cap
     *    was sized for.
     * Every main's session builder routes through this. */
@@ -41,22 +41,19 @@ object GraftSession {
         graft.operators.Dedup.MaxShinglePushdownIds.toString)
 
   /** The measurement/driver-main session: every probe and bench main
-    * builds exactly this shape (UTC, right-sized shuffle parallelism,
-    * ns-epoch events readable, no UI, the silent-failure parquet
-    * confs) — one definition instead of seven hand-synced builder
-    * stanzas. `aqe` is the only knob the mains disagree on
-    * (LayoutProbe needs adaptive OFF so FileSourceScanExec metrics
-    * stay visible in the executed plan). Kept separate from
+    * builds exactly this shape (AQE on, UTC, right-sized shuffle
+    * parallelism, ns-epoch events readable, no UI, the silent-failure
+    * parquet confs) — one definition instead of hand-synced builder
+    * stanzas. Kept separate from
     * [[create]]: the product session registers optimizer extensions
     * and native functions; measurement mains opt into functions
     * explicitly so a probe can also measure WITHOUT them. */
-  def probeSession(appName: String, cpus: String,
-      aqe: Boolean = true): SparkSession =
+  def probeSession(appName: String, cpus: String): SparkSession =
     parquetConfs(SparkSession.builder()
       .master(s"local[$cpus]")
       .appName(appName)
       .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.adaptive.enabled", aqe.toString)
+      .config("spark.sql.adaptive.enabled", "true")
       .config("spark.sql.session.timeZone", "UTC")
       .config("spark.sql.legacy.parquet.nanosAsLong", "true")
       .config("spark.ui.enabled", "false"))

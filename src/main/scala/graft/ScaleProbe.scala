@@ -1,15 +1,25 @@
 package graft
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions._
 
-/** sf0.1 → sf1 scaling probe for the heavy dedup/ANN/BPE tier —
-  * MEASUREMENT ONLY, never an oracle input (the driver generates data
-  * up to sf0.1; correctness gates run exclusively on driver data).
+/** Scale tooling kept beside the measurements it produced (SCALE.md
+  * holds the frozen tables; `perfbench/` is the one measurement
+  * harness). Three uses remain:
   *
-  * The synthetic sf1 is a ×F replication of the driver's sf0.1
-  * documents/embeddings, built to preserve the STATISTICAL SHAPE the
-  * probed operators are sensitive to rather than raw bytes:
+  *  - [[materialize]]: the ×F replica builder the similarity and
+  *    layout tests use, and the one real-shape scaling input for an
+  *    operator family. MEASUREMENT ONLY, never an oracle input (the
+  *    driver generates data up to sf0.1; correctness gates run
+  *    exclusively on driver data);
+  *  - `--health <indexRoot>` ([[healthMain]]): the index health poll
+  *    a deployment crons;
+  *  - `--commit-crossover <sfDir> <stateRoot>`
+  *    ([[commitCrossoverTier]]): the deployment's whole-vs-partial
+  *    commit crossover for `dupClusterSink`.
+  *
+  * The replica built by [[materialize]] preserves the STATISTICAL
+  * SHAPE the probed operators are sensitive to rather than raw bytes:
   *
   *  - ids remap into disjoint ranges (`id + k·stride`), so exact-dedup
   *    group counts and join fan-outs scale like real corpus growth;
@@ -24,90 +34,18 @@ import org.apache.spark.sql.functions._
   *    (±0.01, hash-derived), so vectors are near but not identical and
   *    centroid assignment/banding behave like fresh data.
   *
-  * Output: one JSON line with per-query seconds at the source SF and
-  * the scaled SF plus the ratio; paste into SCALE.md. Runs each query
-  * SPARK_GRAFT_PROBE_RUNS times (default 2) and reports the per-query
-  * MIN — the noise-floor estimator appropriate for ratio probes on a
-  * shared host (medians need ≥3 runs; the suite-level Bench keeps that
-  * job).
-  *
-  * Usage: runMain graft.ScaleProbe [srcSfDir] [workDir] [factor]
+  * Usage: runMain graft.ScaleProbe --health <indexRoot>
+  *        runMain graft.ScaleProbe --commit-crossover <sfDir> <stateRoot>
   */
 object ScaleProbe {
-
-  /** Heavy-tier probe set: the blocked/banded scale paths plus their
-    * driver chains. The exact all-pairs baselines (q38/q40/q95) are
-    * deliberately EXCLUDED — they are O(n²) by definition and
-    * documented as exactness baselines, not scale paths. */
-  val ProbeQueries: Seq[String] = Seq(
-    "q34_exact_dedup_stats",
-    "q39_minhash_lsh_pairs",
-    "q41_lsh_bucket_histogram",
-    "q42_bucketed_ann",
-    "q55_ivf_full_probe",
-    "q57_embedding_neardup",
-    "q132_pq_adc_ann",
-    "q135_ivf_pq_indexed",
-    "q64_dup_clusters",
-    "q82_neardup_removal",
-    "q96_knn_graph_bucketed",
-    "q142_knn_graph_capped",
-    "q143_knn_graph_sorted",
-    "q146_embedding_neardup_sorted",
-    "q147_embedding_neardup_incremental",
-    "q148_sketch_index_lifecycle",
-    "q149_vector_dup_clusters",
-    "q106_duplicate_spans",
-    "q160_span_removal",
-    "q123_bpe_merges",
-    "q125_bpe_token_counts",
-    "q157_cluster_balanced_sample")
-
-  /** CDC/mirror tier — the reference's core workload. Envelope
-    * synthesis + dual-shape JSON round-trip (q45/q46) and the full
-    * mirror merge with per-table delete routing (q120, two
-    * `applyCdcBatch` merges internally). Reads the replicated
-    * `events` table: ids remap into disjoint ranges, so the mirror's
-    * key space and last-writer-wins group count grow linearly — what
-    * 10× more CDC traffic over the same wall-clock window looks
-    * like. */
-  val CdcProbeQueries: Seq[String] = Seq(
-    "q45_cdc_parse_route",
-    "q46_cdc_deletes",
-    "q120_mirror_delete_policy")
-
-  /** The one table a probe query reads — drives filtered-run
-    * replication (documents for the text/dedup/BPE tier, embeddings
-    * for the vector tier, events for the CDC tier). EXHAUSTIVE over
-    * the probe sets: an unmapped name fails HERE at startup, not
-    * minutes later on a missing replica table mid-probe. */
-  private def tableFor(name: String): String = name match {
-    case n if CdcProbeQueries.contains(n) => "events"
-    case "q34_exact_dedup_stats" | "q39_minhash_lsh_pairs" |
-         "q64_dup_clusters" | "q82_neardup_removal" |
-         "q106_duplicate_spans" | "q160_span_removal" | "q123_bpe_merges" |
-         "q125_bpe_token_counts" => "documents"
-    case "q41_lsh_bucket_histogram" | "q42_bucketed_ann" |
-         "q55_ivf_full_probe" | "q57_embedding_neardup" |
-         "q132_pq_adc_ann" | "q135_ivf_pq_indexed" |
-         "q96_knn_graph_bucketed" | "q142_knn_graph_capped" |
-         "q143_knn_graph_sorted" |
-         "q146_embedding_neardup_sorted" |
-         "q147_embedding_neardup_incremental" |
-         "q148_sketch_index_lifecycle" |
-         "q149_vector_dup_clusters" |
-         "q157_cluster_balanced_sample" => "embeddings"
-    case other => sys.error(
-      s"tableFor: probe query $other has no table mapping — add it here")
-  }
 
   /** Replicate documents+embeddings+events ×factor into `outDir`
     * (each table skipped if already present). `jitterPermille` scales
     * the embedding replica jitter amplitude (±jitterPermille/1000):
     * the default 10 (±0.01, ~1.3% sign-bit flips on this corpus) is
     * the r13 dense-regime setting, BIT-IDENTICAL to the original
-    * division formula; 50 (±0.05) builds the mid-noise regime the r14
-    * recall sweep measures (~5% flips). */
+    * division formula; 50 (±0.05) builds the mid-noise regime of the
+    * r14 recall sweep (~5% flips; SCALE.md "Mid-noise recall sweep"). */
   def materialize(spark: SparkSession, srcDir: String, outDir: String,
       factor: Int,
       tables: Set[String] = Set("documents", "embeddings", "events"),
@@ -149,28 +87,14 @@ object ScaleProbe {
       try out.write(renderMarker(wanted(name)).getBytes("UTF-8"))
       finally out.close()
     }
-    // Accepts both forms: line-per-field (current) and the legacy
-    // single-line "src=<path> factor=N [jitterPermille=M]" — parsed by
-    // anchoring the numeric tail so a legacy src containing spaces
-    // still round-trips. Unparseable content maps to a sentinel that
-    // can never equal wanted(), so the mismatch require stays loud.
-    def parseMarker(stored: String): Map[String, String] = {
-      val s = stored.trim
-      if (s.contains("\n"))
-        s.linesIterator.map(_.trim).filter(_.nonEmpty).map { line =>
-          val i = line.indexOf('=')
-          if (i < 0) ("_unparseable" -> line) else (line.take(i) -> line.drop(i + 1))
-        }.toMap
-      else {
-        val legacy = "^src=(.*) factor=(\\d+)(?: jitterPermille=(\\d+))?$".r
-        s match {
-          case legacy(src, f, j) =>
-            Map("src" -> src, "factor" -> f) ++
-              Option(j).map("jitterPermille" -> _)
-          case _ => Map("_unparseable" -> s)
-        }
-      }
-    }
+    // Line-per-field only. Unparseable content (including the old
+    // single-line form) maps to a sentinel that can never equal
+    // wanted(), so the mismatch require stays loud.
+    def parseMarker(stored: String): Map[String, String] =
+      stored.trim.linesIterator.map(_.trim).filter(_.nonEmpty).map { line =>
+        val i = line.indexOf('=')
+        if (i < 0) ("_unparseable" -> line) else (line.take(i) -> line.drop(i + 1))
+      }.toMap
     def missing(name: String): Boolean = {
       if (!tables.contains(name.stripSuffix(".parquet"))) return false
       val dir = new org.apache.hadoop.fs.Path(s"$outDir/$name")
@@ -262,328 +186,6 @@ object ScaleProbe {
     }
   }
 
-  /** Streaming-mutation tier: PER-TRIGGER wall time of the actual
-    * [[graft.streaming.Pipelines.vectorIngestSink]] /
-    * [[graft.streaming.Pipelines.vectorDeleteSink]] streaming queries
-    * (MemoryStream source, ProcessingTime(0) trigger) against a
-    * persisted IVF index built over `dir`'s embeddings — measured at
-    * the source SF and the ×factor SF with the SAME 50-vector batch
-    * size. This turns the LayoutSpec file-snapshot argument (O(batch)
-    * vec_map discovery, O(touched) rewrite) into measured seconds:
-    * with nLists scaled with the corpus (the q120 `nBuckets ≈
-    * size/rewrite_unit` sizing rule, keeping per-list bytes — the
-    * rewrite unit — constant), per-trigger cost is bounded by
-    * batch × rewrite_unit and must stay ~flat as the index grows 10×.
-    * Returns (ingest, delete) min-of-runs seconds per trigger. */
-  def mutationTier(spark: SparkSession, dir: String, nLists: Int,
-      runs: Int): (Double, Double) = {
-    import org.apache.spark.sql.execution.streaming.runtime.MemoryStream
-    import org.apache.spark.sql.streaming.Trigger
-    import spark.implicits._
-    implicit val sqlCtx = spark.sqlContext
-    val root = java.nio.file.Files.createTempDirectory("graft_mutprobe").toString
-    val idx = s"$root/index"
-    val emb = spark.read.parquet(s"$dir/embeddings.parquet")
-    graft.operators.Similarity.buildIvfIndex(emb, nLists, idx)
-    val maxId = emb.agg(max(col("vec_id"))).head().getLong(0)
-    val proto = emb.orderBy(col("vec_id")).limit(50).collect() // fixed 50-row batch
-      .map(r => (r.getAs[scala.collection.Seq[Float]]("embedding").toSeq,
-        r.getAs[Int]("label")))
-    def ids(run: Int): Seq[Long] =
-      proto.indices.map(i => maxId + run * 1000L + i + 1L)
-    val ingest = MemoryStream[(Long, Seq[Float], Int)]
-    val iq = graft.streaming.Pipelines.vectorIngestSink(
-      ingest.toDF().toDF("vec_id", "embedding", "label"), idx, s"$root/ickpt",
-      nLists, trigger = Trigger.ProcessingTime(0))
-    val ingestSecs = (1 to runs).map { k =>
-      ingest.addData(ids(k).zip(proto).map { case (id, (e, l)) => (id, e, l) })
-      val t0 = System.nanoTime()
-      iq.processAllAvailable()
-      (System.nanoTime() - t0) / 1e9
-    }
-    iq.stop()
-    val del = MemoryStream[Long]
-    val dq = graft.streaming.Pipelines.vectorDeleteSink(
-      del.toDF().toDF("vec_id"), idx, s"$root/dckpt",
-      trigger = Trigger.ProcessingTime(0))
-    val delSecs = (1 to runs).map { k =>
-      del.addData(ids(k))
-      val t0 = System.nanoTime()
-      dq.processAllAvailable()
-      (System.nanoTime() - t0) / 1e9
-    }
-    dq.stop()
-    (ingestSecs.min, delSecs.min)
-  }
-
-  /** Fixed-batch tier: the O(batch) claim of the incremental
-    * near-dup operators measured on the axis the 100 TB per-crawl-
-    * round story actually rests on — the CORPUS grows ×factor while
-    * the BATCH is pinned (the gated q147/q148/q131 derive their batch
-    * from the table by modulo, so the sf1 probe scales batch AND
-    * corpus together and reads ~2.8×; this tier isolates corpus
-    * growth alone).
-    *
-    * Batch = the rep-0 originals below a fixed id cut (200 vectors /
-    * 500 docs — identical rows at BOTH scales, since replication
-    * remaps replica ids above the original stride); corpus = all
-    * other rows. Three operators, each timed `runs` times (min):
-    *
-    *  - `sketch_inmem` ([[graft.operators.Dedup.embeddingNearDupIncremental]]):
-    *    the in-memory form must hash the WHOLE union per round (canon
-    *    kernel is O(corpus)) — expected to GROW with the corpus; it
-    *    exists here as the contrast that motivates the index.
-    *  - `sketch_indexed` ([[graft.operators.Dedup.embeddingNearDupIndexed]]):
-    *    corpus canon codes are parquet reads; per-round kernels are
-    *    batch-only and candidates are bounded by batch·T·w, so the
-    *    only corpus-growth term is the narrow (16 B/row) rank pass —
-    *    the near-flat claim under test. Index build is UNTIMED (paid
-    *    once at ingest, amortized over rounds).
-    *  - `lsh_indexed_text` ([[graft.operators.Dedup.incrementalLshPairsIndexed]]):
-    *    the text twin — batch tokenize/minhash + banded join against
-    *    the persisted index's buckets.
-    *
-    * Also prints [[graft.operators.Similarity.sketchIndexStats]] of
-    * each built index (bucket skew of the vec_id hash, carry depth) —
-    * the operational stats a production sizing decision would read. */
-  /** `bucketScale` (r18): the ×factor run passes the replication
-    * factor so the ADDITIONAL `lsh_upsert_recrawl_sized` row builds
-    * its index with `idxBuckets = 64·bucketScale` — the committed
-    * `nBuckets ≈ size/rewrite_unit` sizing rule applied to the grown
-    * corpus (per-bucket bytes pinned at the sf0.1 default's). The
-    * default-bucket `lsh_upsert_recrawl` row deliberately keeps 64
-    * buckets at every scale: the PAIR of rows is the measurement —
-    * how much of that row's growth the sizing rule buys back. */
-  def fixedBatchTier(spark: SparkSession, dir: String,
-      runs: Int, bucketScale: Int = 1): Seq[(String, Double)] = {
-    import graft.operators.{Dedup, Similarity}
-    val root = java.nio.file.Files.createTempDirectory("graft_fixedbatch").toString
-    val emb = spark.read.parquet(s"$dir/embeddings.parquet")
-      .select(col("vec_id"), col("embedding"))
-    val vBatch = emb.filter(col("vec_id") < 200)
-    val vCorpus = emb.filter(col("vec_id") >= 200)
-    val docs = spark.read.parquet(s"$dir/documents.parquet")
-    val dBatch = docs.filter(col("doc_id") < 500)
-    val dCorpus = docs.filter(col("doc_id") >= 500)
-    def best(mk: => DataFrame): Double = (1 to runs).map { _ =>
-      val t0 = System.nanoTime()
-      mk.write.format("noop").mode("overwrite").save()
-      (System.nanoTime() - t0) / 1e9
-    }.min
-    try {
-      val inmem = best(Dedup.embeddingNearDupIncremental(vBatch, vCorpus, 0.3, 64))
-      Similarity.writeSketchIndex(vCorpus, s"$root/sk", 64)
-      System.err.println(s"[probe] sketch index stats ($dir): " +
-        Similarity.sketchIndexStats(spark, s"$root/sk"))
-      val indexed = best(Dedup.embeddingNearDupIndexed(vBatch, s"$root/sk", 0.3))
-      // the UPSERT path with the r17 drift probe live: a fixed
-      // 200-row re-embed of ids the index HOLDS (vBatch's ids are
-      // outside it — zero overlap would skip the probe), identical
-      // vectors so index content is unchanged for the rows below.
-      // Flat ratio = O(touched-buckets) commit + O(sample) probe,
-      // both independent of corpus size. Unit-timed: upsert commits
-      // state, it doesn't return a frame.
-      val vReembed = vCorpus.filter(col("vec_id") < 400)
-      def bestU(run: => Unit): Double = (1 to runs).map { _ =>
-        val t0 = System.nanoTime(); run; (System.nanoTime() - t0) / 1e9
-      }.min
-      val upsert = bestU(Similarity.upsertSketchIndex(vReembed, s"$root/sk"))
-      Dedup.writeLshIndex(dCorpus, col("doc_id"), col("text"), s"$root/lsh")
-      val lshText = best(Dedup.incrementalLshPairsIndexed(
-        dBatch, col("doc_id"), col("text"), s"$root/lsh"))
-      // the text-tier upsert with the r17 re-crawl drift probe live:
-      // a fixed 500-doc re-ingest of ids the index HOLDS (dBatch's
-      // are outside it), identical text — flat ratio = O(touched)
-      // commit + O(sample·shingles) probe, independent of corpus size
-      val dReingest = dCorpus.filter(col("doc_id") < 1000)
-      val lshUpsert = bestU(Dedup.upsertLshIndex(
-        dReingest, col("doc_id"), col("text"), s"$root/lsh"))
-      // rule-sized bucket twin (r18 — the r17 claim measured): same
-      // fixed 500-doc re-ingest against an index bucketed by the
-      // committed sizing rule. A 500-id batch hash-touches ≤ ~347 of
-      // 640 buckets (vs all 64 default ones), and each touched bucket
-      // holds 1/bucketScale of the default's rows — the touched-set
-      // read the drift probe and the rewrite pay stays bounded by
-      // batch × rewrite_unit instead of growing with the corpus.
-      Dedup.writeLshIndex(dCorpus, col("doc_id"), col("text"),
-        s"$root/lsh_sized", idxBuckets = 64 * bucketScale)
-      val lshUpsertSized = bestU(Dedup.upsertLshIndex(
-        dReingest, col("doc_id"), col("text"), s"$root/lsh_sized"))
-      // CC funnel, both deployment forms (q149 vs q150): the one-shot
-      // form re-sketches the whole union and closes the corpus
-      // closure per run; the persisted-state form pays one indexed
-      // probe + a fold over graph-sized edges. State build (the
-      // bootstrap) is UNTIMED like the index build — paid once.
-      // Threshold 0.35 = the gated queries' regime (0.3 on the
-      // unreplicated isotropic corpus admits noise pairs — a
-      // mis-sized dedup threshold, not what the funnel slope should
-      // be measured on).
-      val ccInmem = best(Dedup.dupClusters(
-        Dedup.embeddingNearDupSorted(vBatch.unionByName(vCorpus), 0.35, 64),
-        a = "vec_a", b = "vec_b"))
-      Dedup.writeClusterState(Dedup.dupClusters(
-        Dedup.embeddingNearDupSorted(vCorpus, 0.35, 64),
-        a = "vec_a", b = "vec_b"), s"$root/cc")
-      val ccState = best(Dedup.mergePairsIntoClusters(
-        Dedup.readClusterState(spark, s"$root/cc"),
-        Dedup.embeddingNearDupIndexed(vBatch, s"$root/sk", 0.35),
-        a = "vec_a", b = "vec_b"))
-      Seq("sketch_inmem" -> inmem, "sketch_indexed" -> indexed,
-        "sketch_upsert_reembed" -> upsert,
-        "lsh_indexed_text" -> lshText,
-        "lsh_upsert_recrawl" -> lshUpsert,
-        "lsh_upsert_recrawl_sized" -> lshUpsertSized,
-        "cc_funnel_inmem" -> ccInmem, "cc_state_indexed" -> ccState)
-    } finally {
-      // the indexes copy the whole corpus — GBs at sf1; clean up like
-      // the LayoutProbe modes do
-      val p = new org.apache.hadoop.fs.Path(root)
-      p.getFileSystem(spark.sparkContext.hadoopConfiguration).delete(p, true)
-    }
-  }
-
-  /** NB quality-filter tier (r19): the r18 scale claim — "training is
-    * ONE token-keyed shuffle, so a 100 TB model pass is one job" —
-    * measured instead of asserted (the r17 lesson: every such claim
-    * eventually owes a number). Three axes:
-    *
-    *  - `nb_train`: [[graft.functions.Text.nbTrain]] over the WHOLE
-    *    corpus at each scale (weak label = lang=='en' on even ids, the
-    *    q154 shape). Expected ∝ corpus — one token-keyed count shuffle
-    *    plus two one-row aggregates, no optimizer loop; the ratio IS
-    *    the claim.
-    *  - `nb_score_join_batch`: a FIXED 500-doc batch scored through
-    *    the distributed join form against the trained (materialized)
-    *    model — the per-trigger shape of the corpus factory's nbGate.
-    *    Expected ~flat: O(batch tokens + vocab), corpus-independent.
-    *  - `nb_score_expr_batch`: the same fixed batch through the
-    *    per-row literal-map column — the curateStream stage. Expected
-    *    ~flat, and cheaper than the join until the vocab cap
-    *    (collectNbModel's 4096 — corpus vocabularies exceed it, which
-    *    is WHY the join form is the at-scale answer; the measured
-    *    vocab size prints so SCALE.md can place the crossover).
-    *
-    * The model's weights frame is localCheckpoint'd before the scoring
-    * arms so they time SCORING, not a training replay (weights is a
-    * lazy plan; both scoring forms would otherwise re-run the training
-    * shuffle inside every run). */
-  def nbTier(spark: SparkSession, dir: String,
-      runs: Int): Seq[(String, Double)] = {
-    import graft.functions.Text
-    import org.apache.spark.sql.GraftBridge.releaseLocalCheckpoint
-    val docs = spark.read.parquet(s"$dir/documents.parquet")
-    val batch = docs.filter(col("doc_id") < 500).localCheckpoint()
-    def best(run: => Unit): Double = (1 to runs).map { _ =>
-      val t0 = System.nanoTime(); run; (System.nanoTime() - t0) / 1e9
-    }.min
-    // training materializes the vocab-sized weights (the model
-    // artifact a deployment persists) — count() forces exactly that
-    val train = best {
-      Text.nbTrain(docs.filter(col("doc_id") % 2 === 0),
-        col("text"), (col("lang") === "en").cast("int")).weights.count()
-    }
-    val model = Text.nbTrain(docs.filter(col("doc_id") % 2 === 0),
-      col("text"), (col("lang") === "en").cast("int"))
-    val pinned = model.copy(weights = model.weights.localCheckpoint())
-    try {
-      val vocab = pinned.weights.count()
-      System.err.println(s"[probe] nb vocab at $dir: $vocab tokens " +
-        "(literal-map cap 4096 — past it only the join form scores)")
-      val scoreJoin = best {
-        Text.nbScore(batch, col("doc_id"), col("text"), pinned)
-          .write.format("noop").mode("overwrite").save()
-      }
-      val local = Text.collectNbModel(pinned)
-      val scoreExpr = best {
-        batch.select(col("doc_id"),
-            Text.nbScoreExpr(col("text"), local).as("score"))
-          .write.format("noop").mode("overwrite").save()
-      }
-      Seq("nb_train" -> train, "nb_score_join_batch" -> scoreJoin,
-        "nb_score_expr_batch" -> scoreExpr)
-    } finally {
-      releaseLocalCheckpoint(pinned.weights)
-      releaseLocalCheckpoint(batch)
-    }
-  }
-
-  /** `--factory` tier (r20): the q158 production chain — heuristics →
-    * NB JOIN-form gate → exact dedup → LSH near-dup removal → hash
-    * split — staged and timed at the source SF and the ×factor
-    * replica, with the NB model trained ONCE per corpus OUTSIDE the
-    * clock (the deployed factory trains once and scores per trigger;
-    * q158 the GATE query retrains per run, which is why its wall time
-    * could not answer the scale question r19 left open). Each stage
-    * is isolated by localCheckpoint-pinning its upstream survivor
-    * set, so a row prices ONE stage's own work; `factory_chain` is
-    * the unpinned end-to-end wall (what a landing run pays, minus
-    * training). The ×factor corpus is the replica-salted documents
-    * table: replica token spaces are pairwise disjoint, so each
-    * replica carries the base corpus's dup structure internally —
-    * 10× the corpus with the same dup DENSITY, the growth shape a
-    * crawl actually has. */
-  def factoryTier(spark: SparkSession, dir: String,
-      runs: Int): Seq[(String, Double)] = {
-    import graft.functions.Text
-    import graft.operators.{Curation, Dedup}
-    import org.apache.spark.sql.GraftBridge.releaseLocalCheckpoint
-    val docs = spark.read.parquet(s"$dir/documents.parquet")
-    def best(run: => Unit): Double = (1 to runs).map { _ =>
-      val t0 = System.nanoTime(); run; (System.nanoTime() - t0) / 1e9
-    }.min
-    def sink(df: DataFrame): Unit =
-      df.write.format("noop").mode("overwrite").save()
-    val pinned = scala.collection.mutable.ArrayBuffer.empty[DataFrame]
-    def pin(df: DataFrame): DataFrame = {
-      val c = df.localCheckpoint(); pinned += c; c
-    }
-    try {
-      // trained once, pinned — excluded from every timing below (the
-      // training cost itself is the --nb tier's measured row)
-      val model0 = Text.nbTrain(docs.filter(col("doc_id") % 2 === 0),
-        col("text"), (col("lang") === "en").cast("int"))
-      val model = model0.copy(weights = pin(model0.weights))
-      model.weights.count()
-      // the q158 stages, verbatim shapes
-      def keptDf = docs
-        .withColumn("_nws", Text.wsTokenCount(col("text")))
-        .withColumn("_q", Text.qualityScore(col("text")))
-        .filter(col("_nws") >= 30 && col("_q") >= 0.65)
-      def nbGate(in: DataFrame) = {
-        val admit = Text.nbScore(in, col("doc_id"), col("text"), model)
-          .filter(col("score") >= 0.0).select(col("doc_id"))
-        in.join(admit, Seq("doc_id"), "left_semi")
-      }
-      def exactDedup(in: DataFrame) = {
-        val mn = in.groupBy(md5(col("text")).as("_f"))
-          .agg(min(col("doc_id")).as("_keep_id"))
-        in.join(mn,
-          md5(col("text")) === col("_f") && col("doc_id") === col("_keep_id"))
-          .select(col("doc_id"), col("lang"), col("text"), col("_nws"))
-      }
-      def nearDup(in: DataFrame) = {
-        val pairs = Dedup.minhashLshPairs(in, col("doc_id"), col("text"))
-        Dedup.keepOnePerCluster(in, col("doc_id"), pairs)
-      }
-      def splitReport(in: DataFrame) = Curation.withSplit(in, col("doc_id"))
-        .groupBy(col("split"), col("lang"))
-        .agg(count(lit(1)).as("n_docs"), sum(col("_nws")).as("tok_sum"))
-      val tHeu = best(sink(keptDf))
-      val kept = pin(keptDf)
-      val tNb = best(sink(nbGate(kept)))
-      val keptm = pin(nbGate(kept))
-      val tEx = best(sink(exactDedup(keptm)))
-      val s1 = pin(exactDedup(keptm))
-      val tNd = best(sink(nearDup(s1)))
-      val s2 = pin(nearDup(s1))
-      val tSp = best(sink(splitReport(s2)))
-      val tChain = best(sink(splitReport(nearDup(exactDedup(nbGate(keptDf))))))
-      Seq("factory_heuristics" -> tHeu, "factory_nb_gate" -> tNb,
-        "factory_exact_dedup" -> tEx, "factory_neardup" -> tNd,
-        "factory_split" -> tSp, "factory_chain" -> tChain)
-    } finally pinned.foreach(releaseLocalCheckpoint)
-  }
-
   /** `--health <root>`: the monitoring loop COVERAGE.md promises, as a
     * runnable artifact — open every index committed under `root`
     * (direct children) through the ONE health entry point
@@ -628,115 +230,8 @@ object ScaleProbe {
       }.mkString(",") + "}}")
   }
 
-  /** Growing-graph tier: the axis the r15 fixed-batch measurement did
-    * NOT isolate — [[graft.streaming.Pipelines.dupClusterSink]]'s
-    * per-trigger cost as the ACCUMULATED pair graph grows while the
-    * batch AND corpus stay pinned. On a high-duplication corpus at a
-    * 5 s cadence the dup graph grows monotonically with
-    * total-duplicates-ever; the r15 form re-ran the iterative CC over
-    * all of it every trigger. The r16 incremental re-close bounds the
-    * iterative term to batch-affected components; what remains O(graph)
-    * per trigger is single-pass columnar IO (state scans + the commit
-    * write — the documented cheap part).
-    *
-    * Construction: synthetic settled components (4-node chains over an
-    * id space disjoint from the corpus) stand in for
-    * total-duplicates-ever at ×1/×10/×20; the batch is 200 EXACT
-    * copies of corpus vectors under fresh ids, so detection emits a
-    * deterministic ~200 pairs every trigger (threshold 0.9 — only the
-    * copies match on this isotropic corpus) and each re-run retracts
-    * and re-establishes exactly those, the steady-state trigger shape.
-    * Timed: the full `applyDupClusterBatch` trigger, plus a direct A/B
-    * of the fold itself — incremental vs the pre-r16 full re-close
-    * (forced via `maxAffected = 0`, the fallback route) — on identical
-    * checkpointed inputs. */
-  def growingGraphTier(spark: SparkSession, dir: String,
-      runs: Int): Seq[(String, Double)] = {
-    import graft.operators.{Dedup, Similarity}
-    import org.apache.spark.sql.GraftBridge.releaseLocalCheckpoint
-    val root = java.nio.file.Files.createTempDirectory("graft_growgraph").toString
-    val emb = spark.read.parquet(s"$dir/embeddings.parquet")
-      .select(col("vec_id"), col("embedding"))
-    val corpus = emb.filter(col("vec_id") >= 200)
-    val batch = corpus.orderBy(col("vec_id")).limit(200)
-      .select((col("vec_id") + 5000000L).as("vec_id"), col("embedding"))
-      .localCheckpoint()
-    def best(mk: => DataFrame): Double = (1 to runs).map { _ =>
-      val t0 = System.nanoTime()
-      mk.write.format("noop").mode("overwrite").save()
-      (System.nanoTime() - t0) / 1e9
-    }.min
-    try {
-      val idx = s"$root/idx"
-      Similarity.writeSketchIndex(corpus, idx, 64)
-      val basePairs = 100000L
-      // SPARK_GRAFT_GROW_FACTORS: comma-separated graph multipliers
-      // (each = basePairs·g settled pairs). The DEFAULT ladder covers
-      // the sub-crossover regime only (≤5M pairs, where the whole
-      // write wins — the point of the route A/B); the ≈12M-pair
-      // crossover rows in SCALE.md r16 ran GROW_FACTORS=100,150,
-      // which also need SPARK_DRIVER_MEM=48g (a 15M-edge bootstrap
-      // closure OOMs the default 8g heap).
-      val factors = parseGrowFactors(Seq(1, 10, 20, 50))
-      factors.flatMap { g =>
-        val st = s"$root/st$g"
-        buildSynthState(spark, basePairs * g, st)
-        // route A/B at each scale: the commit-route gate is forced per
-        // call so the measurement is decoupled from the default. ORDER
-        // MATTERS: the layout upgrade is one-way (once bucketed the
-        // sink stays bucketed regardless of gate), so the whole-write
-        // route must be timed BEFORE the first partial trigger.
-        def trigger(gate: Long): Unit =
-          graft.streaming.Pipelines.applyDupClusterBatch(
-            batch, idx, st, 0.9, 64, 32, 4, 16, partialMinPairs = gate)
-        def timeTrig(gate: Long): Double = {
-          trigger(gate) // warm: batch pairs enter; fixpoint (and, for
-                        // the partial route, the layout upgrade) after
-          (1 to runs).map { _ =>
-            val t0 = System.nanoTime(); trigger(gate)
-            (System.nanoTime() - t0) / 1e9
-          }.min
-        }
-        val tWhole = timeTrig(Long.MaxValue)
-        val tPartial = timeTrig(0L)
-        // fold A/B on identical checkpointed inputs (the trigger's
-        // exact shape: retraction of the batch's pairs + re-detection)
-        val prior = Dedup.readClusterState(spark, st)
-        val ids = batch.select(col("vec_id")).distinct()
-        val newPairs = Dedup.embeddingNearDupIndexed(batch, idx, 0.9)
-          .select(col("vec_a").as("doc_a"), col("vec_b").as("doc_b"))
-          .localCheckpoint()
-        val kept = Dedup.readClusterPairs(spark, st).get
-          .join(ids.select(col("vec_id").as("doc_a")), Seq("doc_a"), "left_anti")
-          .join(ids.select(col("vec_id").as("doc_b")), Seq("doc_b"), "left_anti")
-          .localCheckpoint()
-        try {
-          val tInc = best(Dedup.recloseAffectedComponents(
-            prior, kept, newPairs, ids))
-          val tFull = best(Dedup.recloseAffectedComponents(
-            prior, kept, newPairs, ids, maxAffected = 0))
-          System.err.println(
-            f"[probe] growing-graph x$g%-3d trigger whole $tWhole%7.2f s" +
-              f"  partial $tPartial%7.2f s  fold incr $tInc%7.2f s" +
-              f"  full $tFull%7.2f s")
-          Seq(s"trigger_whole_x$g" -> tWhole,
-            s"trigger_partial_x$g" -> tPartial,
-            s"fold_incr_x$g" -> tInc, s"fold_full_x$g" -> tFull)
-        } finally {
-          releaseLocalCheckpoint(newPairs)
-          releaseLocalCheckpoint(kept)
-        }
-      }
-    } finally {
-      releaseLocalCheckpoint(batch)
-      val p = new org.apache.hadoop.fs.Path(root)
-      p.getFileSystem(spark.sparkContext.hadoopConfiguration).delete(p, true)
-    }
-  }
-
-  /** SPARK_GRAFT_GROW_FACTORS, parsed once for both tiers that take
-    * a state-size ladder (growing-graph, commit-crossover).
-    * Tolerates trailing commas; an explicitly SET empty value fails
+  /** SPARK_GRAFT_GROW_FACTORS, the commit-crossover state-size
+    * ladder. Tolerates trailing commas; an explicitly SET empty value fails
     * loudly — silently running a default ladder would hand the
     * operator default numbers labeled as their requested run. */
   private def parseGrowFactors(default: Seq[Int]): Seq[Int] =
@@ -750,8 +245,8 @@ object ScaleProbe {
 
   /** Synthetic settled cluster state: `pairs` edges as 4-node chains
     * (3 edges each) over an id space disjoint from the corpus and
-    * every probe batch — total-duplicates-ever stand-in, shared by
-    * the growing-graph and commit-crossover tiers. */
+    * every probe batch — the total-duplicates-ever stand-in of the
+    * commit-crossover tier. */
   private def buildSynthState(spark: SparkSession, pairs: Long,
       path: String): Unit = {
     import graft.operators.Dedup
@@ -786,22 +281,6 @@ object ScaleProbe {
     }
   }
 
-  /** `--commit-crossover`: measure THIS deployment's partial-commit
-    * crossover ([[graft.operators.Dedup.CcPartialCommitMinPairs]] is
-    * local-NVMe truth; a real cluster or object store crosses
-    * earlier because the whole write is bandwidth-bound while the
-    * partial route's overhead stays driver-scheduling-bound) and
-    * print the `partialMinPairs` to pass to `dupClusterSink`. Same
-    * construction as the growing-graph tier, but the synthetic
-    * states live ON `stateRoot` — point it at the deployment's real
-    * storage path, because the whole-vs-partial balance IS a storage
-    * property — and only the trigger routes are timed (whole BEFORE
-    * partial at each size: the layout upgrade is one-way). Probe
-    * dirs are removed afterwards. Heap note: bootstrap-closing a
-    * ≥10M-edge synthetic state needs a large driver heap (the r16
-    * measurements ran 48g); the probe sizes are the operator's call
-    * via SPARK_GRAFT_GROW_FACTORS (default 50,100,150 =
-    * 5M/10M/15M pairs, bracketing the NVMe crossover). */
   /** Cold-IO support for the crossover probe
     * (SPARK_GRAFT_XOVER_COLD=1): sync + drop the OS page cache before
     * every timed trigger, so every READ in both routes pays real
@@ -830,6 +309,22 @@ object ScaleProbe {
           "measure the warm regime instead")
     }
 
+  /** `--commit-crossover`: measure THIS deployment's partial-commit
+    * crossover ([[graft.operators.Dedup.CcPartialCommitMinPairs]] is
+    * local-NVMe truth; a real cluster or object store crosses
+    * earlier because the whole write is bandwidth-bound while the
+    * partial route's overhead stays driver-scheduling-bound) and
+    * print the `partialMinPairs` to pass to `dupClusterSink`. The
+    * synthetic settled states ([[buildSynthState]]) live ON
+    * `stateRoot` — point it at the deployment's real
+    * storage path, because the whole-vs-partial balance IS a storage
+    * property — and only the trigger routes are timed (whole BEFORE
+    * partial at each size: the layout upgrade is one-way). Probe
+    * dirs are removed afterwards. Heap note: bootstrap-closing a
+    * ≥10M-edge synthetic state needs a large driver heap (the r16
+    * measurements ran 48g); the probe sizes are the operator's call
+    * via SPARK_GRAFT_GROW_FACTORS (default 50,100,150 =
+    * 5M/10M/15M pairs, bracketing the NVMe crossover). */
   def commitCrossoverTier(spark: SparkSession, srcDir: String,
       stateRoot: String, factors: Seq[Int], runs: Int): Unit = {
     import graft.operators.Similarity
@@ -899,280 +394,36 @@ object ScaleProbe {
     }
   }
 
-  /** Mid-noise recall sweep: the "raise T, not w" production-sizing
-    * guidance measured instead of argued. r13 pinned sorted-sketch
-    * recall at two extremes — ~1.3% sign-bit flips (±0.01 jitter,
-    * 0.989 recall at T=4/w=16) and isotropic (the information-
-    * theoretic floor). This tier builds the regime between them
-    * (±0.05 jitter ≈ 5% flips), measures the ACTUAL flip rate, then
-    * sweeps T ∈ {4, 8} × w ∈ {16, 32} over exhaustive ≥0.9 ground
-    * truth. Theory says recall ≈ 1 − (1 − p_window)^T per pair:
-    * extra tables multiply independent chances of landing a pair in
-    * one window, while a wider window only grows the per-table
-    * chance sublinearly once flips scatter codes across the sort
-    * order — the sweep pins the sizes. */
-  // no `runs` knob: the sweep measures RECALL on a deterministic
-  // construction, not wall time — repeats would return identical rows
-  /** One sweep corpus per jitter level: the default 50 (±0.05, ~7%
-    * flips) is the r14 mid-noise regime; r16 added bracketing levels
-    * around the `recommendSketch` ≥15% IVF handoff (the 10–15% band
-    * rode on one sweep's extrapolation — the cliff is now located by
-    * measurement, SCALE.md r16). */
-  def noiseSweep(spark: SparkSession, srcDir: String,
-      jitters: Seq[Int] = Seq(50)): Unit =
-    jitters.foreach(j => noiseSweepAt(spark, srcDir, j))
-
-  private def noiseSweepAt(spark: SparkSession, srcDir: String,
-      jitterPermille: Int): Unit = {
-    import graft.operators.Dedup
-    val root = java.nio.file.Files.createTempDirectory("graft_noisesweep").toString
-    // 500 originals × 6 replicas = 3,000 vectors — exhaustive ground
-    // truth stays a 4.5M-kernel job
-    spark.read.parquet(s"$srcDir/embeddings.parquet")
-      .filter(col("vec_id") < 500)
-      .write.parquet(s"$root/base/embeddings.parquet")
-    try {
-      materialize(spark, s"$root/base", s"$root/rep", 6,
-        Set("embeddings"), jitterPermille = jitterPermille)
-      val base = spark.read.parquet(s"$root/base/embeddings.parquet")
-      // derive the replica stride EXACTLY as materialize does
-      // (max id + 1) — a hardcoded 500 would silently mismatch
-      // replicas to wrong originals on a sparse id space, corrupting
-      // the flip rate this sweep exists to record
-      val stride = base.agg(max(col("vec_id"))).head().getLong(0) + 1L
-      val rep = spark.read.parquet(s"$root/rep/embeddings.parquet")
-        .select(col("vec_id"), col("embedding"))
-        .localCheckpoint()
-      // measured sign-flip rate: each replica paired with its
-      // original (vec_id % stride), through the PRODUCTION estimator
-      // (r15) — the sweep's headline rate and the operator callers
-      // size with are one definition
-      val flips = graft.operators.Similarity.estimateFlipRate(
-        rep.filter(col("vec_id") < stride),
-        rep.filter(col("vec_id") >= stride)
-          .select((col("vec_id") % stride).as("vec_id"), col("embedding")))
-      def pairs(df: DataFrame) = df.select("vec_a", "vec_b").collect()
-        .map(r => (r.getLong(0), r.getLong(1))).toSet
-      val exact = pairs(Dedup.embeddingNearDupPairs(
-        rep.withColumn("one", lit(1)), "one", 0.9))
-      System.err.println(
-        f"[probe] noise-sweep jitter=$jitterPermille%d n=3000 " +
-          f"flipRate=$flips%.4f exactPairs=${exact.size}%d")
-      // T=12 row added r16: the candidate-volume step past T=8/w=32,
-      // probed where the handoff band needed a measured third option
-      val rows = for (t <- Seq(4, 8, 12); w <- Seq(16, 32)) yield {
-        val approx = pairs(Dedup.embeddingNearDupSorted(rep, 0.9, 64,
-          nBits = 32, tables = t, window = w))
-        require(approx.subsetOf(exact), "precision must be 1.0 by construction")
-        val recall = (approx & exact).size.toDouble / exact.size
-        System.err.println(f"[probe] noise-sweep T=$t%d w=$w%-3d recall=$recall%.4f")
-        f""""t${t}_w$w":$recall%.4f"""
-      }
-      println(s"""{"metric":"noisesweep","jitterPermille":$jitterPermille,""" +
-        s""""flipRate":$flips,"exactPairs":${exact.size},${rows.mkString(",")}}""")
-    } finally {
-      // probe-local replicated corpus — clean up even on a mid-sweep
-      // failure (rep is localCheckpoint'd, so the parquet read is not
-      // re-consulted once built)
-      val p = new org.apache.hadoop.fs.Path(root)
-      p.getFileSystem(spark.sparkContext.hadoopConfiguration).delete(p, true)
-    }
-  }
-
-  private def time(spark: SparkSession, name: String, dir: String): Double = {
-    val t0 = System.nanoTime()
-    SparkEntry.queries(name)(spark, dir)
-      .write.format("noop").mode("overwrite").save()
-    (System.nanoTime() - t0) / 1e9
-  }
-
   def main(args: Array[String]): Unit = {
-    // `--mutation-only` limits the run to the streaming-mutation tier
-    // (the query tiers take ~30 min; the mutation tier minutes)
-    val mutationOnly = args.contains("--mutation-only")
-    // `--fixed-batch` runs ONLY the fixed-batch tier (corpus ×factor,
-    // batch pinned — the O(batch) axis)
-    val fixedBatchOnly = args.contains("--fixed-batch")
-    // `--noise-sweep` runs ONLY the mid-noise recall sweep
-    val noiseSweepOnly = args.contains("--noise-sweep")
-    // `--growing-graph` runs ONLY the accumulated-graph tier (graph
-    // ×factor, batch AND corpus pinned — the dupClusterSink axis)
-    val growingGraphOnly = args.contains("--growing-graph")
-    // `--commit-crossover` measures the deployment's whole-vs-partial
-    // commit crossover on a REAL storage path (positional arg 2) and
-    // prints the recommended dupClusterSink partialMinPairs
-    val commitCrossoverOnly = args.contains("--commit-crossover")
-    // `--nb` runs ONLY the NB quality-filter tier (train ∝ corpus,
-    // fixed-batch scoring both forms)
-    val nbOnly = args.contains("--nb")
-    // `--factory` runs ONLY the staged q158-chain tier (model trained
-    // once outside the clock; per-stage + end-to-end rows)
-    val factoryOnly = args.contains("--factory")
-    // `--health <indexRoot>` polls every index under the root and
-    // prints the kind/rows/skew/drift table (no replication, no data)
-    val healthOnly = args.contains("--health")
-    MainFlags.requireKnown(args,
-      Set("--mutation-only", "--fixed-batch", "--noise-sweep",
-        "--growing-graph", "--commit-crossover", "--nb", "--factory",
-        "--health"))
+    val modes = Set("--health", "--commit-crossover")
+    MainFlags.requireKnown(args, modes)
+    val mode = args.filter(modes.contains).distinct
+    require(mode.length == 1,
+      s"pass exactly one mode flag (known: ${modes.toSeq.sorted.mkString(", ")})")
     val pos = MainFlags.positional(args)
-    val srcDir = pos.lift(0).getOrElse("/root/testdata/sf0.1")
-    val workDir = pos.lift(1).getOrElse("/tmp/graft_scaleprobe_sf1")
-    val factor = pos.lift(2).map(_.toInt).getOrElse(10)
-    val runs = sys.env.getOrElse("SPARK_GRAFT_PROBE_RUNS", "2").toInt
+    if (mode.head == "--health")
+      // an omitted root must not silently poll a default: the table
+      // describes THAT deployment's indexes
+      require(pos.nonEmpty,
+        "--health needs an explicit index root (positional arg 1): " +
+          "pass the directory whose children are the committed index paths")
+    else
+      // the crossover is a property of the stateRoot's IO, so a
+      // default path would hand back local-disk numbers labeled as
+      // the deployment's run
+      require(pos.length == 2,
+        "--commit-crossover needs <sfDir> <stateRoot>: the crossover is " +
+          "a property of that path's IO — pass the deployment's real " +
+          "storage mount, not a default")
     val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
     val spark = GraftSession.probeSession("graft-scaleprobe", cpus)
     spark.sparkContext.setLogLevel("ERROR")
     graft.plans.GraftFunctions.register(spark)
-
-    if (healthOnly) {
-      // positional arg 0 (the srcDir slot) is the INDEX ROOT being
-      // polled — an omitted arg must not silently poll a default
-      // (the --commit-crossover explicit-arg rule: default numbers
-      // labeled as the requested run are worse than a loud stop)
-      require(pos.nonEmpty,
-        "--health needs an explicit index root (positional arg 1): " +
-          "the table describes THAT deployment's indexes — pass the " +
-          "directory whose children are the committed index paths")
-      healthMain(spark, pos.head)
-      spark.stop()
-      return
-    }
-    if (nbOnly || factoryOnly) {
-      val (tierName, tier) =
-        if (nbOnly) ("nb", nbTier _) else ("factory", factoryTier _)
-      materialize(spark, srcDir, workDir, factor, Set("documents"))
-      Seq(srcDir, workDir).foreach { d =>
-        spark.read.parquet(s"$d/documents.parquet").count()
-      }
-      spark.range(1).write.format("noop").mode("overwrite").save()
-      // one DISCARDED full pass at the source SF first: the first tier
-      // pass pays all JIT/codegen warm-up, and with sub-second stages
-      // at these SFs that bias is larger than the signal — the r20
-      // factory tier read ×10 stages FASTER than ×1 until this pass
-      // absorbed the warm-up (min-of-runs does not help when every
-      // small-side run precedes every big-side run)
-      tier(spark, srcDir, runs)
-      val small = tier(spark, srcDir, runs).toMap
-      val big = tier(spark, workDir, runs).toMap
-      val cells = small.keys.toSeq.sorted.map { k =>
-        val (s, b) = (small(k), big(k))
-        System.err.println(
-          f"[probe] $tierName $k%-22s $s%8.2f s -> $b%8.2f s  (${b / s}%.1f×)")
-        f""""$k":{"sf01":$s%.3f,"sf1":$b%.3f,"ratio":${b / s}%.2f}"""
-      }
-      println(s"""{"metric":"scaleprobe","tier":"$tierName","factor":$factor,""" +
-        s""""runs":$runs,"timings":{${cells.mkString(",")}}}""")
-      spark.stop()
-      return
-    }
-
-    // SPARK_GRAFT_ONLY (same contract as Verify/Bench: comma-separated
-    // PREFIXES): probe only the matching queries — the per-change
-    // ratio loop instead of the ~30 min full tier. A filtered run
-    // also skips the mutation tier unless a "mutation" prefix is
-    // named, and replicates/warms ONLY the tables the selected
-    // queries read (a fresh workDir otherwise pays minutes of ×factor
-    // replication for tables the run never touches).
-    val only = sys.env.get("SPARK_GRAFT_ONLY")
-      .map(_.split(",").map(_.trim).filter(_.nonEmpty).toSeq)
-    if (noiseSweepOnly) {
-      // SPARK_GRAFT_SWEEP_JITTERS: comma-separated jitterPermille
-      // levels (default the r14 mid-noise 50); the r16 handoff
-      // bracketing ran 75,100,120
-      val jitters = sys.env.get("SPARK_GRAFT_SWEEP_JITTERS")
-        .map { v =>
-          // tolerate trailing commas, but an explicitly SET empty value
-          // fails loudly — silently sweeping the default 50 would hand
-          // the operator default numbers labeled as their bracketing run
-          val parsed = v.split(",").map(_.trim).filter(_.nonEmpty).map(_.toInt).toSeq
-          require(parsed.nonEmpty,
-            s"SPARK_GRAFT_SWEEP_JITTERS is set but holds no levels: '$v'")
-          parsed
-        }.getOrElse(Seq(50))
-      noiseSweep(spark, srcDir, jitters)
-      spark.stop()
-      return
-    }
-    if (commitCrossoverOnly) {
-      // positional arg 2 (the growing-graph tier's workDir slot) is
-      // the STORAGE PATH being probed — the crossover is a property
-      // of that path's IO, which is the whole point of the probe, so
-      // an omitted arg must not silently fall back to the /tmp
-      // default and hand back local-disk numbers labeled as the
-      // deployment's run (r18, advisor fix — the same
-      // default-numbers-as-requested-run failure the env-var parsing
-      // above fails loudly on)
-      require(pos.lift(1).isDefined,
-        "--commit-crossover needs an explicit stateRoot (positional " +
-          "arg 2): the crossover is a property of that path's IO — " +
-          "pass the deployment's real storage mount, not a default")
-      commitCrossoverTier(spark, srcDir, workDir,
-        parseGrowFactors(Seq(50, 100, 150)), runs)
-      spark.stop()
-      return
-    }
-    if (growingGraphOnly) {
-      // no replication: the corpus stays pinned at srcDir scale and
-      // the growing graph is generated synthetically
-      val rows = growingGraphTier(spark, srcDir, runs)
-      println(s"""{"metric":"scaleprobe","tier":"growing_graph","runs":$runs,""" +
-        rows.map { case (k, v) => f""""$k":$v%.3f""" }
-          .mkString(""""timings":{""", ",", "}}"))
-      spark.stop()
-      return
-    }
-    val selected =
-      (if (mutationOnly || fixedBatchOnly) Seq.empty
-       else ProbeQueries ++ CdcProbeQueries)
-        .filter(n => only.forall(_.exists(n.startsWith)))
-    val mutationSelected = mutationOnly ||
-      (!fixedBatchOnly && only.forall(_.exists("mutation".startsWith)))
-    val tables = (selected.map(tableFor).toSet ++
-      (if (mutationSelected) Set("embeddings") else Set.empty) ++
-      (if (fixedBatchOnly) Set("embeddings", "documents") else Set.empty))
-    materialize(spark, srcDir, workDir, factor, tables)
-
-    // footer/JVM warm-up at both scales, then the noop sink
-    Seq(srcDir, workDir).foreach { d =>
-      tables.foreach(t => spark.read.parquet(s"$d/$t.parquet").count())
-    }
-    spark.range(1).write.format("noop").mode("overwrite").save()
-
-    val rows = selected
-        .map { name =>
-        val small = (1 to runs).map(_ => time(spark, name, srcDir)).min
-        val big = (1 to runs).map(_ => time(spark, name, workDir)).min
-        val ratio = big / small
-        System.err.println(f"[probe] $name%-28s $small%8.2f s -> $big%8.2f s  (${ratio}%.1f×)")
-        f""""$name":{"sf01":$small%.3f,"sf1":$big%.3f,"ratio":$ratio%.2f}"""
-      }
-    // streaming-mutation tier: nLists scales with the corpus so the
-    // rewrite unit (per-list bytes) stays constant — the sizing rule a
-    // growing deployment follows
-    val mutation = if (mutationSelected) {
-      val (inS, delS) = mutationTier(spark, srcDir, 64, runs)
-      val (inB, delB) = mutationTier(spark, workDir, 64 * factor, runs)
-      System.err.println(f"[probe] mutation ingest/trigger     $inS%8.2f s -> $inB%8.2f s  (${inB / inS}%.1f×)")
-      System.err.println(f"[probe] mutation delete/trigger     $delS%8.2f s -> $delB%8.2f s  (${delB / delS}%.1f×)")
-      Some(
-        f""""mutation":{"batch":50,"ingest":{"sf01":$inS%.3f,"sf1":$inB%.3f,"ratio":${inB / inS}%.2f},""" +
-          f""""delete":{"sf01":$delS%.3f,"sf1":$delB%.3f,"ratio":${delB / delS}%.2f}}""")
-    } else None
-    val fixedBatch = if (fixedBatchOnly) {
-      val small = fixedBatchTier(spark, srcDir, runs).toMap
-      val big = fixedBatchTier(spark, workDir, runs, bucketScale = factor).toMap
-      Some(small.keys.toSeq.sorted.map { k =>
-        val (s, b) = (small(k), big(k))
-        System.err.println(
-          f"[probe] fixed-batch $k%-18s $s%8.2f s -> $b%8.2f s  (${b / s}%.1f×)")
-        f""""$k":{"sf01":$s%.3f,"sf1":$b%.3f,"ratio":${b / s}%.2f}"""
-      }.mkString(""""fixed_batch":{""", ",", "}"))
-    } else None
-    println(s"""{"metric":"scaleprobe","factor":$factor,"runs":$runs,""" +
-      (mutation.map(_ + ",").getOrElse("")) +
-      (fixedBatch.map(_ + ",").getOrElse("")) +
-      s""""queries":{${rows.mkString(",")}}}""")
-    spark.stop()
+    try {
+      if (mode.head == "--health") healthMain(spark, pos.head)
+      else commitCrossoverTier(spark, pos(0), pos(1),
+        parseGrowFactors(Seq(50, 100, 150)),
+        sys.env.getOrElse("SPARK_GRAFT_PROBE_RUNS", "2").toInt)
+    } finally spark.stop()
   }
 }

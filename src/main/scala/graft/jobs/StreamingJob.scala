@@ -48,7 +48,7 @@ object StreamingJob {
     // "one keyword × a minute range" (q15/q27/q140 shape), so each
     // trigger's files are keyword-sorted — row-group stats confine a
     // serving read to the requested keyword's groups instead of the
-    // whole trigger (LayoutProbe --state measures the skip factor)
+    // whole trigger (skip factor: SCALE.md, "Clustered state tables")
     val counts = Pipelines.clusteredStateSink(
       keywords
         .withWatermark("event_time", "10 minutes")

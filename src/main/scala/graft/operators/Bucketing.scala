@@ -51,8 +51,8 @@ object Bucketing {
     * key BOTH interleaved dimensions get tight stats, so 2-D box
     * predicates prune without any partition column. Two stock Spark
     * primitives; no custom reader. SkewSpec pins the row-group-skip
-    * behavior with scan metrics; `graft.LayoutProbe` measures it at
-    * scale (SCALE.md). */
+    * behavior with scan metrics; SCALE.md "Clustered (z-order)
+    * layout" holds the measurement at scale. */
   def writeClustered(df: DataFrame, keys: Seq[Column], path: String,
       files: Int, maxRecordsPerFile: Long): Unit =
     df.repartitionByRange(files, keys: _*)

@@ -756,7 +756,8 @@ object Dedup {
     * the driver — bounded by [[MaxShinglePushdownIds]] — and push
     * `doc_id IN (…)` into the parquet scan, where each row group's
     * doc_id DICTIONARY is probed for literal membership: exactly the
-    * groups CONTAINING a candidate are read (LayoutProbe --lsh; the
+    * groups CONTAINING a candidate are read (SCALE.md "What actually
+    * skips bytes under the pushed IN"; the
     * within-bucket doc_id sort the commit applies keeps min/max stats
     * as a fallback when a chunk's dictionary lapses, but bucketing
     * dilates per-file id bands ×nBuckets, so the dictionary — not the
@@ -1516,8 +1517,8 @@ object Dedup {
     * (see [[CcStateBuckets]]) — what [[commitClusterStatePartial]]
     * needs to carry untouched buckets per trigger. Rows sort by
     * (cluster, doc_id) within partitions either way, so "members of
-    * cluster c" reads prune ([[readClusterMembers]]; LayoutProbe
-    * --ccstate). */
+    * cluster c" reads prune ([[readClusterMembers]]; SCALE.md
+    * "ccstate serving-read probe"). */
   def writeClusterState(state: DataFrame, path: String,
       buckets: Int = 0): Unit =
     VersionedIndex.commit(state.sparkSession, path,
@@ -1557,8 +1558,8 @@ object Dedup {
   /** Serving read "the members of cluster c": on the bucketed layout,
     * partition-pruned to the ONE bucket the label hashes into, then
     * row-group-pruned by the within-bucket (cluster, doc_id) sort —
-    * a constant-row read regardless of state size (LayoutProbe
-    * --ccstate: 4,096-row scans at ×10 and ×100 alike). On the
+    * a constant-row read regardless of state size (SCALE.md "ccstate
+    * serving-read probe": 4,096-row scans at ×10 and ×100 alike). On the
     * unpartitioned layout the same commit sort gives row-group
     * pruning inside each sorted run. On the bucketed layout a plain
     * `filter(cluster === c)` over [[readClusterState]] cannot prune

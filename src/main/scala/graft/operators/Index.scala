@@ -69,8 +69,9 @@ object Index {
     @volatile private var cb: Quantization.PqCodebook = initialCodebook
     @volatile private var nVec: Long = initialNVectors
     // the list GEOMETRY preloaded like the codebook: pinned at open
-    // (ServingBench measured the probe stage as the serving-latency
-    // floor, and the per-call centroids read is most of it). Geometry
+    // (SCALE.md "ANN / similarity", round 12: the probe stage is the
+    // serving-latency floor, and the per-call centroids read is most
+    // of it). Geometry
     // is pinned across upsert/delete; rebuild() through THIS handle
     // refreshes it — a rebuild by ANOTHER writer requires re-opening,
     // exactly the codebook's documented coherence contract.

@@ -155,8 +155,8 @@ object Quantization {
     * driver Lloyd loop over ≤ trainSample rows (doc below).
     *
     * Accuracy/size knob (measured over queries {0,7,42} × sf0.001/
-    * sf0.01, exact top-10; full ladder in SCALE.md, reproducible via
-    * `runMain graft.RecallLadder`): m=16 SAMPLED (trainRounds=0)
+    * sf0.01, exact top-10; full ladder in SCALE.md "ANN /
+    * similarity"): m=16 SAMPLED (trainRounds=0)
     * averages 7.0/10 recall at a 5×k shortlist and 8.8/10 at 10×k;
     * m=16 TRAINED (trainRounds=2, the shipped default) averages
     * 8.7/10 at 5×k — per-cell ≥ the sampled codebook in all six

@@ -1197,28 +1197,11 @@ object Similarity {
     * independent of corpus size. Cost per ADDITIONAL query is the
     * marginal rows it adds to stages 2-4, not a new plan + 2 jobs —
     * measured sub-linear vs the per-query loop (SCALE.md). */
-  /** The three staged frames of the batched IVF-PQ serving plan —
-    * exposed for ServingBench's per-stage cost attribution (collecting
-    * `probes`, then `shortlistFrame`, then `result` yields cumulative
-    * stage timings over the IDENTICAL plan objects the serving call
-    * executes, so the measurement cannot drift from the product
-    * path). */
-  private[graft] final case class PqBatchStages(probes: DataFrame,
-      shortlistFrame: DataFrame, result: DataFrame)
-
   def ivfPqSearchIndexedBatch(spark: org.apache.spark.sql.SparkSession,
       indexPath: String, nProbe: Int, queries: DataFrame, k: Int,
       shortlist: Int,
       codebook: Option[Quantization.PqCodebook] = None,
-      centroids: Option[DataFrame] = None): DataFrame =
-    ivfPqBatchStages(spark, indexPath, nProbe, queries, k, shortlist,
-      codebook, centroids).result
-
-  private[graft] def ivfPqBatchStages(spark: org.apache.spark.sql.SparkSession,
-      indexPath: String, nProbe: Int, queries: DataFrame, k: Int,
-      shortlist: Int,
-      codebook: Option[Quantization.PqCodebook] = None,
-      centroids: Option[DataFrame] = None): PqBatchStages = {
+      centroids: Option[DataFrame] = None): DataFrame = {
     graft.plans.GraftFunctions.register(spark)
     val cb = codebook.getOrElse(readPqCodebook(spark, indexPath))
     val lists = readIvfLists(spark, indexPath)
@@ -1258,10 +1241,9 @@ object Similarity {
       .join(broadcast(qs.select(col("query_id"), col("q_emb"))), Seq("query_id"))
       .select(col("query_id"), col("vec_id"), col("label"),
         round(Vectors.cosine(col("embedding"), col("q_emb")), 6).as("sim"))
-    val result = graft.plans.GraftOps.topKPerGroupOrdered(reranked, Seq("query_id"),
+    graft.plans.GraftOps.topKPerGroupOrdered(reranked, Seq("query_id"),
         Seq("sim" -> false, "vec_id" -> true), k)
       .select(col("query_id"), col("vec_id"), col("label"), col("sim"))
-    PqBatchStages(probes, sl, result)
   }
 
   /** IVF-PQ: the full ANN serving composition — the coarse quantizer
@@ -1752,7 +1734,7 @@ object Similarity {
     * rank by a splitmix64-style avalanche of (t·64+j): 16/16 distinct
     * non-rotation permutations, extending recall past the rotation
     * ceiling (hybrid T=12/w=32 at 14% flips: 0.976 vs the T=8 0.957;
-    * ScaleProbe --noise-sweep re-measured in SCALE.md r16). Unsigned
+    * SCALE.md r16, "The 10–15% flip band measured"). Unsigned
     * comparison via the sign-bit flip. */
   private[graft] def bitOrder(t: Int, nBits: Int): Seq[Int] =
     if (t < 8)
@@ -1780,8 +1762,8 @@ object Similarity {
     * between the versions' canonical nBits hyperplane codes — exactly
     * the bits whose flips scatter a pair across the sketch sort
     * order, so it IS the regime parameter the recall sweep measured
-    * (0.069 on the ±0.05-jitter sweep corpus; ScaleProbe
-    * --noise-sweep computes its headline rate through this method).
+    * (0.069 on the ±0.05-jitter sweep corpus, SCALE.md "Mid-noise
+    * recall sweep"; its headline rate went through this method).
     * Cost: one plane-dot kernel pass per side over the paired ids +
     * one narrow join; run it on a sample — a few thousand pairs pin
     * the rate to well under a point. */

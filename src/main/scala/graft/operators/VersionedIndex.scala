@@ -348,7 +348,8 @@ object VersionedIndex {
       // cluster key: range reads prune unconditionally, and pushed
       // key-SET probes keep a stats fallback when a chunk's
       // dictionary lapses (the dictionary is the primary set-probe
-      // skip — LayoutProbe --lsh measures the decomposition). Any
+      // skip — SCALE.md "What actually skips bytes under the pushed
+      // IN" holds the decomposition). Any
       // change here is an index LAYOUT change — bump [[Format]].
       val ccols = clusterBy.getOrElse(name, Seq.empty)
       val sorted =

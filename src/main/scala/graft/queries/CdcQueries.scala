@@ -141,7 +141,7 @@ object CdcQueries {
       |GROUP BY tbl, is_deleted
       |ORDER BY tbl, is_deleted""".stripMargin) { (s, d) =>
     // ONE shared build definition (buildReferenceMirror, also behind
-    // q145 and LayoutProbe --mirror); the deletes-against-live-
+    // q145); the deletes-against-live-
     // mirror path (hard deletes removing rows already on disk) is
     // covered by SyncMirrorSpec's multi-batch streaming rounds.
     QueryDef.withScratchDir(s, "graft-q120") { dir =>
@@ -154,7 +154,7 @@ object CdcQueries {
   }
 
   /** THE reference-policy mirror build — one definition shared by the
-    * q120 runner, q145 and `LayoutProbe --mirror`, so the
+    * q120 runner and q145, so the
     * "q145 is gated against exactly q120's build" claim cannot drift:
     * keyed envelopes parsed and applied as ONE batch under the
     * reference routing policy.
@@ -187,8 +187,8 @@ object CdcQueries {
   // write exists for: hash bucketing spreads every id range across ALL
   // bucket dirs, so dir-level pruning cannot serve a range read —
   // within-bucket (table, id) sort order gives the parquet reader
-  // row-group min/max stats to skip instead (`LayoutProbe --mirror`
-  // measures the skip; SCALE.md r13). Oracle: q120's last-writer-wins
+  // row-group min/max stats to skip instead (SCALE.md r13, "Clustered
+  // layout ADOPTED: the CDC mirror"). Oracle: q120's last-writer-wins
   // + routing replay restricted to the served table and range — ts_ms
   // and the tombstone flag are deterministic (ties resolve
   // is_deleted-first), `value` stays excluded exactly as in q120.

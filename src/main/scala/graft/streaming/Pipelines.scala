@@ -342,7 +342,7 @@ object Pipelines {
       // SyncService point-read shape) prunes row groups instead of
       // scanning whole buckets (hash bucketing spreads every id range
       // across ALL buckets, so dir-level pruning can't help there;
-      // measured by `LayoutProbe --mirror`, SCALE.md r13).
+      // SCALE.md "Clustered layout ADOPTED: the CDC mirror", r13).
       // `maxRecordsPerFile` 0 = writer default; the layout probe passes
       // a small value to surface multi-file row-group geometry at toy
       // scale (at 100 TB natural row-group segmentation provides it).
@@ -639,8 +639,8 @@ object Pipelines {
     * range, q15/q27/q140) scans everything the time-dir pruning
     * leaves. With key-leading sort order, row-group min/max confine
     * the scan to the requested key's groups — O(|answer| + files)
-    * rows, not O(state table); `LayoutProbe --state` measures the
-    * factor and SCALE.md records it. Exactly-once: checkpointed
+    * rows, not O(state table); SCALE.md "Clustered state tables"
+    * records the measured factor. Exactly-once: checkpointed
     * offsets + per-batch dir overwrite (same contract as
     * [[corpusFactorySink]]). */
   def clusteredStateSink(counts: DataFrame, path: String, checkpoint: String,
@@ -1273,7 +1273,7 @@ object Pipelines {
     * (SCALE.md r15) and, on the accumulated-graph axis the corpus
     * probe doesn't isolate, a fold that reads 1.44→2.43 s across
     * ×1→×20 graph growth where the full re-close read 3.49→10.16 s
-    * (ScaleProbe --growing-graph, SCALE.md r16). Never the corpus
+    * (SCALE.md r16, "the growing-graph axis"). Never the corpus
     * re-hash of the one-shot form. The COMMIT is adaptive on the
     * accumulated pair count: small states whole-write the r15
     * unpartitioned layout (measured cheaper below the ≈12M-pair

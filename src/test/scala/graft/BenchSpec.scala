@@ -2,67 +2,8 @@ package graft
 
 import org.scalatest.funsuite.AnyFunSuite
 
-/** The warm sweep's selection rule and record parsing — pure logic, no
-  * Spark session. The movers arm is the r19 fix for the q89 escape: a
-  * formerly-cheap query that regresses hard is exactly what the
-  * absolute-top-N rule cannot see. */
+/** The bench's last-line record — pure logic, no Spark session. */
 class BenchSpec extends AnyFunSuite {
-
-  test("parseBenchQueries: flat queries object, -1 failures dropped, junk tolerated") {
-    val rec = """{"metric":"total","value":12.3,"unit":"sec",""" +
-      """"queries":{"q01_a":1.5,"q02_b":0.25,"q03_fail":-1.0},"sf":"x"}"""
-    assert(Bench.parseBenchQueries(rec) == Map("q01_a" -> 1.5, "q02_b" -> 0.25))
-    assert(Bench.parseBenchQueries("no queries here") == Map.empty)
-  }
-
-  test("selectWarmSet: top-N by wall time, movers appended by |log ratio|, no duplicates") {
-    val cur = Map("big1" -> 10.0, "big2" -> 8.0, "mid" -> 2.0,
-      "mover_up" -> 6.0, "mover_down" -> 0.6, "steady" -> 1.0)
-    val prev = Map("big1" -> 9.5, "big2" -> 8.2, "mid" -> 2.1,
-      "mover_up" -> 1.5, "mover_down" -> 2.4, "steady" -> 1.0)
-    val sel = Bench.selectWarmSet(cur, prev, topN = 3, topMovers = 2, floorSec = 0.5)
-    // wall-time picks first, in descending-time order
-    assert(sel.take(3) == Seq("big1", "big2", "mover_up"))
-    // mover slots go ONLY to queries not already selected (r20 advisor
-    // fix — excluded BEFORE the take, so an already-selected heavy
-    // mover like mover_up frees its slot): mover_down (4.0× down, the
-    // q89 shape) then mid (the next-largest remaining ratio)
-    assert(sel.drop(3) == Seq("mover_down", "mid"))
-    assert(sel.distinct == sel)
-  }
-
-  test("selectWarmSet: mover slots are not consumed by already-selected queries") {
-    // the r19 escape the advisor flagged: every top-|log ratio| mover
-    // is ALSO in the wall-time top-N (uniform host drift inflates the
-    // heavies), and a cheap-query regression ranks just past
-    // topMovers over the full set — post-take dedup would select zero
-    // new movers and miss it
-    val heavy = (1 to 5).map(i => s"q_heavy$i" -> (20.0 + i)).toMap
-    val cur = heavy.map { case (k, v) => k -> v * 3.0 } + // 3.0× drift
-      ("q_cheap_regressed" -> 1.6) + ("q_steady" -> 1.0)
-    val prev = heavy + ("q_cheap_regressed" -> 0.55) + ("q_steady" -> 1.0)
-    val sel = Bench.selectWarmSet(cur, prev, topN = 5, topMovers = 2, floorSec = 0.5)
-    // all five heavies hold the top-5; their 3.0× ratios outrank the
-    // cheap query's 2.9× — only the pre-take exclusion lets it in
-    assert(sel.take(5).toSet == heavy.keySet)
-    assert(sel.contains("q_cheap_regressed"),
-      "a cheap regression must not lose its mover slot to already-selected heavies")
-  }
-
-  test("selectWarmSet: the q89 shape is caught — regressed query below old top-N still selected") {
-    // r18 re-enacted: q89 was 1.68 s (nowhere near the top) and read
-    // 6.52 s in the new record; the top-10 of the PREVIOUS record
-    // missed it, and under the old rule the top-10 of the CURRENT
-    // record could too if 10 other queries sit above 6.52 s
-    val heavy = (1 to 10).map(i => s"q_heavy$i" -> (20.0 - i * 0.1)).toMap
-    val cur = heavy + ("q89" -> 6.52) + ("q_cheap" -> 0.3)
-    val prev = heavy + ("q89" -> 1.68) + ("q_cheap" -> 0.31)
-    val sel = Bench.selectWarmSet(cur, prev, topN = 10, topMovers = 5, floorSec = 0.5)
-    assert(!sel.take(10).contains("q89"), "setup: q89 must not make the top-10")
-    assert(sel.contains("q89"), "the movers arm must catch the regression")
-    // sub-floor queries never qualify as movers (pure-noise swings)
-    assert(!sel.contains("q_cheap"))
-  }
 
   test("compactRecord: fits the driver's 2000-char tail capture and parses") {
     val line = Bench.compactRecord(total = 186.5554, nRuns = 3,
@@ -83,11 +24,16 @@ class BenchSpec extends AnyFunSuite {
     // no per-query map — that is exactly what overflowed the tail
     assert(!line.contains(""""queries":{"""))
     assert(line.endsWith("}"))
-  }
-
-  test("selectWarmSet: no previous record degrades to the absolute rule") {
-    val cur = Map("a" -> 3.0, "b" -> 2.0, "c" -> 1.0)
-    assert(Bench.selectWarmSet(cur, Map.empty, topN = 2, topMovers = 5, 0.5) ==
-      Seq("a", "b"))
+    // paths and error messages are escaped: a quote or backslash in
+    // either still leaves a record a JSON parser reads back verbatim
+    val sfDir = "C:\\data\\sf \"0.1\""
+    val err = "q07 failed: \"bad\" path \\tmp"
+    val escaped = Bench.compactRecord(total = 1.0, nRuns = 1,
+      runTotals = Seq(1.0), errors = Seq(err), sfDir = sfDir,
+      queriesFile = "out\\BENCH \"full\".json", nQueries = 1)
+    val node = new com.fasterxml.jackson.databind.ObjectMapper().readTree(escaped)
+    assert(node.get("sf").asText() == sfDir)
+    assert(node.get("errors").get(0).asText() == err)
+    assert(node.get("queries_file").asText() == "out\\BENCH \"full\".json")
   }
 }

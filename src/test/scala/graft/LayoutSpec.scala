@@ -758,7 +758,7 @@ class LayoutSpec extends SparkSuite {
     spark.conf.set("spark.sql.parquet.pushdown.inFilterThreshold",
       graft.operators.Dedup.MaxShinglePushdownIds.toString)
     // AQE off for metric visibility only: an adaptive plan hides the
-    // FileSourceScanExec behind query stages (the LayoutProbe rule);
+    // FileSourceScanExec behind query stages;
     // the semi-join stays a broadcast join via the explicit hint
     val savedAqe = spark.conf.get("spark.sql.adaptive.enabled")
     spark.conf.set("spark.sql.adaptive.enabled", "false")
@@ -1506,7 +1506,7 @@ class LayoutSpec extends SparkSuite {
     assert(thrown.getMessage.contains("no committed index"))
   }
 
-  test("ScaleProbe replica markers: space-safe src paths, legacy form, loud mismatch") {
+  test("ScaleProbe replica markers: space-safe src paths, loud mismatch") {
     import graft.ScaleProbe
     val root = Files.createTempDirectory("mkspace").toString
     // a src path CONTAINING A SPACE must round-trip: the old marker
@@ -1521,22 +1521,23 @@ class LayoutSpec extends SparkSuite {
     assert(n == 100)
     // identical params → the replica is REUSED, not rejected
     ScaleProbe.materialize(spark, srcDir, out, 2, Set("embeddings"))
-    // a marker stamped by the legacy single-line revision still
-    // round-trips (the numeric tail anchors the parse, so even a
-    // legacy src with spaces survives); the .crc sidecar must go or
-    // Hadoop's checksummed local FS rejects the hand-edited file
+    // ...but a genuine param mismatch stays LOUD (wrong noise regime)
+    val bad = intercept[IllegalArgumentException](
+      ScaleProbe.materialize(spark, srcDir, out, 2, Set("embeddings"),
+        jitterPermille = 50))
+    assert(bad.getMessage.contains("wrong replica regime"))
+    // a marker in the old single-line form is a mismatch too, not a
+    // second accepted format; the .crc sidecar must go or Hadoop's
+    // checksummed local FS rejects the hand-edited file
     val srcKey = new org.apache.hadoop.fs.Path(srcDir).toString
     val mkDir = s"$out/embeddings.parquet"
     assert(new java.io.File(s"$mkDir/._GRAFT_PARAMS.crc").delete())
     java.nio.file.Files.write(
       java.nio.file.Paths.get(s"$mkDir/_GRAFT_PARAMS"),
       s"src=$srcKey factor=2 jitterPermille=10".getBytes("UTF-8"))
-    ScaleProbe.materialize(spark, srcDir, out, 2, Set("embeddings"))
-    // ...but a genuine param mismatch stays LOUD (wrong noise regime)
-    val bad = intercept[IllegalArgumentException](
-      ScaleProbe.materialize(spark, srcDir, out, 2, Set("embeddings"),
-        jitterPermille = 50))
-    assert(bad.getMessage.contains("wrong replica regime"))
+    val single = intercept[IllegalArgumentException](
+      ScaleProbe.materialize(spark, srcDir, out, 2, Set("embeddings")))
+    assert(single.getMessage.contains("wrong replica regime"))
   }
 
   test("ccstate partial commit: a trigger rewrites only touched buckets, the rest carry") {
@@ -1606,8 +1607,8 @@ class LayoutSpec extends SparkSuite {
     val root = Files.createTempDirectory("ccpin").toString
     // 4-node chains over an xxhash64-mixed id space (a TRUE mix — an
     // affine scramble leaves member ids in label-correlated
-    // progressions with artificial stats power; LayoutProbe --ccstate
-    // uses the same construction at ×10/×100)
+    // progressions with artificial stats power; SCALE.md "ccstate
+    // serving-read probe" used the same construction at ×10/×100)
     def mix(c: org.apache.spark.sql.Column) = pmod(xxhash64(c), lit(1L << 60))
     val synth = spark.range(3000).select(
       mix(expr("id DIV 3") * 4 + (col("id") % 3)).as("doc_a"),
@@ -1634,8 +1635,8 @@ class LayoutSpec extends SparkSuite {
       // the serving helper supplies the label's hash bucket (partition
       // pruning) and the commit's within-bucket (cluster, doc_id) sort
       // confines the read to the row groups holding the cluster — a
-      // constant-row read regardless of state size (LayoutProbe: one
-      // row group at ×10 AND ×100). A dropped commit sort OR a dropped
+      // constant-row read regardless of state size (SCALE.md "ccstate
+      // serving-read probe": one row group at ×10 AND ×100). A dropped commit sort OR a dropped
       // bucket predicate fails this loudly.
       assert(scanned <= 2 * perFile,
         s"members-of-cluster read materialized $scanned of $total rows — " +

@@ -251,12 +251,21 @@ class QuantizationSpec extends SparkSuite {
     }
   }
 
+  /** Deterministic isotropic corpus: n 64-dim vectors with
+    * hash-uniform elements in [-1,1). */
+  private def syntheticIsotropic(n: Long) =
+    spark.range(n).select(col("id").as("vec_id"),
+      transform(sequence(lit(0), lit(63)), i =>
+        (pmod(hash(col("id"), i, lit(7)), lit(2000)).cast("double") / 999.5 - 1.0)
+          .cast("float")).as("embedding"),
+      lit(0).as("label"))
+
   test("auto shortlist holds ladder recall past the cap boundary (n > 8*cap)") {
     // The ShortlistCap binds once ceil(n/8) > 10^4, i.e. n > 80k for
     // whole-corpus serving (n > 80k*nLists/nProbe probed) — no driver
     // fixture reaches that, so the pin runs on the deterministic
-    // isotropic corpus (RecallLadder.syntheticIsotropic, the r13
-    // cap-boundary probe data). At n=160k the capped shortlist is a
+    // isotropic corpus (syntheticIsotropic, the r13 cap-boundary
+    // probe data). At n=160k the capped shortlist is a
     // 6.3% ratio — BELOW the r11 ladder's measured 8% band floor —
     // yet recall measured 10/10 here and out to n=1M at a 1% ratio
     // (SCALE.md r13): the small-absolute ratio law saturates once the
@@ -265,7 +274,7 @@ class QuantizationSpec extends SparkSuite {
     // one under test.
     val k = 10
     val n = 160000L
-    val emb = graft.RecallLadder.syntheticIsotropic(spark, n).cache()
+    val emb = syntheticIsotropic(n).cache()
     try {
       val sl = Similarity.autoShortlist(n, 1, 1, k)
       assert(sl == Similarity.ShortlistCap, s"expected the cap arm, got $sl")

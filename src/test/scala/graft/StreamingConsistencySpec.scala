@@ -237,7 +237,7 @@ class StreamingConsistencySpec extends SparkSuite {
     assert(landed.count() > 0)
     assert(sortedRows(landed) == sortedRows(batch))
     // layout: every landed file is (keyword, minute)-sorted — the
-    // row-group-stats property LayoutProbe --state measures at scale
+    // row-group-stats property SCALE.md "Clustered state tables" measures
     val fs = new java.io.File(s"$base/state")
     val files = fs.listFiles().filter(_.getName.startsWith("batch="))
       .flatMap(_.listFiles()).filter(_.getName.endsWith(".parquet"))
