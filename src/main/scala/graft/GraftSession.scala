@@ -43,7 +43,7 @@ object GraftSession {
   /** The measurement/driver-main session: every probe and bench main
     * builds exactly this shape (AQE on, UTC, right-sized shuffle
     * parallelism, ns-epoch events readable, no UI, the silent-failure
-    * parquet confs) — one definition instead of hand-synced builder
+    * parquet confs) — one definition instead of hand-synced session
     * stanzas. Kept separate from
     * [[create]]: the product session registers optimizer extensions
     * and native functions; measurement mains opt into functions

@@ -7,7 +7,7 @@ import org.apache.spark.sql.functions._
   * holds the frozen tables; `perfbench/` is the one measurement
   * harness). Three uses remain:
   *
-  *  - [[materialize]]: the ×F replica builder the similarity and
+  *  - [[materialize]]: the ×F replication the similarity and
   *    layout tests use, and the one real-shape scaling input for an
   *    operator family. MEASUREMENT ONLY, never an oracle input (the
   *    driver generates data up to sf0.1; correctness gates run
