@@ -36,22 +36,9 @@ object Bench {
     def r(v: Double) = math.rint(v * 1000) / 1000
     s"""{"metric":"total","value":${r(total)},"unit":"sec","runs":$nRuns,""" +
       s""""run_totals":${runTotals.map(r).mkString("[", ",", "]")},""" +
-      s""""errors":${errors.map(jsonStr).mkString("[", ",", "]")},""" +
-      s""""n_queries":$nQueries,"queries_file":${jsonStr(queriesFile)},""" +
-      s""""sf":${jsonStr(sfDir)}}"""
-  }
-
-  /** A JSON string literal: quotes, backslashes and control characters
-    * escaped, so a path or error message cannot break the record. */
-  private def jsonStr(v: String): String = {
-    val b = new StringBuilder("\"")
-    v.foreach {
-      case '"' => b ++= "\\\""
-      case '\\' => b ++= "\\\\"
-      case c if c < ' ' => b ++= f"\\u${c.toInt}%04x"
-      case c => b += c
-    }
-    (b += '"').result()
+      s""""errors":${errors.map(JsonStr(_)).mkString("[", ",", "]")},""" +
+      s""""n_queries":$nQueries,"queries_file":${JsonStr(queriesFile)},""" +
+      s""""sf":${JsonStr(sfDir)}}"""
   }
 
   /** Per-query median over the suite runs, averaging the middle pair
@@ -116,8 +103,8 @@ object Bench {
       name -> median(runs.flatMap(r => Some(r(i)._2).filter(_ >= 0)))
     }
     def qjson(kvs: Seq[(String, Double)]): String =
-      kvs.map { case (k, v) => jsonStr(k) + ":" + v }.mkString("{", ",", "}")
-    val errs = errors.map(jsonStr).mkString("[", ",", "]")
+      kvs.map { case (k, v) => JsonStr(k) + ":" + v }.mkString("{", ",", "}")
+    val errs = errors.map(JsonStr(_)).mkString("[", ",", "]")
     val total = medians.map(_._2).filter(_ >= 0).sum
     val runTotals = runs.map(_.map(_._2).filter(_ >= 0).sum)
       .mkString("[", ",", "]")
@@ -126,7 +113,7 @@ object Bench {
     def mkHead(fmt: Double => Double): String =
       s""""metric":"total","value":${fmt(total)},"unit":"sec","runs":$nRuns,""" +
         s""""run_totals":$runTotals,"queries":${qjson(medians.map { case (k, v) => k -> fmt(v) })},""" +
-        s""""errors":$errs,"sf":${jsonStr(sfDir)}"""
+        s""""errors":$errs,"sf":${JsonStr(sfDir)}"""
     // Full record (per-run matrix) to a file the driver can't truncate.
     val outPath = sys.env.getOrElse("SPARK_GRAFT_BENCH_OUT", "/root/repo/BENCH_FULL.json")
     val detail = runs.map(qjson).mkString("[", ",", "]")

@@ -57,9 +57,9 @@ object ScaleProbe {
     // jitter=10 is silently reused for a jitter=50 request (wrong
     // noise regime — corrupts exactly the numbers a sweep exists to
     // measure; same for factor). An underscore file inside the table
-    // dir is invisible to parquet readers. Marker PRESENT + mismatch
-    // = loud failure; marker ABSENT (a pre-marker layout) = rebuild
-    // with a stderr note, since the stored params are unknowable.
+    // dir is invisible to parquet readers. A mismatch is a loud
+    // failure, and so is a MISSING marker: the params that built the
+    // dir are unknowable, so it is refused, not reused or rebuilt.
     // src is part of the replica identity too: the same outDir built
     // from a DIFFERENT source corpus at matching factor/jitter would
     // otherwise be reused silently — the same wrong-regime failure
@@ -87,9 +87,9 @@ object ScaleProbe {
       try out.write(renderMarker(wanted(name)).getBytes("UTF-8"))
       finally out.close()
     }
-    // Line-per-field only. Unparseable content (including the old
-    // single-line form) maps to a sentinel that can never equal
-    // wanted(), so the mismatch require stays loud.
+    // Line-per-field only. Unparseable content (the old single-line
+    // form, or the "no marker" stand-in) maps to a sentinel that can
+    // never equal wanted(), so the mismatch require stays loud.
     def parseMarker(stored: String): Map[String, String] =
       stored.trim.linesIterator.map(_.trim).filter(_.nonEmpty).map { line =>
         val i = line.indexOf('=')
@@ -99,15 +99,11 @@ object ScaleProbe {
       if (!tables.contains(name.stripSuffix(".parquet"))) return false
       val dir = new org.apache.hadoop.fs.Path(s"$outDir/$name")
       if (!fs.exists(dir)) return true
-      if (!fs.exists(marker(name))) {
-        System.err.println(s"[probe] $dir predates the replica-param " +
-          "marker — rebuilding (params unknowable)")
-        require(fs.delete(dir, true), s"failed to clear unmarked $dir")
-        return true
-      }
-      val in = fs.open(marker(name))
-      val stored = try scala.io.Source.fromInputStream(in, "UTF-8").mkString
+      val stored = if (!fs.exists(marker(name))) "no marker" else {
+        val in = fs.open(marker(name))
+        try scala.io.Source.fromInputStream(in, "UTF-8").mkString
         finally in.close()
+      }
       // field-by-field compare, with the stored src normalized the same
       // way as wanted()'s — a marker stamped by a revision (or caller)
       // that spelled the identical source differently must not
@@ -221,14 +217,19 @@ object ScaleProbe {
           f"| ${s.medianPartition} | ${s.skew}%.2f | ${s.carryDepth} " +
           f"| ${s.carriedParts} | ${s.emptied} | $drift |")
     }
-    println(s"""{"metric":"health","root":"$root","indexes":{""" +
+    println(healthRecord(root, rows))
+  }
+
+  /** The `--health` stdout record, pure so the spec reads it back. */
+  private[graft] def healthRecord(root: String,
+      rows: Seq[(String, graft.operators.Index.IndexStats)]): String =
+    s"""{"metric":"health","root":${JsonStr(root)},"indexes":{""" +
       rows.map { case (name, s) =>
-        s""""$name":{"kind":"${s.kind}","rows":${s.rows},""" +
+        s"""${JsonStr(name)}:{"kind":${JsonStr(s.kind)},"rows":${s.rows},""" +
           s""""partitions":${s.partitions},"skew":${f"${s.skew}%.4f"},""" +
           s""""carryDepth":${s.carryDepth},"carriedParts":${s.carriedParts},""" +
           s""""emptied":${s.emptied},"drift":${s.drift.map(d => f"$d%.6f").getOrElse("null")}}"""
-      }.mkString(",") + "}}")
-  }
+      }.mkString(",") + "}}"
 
   /** SPARK_GRAFT_GROW_FACTORS, the commit-crossover state-size
     * ladder. Tolerates trailing commas; an explicitly SET empty value fails
@@ -381,7 +382,7 @@ object ScaleProbe {
         f"""{"pairs":$p,"whole":$w%.3f,"partial":$q%.3f}"""
       }.mkString("[", ",", "]")
       println(s"""{"metric":"scaleprobe","tier":"commit_crossover",""" +
-        s""""runs":$runs,"cold":$cold,"stateRoot":"$stateRoot","rows":$rowsJson,""" +
+        s""""runs":$runs,"cold":$cold,"stateRoot":${JsonStr(stateRoot)},"rows":$rowsJson,""" +
         s""""recommendedPartialMinPairs":${rec.map(_.toString).getOrElse("null")}}""")
     } finally {
       releaseLocalCheckpoint(batch)

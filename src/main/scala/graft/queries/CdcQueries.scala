@@ -174,11 +174,11 @@ object CdcQueries {
     * The parse checkpoint is gone with the second consumer:
     * applyCdcBatch caches its routed input once. */
   private[graft] def buildReferenceMirror(s: SparkSession, d: String,
-      mirrorDir: String, maxRecordsPerFile: Long = 0L): Unit = {
+      mirrorDir: String): Unit = {
     import graft.streaming.Pipelines
     Pipelines.applyCdcBatch(s, Cdc.parse(synthesizedKeyed(s, d), col("value")),
       mirrorDir, Pipelines.MirrorBuckets, Pipelines.ReferenceTablePolicy,
-      Pipelines.TablePolicy.SkipTable, maxRecordsPerFile)
+      Pipelines.TablePolicy.SkipTable)
   }
 
   // The mirror as a SERVING table — the reference's SyncService read

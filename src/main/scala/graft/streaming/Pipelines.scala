@@ -343,9 +343,10 @@ object Pipelines {
       // scanning whole buckets (hash bucketing spreads every id range
       // across ALL buckets, so dir-level pruning can't help there;
       // SCALE.md "Clustered layout ADOPTED: the CDC mirror", r13).
-      // `maxRecordsPerFile` 0 = writer default; the layout probe passes
-      // a small value to surface multi-file row-group geometry at toy
-      // scale (at 100 TB natural row-group segmentation provides it).
+      // `maxRecordsPerFile` 0 = writer default; SyncMirrorSpec's sort
+      // pin passes a small value to surface multi-file row-group
+      // geometry at toy scale (at 100 TB natural row-group segmentation
+      // provides it).
       val sorted = merged.repartition(col("bucket"))
         .sortWithinPartitions(col("bucket"), col("table"), col("id"))
         .write.mode("overwrite")

@@ -1538,6 +1538,13 @@ class LayoutSpec extends SparkSuite {
     val single = intercept[IllegalArgumentException](
       ScaleProbe.materialize(spark, srcDir, out, 2, Set("embeddings")))
     assert(single.getMessage.contains("wrong replica regime"))
+    // a replica dir with no marker at all is refused the same way: its
+    // params are unknowable, so it is neither reused nor rebuilt
+    assert(new java.io.File(s"$mkDir/_GRAFT_PARAMS").delete())
+    val unmarked = intercept[IllegalArgumentException](
+      ScaleProbe.materialize(spark, srcDir, out, 2, Set("embeddings")))
+    assert(unmarked.getMessage.contains("wrong replica regime"))
+    assert(new java.io.File(s"$mkDir").isDirectory)
   }
 
   test("ccstate partial commit: a trigger rewrites only touched buckets, the rest carry") {
@@ -1747,6 +1754,16 @@ class LayoutSpec extends SparkSuite {
     Seq("\"ivf\"", "\"ivfpq\"", "\"lsh\"", "\"sketch\"").foreach(k =>
       assert(json.contains(k), s"missing $k in $json"))
     assert(!json.contains("staging"))
+    // a root or index name holding a quote or backslash still leaves a
+    // record a JSON parser reads back verbatim
+    val oddRoot = "/mnt/ix \"prod\"\\v2"
+    val oddName = "lsh \"a\"\\b"
+    val rec = new com.fasterxml.jackson.databind.ObjectMapper().readTree(
+      graft.ScaleProbe.healthRecord(oddRoot, Seq(oddName -> stats("lsh"))))
+    assert(rec.get("root").asText() == oddRoot)
+    assert(rec.get("indexes").get(oddName).get("kind").asText() == "lsh")
+    assert(rec.get("indexes").get(oddName).get("rows").asLong() ==
+      stats("lsh").rows)
   }
 
   test("commit-crossover recommendation: bracketed interpolation, floor, and honest None") {
