@@ -133,21 +133,6 @@ object Pipelines {
       col("window_start"), col("key"), col("cnt"),
       current_timestamp().as("detected_at"))
 
-  /** ST9 rate control: bound the per-trigger intake of a streaming
-    * reader — `maxFilesPerTrigger` (file sources) / `maxOffsetsPerTrigger`
-    * (Kafka). The reference throttles with sleep-retry loops
-    * (ks/main.py:362-367, SyncService.py:433-438); Structured Streaming
-    * inverts that: the source admits a bounded batch per trigger and
-    * task/query restart handles transient failure, so an ingest spike
-    * degrades to more triggers, not an OOM. */
-  def rateLimited(reader: org.apache.spark.sql.streaming.DataStreamReader,
-      maxFilesPerTrigger: Option[Int] = None,
-      maxOffsetsPerTrigger: Option[Long] = None)
-      : org.apache.spark.sql.streaming.DataStreamReader = {
-    val r1 = maxFilesPerTrigger.fold(reader)(n => reader.option("maxFilesPerTrigger", n))
-    maxOffsetsPerTrigger.fold(r1)(n => r1.option("maxOffsetsPerTrigger", n))
-  }
-
   /** F9 streaming form: dedup by natural key (existsByLink,
     * ArticleRepository.java:21) on a stream. State is bounded by the
     * watermark: a key is remembered only while late duplicates can
@@ -250,16 +235,16 @@ object Pipelines {
     * materializes at most `nBuckets` small integers, never rows).
     *
     * Crash-atomic per bucket: merged output is staged under a hidden
-    * `.staging` dir, then swapped in with rename via a `.bak` dir. A
-    * crash at any point leaves every bucket recoverable: `recover()`
-    * restores live data from `.bak` on the next batch, and the
+    * `.staging` dir, then each touched bucket is [[publish]]ed with
+    * `.bak/bucket=N` as its aside. A crash at any point leaves every
+    * bucket recoverable: [[recoverMirror]] restores live data from
+    * `.bak` on the next batch, and the
     * checkpointed source replays the interrupted batch, whose merge is
     * idempotent — so exactly-once state survives failure. */
   def applyCdcBatch(spark: SparkSession, parsed: DataFrame, mirrorPath: String,
       nBuckets: Int = MirrorBuckets,
       policy: Map[String, TablePolicy] = Map.empty,
-      defaultPolicy: TablePolicy = TablePolicy.SoftDelete,
-      maxRecordsPerFile: Long = 0L): Unit = {
+      defaultPolicy: TablePolicy = TablePolicy.SoftDelete): Unit = {
     // cached: the routed batch is consumed TWICE (touched-bucket
     // collect, then the merge) — without the cache a caller whose
     // `parsed` is itself an expensive lazy chain (JSON parse over a
@@ -343,31 +328,21 @@ object Pipelines {
       // scanning whole buckets (hash bucketing spreads every id range
       // across ALL buckets, so dir-level pruning can't help there;
       // SCALE.md "Clustered layout ADOPTED: the CDC mirror", r13).
-      // `maxRecordsPerFile` 0 = writer default; SyncMirrorSpec's sort
-      // pin passes a small value to surface multi-file row-group
-      // geometry at toy scale (at 100 TB natural row-group segmentation
-      // provides it).
-      val sorted = merged.repartition(col("bucket"))
+      // Files split at the session's per-file record cap (a
+      // `spark.sql.files` conf; SyncMirrorSpec's sort pin lowers it to
+      // surface multi-file row-group geometry at toy scale; at 100 TB
+      // natural row-group segmentation provides it).
+      merged.repartition(col("bucket"))
         .sortWithinPartitions(col("bucket"), col("table"), col("id"))
         .write.mode("overwrite")
-      (if (maxRecordsPerFile > 0)
-        sorted.option("maxRecordsPerFile", maxRecordsPerFile)
-      else sorted)
         .partitionBy("bucket").parquet(staging.toString)
       val bak = new Path(root, ".bak")
       fs.mkdirs(bak)
-      // HDFS reports rename/delete failure by RETURNING FALSE, not by
-      // throwing — an unchecked rename here silently loses a bucket.
+      // a touched bucket with no staged dir (every row hard-deleted)
+      // publishes as absent
       touched.foreach { b =>
-        val live = new Path(root, s"bucket=$b")
-        val stagedB = new Path(staging, s"bucket=$b")
-        val bakB = new Path(bak, s"bucket=$b")
-        if (fs.exists(live))
-          require(fs.rename(live, bakB), s"failed to move $live aside")
-        if (fs.exists(stagedB))
-          require(fs.rename(stagedB, live), s"failed to publish $stagedB")
-        if (fs.exists(bakB))
-          require(fs.delete(bakB, true), s"failed to drop backup $bakB")
+        val name = s"bucket=$b"
+        publish(fs, new Path(staging, name), new Path(root, name), new Path(bak, name))
       }
       require(fs.delete(bak, true), s"failed to clean $bak")
       if (fs.exists(staging))
@@ -376,19 +351,14 @@ object Pipelines {
   }
 
   /** Crash recovery for the bucket swap: a leftover `.bak/bucket=N`
-    * means the previous batch died mid-swap. If the live dir exists the
-    * staged data already landed → drop the backup; otherwise the live
-    * dir was moved aside but never replaced → move it back. Either way
-    * the interrupted batch replays from the checkpoint afterwards. */
+    * means the previous batch died mid-swap; [[restore]] each one, then
+    * drop `.bak`. The interrupted batch replays from the checkpoint
+    * afterwards. */
   private def recoverMirror(fs: org.apache.hadoop.fs.FileSystem, root: Path): Unit = {
     val bak = new Path(root, ".bak")
     if (fs.exists(bak)) {
-      fs.listStatus(bak).foreach { st =>
-        val live = new Path(root, st.getPath.getName)
-        if (fs.exists(live))
-          require(fs.delete(st.getPath, true), s"failed to drop ${st.getPath}")
-        else require(fs.rename(st.getPath, live), s"failed to restore $live")
-      }
+      fs.listStatus(bak).foreach(st =>
+        restore(fs, new Path(root, st.getPath.getName), st.getPath))
       require(fs.delete(bak, true), s"failed to clean $bak")
     }
   }
@@ -422,57 +392,58 @@ object Pipelines {
         spark.sparkContext.emptyRDD[org.apache.spark.sql.Row], current.schema)
     val delta = graft.operators.TimeSeries.rankDelta(current, previous, topN = topN)
     // delta reads the old snapshot, so publish it BEFORE the swap.
-    writeSwap(spark, fs, root, "delta", delta)
-    writeSwap(spark, fs, root, "snapshot", current)
+    writeSwap(fs, root, "delta", delta)
+    writeSwap(fs, root, "snapshot", current)
   }
 
-  /** Publish `df` at `root/name` with NO lost-table crash window: the
-    * previous live dir is renamed ASIDE (never deleted) before the
-    * replacement renames in, and is dropped only after the new table
-    * is live. A crash between the two renames leaves the previous
+  /** Publish `df` at `root/name` with NO lost-table crash window:
+    * written to `.tmp-name`, then [[publish]]ed with `.old-name` as
+    * the aside. A crash between the two renames leaves the previous
     * table recoverable at `.old-name`; [[restoreSwap]] (run by every
     * reader in the apply loop) renames it back, so an authoritative
     * long-lived table — the TTL loop's `counts`, whose idle keys are
     * NEVER re-emitted by update-mode state — cannot silently vanish
-    * and restart empty. Boolean returns checked: a silently failed
-    * rename onto an existing dir would nest tmp INSIDE live on
-    * HDFS-like filesystems. */
-  private def writeSwap(spark: SparkSession, fs: org.apache.hadoop.fs.FileSystem,
+    * and restart empty. */
+  private def writeSwap(fs: org.apache.hadoop.fs.FileSystem,
       root: Path, name: String, df: DataFrame): Unit = {
     val tmp = new Path(root, s".tmp-$name")
     if (fs.exists(tmp)) require(fs.delete(tmp, true), s"failed to clear $tmp")
     df.write.mode("overwrite").parquet(tmp.toString)
-    val live = new Path(root, name)
-    val aside = new Path(root, s".old-$name")
-    // a stale aside here means the LAST swap completed (its live dir
-    // exists — callers restore before reading); clear it
+    publish(fs, tmp, new Path(root, name), new Path(root, s".old-$name"))
+  }
+
+  /** Crash recovery for [[writeSwap]]. Idempotent; called before every
+    * read of a swap-published table. */
+  private def restoreSwap(fs: org.apache.hadoop.fs.FileSystem,
+      root: Path, name: String): Unit =
+    restore(fs, new Path(root, name), new Path(root, s".old-$name"))
+
+  /** The ONE publish step of this file (writeSwap, the clustered state
+    * batches and the mirror's buckets all go through it): move `live`
+    * ASIDE, rename `staged` in, drop the aside. `staged` absent
+    * publishes `live` as absent. A stale aside on entry means an
+    * earlier publish got past its first rename; `staged` supersedes
+    * it, so it is cleared. Boolean returns checked: HDFS reports
+    * rename/delete failure by RETURNING FALSE, and a silently failed
+    * rename onto an existing dir would nest `staged` INSIDE `live`. */
+  private def publish(fs: org.apache.hadoop.fs.FileSystem,
+      staged: Path, live: Path, aside: Path): Unit = {
     if (fs.exists(aside)) require(fs.delete(aside, true), s"failed to clear $aside")
     if (fs.exists(live)) require(fs.rename(live, aside), s"failed to set aside $live")
-    require(fs.rename(tmp, live), s"failed to publish $live")
+    if (fs.exists(staged)) require(fs.rename(staged, live), s"failed to publish $live")
     if (fs.exists(aside)) require(fs.delete(aside, true), s"failed to drop $aside")
   }
 
-  /** Crash recovery for [[writeSwap]]: if a crash landed between the
-    * aside and publish renames (live dir missing, aside present),
-    * restore the aside copy. Idempotent; called before every read of
-    * a swap-published table. */
-  private def restoreSwap(fs: org.apache.hadoop.fs.FileSystem,
-      root: Path, name: String): Unit = {
-    val live = new Path(root, name)
-    val aside = new Path(root, s".old-$name")
-    if (!fs.exists(live) && fs.exists(aside))
-      require(fs.rename(aside, live), s"failed to restore $live from $aside")
-  }
+  /** Crash recovery for [[publish]]: an aside left with no live dir
+    * means the crash landed between the two renames, so the aside
+    * copy moves back; an aside next to a live dir is a finished
+    * publish's leftover and is dropped. */
+  private def restore(fs: org.apache.hadoop.fs.FileSystem, live: Path, aside: Path): Unit =
+    if (fs.exists(aside)) {
+      if (fs.exists(live)) require(fs.delete(aside, true), s"failed to drop $aside")
+      else require(fs.rename(aside, live), s"failed to restore $live from $aside")
+    }
 
-  /** Streaming wrapper for the snapshot loop: complete-mode counts →
-    * foreachBatch snapshot/delta advance per trigger.
-    *
-    * NOTE: complete-mode aggregation state grows with ALL-TIME key
-    * cardinality — the reference expires idle keyword buckets after
-    * 7 days (advanced_trend_analyzer.py:89). Prefer
-    * `rankDeltaSnapshotSinkTtl`, which runs the same loop over
-    * TTL-evicting keyed state; this variant remains for short-lived
-    * queries where complete mode's simplicity wins. */
   /** The ONE foreachBatch sink preamble (r17 consolidation): every
     * foreachBatch-shaped sink in this file starts the same way —
     * checkpointed source replay + a per-trigger driver callback —
@@ -491,13 +462,6 @@ object Pipelines {
       .trigger(trigger)
       .foreachBatch(body)
       .start()
-
-  def rankDeltaSnapshotSink(spark: SparkSession, counts: DataFrame, stateDir: String,
-      checkpoint: String, topN: Int = 50,
-      trigger: Trigger = Trigger.ProcessingTime("5 seconds")): StreamingQuery =
-    foreachBatchSink(counts, checkpoint, trigger, outputMode = "complete") {
-      (batch, _) => applyRankDeltaSnapshot(spark, batch, stateDir, topN)
-    }
 
   /** TTL-parity rank-delta loop (W2 + the reference's 7-day Redis
     * EXPIRE, advanced_trend_analyzer.py:89): per-key running counts
@@ -545,7 +509,7 @@ object Pipelines {
       .join(updates.select(col("key")), Seq("key"), "left_anti")
       .unionByName(updates.filter(!col("evicted"))
         .select(col("key"), col("total").as("cnt")))
-    writeSwap(spark, fs, root, "counts", merged)
+    writeSwap(fs, root, "counts", merged)
     applyRankDeltaSnapshot(spark,
       spark.read.parquet(countsPath.toString), stateDir, topN)
   }
@@ -564,7 +528,7 @@ object Pipelines {
     * corpusFactory landing contract). Readers `spark.read.parquet(path)`
     * and get `batch` as a partition column to drop. */
   def applyClusteredStateBatch(batch: DataFrame, path: String, batchId: Long,
-      keys: Seq[String], maxRecordsPerFile: Long = 0): Unit = {
+      keys: Seq[String]): Unit = {
     require(keys.nonEmpty, "applyClusteredStateBatch needs >=1 clustering key")
     // empty trigger = no dir: append-mode windowed aggregation emits
     // rows only when the watermark closes a window, so MOST triggers
@@ -593,7 +557,7 @@ object Pipelines {
       // windows). Dot-prefixed dirs are invisible to Spark's file
       // listing, so the staged write is never read; the rename is
       // the atomic publish, and a crash-replay swaps the redelivered
-      // batch in whole (the writeSwap/mirror recipe). TWO residual
+      // batch in whole (writeSwap). TWO residual
       // reader races exist, BOTH confined to crash-replay of an
       // already-published batch (first publish of batch=N has no
       // live dir to swap): (a) a reader that listed the OLD files
@@ -611,19 +575,8 @@ object Pipelines {
       val root = new Path(path)
       val fs = root.getFileSystem(
         batch.sparkSession.sparkContext.hadoopConfiguration)
-      val live = new Path(root, s"batch=$batchId")
-      val tmp = new Path(root, s".tmp-batch-$batchId")
-      val aside = new Path(root, s".old-batch-$batchId")
-      if (fs.exists(tmp)) require(fs.delete(tmp, true), s"failed to clear $tmp")
-      val w = batch.repartitionByRange(ks: _*)
-        .sortWithinPartitions(ks: _*)
-        .write.mode("overwrite")
-      (if (maxRecordsPerFile > 0) w.option("maxRecordsPerFile", maxRecordsPerFile)
-       else w).parquet(tmp.toString)
-      if (fs.exists(aside)) require(fs.delete(aside, true), s"failed to clear $aside")
-      if (fs.exists(live)) require(fs.rename(live, aside), s"failed to set aside $live")
-      require(fs.rename(tmp, live), s"failed to publish $live")
-      if (fs.exists(aside)) require(fs.delete(aside, true), s"failed to drop $aside")
+      writeSwap(fs, root, s"batch=$batchId",
+        batch.repartitionByRange(ks: _*).sortWithinPartitions(ks: _*))
     } finally batch.unpersist()
   }
 
@@ -645,7 +598,7 @@ object Pipelines {
     * offsets + per-batch dir overwrite (same contract as
     * [[corpusFactorySink]]). */
   def clusteredStateSink(counts: DataFrame, path: String, checkpoint: String,
-      keys: Seq[String], maxRecordsPerFile: Long = 0,
+      keys: Seq[String],
       trigger: Trigger = Trigger.ProcessingTime("5 seconds")): StreamingQuery = {
     // NOT layout-compatible with a dir holding flat parquet files —
     // the native streaming file sink's layout (part files +
@@ -673,7 +626,7 @@ object Pipelines {
           "directory")
     }
     foreachBatchSink(counts, checkpoint, trigger) { (batch, batchId) =>
-      applyClusteredStateBatch(batch, path, batchId, keys, maxRecordsPerFile)
+      applyClusteredStateBatch(batch, path, batchId, keys)
     }
   }
 

@@ -2,8 +2,8 @@ package graft.streaming
 
 import java.sql.Timestamp
 
-import org.apache.spark.sql.{DataFrame, Dataset, Encoders}
-import org.apache.spark.sql.streaming.{GroupState, GroupStateTimeout, OutputMode, StatefulProcessor, TTLConfig, TimeMode, TimerValues}
+import org.apache.spark.sql.{DataFrame, Dataset}
+import org.apache.spark.sql.streaming.{GroupState, GroupStateTimeout, OutputMode}
 
 /** ST6: explicit keyed state in the state store — the Spark analog of
   * the reference's in-memory per-keyword running maps with expiry
@@ -20,16 +20,22 @@ import org.apache.spark.sql.streaming.{GroupState, GroupStateTimeout, OutputMode
   */
 object Stateful {
 
-  case class RunningTotal(key: String, total: Long)
-
   case class Keyed(key: String, ts: Timestamp)
+
+  case class KeyUpdate(key: String, total: Long, evicted: Boolean)
 
   /** Per-key running event counts with event-time TTL (watermark
     * applied here, on the grouping input — a projection would drop a
     * caller-side watermark). Emits the updated total for a key
-    * whenever the key receives events in a trigger; a key silent past
-    * the watermark for longer than `ttlMs` is evicted (its next event
-    * restarts from zero).
+    * whenever the key receives events in a trigger. A key silent past
+    * the watermark for longer than `ttlMs` emits one final
+    * `KeyUpdate(key, 0, evicted = true)` tombstone as its state is
+    * removed (its next event restarts from zero). Downstream sinks
+    * that mirror the live totals (the rank-delta snapshot loop)
+    * consume the tombstone to drop the key — the reference's Redis
+    * buckets expire the same way (advanced_trend_analyzer.py:89,
+    * 7-day EXPIRE). On batch input there is no watermark: one pass
+    * emits each key's total once.
     *
     * STATE SCHEMA NOTE: the per-key state is `(total, maxTsEver)` —
     * a (Long, Long) tuple (the second slot anchors the TTL deadline
@@ -37,62 +43,13 @@ object Stateful {
     * earlier Long-only shape are NOT compatible: restarting such a
     * query against this code fails to deserialize its state store —
     * discard the old checkpoint (accepting a state rebuild) before
-    * upgrading a live query. Applies to [[runningCountsEvicting]]
-    * too. */
-  def runningCounts(events: DataFrame, keyCol: String, tsCol: String,
-      ttlMs: Long, watermarkDelay: String = "0 seconds"): Dataset[RunningTotal] = {
-    val spark = events.sparkSession
-    import spark.implicits._
-    // plain local val: the update closure runs on executors, where a
-    // captured Dataset reference is unusable
-    val streaming = events.isStreaming
-    val projected = events.selectExpr(
-      s"CAST($keyCol AS STRING) AS key",
-      s"to_timestamp($tsCol) AS ts")
-    val keyed = (if (streaming) projected.withWatermark("ts", watermarkDelay)
-      else projected).as[Keyed]
-
-    def update(key: String, rows: Iterator[Keyed],
-        state: GroupState[(Long, Long)]): Iterator[RunningTotal] = {
-      if (state.hasTimedOut) {
-        state.remove()
-        Iterator.empty
-      } else {
-        var n = 0L
-        var maxTs = Long.MinValue
-        rows.foreach { r => n += 1; maxTs = math.max(maxTs, r.ts.getTime) }
-        val (prev, prevMaxTs) = state.getOption.getOrElse((0L, Long.MinValue))
-        val total = prev + n
-        // the deadline anchors to the newest event EVER seen, kept in
-        // state — a late-but-in-watermark batch whose maxTs is older
-        // must not SHRINK the key's ttl (Redis EXPIRE-on-touch parity)
-        val maxTsEver = math.max(maxTs, prevMaxTs)
-        state.update((total, maxTsEver))
-        // Evict when the watermark passes the key's newest event + ttl.
-        // (Batch execution has no watermark/timeouts; setting one there
-        // is meaningless and throws, hence the streaming guard.)
-        if (streaming) state.setTimeoutTimestamp(maxTsEver + ttlMs)
-        Iterator.single(RunningTotal(key, total))
-      }
-    }
-
-    keyed.groupByKey(_.key)
-      .flatMapGroupsWithState(OutputMode.Update, GroupStateTimeout.EventTimeTimeout)(update)
-  }
-
-  case class KeyUpdate(key: String, total: Long, evicted: Boolean)
-
-  /** `runningCounts` variant that makes TTL eviction OBSERVABLE: a key
-    * silent past the watermark for longer than `ttlMs` emits one final
-    * `KeyUpdate(key, 0, evicted = true)` tombstone as its state is
-    * removed. Downstream sinks that mirror the live totals (the
-    * rank-delta snapshot loop) consume the tombstone to drop the key —
-    * the reference's Redis buckets expire the same way
-    * (advanced_trend_analyzer.py:89, 7-day EXPIRE). */
+    * upgrading a live query. */
   def runningCountsEvicting(events: DataFrame, keyCol: String, tsCol: String,
       ttlMs: Long, watermarkDelay: String = "0 seconds"): Dataset[KeyUpdate] = {
     val spark = events.sparkSession
     import spark.implicits._
+    // plain local val: the update closure runs on executors, where a
+    // captured Dataset reference is unusable
     val streaming = events.isStreaming
     val projected = events.selectExpr(
       s"CAST($keyCol AS STRING) AS key",
@@ -111,10 +68,14 @@ object Stateful {
         rows.foreach { r => n += 1; maxTs = math.max(maxTs, r.ts.getTime) }
         val (prev, prevMaxTs) = state.getOption.getOrElse((0L, Long.MinValue))
         val total = prev + n
-        // deadline from the newest event EVER (kept in state): a late
-        // batch must not shrink a key's ttl below one already set
+        // the deadline anchors to the newest event EVER seen, kept in
+        // state — a late-but-in-watermark batch whose maxTs is older
+        // must not SHRINK the key's ttl (Redis EXPIRE-on-touch parity)
         val maxTsEver = math.max(maxTs, prevMaxTs)
         state.update((total, maxTsEver))
+        // Evict when the watermark passes the key's newest event + ttl.
+        // (Batch execution has no watermark/timeouts; setting one there
+        // is meaningless and throws, hence the streaming guard.)
         if (streaming) state.setTimeoutTimestamp(maxTsEver + ttlMs)
         Iterator.single(KeyUpdate(key, total, evicted = false))
       }
@@ -122,53 +83,6 @@ object Stateful {
 
     keyed.groupByKey(_.key)
       .flatMapGroupsWithState(OutputMode.Update, GroupStateTimeout.EventTimeTimeout)(update)
-  }
-
-  /** The same running totals on Spark 4's transformWithState — the
-    * modern stateful API (SPARK-46815): typed per-key ValueState with
-    * a NATIVE TTL (TTLConfig) instead of hand-rolled timeout
-    * bookkeeping, plus composable list/map state and timers for richer
-    * processors. Requires the RocksDB state store provider
-    * (set `spark.sql.streaming.stateStore.providerClass`); the
-    * flatMapGroupsWithState form above remains for HDFS-backed state
-    * and event-time eviction semantics. */
-  class RunningCountProcessor(ttl: TTLConfig)
-      extends StatefulProcessor[String, Keyed, RunningTotal] {
-    @transient private var total: org.apache.spark.sql.streaming.ValueState[Long] = _
-
-    override def init(outputMode: OutputMode, timeMode: TimeMode): Unit =
-      total = getHandle.getValueState[Long]("total", Encoders.scalaLong, ttl)
-
-    override def handleInputRows(key: String, rows: Iterator[Keyed],
-        timerValues: TimerValues): Iterator[RunningTotal] = {
-      val t = (if (total.exists()) total.get() else 0L) + rows.size
-      total.update(t)
-      Iterator.single(RunningTotal(key, t))
-    }
-  }
-
-  /** runningCounts on the transformWithState tier. With `ttl` set,
-    * a key idle (in processing time) longer than the duration is
-    * evicted without any per-key timer code — BUT processing-time TTL
-    * makes the engine schedule a wake-up micro-batch per trigger
-    * interval, so pair it with a real `Trigger.ProcessingTime`
-    * cadence in deployment (measured locally: trigger(0) busy-loops
-    * hundreds of empty batches, each paying the checkpoint-log
-    * write). `ttl = None` runs in TimeMode.None — batches fire only
-    * on data — which is also what the replay spec exercises. */
-  def runningCountsTws(events: DataFrame, keyCol: String, tsCol: String,
-      ttl: Option[java.time.Duration] = None): Dataset[RunningTotal] = {
-    val spark = events.sparkSession
-    import spark.implicits._
-    val (cfg, mode) = ttl match {
-      case Some(d) => (TTLConfig(d), TimeMode.ProcessingTime())
-      case None => (TTLConfig.NONE, TimeMode.None())
-    }
-    events.selectExpr(
-        s"CAST($keyCol AS STRING) AS key",
-        s"to_timestamp($tsCol) AS ts").as[Keyed]
-      .groupByKey(_.key)
-      .transformWithState(new RunningCountProcessor(cfg), mode, OutputMode.Update())
   }
 
   case class BucketDoc(bucket: Long, docId: Long, bands: Seq[Long], ts: Timestamp)
@@ -191,7 +105,7 @@ object Stateful {
     * Scale: state is keyed by (band, bandHash) — the same key the
     * batch join shuffles on. Per-bucket state holds (docId, bands, ts)
     * for live docs, bounded two ways: event-time TTL eviction
-    * (watermark-driven, like runningCounts) and `maxBucketSize` — a
+    * (watermark-driven, like runningCountsEvicting) and `maxBucketSize` — a
     * bucket at cap stops admitting new docs; hot buckets are
     * boilerplate by definition and their pairs are better handled by
     * the batch tier.

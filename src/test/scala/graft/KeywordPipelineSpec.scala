@@ -104,9 +104,8 @@ class KeywordPipelineSpec extends SparkSuite {
         s"line-$i".getBytes("UTF-8"))
     }
     var batches = 0
-    val src = Pipelines.rateLimited(
-      spark.readStream.schema("value STRING").format("text"),
-      maxFilesPerTrigger = Some(1)).load(in)
+    val src = spark.readStream.schema("value STRING").format("text")
+      .option("maxFilesPerTrigger", 1).load(in)
     val q = src.writeStream
       .option("checkpointLocation", s"$base/ckpt")
       .trigger(org.apache.spark.sql.streaming.Trigger.ProcessingTime(0))

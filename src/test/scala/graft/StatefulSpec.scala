@@ -21,30 +21,35 @@ class StatefulSpec extends SparkSuite {
     implicit val sqlCtx = spark.sqlContext
     val stream = MemoryStream[(String, Timestamp)]
     val df = stream.toDF().toDF("key", "ts")
-    val q = Stateful.runningCounts(df, "key", "ts", ttlMs = 60000L)
+    val q = Stateful.runningCountsEvicting(df, "key", "ts", ttlMs = 60000L)
       .writeStream.outputMode("update").format("memory").queryName("rt").start()
     def rows() = spark.table("rt").collect()
-      .map(r => (r.getAs[String]("key"), r.getAs[Long]("total"))).toSeq
+      .map(r => (r.getAs[String]("key"), r.getAs[Long]("total"),
+        r.getAs[Boolean]("evicted"))).toSeq
 
     stream.addData(("a", ts(0)), ("a", ts(0)), ("b", ts(0)))
     q.processAllAvailable()
-    assert(rows().sorted == Seq(("a", 2L), ("b", 1L)))
+    assert(rows().sorted == Seq(("a", 2L, false), ("b", 1L, false)))
 
-    // advance event time well past b's ttl (watermark trails one batch)
+    // advance event time well past b's ttl: the watermark moves to
+    // ts(120) > b's timeout ts(60), and the empty trigger that follows
+    // evicts b, visibly: one tombstone row
     stream.addData(("a", ts(120)))
     q.processAllAvailable()
-    assert(rows().sorted == Seq(("a", 2L), ("a", 3L), ("b", 1L)))
+    assert(rows().sorted == Seq(("a", 2L, false), ("a", 3L, false),
+      ("b", 0L, true), ("b", 1L, false)))
 
-    // this trigger sees watermark=ts(120) > b's timeout ts(60) → b evicts
     stream.addData(("a", ts(180)))
     q.processAllAvailable()
-    assert(rows().sorted == Seq(("a", 2L), ("a", 3L), ("a", 4L), ("b", 1L)))
+    assert(rows().sorted == Seq(("a", 2L, false), ("a", 3L, false), ("a", 4L, false),
+      ("b", 0L, true), ("b", 1L, false)))
 
     // b restarts from zero — proof the state store entry was removed
     stream.addData(("b", ts(240)))
     q.processAllAvailable()
-    assert(rows().count(_ == ("b", 1L)) == 2, s"b must restart at 1, got ${rows()}")
-    assert(!rows().contains(("b", 2L)))
+    assert(rows().count(_ == (("b", 1L, false))) == 2, s"b must restart at 1, got ${rows()}")
+    assert(!rows().contains(("b", 2L, false)))
+    assert(rows().count(_._3) == 1, s"exactly one tombstone: ${rows()}")
     q.stop()
   }
 
@@ -137,113 +142,11 @@ class StatefulSpec extends SparkSuite {
 
   test("batch execution: one pass equals a plain groupBy count") {
     val ev = Tables.events(spark, sf0001).select(col("event_type").as("key"), col("ts"))
-    val stateful = Stateful.runningCounts(ev, "key", "ts", ttlMs = 1000L)
+    val stateful = Stateful.runningCountsEvicting(ev, "key", "ts", ttlMs = 1000L)
       .collect().map(r => r.key -> r.total).toMap
     val batch = ev.groupBy(col("key")).count()
       .collect().map(r => r.getString(0) -> r.getLong(1)).toMap
     assert(stateful == batch)
-  }
-
-  test("transformWithState: typed ValueState totals accumulate across triggers (RocksDB provider)") {
-    implicit val sqlCtx = spark.sqlContext
-    val prev = spark.conf.getOption("spark.sql.streaming.stateStore.providerClass")
-    spark.conf.set("spark.sql.streaming.stateStore.providerClass",
-      "org.apache.spark.sql.execution.streaming.state.RocksDBStateStoreProvider")
-    // local-FS checkpoint renames fork a shell per file: changelog
-    // checkpointing uploads a small delta per commit instead of full
-    // sst snapshots, which makes the suite finish in seconds
-    spark.conf.set("spark.sql.streaming.stateStore.rocksdb.changelogCheckpointing.enabled", "true")
-    spark.conf.set("spark.sql.streaming.stateStore.maintenanceInterval", "600s")
-    val prevParts = spark.conf.get("spark.sql.shuffle.partitions")
-    spark.conf.set("spark.sql.shuffle.partitions", "1")
-    try {
-      val stream = MemoryStream[(String, Timestamp)]
-      val df = stream.toDF().toDF("key", "ts")
-      val q = Stateful.runningCountsTws(df, "key", "ts")
-        .writeStream.outputMode("update").format("memory").queryName("tws").start()
-      def rows() = spark.table("tws").collect()
-        .map(r => (r.getAs[String]("key"), r.getAs[Long]("total"))).toSeq
-
-      stream.addData(("a", ts(0)), ("a", ts(0)), ("b", ts(0)))
-      q.processAllAvailable()
-      assert(rows().sorted == Seq(("a", 2L), ("b", 1L)))
-
-      // state persists across triggers: totals keep growing
-      stream.addData(("a", ts(10)), ("b", ts(10)))
-      q.processAllAvailable()
-      assert(rows().sorted == Seq(("a", 2L), ("a", 3L), ("b", 1L), ("b", 2L)))
-      q.stop()
-    } finally {
-      spark.conf.set("spark.sql.shuffle.partitions", prevParts)
-      prev match {
-        case Some(v) => spark.conf.set("spark.sql.streaming.stateStore.providerClass", v)
-        case None => spark.conf.unset("spark.sql.streaming.stateStore.providerClass")
-      }
-    }
-  }
-
-  test("transformWithState: TTL evicts an idle key; its next event restarts from zero (RocksDB provider)") {
-    implicit val sqlCtx = spark.sqlContext
-    val prev = spark.conf.getOption("spark.sql.streaming.stateStore.providerClass")
-    val prevChangelog = spark.conf.getOption(
-      "spark.sql.streaming.stateStore.rocksdb.changelogCheckpointing.enabled")
-    val prevMaint = spark.conf.getOption(
-      "spark.sql.streaming.stateStore.maintenanceInterval")
-    spark.conf.set("spark.sql.streaming.stateStore.providerClass",
-      "org.apache.spark.sql.execution.streaming.state.RocksDBStateStoreProvider")
-    spark.conf.set("spark.sql.streaming.stateStore.rocksdb.changelogCheckpointing.enabled", "true")
-    spark.conf.set("spark.sql.streaming.stateStore.maintenanceInterval", "600s")
-    val prevParts = spark.conf.get("spark.sql.shuffle.partitions")
-    spark.conf.set("spark.sql.shuffle.partitions", "1")
-    var q: org.apache.spark.sql.streaming.StreamingQuery = null
-    try {
-      val stream = MemoryStream[(String, Timestamp)]
-      val df = stream.toDF().toDF("key", "ts")
-      // native TTLConfig tier: processing-time TTL, so the test pairs
-      // it with a real trigger cadence (the runningCountsTws contract).
-      // NOTE: in TimeMode.ProcessingTime the engine schedules a batch
-      // per trigger interval forever, so `noNewData` never latches and
-      // processAllAvailable() HANGS — poll the sink with a deadline.
-      q = Stateful.runningCountsTws(df, "key", "ts",
-        ttl = Some(java.time.Duration.ofSeconds(1)))
-        .writeStream.outputMode("update").format("memory").queryName("twsttl")
-        .trigger(org.apache.spark.sql.streaming.Trigger.ProcessingTime(200))
-        .start()
-      def rows() = spark.table("twsttl").collect()
-        .map(r => (r.getAs[String]("key"), r.getAs[Long]("total"))).toSeq
-      def await(cond: => Boolean, msg: => String, timeoutMs: Long = 60000): Unit = {
-        val deadline = System.currentTimeMillis() + timeoutMs
-        while (!cond && System.currentTimeMillis() < deadline) Thread.sleep(200)
-        assert(cond, msg)
-      }
-
-      stream.addData(("a", ts(0)), ("a", ts(0)), ("b", ts(0)))
-      await(rows().sorted == Seq(("a", 2L), ("b", 1L)),
-        s"first batch totals wrong: ${rows()}")
-
-      // wall-clock past the 1 s TTL: b's ValueState expires
-      Thread.sleep(3000)
-      stream.addData(("b", ts(10)))
-      // b restarts from zero — the TTLConfig analog of the GroupState
-      // evict-and-restart case above
-      await(rows().count(_ == ("b", 1L)) == 2,
-        s"b must restart at 1 after TTL eviction, got ${rows()}")
-      assert(!rows().contains(("b", 2L)), s"stale state survived TTL: ${rows()}")
-    } finally {
-      // stop the 200 ms-trigger query even on a failed await, and
-      // restore EVERY conf this test touched — leaks would bleed into
-      // later suites in the same session
-      if (q != null) q.stop()
-      spark.conf.set("spark.sql.shuffle.partitions", prevParts)
-      def restore(key: String, v: Option[String]): Unit = v match {
-        case Some(x) => spark.conf.set(key, x)
-        case None => spark.conf.unset(key)
-      }
-      restore("spark.sql.streaming.stateStore.providerClass", prev)
-      restore("spark.sql.streaming.stateStore.rocksdb.changelogCheckpointing.enabled",
-        prevChangelog)
-      restore("spark.sql.streaming.stateStore.maintenanceInterval", prevMaint)
-    }
   }
 
   test("streaming LSH candidates: replay equals the batch candidate stage") {

@@ -168,11 +168,15 @@ class StreamingConsistencySpec extends SparkSuite {
   test("rank-delta snapshot loop publishes movements across triggers") {
     implicit val sqlCtx = spark.sqlContext
     val dir = java.nio.file.Files.createTempDirectory("rankdelta").toString
-    val stream = MemoryStream[String]
-    val counts = stream.toDF().toDF("key")
-      .groupBy(col("key")).agg(count(lit(1)).as("cnt"))
-    val q = Pipelines.rankDeltaSnapshotSink(spark, counts, s"$dir/state", s"$dir/ckpt",
-      topN = 10, org.apache.spark.sql.streaming.Trigger.ProcessingTime(0))
+    val stream = MemoryStream[(String, Timestamp)]
+    // every event sits inside the watermark delay, so the watermark
+    // never advances and no empty trigger runs between the two data
+    // triggers (an empty trigger re-publishes every key as "stable")
+    val q = Pipelines.rankDeltaSnapshotSinkTtl(spark, stream.toDF().toDF("key", "ts"),
+      "key", "ts", s"$dir/state", s"$dir/ckpt", ttlMs = 3600000L, topN = 10,
+      watermarkDelay = "1 hour",
+      trigger = org.apache.spark.sql.streaming.Trigger.ProcessingTime(0))
+    def add(keys: String*): Unit = stream.addData(keys.map(_ -> new Timestamp(60000L)))
 
     def delta(): Map[String, (Option[Int], Option[Int], String)] =
       spark.read.parquet(s"$dir/state/delta").collect().map { r =>
@@ -183,14 +187,14 @@ class StreamingConsistencySpec extends SparkSuite {
       }.toMap
 
     // trigger 1: a=3, b=2 → both enter as "new"
-    stream.addData("a", "a", "a", "b", "b")
+    add("a", "a", "a", "b", "b")
     q.processAllAvailable()
     assert(delta() == Map(
       "a" -> ((Some(1), None, "new")),
       "b" -> ((Some(2), None, "new"))))
 
     // trigger 2: b gains 5 (total 7) → b overtakes a
-    stream.addData("b", "b", "b", "b", "b")
+    add("b", "b", "b", "b", "b")
     q.processAllAvailable()
     assert(delta() == Map(
       "b" -> ((Some(1), Some(2), "rising")),
@@ -214,22 +218,31 @@ class StreamingConsistencySpec extends SparkSuite {
         col("event_type").as("keyword"), col("count"))
     val stream = MemoryStream[(Timestamp, String, Long)]
     val sdf = stream.toDF().toDF("ts", "event_type", "user_id")
-    val q = Pipelines.clusteredStateSink(
-      counts(sdf.withWatermark("ts", "30 days")),
-      s"$base/state", s"$base/ckpt", keys = Seq("keyword", "minute"),
-      maxRecordsPerFile = 8, trigger = Trigger.ProcessingTime(0))
-    val (a, b) = events.splitAt(events.size / 2)
-    stream.addData(a); q.processAllAvailable()
-    stream.addData(b); q.processAllAvailable()
-    // flush pattern (see the append-percentile test): advance the
-    // watermark past every real window so append mode emits them all;
-    // the flush window itself stays open and never lands
-    val maxTs = events.map(_._1.getTime).max
-    stream.addData((new Timestamp(maxTs + 90L * 24 * 3600 * 1000), "flush", 0L))
-    q.processAllAvailable()
-    stream.addData((new Timestamp(maxTs + 90L * 24 * 3600 * 1000 + 1), "flush", 0L))
-    q.processAllAvailable()
-    q.stop()
+    // small files, so each batch lands as several sorted files; the
+    // query's session copies the conf at start
+    val prevMax = spark.conf.getOption("spark.sql.files.maxRecordsPerFile")
+    spark.conf.set("spark.sql.files.maxRecordsPerFile", "8")
+    try {
+      val q = Pipelines.clusteredStateSink(
+        counts(sdf.withWatermark("ts", "30 days")),
+        s"$base/state", s"$base/ckpt", keys = Seq("keyword", "minute"),
+        trigger = Trigger.ProcessingTime(0))
+      val (a, b) = events.splitAt(events.size / 2)
+      stream.addData(a); q.processAllAvailable()
+      stream.addData(b); q.processAllAvailable()
+      // flush pattern (see the append-percentile test): advance the
+      // watermark past every real window so append mode emits them all;
+      // the flush window itself stays open and never lands
+      val maxTs = events.map(_._1.getTime).max
+      stream.addData((new Timestamp(maxTs + 90L * 24 * 3600 * 1000), "flush", 0L))
+      q.processAllAvailable()
+      stream.addData((new Timestamp(maxTs + 90L * 24 * 3600 * 1000 + 1), "flush", 0L))
+      q.processAllAvailable()
+      q.stop()
+    } finally prevMax match {
+      case Some(v) => spark.conf.set("spark.sql.files.maxRecordsPerFile", v)
+      case None => spark.conf.unset("spark.sql.files.maxRecordsPerFile")
+    }
     // content: the landed state table == the batch windowed counts
     val landed = spark.read.parquet(s"$base/state").drop("batch")
     val batch = counts(Tables.events(spark, sf0001)

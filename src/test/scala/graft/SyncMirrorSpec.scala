@@ -233,8 +233,13 @@ class SyncMirrorSpec extends SparkSuite {
       val tbl = if (i % 2 == 0) "media" else "articles"
       s"""{"op":"c","after":{"id":$id,"value":1.0},"source":{"table":"$tbl"},"ts_ms":1000}"""
     }
-    Pipelines.applyCdcBatch(spark, parse(rows), dir, nBuckets = 2,
-      maxRecordsPerFile = 4L)
+    val prevMax = spark.conf.getOption("spark.sql.files.maxRecordsPerFile")
+    spark.conf.set("spark.sql.files.maxRecordsPerFile", "4")
+    try Pipelines.applyCdcBatch(spark, parse(rows), dir, nBuckets = 2)
+    finally prevMax match {
+      case Some(v) => spark.conf.set("spark.sql.files.maxRecordsPerFile", v)
+      case None => spark.conf.unset("spark.sql.files.maxRecordsPerFile")
+    }
     val buckets = new java.io.File(dir).listFiles()
       .filter(f => f.isDirectory && f.getName.startsWith("bucket="))
     assert(buckets.nonEmpty)
