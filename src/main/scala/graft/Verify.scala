@@ -24,21 +24,14 @@ object Verify {
         System.err.println(s"[verify] $name failed: ${e.getMessage}")
       }
     }
-    // JSON string escape: backslash, quote, and ALL control chars (<0x20)
-    // — a tab or CR in builder-authored SQL would otherwise make the
-    // driver's json.load fail and silently zero the round's correctness.
-    def q(s: String): String = "\"" + s.flatMap {
-      case '"'  => "\\\""
-      case '\\' => "\\\\"
-      case '\n' => "\\n"
-      case '\r' => "\\r"
-      case '\t' => "\\t"
-      case c if c < ' ' => f"\\u${c.toInt}%04x"
-      case c => c.toString
-    } + "\""
-    val json = SparkEntry.oracleSql
-      .map { case (k, v) => s"${q(k)}: ${q(v)}" }.mkString("{", ",", "}")
-    Files.writeString(Paths.get(s"$outDir/oracle_sql.json"), json)
+    Files.writeString(Paths.get(s"$outDir/oracle_sql.json"), oracleJson(SparkEntry.oracleSql))
     spark.stop()
   }
+
+  /** `oracle_sql.json`: query name → oracle SQL as one JSON object,
+    * every key and value escaped through [[JsonStr]] — a tab, CR,
+    * quote or backslash in the SQL must not break the compare's
+    * `json.load`. */
+  def oracleJson(sql: Map[String, String]): String =
+    sql.map { case (k, v) => s"${JsonStr(k)}: ${JsonStr(v)}" }.mkString("{", ",", "}")
 }

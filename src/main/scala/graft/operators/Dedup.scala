@@ -513,19 +513,19 @@ object Dedup {
     * previous version stays readable until the commit, and the
     * parameters must match the ones the index was written with.
     *
-    * The commit is PARTIAL: touched buckets =
-    * `pmod(xxhash64(batch ids), idxBuckets)` — a pure function of the
-    * batch, no index read — and only those partitions are rewritten
-    * (read partition-pruned, anti-joined against the batch ids, plus
-    * the batch's own rows). Every untouched bucket is carried by
-    * manifest reference, byte-identical. Per-round write I/O is
-    * O(touched buckets), not O(index). Once the manifest references
-    * `maxVersionChain` distinct versions — or the committed state
-    * cannot carry (a full takedown left whole-table members) — the
-    * upsert takes a full rewrite. */
+    * The commit is PARTIAL ([[VersionedIndex.bucketRewrite]]): touched
+    * buckets = `pmod(xxhash64(batch ids), idxBuckets)` — a pure
+    * function of the batch, no index read — and only those partitions
+    * are rewritten (read partition-pruned, anti-joined against the
+    * batch ids, plus the batch's own rows). Every untouched bucket is
+    * carried by manifest reference, byte-identical. Per-round write
+    * I/O is O(touched buckets), not O(index). At the compaction point
+    * ([[VersionedIndex.MaxVersionChain]]) — or when the committed
+    * state cannot carry (a full takedown left whole-table members) —
+    * the same rewrite runs over the whole index. An empty batch
+    * commits nothing. */
   def upsertLshIndex(newDocs: DataFrame, id: Column, text: Column, path: String,
-      n: Int = 3, numHashes: Int = 64, bands: Int = 16,
-      maxVersionChain: Int = 8): Unit = {
+      n: Int = 3, numHashes: Int = 64, bands: Int = 16): Unit = {
     val spark = newDocs.sparkSession
     val params = VersionedIndex.current(spark, path)
     requireLshParams(path, params, n, numHashes, bands)
@@ -534,58 +534,29 @@ object Dedup {
     val ds = docShingles(newDocs, id, text, n).cache()
     try {
       VersionedIndex.requireUniqueIds(ds, "doc_id", "upsertLshIndex")
-      val shNew = withIdxBucket(
-        ds.select(col("doc_id"), explode(col("sh")).as("shingle")), nBuckets)
-      val bandsNew = withIdxBucket(bandedFromDocShingles(ds, numHashes, bands), nBuckets)
-      // shared partial-commit planner (VersionedIndex.planPartialRewrite
-      // — one protocol definition across the LSH and sketch kinds)
-      val plan = VersionedIndex.planPartialRewrite(spark, path,
-        Seq("shingles", "bands"),
-        newIds.select(VersionedIndex.bucketCol(col("doc_id"), nBuckets).as("b")),
-        maxVersionChain)
-      // the drift probe's overlap count runs on the BANDS member's
-      // doc ids (a fixed `bands` rows/doc — far narrower than the
-      // shingle fan-out); the shingle member keeps exactly its two
-      // pre-drift consumers (the sampled tagged-union + the commit's
-      // anti-join), two pruned scans — measured cheaper than caching
-      // it (materializing the whole pruned shingle set cost more
-      // than the second scan on the q116 funnel trigger)
-      if (!plan.ok) {
-        // full rewrite: compaction point, or an emptied index
-        val drift = measureLshDrift(readLshTable(spark, path, "shingles"),
-          readLshTable(spark, path, "bands").select(col("doc_id")).distinct(),
+      VersionedIndex.bucketRewrite(spark, path, nBuckets,
+          Seq(Seq("shingles", "bands") -> newIds)).foreach { rw =>
+        // every re-ingested id hashes into a touched bucket, so the
+        // drift probe's prior side reads only the rows the rewrite
+        // reads anyway. Its overlap count runs on the BANDS member's
+        // doc ids (a fixed `bands` rows/doc — far narrower than the
+        // shingle fan-out); the shingle member keeps exactly two
+        // consumers (the sampled tagged-union + the commit's
+        // anti-join), two pruned scans — measured cheaper than caching
+        // it (materializing the whole pruned shingle set cost more
+        // than the second scan on the q116 funnel trigger)
+        val drift = measureLshDrift(rw.prior("shingles").drop("idx_bucket"),
+          rw.prior("bands").select(col("doc_id")).distinct(),
           ds, bands, numHashes / bands, params, path)
         def merged(table: String, fresh: DataFrame): DataFrame =
-          withIdxBucket(readLshTable(spark, path, table)
-            .join(newIds, Seq("doc_id"), "left_anti"), nBuckets)
+          rw.prior(table).join(newIds, Seq("doc_id"), "left_anti")
             .unionByName(fresh)
         commitLshVersion(spark, path,
-          merged("shingles", shNew), merged("bands", bandsNew),
-          n, numHashes, bands, nBuckets, extraParams = drift)
-      } else {
-        if (plan.touched.isEmpty) return // empty batch — nothing to commit
-        val inTouched = col("idx_bucket").isin(plan.touched.map(Int.box): _*)
-        // every re-ingested id hashes into a touched bucket, so the
-        // drift probe's prior side reads only the pruned partitions
-        // the rewrite reads anyway (the sketch drift probe's move)
-        val drift = measureLshDrift(
-          VersionedIndex.readTable(spark, path, "shingles")
-            .filter(inTouched).drop("idx_bucket"),
-          VersionedIndex.readTable(spark, path, "bands")
-            .filter(inTouched).select(col("doc_id")).distinct(),
-          ds, bands, numHashes / bands, params, path)
-        def rewrite(table: String, fresh: DataFrame): DataFrame =
-          VersionedIndex.readTable(spark, path, table)
-            .filter(inTouched)
-            .join(newIds, Seq("doc_id"), "left_anti")
-            .unionByName(fresh)
-        commitLshVersion(spark, path,
-          rewrite("shingles", shNew), rewrite("bands", bandsNew),
-          n, numHashes, bands, nBuckets,
-          carry = Map(
-            "shingles" -> plan.carryFor("shingles"),
-            "bands" -> plan.carryFor("bands")),
-          extraParams = drift)
+          merged("shingles", withIdxBucket(
+            ds.select(col("doc_id"), explode(col("sh")).as("shingle")), nBuckets)),
+          merged("bands", withIdxBucket(bandedFromDocShingles(ds, numHashes, bands),
+            nBuckets)),
+          n, numHashes, bands, nBuckets, rw.carry, drift)
       }
     } finally ds.unpersist()
   }
@@ -595,54 +566,29 @@ object Dedup {
     * ids (`pmod(xxhash64(id), idxBuckets)` — no index read); only
     * those partitions of shingles+bands are rewritten minus the ids,
     * every other bucket is carried by manifest reference,
-    * byte-identical. A takedown of b documents costs O(touched
-    * buckets), not O(index). Deletion removes current rows — a later
-    * upsert of the same doc_id re-inserts it. No hash parameters are
-    * taken: deletion never hashes text, and the stored params carry
-    * forward unchanged. */
-  def deleteFromLshIndex(deleteIds: DataFrame, path: String,
-      maxVersionChain: Int = 8): Unit = {
+    * byte-identical ([[VersionedIndex.bucketRewrite]]). A takedown of
+    * b documents costs O(touched buckets), not O(index). Deletion
+    * removes current rows — a later upsert of the same doc_id
+    * re-inserts it. No hash parameters are taken: deletion never
+    * hashes text, and the stored params carry forward unchanged. */
+  def deleteFromLshIndex(deleteIds: DataFrame, path: String): Unit = {
     val spark = deleteIds.sparkSession
     val params = VersionedIndex.current(spark, path)
-    val (n, numHashes, bandCount) = (params("n").toInt,
-      params("numHashes").toInt, params("bands").toInt)
     val nBuckets = params("idxBuckets").toInt
     val ids = deleteIds.select(col("doc_id")).distinct()
-    val plan = VersionedIndex.planPartialRewrite(spark, path,
-      Seq("shingles", "bands"),
-      ids.select(VersionedIndex.bucketCol(col("doc_id"), nBuckets).as("b")),
-      maxVersionChain)
-    // deleting only ABSENT ids commits NOTHING (no new version) — the
-    // streaming takedown sink's documented replay/no-op contract; one
-    // bounded semi-join over partitions the rewrite would read anyway
-    def anyPresent(existing: DataFrame): Boolean =
-      !existing.join(ids, Seq("doc_id"), "left_semi").isEmpty
-    def bucketed(table: String): DataFrame =
-      withIdxBucket(readLshTable(spark, path, table)
-        .join(ids, Seq("doc_id"), "left_anti"), nBuckets)
-    if (!plan.ok) {
-      if (!anyPresent(readLshTable(spark, path, "shingles"))) return
-      commitLshVersion(spark, path,
-        bucketed("shingles"), bucketed("bands"),
-        n, numHashes, bandCount, nBuckets,
-        // a takedown measures no drift; the last reading carries
-        extraParams = VersionedIndex.Drift.carried(params))
-    } else {
-      if (plan.touched.isEmpty) return // empty id set — nothing to commit
-      val inTouched = col("idx_bucket").isin(plan.touched.map(Int.box): _*)
-      def rewrite(table: String): DataFrame =
-        VersionedIndex.readTable(spark, path, table)
-          .filter(inTouched)
-          .join(ids, Seq("doc_id"), "left_anti")
-      if (!anyPresent(VersionedIndex.readTable(spark, path, "shingles")
-          .filter(inTouched))) return
-      commitLshVersion(spark, path,
-        rewrite("shingles"), rewrite("bands"),
-        n, numHashes, bandCount, nBuckets,
-        carry = Map(
-          "shingles" -> plan.carryFor("shingles"),
-          "bands" -> plan.carryFor("bands")),
-        extraParams = VersionedIndex.Drift.carried(params))
+    VersionedIndex.bucketRewrite(spark, path, nBuckets,
+        Seq(Seq("shingles", "bands") -> ids)).foreach { rw =>
+      def kept(table: String): DataFrame =
+        rw.prior(table).join(ids, Seq("doc_id"), "left_anti")
+      // deleting only ABSENT ids commits NOTHING (no new version) — the
+      // streaming takedown sink's documented replay/no-op contract; one
+      // bounded semi-join over rows the rewrite reads anyway
+      if (!rw.prior("shingles").join(ids, Seq("doc_id"), "left_semi").isEmpty)
+        commitLshVersion(spark, path, kept("shingles"), kept("bands"),
+          params("n").toInt, params("numHashes").toInt, params("bands").toInt,
+          nBuckets, rw.carry,
+          // a takedown measures no drift; the last reading carries
+          VersionedIndex.Drift.carried(params))
     }
   }
 
@@ -1594,8 +1540,9 @@ object Dedup {
     *  - `clusters` buckets holding an affected OR re-closed label, and
     *  - `pairs` buckets holding a retracted or new pair (by doc_a)
     * rewrite; the rest CARRY in the manifest
-    * ([[VersionedIndex.planPartialRewrite]], the sketch/LSH
-    * protocol, per-table touched sets). Falls back to the whole
+    * ([[VersionedIndex.bucketRewrite]], the sketch/LSH protocol,
+    * per-table touched sets, the version chain judged over both
+    * members). Falls back to the whole
     * rewrite when the manifest cannot support a partial commit
     * (whole-table owners, emptied state, version chain at the cap) —
     * a route choice, identical content either way.
@@ -1610,7 +1557,7 @@ object Dedup {
       spark: org.apache.spark.sql.SparkSession, path: String,
       lbls: DataFrame, members: DataFrame, reclosed: DataFrame,
       ids: DataFrame, newPairs: DataFrame,
-      fullPairs: => DataFrame, maxVersionChain: Int = 8): Unit = {
+      fullPairs: => DataFrame): Unit = {
     // the committed layout must be BUCKETED for a partial commit to
     // have a rewrite unit; an unpartitioned (below-crossover) layout
     // upgrades in place through the whole-write fallback, and
@@ -1632,8 +1579,8 @@ object Dedup {
     try {
     // touched cluster-buckets: buckets of (affected ∪ re-closed)
     // labels — ≤ n ints via a Spark distinct, never a label collect
-    val cBuckets = lbls.select(VersionedIndex.bucketCol(col("_aff_lbl"), n).as("b"))
-      .unionByName(reclosedCk.select(VersionedIndex.bucketCol(col("cluster"), n).as("b")))
+    val cKeys = lbls.select(col("_aff_lbl").as("cluster"))
+      .unionByName(reclosedCk.select(col("cluster")))
     // touched pair-buckets, as a SUPERSET from already-bounded frames
     // (no pairs-member scan — the first cut found the touched set
     // exactly via two semi-joins over the member and paid ~2 s of
@@ -1644,41 +1591,34 @@ object Dedup {
     // buckets in the superset rewrite with byte-identical content
     // (their pruned read joins against ids/newPairs match nothing) —
     // a little spare IO, never a semantic fork.
-    val pBuckets = ids.select(col("vec_id").as("k"))
-      .unionByName(members.select(col("doc_id").as("k")))
-      .unionByName(newPairs.select(col("doc_a").as("k")))
-      .select(VersionedIndex.bucketCol(col("k"), n).as("b"))
-    val planC = VersionedIndex.planPartialRewrite(spark, path,
-      Seq("clusters"), cBuckets, maxVersionChain)
-    val planP = VersionedIndex.planPartialRewrite(spark, path,
-      Seq("pairs"), pBuckets, maxVersionChain)
-    if (!planC.ok || !planP.ok) {
-      writeClusterStateWithPairs(
-        assembleReclosed(readClusterState(spark, path), lbls, reclosedCk),
-        fullPairs, path, n)
-      return
+    val pKeys = ids.select(col("vec_id").as("doc_a"))
+      .unionByName(members.select(col("doc_id").as("doc_a")))
+      .unionByName(newPairs.select(col("doc_a")))
+    VersionedIndex.bucketRewrite(spark, path, n,
+        Seq(Seq("clusters") -> cKeys, Seq("pairs") -> pKeys)).foreach { rw =>
+      if (!rw.partial)
+        writeClusterStateWithPairs(
+          assembleReclosed(readClusterState(spark, path), lbls, reclosedCk),
+          fullPairs, path, n)
+      else
+        // touched-bucket rewrites: partition-pruned reads of exactly
+        // the buckets being replaced; untouched components/pairs
+        // inside a touched bucket round-trip through the rewrite. The
+        // fresh rows need no bucket filter: their buckets are in the
+        // touched sets by construction (re-closed labels, new doc_a).
+        VersionedIndex.commit(spark, path,
+          Seq("clusters" -> rw.prior("clusters")
+              .join(lbls, col("cluster") === col("_aff_lbl"), "left_anti")
+              .unionByName(ccClustersStaged(reclosedCk, n)),
+            "pairs" -> rw.prior("pairs")
+              .join(broadcast(ids.select(col("vec_id").as("doc_a"))), Seq("doc_a"), "left_anti")
+              .join(broadcast(ids.select(col("vec_id").as("doc_b"))), Seq("doc_b"), "left_anti")
+              .unionByName(ccPairsStaged(newPairs, n))),
+          ccParams(n),
+          partitionBy = ccPartitionBy(n),
+          clusterBy = CcClusterBy,
+          carry = rw.carry)
     }
-    // touched-bucket rewrites: partition-pruned reads of exactly the
-    // buckets being replaced; untouched components/pairs inside a
-    // touched bucket round-trip through the rewrite
-    val inC = col("idx_bucket").isin(planC.touched.map(Int.box): _*)
-    val stagedClusters = VersionedIndex.readTable(spark, path, "clusters")
-      .filter(inC)
-      .join(lbls, col("cluster") === col("_aff_lbl"), "left_anti")
-      .unionByName(ccClustersStaged(reclosedCk, n).filter(inC))
-    val inP = col("idx_bucket").isin(planP.touched.map(Int.box): _*)
-    val stagedPairs = VersionedIndex.readTable(spark, path, "pairs")
-      .filter(inP)
-      .join(broadcast(ids.select(col("vec_id").as("doc_a"))), Seq("doc_a"), "left_anti")
-      .join(broadcast(ids.select(col("vec_id").as("doc_b"))), Seq("doc_b"), "left_anti")
-      .unionByName(ccPairsStaged(newPairs, n).filter(inP))
-    VersionedIndex.commit(spark, path,
-      Seq("clusters" -> stagedClusters, "pairs" -> stagedPairs),
-      ccParams(n),
-      partitionBy = ccPartitionBy(n),
-      clusterBy = CcClusterBy,
-      carry = Map("clusters" -> planC.carryFor("clusters"),
-        "pairs" -> planP.carryFor("pairs")).filter(_._2.nonEmpty))
     } finally org.apache.spark.sql.GraftBridge
       .releaseLocalCheckpoint(reclosedCk)
   }

@@ -220,24 +220,35 @@ object Index {
     open(docs.sparkSession, path).asInstanceOf[Lsh]
   }
 
-  /** Open whatever index lives at `path`; throws with a layout dump if
-    * nothing recognizable is committed there. */
+  /** THE manifest → kind resolver behind [[open]] and [[stats]]:
+    * `ivf-pq`, `ivf`, `lsh`, `sketch`, or `ccstate` (the dup-cluster
+    * state layout); anything else is an unrecognized layout, reported
+    * with its member tables. */
+  private def kindOf(path: String, mf: Map[String, Map[String, Int]]): String =
+    Seq("pq" -> "ivf-pq", "lists" -> "ivf", "shingles" -> "lsh",
+      "sketch" -> "sketch", "clusters" -> "ccstate")
+      .collectFirst { case (t, k) if mf.contains(t) => k }
+      .getOrElse(sys.error(s"unrecognized index layout at $path: " +
+        s"tables=${mf.keys.toSeq.sorted.mkString(",")}"))
+
+  /** Open whatever index lives at `path`; throws naming the layout if
+    * nothing servable is committed there. */
   def open(spark: SparkSession, path: String): Opened = {
     val params = VersionedIndex.current(spark, path)
-    val mf = VersionedIndex.manifest(spark, path)
     def p(key: String): Int = params.getOrElse(key,
       sys.error(s"index at $path missing $key")).toInt
-    if (mf.contains("pq"))
-      new IvfPq(spark, path, Similarity.readPqCodebook(spark, path), p("nLists"),
-        // corpus size from the maintained histogram (≤ nLists rows) —
-        // feeds the ratio-derived shortlist default
-        Similarity.ivfListSizes(spark, path).values.sum)
-    else if (mf.contains("lists")) new Ivf(spark, path, p("nLists"))
-    else if (mf.contains("shingles"))
-      new Lsh(spark, path, p("n"), p("numHashes"), p("bands"))
-    else if (mf.contains("sketch")) new Sketch(spark, path, p("dim"), p("nBits"))
-    else sys.error(s"unrecognized index layout at $path: " +
-      s"tables=${mf.keys.toSeq.sorted.mkString(",")}")
+    kindOf(path, VersionedIndex.manifest(spark, path)) match {
+      case "ivf-pq" =>
+        new IvfPq(spark, path, Similarity.readPqCodebook(spark, path), p("nLists"),
+          // corpus size from the maintained histogram (≤ nLists rows) —
+          // feeds the ratio-derived shortlist default
+          Similarity.ivfListSizes(spark, path).values.sum)
+      case "ivf" => new Ivf(spark, path, p("nLists"))
+      case "lsh" => new Lsh(spark, path, p("n"), p("numHashes"), p("bands"))
+      case "sketch" => new Sketch(spark, path, p("dim"), p("nBits"))
+      case k => sys.error(s"index at $path is a $k layout, which open does not " +
+        "serve: read it through Dedup.readClusterState")
+    }
   }
 
   /** Persisted sorted-sketch embedding near-dup index handle —
@@ -300,20 +311,6 @@ object Index {
       // [[Similarity.SketchStats]]/[[Dedup.LshStats]]/params.
       drift: Option[Double] = None)
 
-  /** (carryDepth, carriedParts) of `tables`' partitioned member legs
-    * at the committed version — from the manifest alone (driver-side,
-    * no data read). */
-  private def carryOf(spark: SparkSession, path: String,
-      tables: Seq[String]): (Int, Int) =
-    VersionedIndex.currentVersion(spark, path) match {
-      case None => (0, 0) // same no-non-local-return shape as stats
-      case Some(cur) =>
-        val mf = VersionedIndex.manifest(spark, path)
-        val legs = tables.flatMap(t => mf.getOrElse(t, Map.empty).values)
-        if (legs.isEmpty) (0, 0)
-        else (cur - legs.min, legs.count(_ != cur))
-    }
-
   /** ONE health entry point for every persisted index kind — the same
     * manifest evidence [[open]] dispatches on, mapped onto the common
     * [[IndexStats]] core. Unlike [[open]], loads NO driver-side
@@ -324,9 +321,9 @@ object Index {
     * serve (its front door is [[Dedup.readClusterState]]). */
   def stats(spark: SparkSession, path: String): IndexStats = {
     val params = VersionedIndex.current(spark, path)
-    val mf = VersionedIndex.manifest(spark, path)
-    val isPq = mf.contains("pq")
-    if (isPq || mf.contains("lists")) {
+    val kind = kindOf(path, VersionedIndex.manifest(spark, path))
+    val isPq = kind == "ivf-pq"
+    if (isPq || kind == "ivf") {
       // carry is judged over EVERY partitioned member leg an IVF
       // partial commit touches independently — lists, the vec_map
       // side table, and (ivf-pq) the pq code table: a batch can own
@@ -334,7 +331,7 @@ object Index {
       // stay carried, and that is exactly the signal carryDepth
       // exists to keep honest (the LSH branch counts both its member
       // tables for the same reason)
-      val (cd, cp) = carryOf(spark, path, Seq("lists", "vec_map", "pq"))
+      val (cd, cp) = VersionedIndex.carryOf(spark, path, Seq("lists", "vec_map", "pq"))
       // drift for the PQ kind: the codebook-error EWMA's excess over
       // the build baseline (pqErrRecent/pqErrBuild − 1; 0 = recent
       // ingest fits the pinned codewords exactly like the build
@@ -369,30 +366,29 @@ object Index {
         // tracking `partitions` must not see a discontinuous drop to 0
         // the moment the last vector is deleted; skew/max/median keep
         // their degenerate values
-        IndexStats(if (isPq) "ivf-pq" else "ivf", 0L, sizes.size.toLong,
+        IndexStats(kind, 0L, sizes.size.toLong,
           0L, 0L, 1.0, cd, cp, emptied = true,
           drift = if (isPq) pqDrift else ivfDrift)
       else {
         val d = Similarity.ivfStatsFrom(sizes, Similarity.DefaultIvfSkewThreshold)
-        IndexStats(if (isPq) "ivf-pq" else "ivf",
-          sizes.values.sum, sizes.size, d.maxSize,
+        IndexStats(kind, sizes.values.sum, sizes.size, d.maxSize,
           d.medianSize, d.skew, cd, cp, emptied = false,
           drift = if (isPq) pqDrift else ivfDrift)
       }
-    } else if (mf.contains("shingles")) {
+    } else if (kind == "lsh") {
       val s = Dedup.lshIndexStats(spark, path)
-      val (cd, cp) = carryOf(spark, path, Seq("shingles", "bands"))
+      val (cd, cp) = VersionedIndex.carryOf(spark, path, Seq("shingles", "bands"))
       IndexStats("lsh", s.nBandedDocs, s.nBuckets, s.maxBucket,
         s.medianBucket, s.skew, cd, cp, emptied = s.nBuckets == 0L,
         // shift rate, same direction as the sketch kind's flip rate
         // (0 = no drift): 1 − mean same-doc version Jaccard
         drift = s.driftJaccard.map(1.0 - _))
-    } else if (mf.contains("sketch")) {
+    } else if (kind == "sketch") {
       val s = Similarity.sketchIndexStats(spark, path)
       IndexStats("sketch", s.nVecs, s.nOccupiedBuckets, s.maxBucket,
         s.medianBucket, s.skew, s.carryDepth, s.carriedParts, s.emptied,
         drift = s.driftFlipRate)
-    } else if (mf.contains("clusters")) {
+    } else { // ccstate
       // accumulated dup-cluster state: a "partition" is a cluster;
       // skew = the giant-component watch (one cluster swallowing the
       // corpus usually means the pair threshold is mis-sized)
@@ -405,7 +401,7 @@ object Index {
         .head()
       // carry judged over BOTH members: a partial commit (r16 bucketed
       // state) can rewrite clusters and pairs buckets independently
-      val (cd, cp) = carryOf(spark, path, Seq("clusters", "pairs"))
+      val (cd, cp) = VersionedIndex.carryOf(spark, path, Seq("clusters", "pairs"))
       if (r.getLong(0) == 0L)
         IndexStats("ccstate", 0L, 0L, 0L, 0L, 1.0, cd, cp, emptied = true)
       else
@@ -413,7 +409,6 @@ object Index {
           r.getLong(2),
           r.getLong(1).toDouble / math.max(r.getLong(2), 1L),
           cd, cp, emptied = false)
-    } else sys.error(s"unrecognized index layout at $path: " +
-      s"tables=${mf.keys.toSeq.sorted.mkString(",")}")
+    }
   }
 }

@@ -542,12 +542,10 @@ object Similarity {
     * read prunes to the batch ids' vb partitions — no per-trigger
     * index scan (the LSH `idx_bucket` contract). vec_map itself
     * commits partially in the same transaction: only the batch's vb
-    * partitions rewrite, the rest carry. Once the manifest references
-    * `maxVersionChain` distinct versions, the upsert compacts with one
-    * full rewrite, bounding read fan-out and letting old versions
-    * sweep. */
-  def upsertIvfIndex(newEmb: DataFrame, path: String,
-      maxVersionChain: Int = 8): Unit = {
+    * partitions rewrite, the rest carry. At the compaction point
+    * ([[VersionedIndex.MaxVersionChain]]) the upsert takes one full
+    * rewrite, bounding read fan-out and letting old versions sweep. */
+  def upsertIvfIndex(newEmb: DataFrame, path: String): Unit = {
     val spark = newEmb.sparkSession
     val params = VersionedIndex.current(spark, path)
     val centroids = readIvfCentroids(spark, path)
@@ -612,7 +610,7 @@ object Similarity {
       // from the batch alone
       commitIvfMutation(spark, path, pqCb,
         params ++ skewParam(newSizes) ++ pqErrParams ++ distParams,
-        newSizes, maxVersionChain, (adds.keySet ++ removes.keySet).toSeq, vbs,
+        newSizes, (adds.keySet ++ removes.keySet).toSeq, vbs,
         _.join(newIds, Seq("vec_id"), "left_anti")
           .unionByName(assignedNew.drop("c_sim")),
         _.join(newIds, Seq("vec_id"), "left_anti")
@@ -627,24 +625,25 @@ object Similarity {
     if (params.contains("pqM")) Some(readPqCodebook(spark, path)) else None
 
   /** ONE commit of an IVF mutation (upsert or delete). PARTIAL when the
-    * manifest allows it: only the `touched` list partitions (and, for
-    * IVF-PQ, their `pq` code partitions, derived from the staged lists
-    * bytes) and the `vbs` vec_map partitions rewrite — each read
-    * partition-pruned and passed through `mergeLists` / `mergeVecMap`
-    * — and every other partition carries by manifest reference,
-    * byte-identical. A full rewrite of every member (`mergeLists` over
-    * the whole lists table, vec_map and pq derived from it) happens at
-    * the compaction point (`maxVersionChain`) or when a full takedown
-    * left whole-table members. An empty `touched` set commits nothing
-    * on the partial route. */
+    * manifest allows it ([[VersionedIndex.canCarry]] over `lists`,
+    * `vec_map` and, for IVF-PQ, `pq`): only the `touched` list
+    * partitions (and their `pq` code partitions, derived from the
+    * staged lists bytes) and the `vbs` vec_map partitions rewrite —
+    * each read partition-pruned and passed through `mergeLists` /
+    * `mergeVecMap` — and every other partition carries by manifest
+    * reference, byte-identical ([[VersionedIndex.carryUntouched]]). A
+    * full rewrite of every member (`mergeLists` over the whole lists
+    * table, vec_map and pq derived from it) happens at the compaction
+    * point ([[VersionedIndex.MaxVersionChain]]) or when a full
+    * takedown left whole-table members. An empty `touched` set
+    * commits nothing on the partial route. */
   private def commitIvfMutation(spark: org.apache.spark.sql.SparkSession,
       path: String, pqCb: Option[Quantization.PqCodebook],
       params: Map[String, String], newSizes: Map[Long, Long],
-      maxVersionChain: Int, touched: Seq[Long], vbs: Seq[Int],
+      touched: Seq[Long], vbs: Seq[Int],
       mergeLists: DataFrame => DataFrame,
       mergeVecMap: DataFrame => DataFrame): Unit = {
     val mf = VersionedIndex.manifest(spark, path)
-    def entries(t: String): Map[String, Int] = mf.getOrElse(t, Map.empty)
     val raw = readIvfLists(spark, path)
     def rows(lists: DataFrame): DataFrame =
       lists.select(col("vec_id"), col("label"), col("embedding"),
@@ -652,12 +651,7 @@ object Similarity {
     val partitionBy = Map("lists" -> Seq("list_id"), "vec_map" -> Seq("vb"),
       "pq" -> Seq("list_id"))
     val derivePqTable = pqCb.map(cb => "pq" -> derivePq(spark, cb) _).toSeq
-    // chain length if we carried: prior owners (any table) + new
-    val chainOwners = Seq("lists", "vec_map", "pq").flatMap(entries(_).values).toSet
-    val partialOk = entries("lists").nonEmpty &&
-      !entries("lists").contains(VersionedIndex.WholeTable) &&
-      (chainOwners.size + 1) <= maxVersionChain
-    if (!partialOk)
+    if (!VersionedIndex.canCarry(mf, Seq("lists", "vec_map") ++ derivePqTable.map(_._1)))
       VersionedIndex.commit(spark, path,
         Seq("lists" -> mergeLists(rows(raw)),
           "centroids" -> readIvfCentroids(spark, path),
@@ -667,17 +661,12 @@ object Similarity {
         derive = Seq("vec_map" -> deriveVecMap(spark, params("vecMapBuckets").toInt) _) ++
           derivePqTable)
     else if (touched.nonEmpty) {
-      val touchedSet = touched.toSet
-      val vbSet = vbs.toSet
       // prune on the RAW partition column with literals of its exact
       // type — a CAST on the partition column would defeat pruning
       val inVals: Seq[Any] =
         if (raw.schema("list_id").dataType == org.apache.spark.sql.types.IntegerType)
           touched.map(v => Int.box(v.toInt))
         else touched.map(Long.box)
-      def untouched(t: String, key: String, hit: String => Boolean): Map[String, Int] =
-        entries(t).filter { case (dir, _) => !hit(dir.stripPrefix(s"$key=")) }
-      def listHit(v: String) = scala.util.Try(v.toLong).toOption.exists(touchedSet)
       VersionedIndex.commit(spark, path,
         Seq("lists" -> mergeLists(rows(raw.filter(col("list_id").isin(inVals: _*)))),
           "list_sizes" -> sizesDf(spark, newSizes),
@@ -687,12 +676,11 @@ object Similarity {
         // pq mirrors lists partition-for-partition: derive codes from
         // the staged (touched-only) lists bytes, carry the rest
         derive = derivePqTable,
-        carry = Map("lists" -> untouched("lists", "list_id", listHit),
-          "centroids" -> entries("centroids"),
-          "vec_map" -> untouched("vec_map", "vb",
-            v => scala.util.Try(v.toInt).toOption.exists(vbSet)),
-          "pq" -> untouched("pq", "list_id", listHit),
-          "pq_codebook" -> entries("pq_codebook")).filter(_._2.nonEmpty))
+        carry = Map("lists" -> VersionedIndex.carryUntouched(mf, "lists", "list_id", touched),
+          "centroids" -> mf.getOrElse("centroids", Map.empty),
+          "vec_map" -> VersionedIndex.carryUntouched(mf, "vec_map", "vb", vbs),
+          "pq" -> VersionedIndex.carryUntouched(mf, "pq", "list_id", touched),
+          "pq_codebook" -> mf.getOrElse("pq_codebook", Map.empty)).filter(_._2.nonEmpty))
     }
   }
 
@@ -711,8 +699,7 @@ object Similarity {
     * deleted vec_id re-inserts it — deletion removes current rows, it
     * is not a tombstone. The list-size histogram and skew stats update
     * incrementally, same as upsert. */
-  def deleteFromIvfIndex(deleteIds: DataFrame, path: String,
-      maxVersionChain: Int = 8): Unit = {
+  def deleteFromIvfIndex(deleteIds: DataFrame, path: String): Unit = {
     val spark = deleteIds.sparkSession
     val params = VersionedIndex.current(spark, path)
     val ids = deleteIds.select(col("vec_id")).distinct()
@@ -731,7 +718,7 @@ object Similarity {
     // only vb partitions that actually HELD deleted rows rewrite (a
     // pure delete adds nothing elsewhere); the rest carry
     commitIvfMutation(spark, path, pqCodebookOf(spark, path, params),
-      params ++ skewParam(newSizes), newSizes, maxVersionChain,
+      params ++ skewParam(newSizes), newSizes,
       removes.keySet.toSeq, pairs.map(_._2).distinct.toSeq,
       _.join(ids, Seq("vec_id"), "left_anti"),
       _.join(ids, Seq("vec_id"), "left_anti"))
@@ -1911,12 +1898,8 @@ object Similarity {
     * later mutation keeps working (full takedown → re-ingest). */
   def readSketchTable(spark: org.apache.spark.sql.SparkSession,
       path: String): DataFrame =
-    rawSketchTable(spark, path)
-      .select(col("vec_id"), col("canon"), col("embedding"))
-
-  private def rawSketchTable(spark: org.apache.spark.sql.SparkSession,
-      path: String): DataFrame =
     VersionedIndex.readTable(spark, path, "sketch")
+      .select(col("vec_id"), col("canon"), col("embedding"))
 
   /** Persist the sketch index: the corpus's canonical codes + vectors,
     * so per-round near-dup detection pays O(batch) kernels — the
@@ -1996,117 +1979,66 @@ object Similarity {
   }
 
   /** UPSERT a batch: batch rows REPLACE previously-indexed versions of
-    * the same vec_ids, new ids append — O(touched buckets) via the
-    * shared partial-commit planner
-    * ([[VersionedIndex.planPartialRewrite]]), exactly the LSH index's
-    * move. Survives the committed-but-emptied state (full takedown →
-    * re-ingest bootstraps through the full-rewrite branch over the
-    * empty read). Every upsert also measures the batch's
-    * embedding-regime drift against the prior codes of its
-    * re-embedded ids ([[measureSketchDrift]]) and persists it in the
-    * version params — `Index.stats`/[[sketchIndexStats]] surface it,
-    * and a sizing-band crossing logs loudly. Probe cost: one narrow
-    * overlap join over the (cached) partition-pruned prior rows the
-    * commit reads anyway, plus one re-execution of the batch-sized
-    * code kernel. */
-  def upsertSketchIndex(newVecs: DataFrame, path: String,
-      maxVersionChain: Int = 8): Unit = {
+    * the same vec_ids, new ids append — O(touched buckets) through the
+    * shared bucket rewrite ([[VersionedIndex.bucketRewrite]]), exactly
+    * the LSH index's move. Survives the committed-but-emptied state
+    * (full takedown → re-ingest rewrites over the empty read). An
+    * empty batch commits nothing: a streaming ingest sink receiving
+    * empty micro-batches must not grow the version chain. Every upsert
+    * also measures the batch's embedding-regime drift against the
+    * prior codes of its re-embedded ids ([[measureSketchDrift]]) and
+    * persists it in the version params — `Index.stats`/
+    * [[sketchIndexStats]] surface it, and a sizing-band crossing logs
+    * loudly. Probe cost: one narrow overlap join over the (cached)
+    * prior rows the commit reads anyway, plus one re-execution of the
+    * batch-sized code kernel. */
+  def upsertSketchIndex(newVecs: DataFrame, path: String): Unit = {
     val spark = newVecs.sparkSession
     graft.plans.GraftFunctions.register(spark)
     val params = VersionedIndex.current(spark, path)
     val (dim, nBits) = (params("dim").toInt, params("nBits").toInt)
     val nBuckets = params("idxBuckets").toInt
-    // empty batch = no-op on BOTH branches: without this, a post-
-    // takedown upsert (WholeTable manifest → !plan.ok full rewrite)
-    // would commit a content-identical empty version per call — a
-    // streaming ingest sink receiving empty micro-batches would grow
-    // the version chain for nothing (the delete path's anyPresent
-    // contract, mirrored)
-    if (VersionedIndex.requireUniqueIds(newVecs, "vec_id", "upsertSketchIndex") == 0L) return
+    VersionedIndex.requireUniqueIds(newVecs, "vec_id", "upsertSketchIndex")
     val newIds = newVecs.select(col("vec_id")).distinct()
-    val fresh = sketchRows(newVecs, dim, nBits, nBuckets)
-    val plan = VersionedIndex.planPartialRewrite(spark, path, Seq("sketch"),
-      newIds.select(VersionedIndex.bucketCol(col("vec_id"), nBuckets).as("b")),
-      maxVersionChain)
-    // the prior rows have TWO consumers per branch — the drift probe
-    // and the commit's anti-join — so they are cached across the two
-    // jobs instead of scanning the (pruned) partitions twice per
-    // trigger on the streaming hot path
-    if (!plan.ok) {
-      val prior = rawSketchTable(spark, path).cache()
+    VersionedIndex.bucketRewrite(spark, path, nBuckets,
+        Seq(Seq("sketch") -> newIds)).foreach { rw =>
+      // the prior rows have TWO consumers — the drift probe and the
+      // commit's anti-join — so they are cached across the two jobs
+      // instead of scanning them twice per trigger on the streaming
+      // hot path; every re-embedded id hashes into a touched bucket,
+      // so the probe reads only what the rewrite reads anyway
+      val prior = rw.prior("sketch").cache()
       try {
-        val drift = measureSketchDrift(prior, fresh, nBits, params, path)
+        val fresh = sketchRows(newVecs, dim, nBits, nBuckets)
         commitSketchVersion(spark, path,
-          prior
-            .join(newIds, Seq("vec_id"), "left_anti")
-            .drop("idx_bucket")
-            .withColumn("idx_bucket", VersionedIndex.bucketCol(col("vec_id"), nBuckets))
-            .unionByName(fresh),
-          dim, nBits, nBuckets, extraParams = drift)
-      } finally prior.unpersist()
-    } else {
-      if (plan.touched.isEmpty) return
-      val inTouched = col("idx_bucket").isin(plan.touched.map(Int.box): _*)
-      // every re-embedded id hashes into a touched bucket by
-      // construction, so the drift probe's prior side reads only the
-      // pruned partitions the rewrite reads anyway
-      val prior = VersionedIndex.readTable(spark, path, "sketch")
-        .filter(inTouched).cache()
-      try {
-        val drift = measureSketchDrift(prior, fresh, nBits, params, path)
-        commitSketchVersion(spark, path,
-          prior
-            .join(newIds, Seq("vec_id"), "left_anti")
-            .unionByName(fresh),
-          dim, nBits, nBuckets,
-          carry = Map("sketch" -> plan.carryFor("sketch")),
-          extraParams = drift)
+          prior.join(newIds, Seq("vec_id"), "left_anti").unionByName(fresh),
+          dim, nBits, nBuckets, rw.carry,
+          measureSketchDrift(prior, fresh, nBits, params, path))
       } finally prior.unpersist()
     }
   }
 
-  /** DELETE vec_ids (takedown): O(touched buckets) partial rewrite;
-    * params carry forward unchanged. Deleting from an already-emptied
-    * index commits nothing new of substance (empty read → empty
-    * write), never an error. */
-  def deleteFromSketchIndex(deleteIds: DataFrame, path: String,
-      maxVersionChain: Int = 8): Unit = {
+  /** DELETE vec_ids (takedown): O(touched buckets) through the shared
+    * bucket rewrite; params carry forward unchanged. Deleting only
+    * absent ids — from an emptied index included — commits nothing,
+    * never an error. */
+  def deleteFromSketchIndex(deleteIds: DataFrame, path: String): Unit = {
     val spark = deleteIds.sparkSession
     val params = VersionedIndex.current(spark, path)
-    val (dim, nBits) = (params("dim").toInt, params("nBits").toInt)
-    val nBuckets = params("idxBuckets").toInt
     val ids = deleteIds.select(col("vec_id")).distinct()
-    val plan = VersionedIndex.planPartialRewrite(spark, path, Seq("sketch"),
-      ids.select(VersionedIndex.bucketCol(col("vec_id"), nBuckets).as("b")),
-      maxVersionChain)
-    // deleting only ABSENT ids commits NOTHING (no new version) — the
-    // replay/no-op contract the streaming takedown sink documents; the
-    // presence probe is one bounded semi-join over the partitions the
-    // rewrite would read anyway (the IVF delete's discovery move)
-    def anyPresent(existing: DataFrame): Boolean =
-      !existing.join(ids, Seq("vec_id"), "left_semi").isEmpty
-    if (!plan.ok) {
-      val existing = rawSketchTable(spark, path)
-      if (!anyPresent(existing)) return
-      commitSketchVersion(spark, path,
-        existing
-          .join(ids, Seq("vec_id"), "left_anti")
-          .drop("idx_bucket")
-          .withColumn("idx_bucket", VersionedIndex.bucketCol(col("vec_id"), nBuckets)),
-        dim, nBits, nBuckets,
-        // a takedown measures no drift; the last regime reading carries
-        extraParams = VersionedIndex.Drift.carried(params))
-    } else {
-      if (plan.touched.isEmpty) return
-      val inTouched = col("idx_bucket").isin(plan.touched.map(Int.box): _*)
-      val touchedRows = VersionedIndex.readTable(spark, path, "sketch")
-        .filter(inTouched)
-      if (!anyPresent(touchedRows)) return
-      commitSketchVersion(spark, path,
-        touchedRows.join(ids, Seq("vec_id"), "left_anti"),
-        dim, nBits, nBuckets,
-        carry = Map("sketch" -> plan.carryFor("sketch")),
-        extraParams = VersionedIndex.Drift.carried(params))
+    VersionedIndex.bucketRewrite(spark, path, params("idxBuckets").toInt,
+        Seq(Seq("sketch") -> ids)).foreach { rw =>
+      val prior = rw.prior("sketch")
+      // deleting only ABSENT ids commits NOTHING (no new version) — the
+      // replay/no-op contract the streaming takedown sink documents; the
+      // presence probe is one bounded semi-join over the rows the
+      // rewrite reads anyway (the IVF delete's discovery move)
+      if (!prior.join(ids, Seq("vec_id"), "left_semi").isEmpty)
+        commitSketchVersion(spark, path, prior.join(ids, Seq("vec_id"), "left_anti"),
+          params("dim").toInt, params("nBits").toInt, params("idxBuckets").toInt,
+          rw.carry,
+          // a takedown measures no drift; the last regime reading carries
+          VersionedIndex.Drift.carried(params))
     }
   }
 
@@ -2154,12 +2086,8 @@ object Similarity {
     val idxBuckets = params("idxBuckets").toInt
     val (dRate, dBand, dCross) = (params.get("driftFlipRate").map(_.toDouble),
       params.get("driftBand"), params.get("driftBoundary"))
-    val cur = VersionedIndex.currentVersion(spark, path).getOrElse(
-      sys.error(s"no committed version at $path"))
-    val mf = VersionedIndex.manifest(spark, path).getOrElse("sketch", Map.empty)
-    val carriedParts = mf.values.count(_ != cur)
-    val carryDepth = if (mf.isEmpty) 0 else cur - mf.values.min
-    val sizes = rawSketchTable(spark, path)
+    val (carryDepth, carriedParts) = VersionedIndex.carryOf(spark, path, Seq("sketch"))
+    val sizes = VersionedIndex.readTable(spark, path, "sketch")
       .groupBy(col("idx_bucket")).agg(count(lit(1)).as("n"))
     // exact median would be a sort over ≤idxBuckets narrow rows; the
     // approx form keeps the stat one cheap pass at any index size

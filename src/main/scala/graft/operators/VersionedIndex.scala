@@ -39,9 +39,9 @@ import org.apache.spark.sql.functions.{col, count, count_distinct, lit, pmod, xx
   * version that last wrote them. Readers resolve the manifest with
   * [[readTable]]. Superseded versions are swept only when no longer
   * referenced by the newest manifest; callers bound the referenced
-  * chain (and hence read fan-out) by periodically compacting with a
-  * full rewrite (see `upsertIvfIndex` / `upsertLshIndex`
-  * `maxVersionChain`).
+  * chain (and hence read fan-out) by compacting with a full rewrite
+  * once it reaches [[MaxVersionChain]] ([[bucketRewrite]],
+  * [[canCarry]]).
   *
   * Every FileSystem mutation checks its boolean return and throws —
   * HDFS reports rename/delete failure by returning false, not by
@@ -547,40 +547,87 @@ object VersionedIndex {
     }
   }
 
-  /** ONE definition of the partial-commit rewrite decision shared by
-    * every bucketed index kind (LSH upsert/delete, sketch
-    * upsert/delete) — the protocol was previously hand-copied per
-    * call site, so a fix had to land in four places.
-    *
-    * `ok` iff the manifest supports a partial rewrite of `tables`:
-    * every table present, no whole-table owner, and the version chain
-    * (prior owners + the next version) within `maxVersionChain`.
-    * When `ok`, `touched` holds the ≤ nBuckets
-    * bucket ids the mutation's key set maps to (one bounded driver
-    * collect — a pure function of the keys, no index read),
-    * `touchedDirs` their partition-dir names, and `carryFor(table)`
-    * the manifest entries of UNTOUCHED partitions to carry by
-    * reference. */
-  private[operators] final case class PartialRewrite(ok: Boolean,
-      touched: Seq[Int], carryFor: String => Map[String, Int])
+  /** The compaction point of every partial-commit index kind: a
+    * mutation commits partially only while the member tables it names
+    * reference fewer versions than this (the new one counted); past it
+    * the mutation takes the full route, which bounds read fan-out and
+    * lets the old versions sweep. */
+  val MaxVersionChain = 8
 
-  private[operators] def planPartialRewrite(spark: SparkSession, path: String,
-      tables: Seq[String], keyBuckets: DataFrame,
-      maxVersionChain: Int): PartialRewrite = {
-    val mfAll = manifest(spark, path)
-    val mfs = tables.map(t => t -> mfAll.getOrElse(t, Map.empty[String, Int]))
-    val chainOk =
-      (mfs.flatMap(_._2.values).toSet + -1).size <= maxVersionChain
-    val ok = chainOk &&
-      mfs.forall { case (_, m) => m.nonEmpty && !m.contains(WholeTable) }
-    if (!ok) PartialRewrite(ok = false, Nil, _ => Map.empty)
+  /** THE chain and eligibility rule of a partial commit, shared by
+    * every index kind (LSH, sketch, IVF, dup-cluster state): every
+    * member table in `tables` is present and partitioned (a full
+    * takedown leaves whole-table owners), and the versions they
+    * reference plus the next one stay within [[MaxVersionChain]]. */
+  private[operators] def canCarry(mf: Map[String, Map[String, Int]],
+      tables: Seq[String]): Boolean = {
+    val entries = tables.map(mf.getOrElse(_, Map.empty[String, Int]))
+    entries.forall(m => m.nonEmpty && !m.contains(WholeTable)) &&
+      entries.flatMap(_.values).toSet.size + 1 <= MaxVersionChain
+  }
+
+  /** THE carry filter: `table`'s manifest entries other than the
+    * `key=v` partitions for `touched` values — what a partial commit
+    * references instead of rewriting. */
+  private[operators] def carryUntouched(mf: Map[String, Map[String, Int]],
+      table: String, key: String, touched: Iterable[Any]): Map[String, Int] = {
+    val dirs = touched.map(v => s"$key=$v").toSet
+    mf.getOrElse(table, Map.empty).filter { case (d, _) => !dirs(d) }
+  }
+
+  /** (carryDepth, carriedParts) of `tables`' member legs at the
+    * committed version, from the manifest alone: versions since the
+    * oldest still-referenced leg, and legs not owned by the current
+    * version. (0, 0) when nothing is committed or no leg exists. */
+  private[operators] def carryOf(spark: SparkSession, path: String,
+      tables: Seq[String]): (Int, Int) =
+    currentVersion(spark, path).fold((0, 0)) { cur =>
+      val mf = manifestAt(spark, path, cur)
+      val legs = tables.flatMap(t => mf.getOrElse(t, Map.empty).values)
+      if (legs.isEmpty) (0, 0) else (cur - legs.min, legs.count(_ != cur))
+    }
+
+  /** One mutation's rewrite of `idx_bucket`-partitioned member tables.
+    * `partial` is the route ([[canCarry]]); `prior(table)` the rows the
+    * commit rewrites, with `idx_bucket`: the touched partitions on the
+    * partial route, the whole table with `idx_bucket` re-derived on
+    * the full route (an emptied member has none); `carry` the
+    * untouched partitions, empty on the full route. */
+  private[operators] final case class BucketRewrite(partial: Boolean,
+      prior: String => DataFrame, carry: Map[String, Map[String, Int]])
+
+  /** THE bucket-rewrite plan of every `idx_bucket` index mutation (LSH
+    * and sketch upsert/delete, dup-cluster state). `keys` pairs member
+    * tables with the mutation's key frame for them: its one column is
+    * the tables' id column, and `bucketCol(id, nBuckets)` of its rows
+    * are the touched buckets — a pure function of the keys, one
+    * bounded driver collect (≤ nBuckets ints per frame), no index
+    * read. None when the keys touch no bucket: nothing to commit. */
+  private[operators] def bucketRewrite(spark: SparkSession, path: String,
+      nBuckets: Int, keys: Seq[(Seq[String], DataFrame)]): Option[BucketRewrite] = {
+    val hits = keys.zipWithIndex.map { case ((_, k), i) =>
+      k.select(lit(i).as("k"), bucketCol(col(k.columns.head), nBuckets).as("b"))
+    }.reduce(_.unionByName(_)).distinct().collect()
+      .map(r => r.getInt(0) -> r.getInt(1)).toSeq
+    if (hits.isEmpty) None
     else {
-      // bounded driver-side state: ≤ nBuckets ints, never rows
-      val touched = keyBuckets.distinct().collect().map(_.getInt(0)).toSeq
-      val dirs = touched.map(b => s"idx_bucket=$b").toSet
-      PartialRewrite(ok = true, touched,
-        t => mfAll.getOrElse(t, Map.empty)
-          .filter { case (d, _) => !dirs.contains(d) })
+      val mf = manifest(spark, path)
+      val perTable = keys.zipWithIndex.flatMap { case ((ts, k), i) =>
+        ts.map(_ -> (k.columns.head, hits.filter(_._1 == i).map(_._2)))
+      }.toMap
+      val partial = canCarry(mf, perTable.keys.toSeq)
+      def prior(t: String): DataFrame = {
+        val raw = readTable(spark, path, t)
+        if (partial) raw.filter(col("idx_bucket").isin(perTable(t)._2.map(Int.box): _*))
+        else raw.drop("idx_bucket")
+          .withColumn("idx_bucket", bucketCol(col(perTable(t)._1), nBuckets))
+      }
+      val carry =
+        if (!partial) Map.empty[String, Map[String, Int]]
+        else perTable.map { case (t, (_, bs)) =>
+          t -> carryUntouched(mf, t, "idx_bucket", bs)
+        }.filter(_._2.nonEmpty)
+      Some(BucketRewrite(partial, prior, carry))
     }
   }
 }

@@ -363,39 +363,6 @@ object Pipelines {
     }
   }
 
-  /** W2 streaming: the per-trigger rank-delta snapshot loop
-    * (realtime_keyword_aggregator.py:358-383). Each trigger the
-    * complete-mode key counts are limited to the top-`topN`
-    * (TakeOrderedAndProject — the reference's candidate over-fetch),
-    * ranked against the PREVIOUS trigger's persisted snapshot, the
-    * movement table is published to `stateDir/delta`, and the snapshot
-    * at `stateDir/snapshot` is advanced via write-tmp-then-rename.
-    * On-disk state is two ≤ topN-row tables regardless of key
-    * cardinality. Replaying a trigger recomputes the delta against the
-    * already-advanced snapshot ("stable" movements) — the same
-    * at-least-once display semantics as the reference's Redis loop. */
-  def applyRankDeltaSnapshot(spark: SparkSession, counts: DataFrame,
-      stateDir: String, topN: Int = 50): Unit = {
-    val root = new Path(stateDir)
-    val fs = root.getFileSystem(spark.sparkContext.hadoopConfiguration)
-    restoreSwap(fs, root, "snapshot")
-    // delta is swap-published too: a crash between ITS aside and
-    // publish renames would otherwise leave the previous delta at
-    // `.old-delta`, which the next writeSwap clears unrecovered
-    restoreSwap(fs, root, "delta")
-    val snap = new Path(root, "snapshot")
-    val current = counts.select(col("key"), col("cnt"))
-      .orderBy(col("cnt").desc, col("key")).limit(topN)
-    val previous =
-      if (fs.exists(snap)) spark.read.parquet(snap.toString)
-      else spark.createDataFrame(
-        spark.sparkContext.emptyRDD[org.apache.spark.sql.Row], current.schema)
-    val delta = graft.operators.TimeSeries.rankDelta(current, previous, topN = topN)
-    // delta reads the old snapshot, so publish it BEFORE the swap.
-    writeSwap(fs, root, "delta", delta)
-    writeSwap(fs, root, "snapshot", current)
-  }
-
   /** Publish `df` at `root/name` with NO lost-table crash window:
     * written to `.tmp-name`, then [[publish]]ed with `.old-name` as
     * the aside. A crash between the two renames leaves the previous
@@ -486,32 +453,61 @@ object Pipelines {
     }
 
   /** Fold one update batch (key, total, evicted) into the persisted
-    * live-counts table, then advance the snapshot/delta pair. The
-    * merge is one anti-join + union keyed on `key` — O(live keys) per
-    * trigger, distributed, no driver-side rows. Replay-safe: totals
-    * are absolute (last writer wins), evictions are idempotent. */
+    * live-counts table, then advance the rank-delta snapshot loop
+    * (W2, realtime_keyword_aggregator.py:358-383): the live counts are
+    * limited to the top-`topN` (TakeOrderedAndProject — the
+    * reference's candidate over-fetch), ranked against the PREVIOUS
+    * trigger's persisted snapshot, the movement table is published to
+    * `stateDir/delta`, and the snapshot at `stateDir/snapshot` is
+    * advanced — all three through [[writeSwap]]. The merge is one
+    * anti-join + union keyed on `key` — O(live keys) per trigger,
+    * distributed, no driver-side rows; the snapshot and delta are
+    * ≤ topN rows regardless of key cardinality. Replay-safe: totals
+    * are absolute (last writer wins), evictions are idempotent, and a
+    * replayed trigger recomputes the delta against the
+    * already-advanced snapshot ("stable" movements) — the same
+    * at-least-once display semantics as the reference's Redis loop.
+    * A trigger with no update rows (the no-data batch Spark runs when
+    * the watermark moves and nothing evicts) changes no count, so it
+    * publishes nothing: the last movements stay in place. */
   def applyRankDeltaUpdates(spark: SparkSession, updates: DataFrame,
       stateDir: String, topN: Int = 50): Unit = {
     val root = new Path(stateDir)
     val fs = root.getFileSystem(spark.sparkContext.hadoopConfiguration)
-    restoreSwap(fs, root, "counts")
-    val countsPath = new Path(root, "counts")
-    val prior =
-      if (fs.exists(countsPath)) spark.read.parquet(countsPath.toString)
-      else spark.createDataFrame(
-        spark.sparkContext.emptyRDD[org.apache.spark.sql.Row],
-        org.apache.spark.sql.types.StructType(Seq(
-          org.apache.spark.sql.types.StructField("key",
-            org.apache.spark.sql.types.StringType),
-          org.apache.spark.sql.types.StructField("cnt",
-            org.apache.spark.sql.types.LongType))))
-    val merged = prior
-      .join(updates.select(col("key")), Seq("key"), "left_anti")
-      .unionByName(updates.filter(!col("evicted"))
-        .select(col("key"), col("total").as("cnt")))
-    writeSwap(fs, root, "counts", merged)
-    applyRankDeltaSnapshot(spark,
-      spark.read.parquet(countsPath.toString), stateDir, topN)
+    // crash recovery runs on every trigger, empty ones included: a
+    // crash between a publish's two renames leaves the table aside
+    Seq("counts", "snapshot", "delta").foreach(restoreSwap(fs, root, _))
+    // persist + count: the emptiness probe and the merge read the
+    // micro-batch once (applyClusteredStateBatch's move)
+    updates.persist()
+    try {
+      if (updates.count() == 0L) return
+      val countsPath = new Path(root, "counts")
+      val prior =
+        if (fs.exists(countsPath)) spark.read.parquet(countsPath.toString)
+        else spark.createDataFrame(
+          spark.sparkContext.emptyRDD[org.apache.spark.sql.Row],
+          org.apache.spark.sql.types.StructType(Seq(
+            org.apache.spark.sql.types.StructField("key",
+              org.apache.spark.sql.types.StringType),
+            org.apache.spark.sql.types.StructField("cnt",
+              org.apache.spark.sql.types.LongType))))
+      writeSwap(fs, root, "counts", prior
+        .join(updates.select(col("key")), Seq("key"), "left_anti")
+        .unionByName(updates.filter(!col("evicted"))
+          .select(col("key"), col("total").as("cnt"))))
+      val snap = new Path(root, "snapshot")
+      val current = spark.read.parquet(countsPath.toString)
+        .orderBy(col("cnt").desc, col("key")).limit(topN)
+      val previous =
+        if (fs.exists(snap)) spark.read.parquet(snap.toString)
+        else spark.createDataFrame(
+          spark.sparkContext.emptyRDD[org.apache.spark.sql.Row], current.schema)
+      // delta reads the old snapshot, so publish it BEFORE the swap
+      writeSwap(fs, root, "delta",
+        graft.operators.TimeSeries.rankDelta(current, previous, topN = topN))
+      writeSwap(fs, root, "snapshot", current)
+    } finally updates.unpersist()
   }
 
   /** One trigger's clustered state-table landing — the foreachBatch

@@ -814,6 +814,24 @@ class LayoutSpec extends SparkSuite {
     assert(ids == (1L to 5L).toSet)
   }
 
+  test("LSH upsert of an empty batch commits no version, on an emptied index too") {
+    import graft.operators.{Dedup, VersionedIndex}
+    import org.apache.spark.sql.functions.col
+    import spark.implicits._
+    val dir = Files.createTempDirectory("lshnoop").toString
+    val docs = (1L to 3L).map(i => (i, s"document number $i alpha beta gamma " +
+      s"delta epsilon zeta eta theta unique tail token$i")).toDF("doc_id", "text")
+    Dedup.writeLshIndex(docs, col("doc_id"), col("text"), dir)
+    def version = VersionedIndex.currentVersion(spark, dir)
+    Dedup.upsertLshIndex(docs.limit(0), col("doc_id"), col("text"), dir)
+    assert(version.contains(1), "an empty upsert on the partial route committed")
+    // the full takedown leaves whole-table members: the full route
+    Dedup.deleteFromLshIndex(docs.select(col("doc_id")), dir)
+    assert(version.contains(2))
+    Dedup.upsertLshIndex(docs.limit(0), col("doc_id"), col("text"), dir)
+    assert(version.contains(2), "an empty upsert on the full route committed")
+  }
+
   test("LSH upsert chain: bounded version fan-out via compaction") {
     import graft.operators.{Dedup, VersionedIndex}
     import org.apache.spark.sql.functions.col
@@ -823,15 +841,20 @@ class LayoutSpec extends SparkSuite {
       s"gamma delta epsilon zeta eta theta unique tail token$i")
     Dedup.writeLshIndex(Seq(doc(1)).toDF("doc_id", "text"),
       col("doc_id"), col("text"), dir)
-    (2L to 7L).foreach { i =>
+    // one more single-doc upsert than the chain holds, so at least one
+    // of them must take the compacting full route
+    val last = VersionedIndex.MaxVersionChain + 2L
+    (2L to last).foreach { i =>
       Dedup.upsertLshIndex(Seq(doc(i)).toDF("doc_id", "text"),
-        col("doc_id"), col("text"), dir, maxVersionChain = 3)
+        col("doc_id"), col("text"), dir)
     }
+    assert(VersionedIndex.currentVersion(spark, dir).contains(last.toInt))
     // every surviving version is referenced; the referenced set (and
     // hence the on-disk version count and read fan-out) stays ≤ chain
     val owners = VersionedIndex.manifest(spark, dir)
       .values.flatMap(_.values).toSet
-    assert(owners.size <= 3, s"chain exceeded bound: $owners")
+    assert(owners.size <= VersionedIndex.MaxVersionChain,
+      s"chain exceeded bound: $owners")
     val vdirs = new java.io.File(dir).listFiles()
       .filter(f => f.isDirectory && f.getName.startsWith("v=")).map(_.getName).toSet
     assert(vdirs == owners.map(o => s"v=$o"),
@@ -839,7 +862,7 @@ class LayoutSpec extends SparkSuite {
     // and the index still reads as the full corpus state
     val ids = Dedup.readLshTable(spark, dir, "shingles").select("doc_id")
       .distinct().collect().map(_.getLong(0)).toSet
-    assert(ids == (1L to 7L).toSet)
+    assert(ids == (1L to last).toSet)
   }
 
   test("streaming sketch ingest + takedown: per-trigger commits, detection matches batch state") {

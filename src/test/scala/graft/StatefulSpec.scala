@@ -140,6 +140,27 @@ class StatefulSpec extends SparkSuite {
       s"idle keys lost across the crash window: ${counts()}")
   }
 
+  test("rank-delta loop: an empty update batch publishes nothing") {
+    import spark.implicits._
+    val state = java.nio.file.Files.createTempDirectory("rankempty").toString + "/state"
+    val updates = Seq(("a", 3L, false), ("b", 2L, false)).toDF("key", "total", "evicted")
+    graft.streaming.Pipelines.applyRankDeltaUpdates(spark, updates, state, topN = 10)
+    def delta() = spark.read.parquet(s"$state/delta").collect()
+      .map(r => (r.getAs[String]("key"), r.getAs[String]("movement"))).toSet
+    assert(delta() == Set("a" -> "new", "b" -> "new"))
+    // every file under each published dir, with its size and mtime
+    def snapshot() = Seq("counts", "delta", "snapshot").map { d =>
+      d -> new java.io.File(s"$state/$d").listFiles().toSeq
+        .map(f => (f.getName, f.length, f.lastModified)).sorted
+    }
+    val before = snapshot()
+    Thread.sleep(1100) // a rewrite must show in the mtimes
+    graft.streaming.Pipelines.applyRankDeltaUpdates(spark, updates.limit(0), state, topN = 10)
+    assert(snapshot() == before, "an empty trigger rewrote the published tables")
+    assert(delta() == Set("a" -> "new", "b" -> "new"),
+      "an empty trigger replaced the last movements")
+  }
+
   test("batch execution: one pass equals a plain groupBy count") {
     val ev = Tables.events(spark, sf0001).select(col("event_type").as("key"), col("ts"))
     val stateful = Stateful.runningCountsEvicting(ev, "key", "ts", ttlMs = 1000L)
