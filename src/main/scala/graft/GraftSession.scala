@@ -6,7 +6,9 @@ import graft.plans.{GraftExtensions, GraftFunctions}
 
 /** Session factory with the engine's recommended configuration:
   * AQE (runtime re-plan + skew-join splitting), UTC, right-sized
-  * shuffle parallelism, Graft optimizer rules and native functions.
+  * shuffle parallelism, the [[requiredConfs]] (parquet encoding and
+  * pushdown, the fork-free local file system), Graft optimizer rules
+  * and native functions.
   *
   * On a cluster, shuffle partitions scale with executors (2–3× total
   * cores is the usual starting point); AQE coalesces small partitions
@@ -14,8 +16,8 @@ import graft.plans.{GraftExtensions, GraftFunctions}
   */
 object GraftSession {
 
-  /** The parquet confs every graft session MUST carry, as one shared
-    * definition — both fail SILENTLY when dropped, so they are not
+  /** The confs every graft session MUST carry, as one shared
+    * definition — each fails SILENTLY when dropped, so they are not
     * allowed to exist as per-main copy-paste stanzas:
     *  - INT64-micros timestamps: Spark's default INT96 encoding has
     *    NO usable row-group min/max, so a pushed time-range predicate
@@ -34,22 +36,31 @@ object GraftSession {
     *    "What actually skips bytes under the pushed IN"). Derived, not hand-synced: a wider threshold would let
     *    OTHER isin/IN sites push predicate trees deeper than the cap
     *    was sized for.
-    * Every main's session builder routes through this. */
-  def parquetConfs(b: SparkSession.Builder): SparkSession.Builder =
+    *  - the fork-free `file:` file system ([[graft.io.ForkFreeLocalFileSystem]]
+    *    for `FileSystem`, [[graft.io.ForkFreeLocalFs]] for `FileContext`):
+    *    without it every local file a job or a streaming trigger
+    *    writes costs the JVM a `chmod` (and a checkpoint rename a
+    *    `readlink`) child process (SCALE.md, "Local file system:
+    *    processes per trigger"). Hadoop caches one `file:` instance
+    *    per JVM, so the keys must be set before the first session.
+    * Every session builder, the test suite's included, routes through this. */
+  def requiredConfs(b: SparkSession.Builder): SparkSession.Builder =
     b.config("spark.sql.parquet.outputTimestampType", "TIMESTAMP_MICROS")
       .config("spark.sql.parquet.pushdown.inFilterThreshold",
         graft.operators.Dedup.MaxShinglePushdownIds.toString)
+      .config("spark.hadoop.fs.file.impl", classOf[graft.io.ForkFreeLocalFileSystem].getName)
+      .config("spark.hadoop.fs.AbstractFileSystem.file.impl", classOf[graft.io.ForkFreeLocalFs].getName)
 
   /** The measurement/driver-main session: every probe and bench main
     * builds exactly this shape (AQE on, UTC, right-sized shuffle
     * parallelism, ns-epoch events readable, no UI, the silent-failure
-    * parquet confs) — one definition instead of hand-synced session
+    * required confs) — one definition instead of hand-synced session
     * stanzas. Kept separate from
     * [[create]]: the product session registers optimizer extensions
     * and native functions; measurement mains opt into functions
     * explicitly so a probe can also measure WITHOUT them. */
   def probeSession(appName: String, cpus: String): SparkSession =
-    parquetConfs(SparkSession.builder()
+    requiredConfs(SparkSession.builder()
       .master(s"local[$cpus]")
       .appName(appName)
       .config("spark.sql.shuffle.partitions", cpus)
@@ -63,7 +74,7 @@ object GraftSession {
       appName: String = "graft",
       master: String = "local[*]",
       shufflePartitions: Int = Runtime.getRuntime.availableProcessors()): SparkSession = {
-    val spark = parquetConfs(SparkSession.builder()
+    val spark = requiredConfs(SparkSession.builder()
       .master(master)
       .appName(appName)
       .config("spark.sql.shuffle.partitions", shufflePartitions.toString)

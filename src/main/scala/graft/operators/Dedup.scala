@@ -690,7 +690,7 @@ object Dedup {
     * a left-deep Or(Eq…) tree whose recursive evaluation risks the
     * executor stack, and a candidate set that large has outgrown
     * row-group pruning anyway. `private[graft]` because the session's
-    * parquet IN-pushdown threshold ([[graft.GraftSession.parquetConfs]])
+    * parquet IN-pushdown threshold ([[graft.GraftSession.requiredConfs]])
     * derives from it — the conf must never admit a deeper predicate
     * tree than this cap deems stack-safe, so both come from this one
     * constant. */

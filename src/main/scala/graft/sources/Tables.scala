@@ -57,9 +57,15 @@ object Tables {
     *    planning). The file count is in the key because a file index
     *    compares by root path: a directory whose file set changes
     *    within a session keeps its plan hash and must be probed
-    *    again. */
-  private[graft] val fanOutProbeCache =
-    new java.util.concurrent.ConcurrentHashMap[(Int, Int, Int, Int), Int]()
+    *    again. The memo is an LRU of [[FanOutProbeCacheCap]] entries:
+    *    an evicted plan is probed again, with the same answer. */
+  private[graft] val FanOutProbeCacheCap = 128
+
+  private[graft] val fanOutProbeCache = java.util.Collections.synchronizedMap(
+    new java.util.LinkedHashMap[(Int, Int, Int, Int), Int](16, 0.75f, true) {
+      override def removeEldestEntry(e: java.util.Map.Entry[(Int, Int, Int, Int), Int]): Boolean =
+        size > FanOutProbeCacheCap
+    })
 
   def fanOutForKernels(df: DataFrame): DataFrame = {
     val sc = df.sparkSession.sparkContext

@@ -264,6 +264,28 @@ class PlanAssertionsSpec extends SparkSuite {
     assert(outGrown.collect().length == 1010)
   }
 
+  test("fanOutForKernels: the probe memo stays within its cap and keeps every answer") {
+    import scala.jdk.CollectionConverters._
+    val tables = graft.sources.Tables
+    val dir = Files.createTempDirectory("fanoutlru").resolve("t").toString
+    val p = spark.sparkContext.defaultParallelism
+    spark.range(1000).coalesce(1).write.parquet(dir)
+    val one = spark.read.parquet(dir)
+    // more distinct file-backed plans than the memo holds
+    val plans = (0 until tables.FanOutProbeCacheCap + 8).map(i => one.filter(col("id") =!= i))
+    val direct = plans.map(_.rdd.getNumPartitions)
+    assert(direct.forall(_ < p), "every plan is the single-split case")
+    tables.fanOutProbeCache.clear()
+    def wrapped(df: DataFrame): Boolean = !(tables.fanOutForKernels(df) eq df)
+    assert(plans.forall(wrapped))
+    assert(tables.fanOutProbeCache.size == tables.FanOutProbeCacheCap)
+    assert(tables.fanOutProbeCache.values.asScala.toSet == direct.toSet)
+    // the evicted oldest plans are probed again, with the same decision
+    assert(plans.take(8).forall(wrapped))
+    assert(tables.fanOutProbeCache.size == tables.FanOutProbeCacheCap)
+    assert(tables.fanOutProbeCache.values.asScala.toSet == direct.toSet)
+  }
+
   test("bucketed co-located join is shuffle-free") {
     // warehouse.dir is a static conf — use explicit external-table
     // paths in a temp dir instead.

@@ -51,14 +51,16 @@ trait SparkSuite extends AnyFunSuite {
 }
 
 object SparkSuite {
-  private def build(): SparkSession = SparkSession.builder()
+  // through the product's required confs, so tests run on the
+  // parquet settings and the local file system every session carries
+  private def build(): SparkSession = GraftSession.requiredConfs(SparkSession.builder()
     .master("local[4]")
     .appName("SparkSuite")
     .config("spark.sql.shuffle.partitions", "4")
     .config("spark.sql.session.timeZone", "UTC")
     .config("spark.sql.legacy.parquet.nanosAsLong", "true")
     .config("spark.cleaner.periodicGC.interval", "2min")
-    .config("spark.ui.enabled", "false")
+    .config("spark.ui.enabled", "false"))
     .getOrCreate()
 
   @volatile private var cached: SparkSession = _
