@@ -2,7 +2,7 @@ package graft.io
 
 import java.net.URI
 import java.nio.file.Files
-import java.nio.file.attribute.PosixFilePermission
+import java.nio.file.attribute.PosixFilePermissions
 
 import org.apache.hadoop.conf.Configuration
 import org.apache.hadoop.fs.{ChecksumFs, DelegateToFileSystem, FileStatus, FsConstants, FsServerDefaults, LocalFileSystem, Path, RawLocalFileSystem}
@@ -18,29 +18,16 @@ import org.apache.hadoop.fs.permission.FsPermission
   * One difference from `chmod` remains: on a directory, `chmod 0755`
   * keeps a setuid/setgid bit and `chmod(2)` clears it. */
 class ForkFreeRawLocalFileSystem extends RawLocalFileSystem {
-  import ForkFreeRawLocalFileSystem.Bits
-
   override def setPermission(p: Path, permission: FsPermission): Unit = {
-    val mode = permission.toShort.toInt
+    val mode = permission.toShort
     if ((mode & ~0x1ff) != 0) super.setPermission(p, permission) // sticky bit
-    else {
-      val perms = java.util.EnumSet.noneOf(classOf[PosixFilePermission])
-      Bits.foreach { case (bit, perm) => if ((mode & bit) != 0) perms.add(perm) }
-      Files.setPosixFilePermissions(pathToFile(p).toPath, perms)
-    }
+    else Files.setPosixFilePermissions(pathToFile(p).toPath,
+      PosixFilePermissions.fromString(new FsPermission(mode).toString)) // "rwxr-x---"
   }
 
   override def getFileLinkStatus(p: Path): FileStatus =
     if (Files.isSymbolicLink(pathToFile(p).toPath)) super.getFileLinkStatus(p)
     else getFileStatus(p)
-}
-
-object ForkFreeRawLocalFileSystem {
-  import PosixFilePermission._
-  private val Bits: Seq[(Int, PosixFilePermission)] = Seq(
-    0x100 -> OWNER_READ, 0x80 -> OWNER_WRITE, 0x40 -> OWNER_EXECUTE,
-    0x20 -> GROUP_READ, 0x10 -> GROUP_WRITE, 0x8 -> GROUP_EXECUTE,
-    0x4 -> OTHERS_READ, 0x2 -> OTHERS_WRITE, 0x1 -> OTHERS_EXECUTE)
 }
 
 /** `fs.file.impl`: the checksummed local `FileSystem` over the fork-free raw one. */
@@ -49,7 +36,9 @@ class ForkFreeLocalFileSystem extends LocalFileSystem(new ForkFreeRawLocalFileSy
 /** `fs.AbstractFileSystem.file.impl`: the `FileContext` file system that
   * the state store and the offset/commit logs use. Hadoop's `LocalFs`
   * over a twin of its `RawLocalFs`, whose constructors are
-  * package-private; the twin keeps `RawLocalFs`'s four overrides. */
+  * package-private; the twin keeps `RawLocalFs`'s four overrides.
+  * `(URI, Configuration)` is the constructor Hadoop instantiates; like
+  * `LocalFs`, it always serves `file:///`. */
 class ForkFreeLocalFs(uri: URI, conf: Configuration)
     extends ChecksumFs(new DelegateToFileSystem(
       FsConstants.LOCAL_FS_URI, new ForkFreeRawLocalFileSystem, conf,
