@@ -58,7 +58,9 @@ object Tables {
     *    compares by root path: a directory whose file set changes
     *    within a session keeps its plan hash and must be probed
     *    again. The memo is an LRU of [[FanOutProbeCacheCap]] entries:
-    *    an evicted plan is probed again, with the same answer. */
+    *    an evicted plan is probed again, with the same answer. The
+    *    probe runs outside the map's lock, so concurrent queries never
+    *    wait on each other's physical planning. */
   private[graft] val FanOutProbeCacheCap = 128
 
   private[graft] val fanOutProbeCache = java.util.Collections.synchronizedMap(
@@ -75,10 +77,13 @@ object Tables {
     else {
       val n =
         if (files.isEmpty) df.rdd.getNumPartitions
-        else fanOutProbeCache.computeIfAbsent(
-          (System.identityHashCode(sc), p,
-            df.queryExecution.analyzed.semanticHash(), files.length),
-          _ => df.rdd.getNumPartitions)
+        else {
+          val key = (System.identityHashCode(sc), p,
+            df.queryExecution.analyzed.semanticHash(), files.length)
+          val memo = fanOutProbeCache.getOrDefault(key, -1)
+          if (memo >= 0) memo
+          else { val probed = df.rdd.getNumPartitions; fanOutProbeCache.put(key, probed); probed }
+        }
       if (n < p) df.repartition(p) else df
     }
   }

@@ -23,14 +23,8 @@ class LocalFsSpec extends SparkSuite {
 
   private def conf = spark.sparkContext.hadoopConfiguration
 
-  private def stockRaw(c: Configuration = conf): RawLocalFileSystem = {
-    val fs = new RawLocalFileSystem
-    fs.initialize(URI.create("file:///"), c)
-    fs
-  }
-
-  private def forkFreeRaw(c: Configuration = conf): RawLocalFileSystem = {
-    val fs = new ForkFreeRawLocalFileSystem
+  /** `fs` initialized on `file:///`; a checksummed one initializes its raw one too. */
+  private def local[F <: FileSystem](fs: F, c: Configuration = conf): F = {
     fs.initialize(URI.create("file:///"), c)
     fs
   }
@@ -53,7 +47,7 @@ class LocalFsSpec extends SparkSuite {
 
   test("setPermission leaves the same mode bits as the stock raw file system") {
     val dir = Files.createTempDirectory("localfs-perm")
-    val (stock, ours) = (stockRaw(), forkFreeRaw())
+    val (stock, ours) = (local(new RawLocalFileSystem), local(new ForkFreeRawLocalFileSystem))
     for (mode <- Seq("0000", "0600", "0644", "0700", "0755", "0777");
          kind <- Seq("file", "dir")) {
       val Seq(a, b) = Seq("stock", "ours").map { side =>
@@ -76,9 +70,8 @@ class LocalFsSpec extends SparkSuite {
     val c = new Configuration(conf)
     c.set("fs.permissions.umask-mode", "027")
     val dir = Files.createTempDirectory("localfs-umask")
-    val Seq(stock, ours) = Seq(new LocalFileSystem(stockRaw(c)), new ForkFreeLocalFileSystem)
-    ours.initialize(URI.create("file:///"), c)
-    stock.initialize(URI.create("file:///"), c)
+    val (stock, ours) = (local(new LocalFileSystem(new RawLocalFileSystem), c),
+      local(new ForkFreeLocalFileSystem, c))
     for ((side, fs) <- Seq("stock" -> stock, "ours" -> ours)) {
       assert(fs.mkdirs(hpath(dir.resolve(s"$side/d"))))
       val out = fs.create(hpath(dir.resolve(s"$side/d/f")))
@@ -94,7 +87,7 @@ class LocalFsSpec extends SparkSuite {
     val file = Files.write(dir.resolve("f"), "abc".getBytes)
     val sub = Files.createDirectory(dir.resolve("d"))
     val link = Files.createSymbolicLink(dir.resolve("l"), file)
-    val (stock, ours) = (stockRaw(), forkFreeRaw())
+    val (stock, ours) = (local(new RawLocalFileSystem), local(new ForkFreeRawLocalFileSystem))
     def shape(s: FileStatus) = (s.getPath, s.isFile, s.isDirectory, s.isSymlink,
       if (s.isSymlink) s.getSymlink else null, s.getLen, s.getModificationTime, s.getPermission)
     // stock resolves links by the path string, so only a scheme-less
@@ -114,8 +107,7 @@ class LocalFsSpec extends SparkSuite {
   /** The permission strings stock Hadoop gives a new file and directory. */
   private def stockModes(): (String, String) = {
     val dir = Files.createTempDirectory("localfs-stock")
-    val fs = new LocalFileSystem(stockRaw())
-    fs.initialize(URI.create("file:///"), conf)
+    val fs = local(new LocalFileSystem(new RawLocalFileSystem))
     fs.mkdirs(hpath(dir.resolve("d")))
     fs.create(hpath(dir.resolve("d/f"))).close()
     (perms(dir.resolve("d/f")), perms(dir.resolve("d")))
