@@ -2,7 +2,6 @@ package graft.io
 
 import java.net.URI
 import java.nio.file.Files
-import java.nio.file.attribute.PosixFilePermissions
 
 import org.apache.hadoop.conf.Configuration
 import org.apache.hadoop.fs.{ChecksumFs, DelegateToFileSystem, FileStatus, FsConstants, FsServerDefaults, LocalFileSystem, Path, RawLocalFileSystem}
@@ -13,16 +12,15 @@ import org.apache.hadoop.fs.permission.FsPermission
   * Without `libhadoop`, stock `setPermission` runs `chmod` and
   * `getFileLinkStatus` runs `readlink` through `Shell.execCommand`:
   * one fork per part file, `.crc`, state-store file and offset/commit
-  * log entry. Both go through `java.nio` here; the rest is stock.
-  *
-  * One difference from `chmod` remains: on a directory, `chmod 0755`
-  * keeps a setuid/setgid bit and `chmod(2)` clears it. */
+  * log entry. Both go through `java.nio` here; the rest is stock. */
 class ForkFreeRawLocalFileSystem extends RawLocalFileSystem {
+  /** One `chmod(2)` with the mode's 10 bits, sticky bit included. A
+    * directory keeps its setuid/setgid bits, as under `chmod 0755`. */
   override def setPermission(p: Path, permission: FsPermission): Unit = {
-    val mode = permission.toShort
-    if ((mode & ~0x1ff) != 0) super.setPermission(p, permission) // sticky bit
-    else Files.setPosixFilePermissions(pathToFile(p).toPath,
-      PosixFilePermissions.fromString(new FsPermission(mode).toString)) // "rwxr-x---"
+    val path = pathToFile(p).toPath
+    val kept = // 06000
+      if (Files.isDirectory(path)) Files.getAttribute(path, "unix:mode").asInstanceOf[Int] & 0xc00 else 0
+    Files.setAttribute(path, "unix:mode", Int.box(kept | (permission.toShort & 0x3ff))) // 01777
   }
 
   override def getFileLinkStatus(p: Path): FileStatus =

@@ -45,31 +45,39 @@ class LocalFsSpec extends SparkSuite {
     assert(sessionFs.isInstanceOf[ForkFreeLocalFileSystem])
   }
 
+  /** The 12 permission bits of `p`: setuid, setgid, sticky and the 9 rwx bits. */
+  private def mode(p: JPath): Int = Files.getAttribute(p, "unix:mode").asInstanceOf[Int] & 0xfff
+
+  private def octal(m: String): Int = Integer.parseInt(m, 8)
+
   test("setPermission leaves the same mode bits as the stock raw file system") {
     val dir = Files.createTempDirectory("localfs-perm")
     val (stock, ours) = (local(new RawLocalFileSystem), local(new ForkFreeRawLocalFileSystem))
-    for (mode <- Seq("0000", "0600", "0644", "0700", "0755", "0777");
-         kind <- Seq("file", "dir")) {
+    for (m <- Seq("0000", "0600", "0644", "0700", "0755", "0777");
+         kind <- Seq("file", "dir", "setgid-dir")) {
       val Seq(a, b) = Seq("stock", "ours").map { side =>
-        val p = dir.resolve(s"$side-$kind-$mode")
+        val p = dir.resolve(s"$side-$kind-$m")
         if (kind == "file") Files.createFile(p) else Files.createDirectory(p)
+        if (kind == "setgid-dir") Files.setAttribute(p, "unix:mode", Int.box(octal("2700")))
+        p
       }
-      val perm = new FsPermission(Integer.parseInt(mode, 8).toShort)
+      val perm = new FsPermission(octal(m).toShort)
       stock.setPermission(hpath(a), perm)
       ours.setPermission(hpath(b), perm)
-      assert(perms(b) == perms(a), s"$kind $mode")
+      assert(mode(b) == mode(a), s"$kind $m")
     }
-    // the sticky bit takes the stock path and still lands
+    // the sticky bit lands in the same single call
     val sticky = Files.createDirectory(dir.resolve("sticky"))
     ours.setPermission(hpath(sticky), new FsPermission(Integer.parseInt("1777", 8).toShort))
     assert(Files.getAttribute(sticky, "unix:mode").asInstanceOf[Int] % 4096 ==
       Integer.parseInt("1777", 8))
   }
 
-  test("create and mkdirs apply the configured umask as the stock file system does") {
+  test("create and mkdirs under a setgid directory apply the umask and keep setgid as stock does") {
     val c = new Configuration(conf)
     c.set("fs.permissions.umask-mode", "027")
     val dir = Files.createTempDirectory("localfs-umask")
+    Files.setAttribute(dir, "unix:mode", Int.box(octal("2755")))
     val (stock, ours) = (local(new LocalFileSystem(new RawLocalFileSystem), c),
       local(new ForkFreeLocalFileSystem, c))
     for ((side, fs) <- Seq("stock" -> stock, "ours" -> ours)) {
@@ -77,9 +85,10 @@ class LocalFsSpec extends SparkSuite {
       val out = fs.create(hpath(dir.resolve(s"$side/d/f")))
       out.write(42); out.close()
     }
-    for (rel <- Seq("d", "d/f", "d/.f.crc"))
-      assert(perms(dir.resolve(s"ours/$rel")) == perms(dir.resolve(s"stock/$rel")), rel)
+    for (rel <- Seq("", "/d", "/d/f", "/d/.f.crc"))
+      assert(mode(dir.resolve(s"ours$rel")) == mode(dir.resolve(s"stock$rel")), rel)
     assert(perms(dir.resolve("ours/d/f")) == "rw-r-----")
+    assert((mode(dir.resolve("ours/d")) & octal("2000")) != 0, "the new directory keeps setgid")
   }
 
   test("getFileLinkStatus matches stock on a file, a directory and a symlink; a missing path throws") {
