@@ -328,70 +328,69 @@ object ScaleProbe {
     * 5M/10M/15M pairs, bracketing the NVMe crossover). */
   def commitCrossoverTier(spark: SparkSession, srcDir: String,
       stateRoot: String, factors: Seq[Int], runs: Int): Unit = {
-    import graft.operators.Similarity
-    import org.apache.spark.sql.GraftBridge.releaseLocalCheckpoint
+    import graft.operators.{Pins, Similarity}
     require(factors == factors.sorted,
       s"commit-crossover factors must be increasing, got $factors")
     val cold = sys.env.get("SPARK_GRAFT_XOVER_COLD").contains("1")
     val emb = spark.read.parquet(s"$srcDir/embeddings.parquet")
       .select(col("vec_id"), col("embedding"))
     val corpus = emb.filter(col("vec_id") >= 200)
-    val batch = corpus.orderBy(col("vec_id")).limit(200)
-      .select((col("vec_id") + 5000000L).as("vec_id"), col("embedding"))
-      .localCheckpoint()
-    val idx = s"$stateRoot/graft_xover_idx"
-    val fs = new org.apache.hadoop.fs.Path(stateRoot)
-      .getFileSystem(spark.sparkContext.hadoopConfiguration)
-    try {
-      Similarity.writeSketchIndex(corpus, idx, 64)
-      val basePairs = 100000L
-      val rows = factors.map { g =>
-        val st = s"$stateRoot/graft_xover_st$g"
-        buildSynthState(spark, basePairs * g, st)
-        def trigger(gate: Long): Unit =
-          graft.streaming.Pipelines.applyDupClusterBatch(
-            batch, idx, st, 0.9, 64, 32, 4, 16, partialMinPairs = gate)
-        def timeTrig(gate: Long): Double = {
-          trigger(gate) // warm: pairs enter; upgrade (partial) after
-          (1 to runs).map { _ =>
-            if (cold) dropCaches()
-            val t0 = System.nanoTime(); trigger(gate)
-            (System.nanoTime() - t0) / 1e9
-          }.min
+    Pins { p =>
+      val batch = p.checkpoint(corpus.orderBy(col("vec_id")).limit(200)
+        .select((col("vec_id") + 5000000L).as("vec_id"), col("embedding")))
+      val idx = s"$stateRoot/graft_xover_idx"
+      val fs = new org.apache.hadoop.fs.Path(stateRoot)
+        .getFileSystem(spark.sparkContext.hadoopConfiguration)
+      try {
+        Similarity.writeSketchIndex(corpus, idx, 64)
+        val basePairs = 100000L
+        val rows = factors.map { g =>
+          val st = s"$stateRoot/graft_xover_st$g"
+          buildSynthState(spark, basePairs * g, st)
+          def trigger(gate: Long): Unit =
+            graft.streaming.Pipelines.applyDupClusterBatch(
+              batch, idx, st, 0.9, 64, 32, 4, 16, partialMinPairs = gate)
+          def timeTrig(gate: Long): Double = {
+            trigger(gate) // warm: pairs enter; upgrade (partial) after
+            (1 to runs).map { _ =>
+              if (cold) dropCaches()
+              val t0 = System.nanoTime(); trigger(gate)
+              (System.nanoTime() - t0) / 1e9
+            }.min
+          }
+          val tWhole = timeTrig(Long.MaxValue)
+          val tPartial = timeTrig(0L)
+          System.err.println(
+            f"[probe] commit-crossover ${basePairs * g}%9d pairs  " +
+              f"whole $tWhole%7.2f s  partial $tPartial%7.2f s" +
+              (if (cold) "  (cold IO)" else ""))
+          (basePairs * g, tWhole, tPartial)
         }
-        val tWhole = timeTrig(Long.MaxValue)
-        val tPartial = timeTrig(0L)
-        System.err.println(
-          f"[probe] commit-crossover ${basePairs * g}%9d pairs  " +
-            f"whole $tWhole%7.2f s  partial $tPartial%7.2f s" +
-            (if (cold) "  (cold IO)" else ""))
-        (basePairs * g, tWhole, tPartial)
-      }
-      val rec = crossoverRecommendation(rows)
-      rec match {
-        case Some(p) => System.err.println(
-          s"[probe] recommended partialMinPairs = $p for state at " +
-            s"$stateRoot (pass to dupClusterSink)")
-        case None => System.err.println(
-          s"[probe] the partial route never won up to " +
-            s"${rows.last._1} pairs on $stateRoot — keep the " +
-            "whole-write default; extend SPARK_GRAFT_GROW_FACTORS " +
-            "if the deployment expects bigger states")
-      }
-      val rowsJson = rows.map { case (p, w, q) =>
-        f"""{"pairs":$p,"whole":$w%.3f,"partial":$q%.3f}"""
-      }.mkString("[", ",", "]")
-      println(s"""{"metric":"scaleprobe","tier":"commit_crossover",""" +
-        s""""runs":$runs,"cold":$cold,"stateRoot":${JsonStr(stateRoot)},"rows":$rowsJson,""" +
-        s""""recommendedPartialMinPairs":${rec.map(_.toString).getOrElse("null")}}""")
-    } finally {
-      releaseLocalCheckpoint(batch)
-      // synthetic probe dirs only — everything this tier created
-      (Seq(idx) ++ factors.map(g => s"$stateRoot/graft_xover_st$g"))
-        .foreach { d =>
-          val p = new org.apache.hadoop.fs.Path(d)
-          if (fs.exists(p)) fs.delete(p, true)
+        val rec = crossoverRecommendation(rows)
+        rec match {
+          case Some(p) => System.err.println(
+            s"[probe] recommended partialMinPairs = $p for state at " +
+              s"$stateRoot (pass to dupClusterSink)")
+          case None => System.err.println(
+            s"[probe] the partial route never won up to " +
+              s"${rows.last._1} pairs on $stateRoot — keep the " +
+              "whole-write default; extend SPARK_GRAFT_GROW_FACTORS " +
+              "if the deployment expects bigger states")
         }
+        val rowsJson = rows.map { case (p, w, q) =>
+          f"""{"pairs":$p,"whole":$w%.3f,"partial":$q%.3f}"""
+        }.mkString("[", ",", "]")
+        println(s"""{"metric":"scaleprobe","tier":"commit_crossover",""" +
+          s""""runs":$runs,"cold":$cold,"stateRoot":${JsonStr(stateRoot)},"rows":$rowsJson,""" +
+          s""""recommendedPartialMinPairs":${rec.map(_.toString).getOrElse("null")}}""")
+      } finally {
+        // synthetic probe dirs only — everything this tier created
+        (Seq(idx) ++ factors.map(g => s"$stateRoot/graft_xover_st$g"))
+          .foreach { d =>
+            val dir = new org.apache.hadoop.fs.Path(d)
+            if (fs.exists(dir)) fs.delete(dir, true)
+          }
+      }
     }
   }
 

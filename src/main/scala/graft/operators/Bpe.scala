@@ -72,36 +72,42 @@ object Bpe {
       merges: Int): (DataFrame, DataFrame) = {
     require(merges >= 1)
     val spark = docs.sparkSession
-    var w = initSymbols(docs, text).localCheckpoint()
-    val learned = scala.collection.mutable.ArrayBuffer[(Int, String, String, String, Long)]()
-    var r = 1
-    var exhausted = false
-    while (r <= merges && !exhausted) {
-      val top = w.select(col("fr"), explode(
-          zip_with(slice(col("syms"), lit(1), greatest(size(col("syms")) - 1, lit(0))),
-            slice(col("syms"), lit(2), greatest(size(col("syms")) - 1, lit(0))),
-            (sa, sb) => struct(sa.as("sa"), sb.as("sb")))).as("p"))
-        .groupBy(col("p.sa").as("sym_a"), col("p.sb").as("sym_b"))
-        .agg(sum(col("fr")).as("cnt"))
-        .orderBy(col("cnt").desc, col("sym_a"), col("sym_b")).limit(1)
-        .collect() // ≤ 1 row of driver state per round
-      if (top.isEmpty) exhausted = true
-      else {
-        val a = top.head.getString(0)
-        val b = top.head.getString(1)
-        val cnt = top.head.getLong(2)
-        learned += ((r, a, b, a + b, cnt))
-        w = w.select(col("word"), col("fr"),
-            applyMergeFold(col("syms"), a, b).as("syms"))
-          .localCheckpoint() // truncate lineage; table stays vocab-sized
+    // each round's table supersedes the last, which is released once
+    // the next is materialized; the final table is returned, so kept
+    Pins { p =>
+      var w = p.checkpoint(initSymbols(docs, text))
+      val learned = scala.collection.mutable.ArrayBuffer[(Int, String, String, String, Long)]()
+      var r = 1
+      var exhausted = false
+      while (r <= merges && !exhausted) {
+        val top = w.select(col("fr"), explode(
+            zip_with(slice(col("syms"), lit(1), greatest(size(col("syms")) - 1, lit(0))),
+              slice(col("syms"), lit(2), greatest(size(col("syms")) - 1, lit(0))),
+              (sa, sb) => struct(sa.as("sa"), sb.as("sb")))).as("p"))
+          .groupBy(col("p.sa").as("sym_a"), col("p.sb").as("sym_b"))
+          .agg(sum(col("fr")).as("cnt"))
+          .orderBy(col("cnt").desc, col("sym_a"), col("sym_b")).limit(1)
+          .collect() // ≤ 1 row of driver state per round
+        if (top.isEmpty) exhausted = true
+        else {
+          val a = top.head.getString(0)
+          val b = top.head.getString(1)
+          val cnt = top.head.getLong(2)
+          learned += ((r, a, b, a + b, cnt))
+          // truncate lineage; table stays vocab-sized
+          val next = p.checkpoint(w.select(col("word"), col("fr"),
+            applyMergeFold(col("syms"), a, b).as("syms")))
+          p.release(w)
+          w = next
+        }
+        r += 1
       }
-      r += 1
+      import spark.implicits._
+      val mergeTable = learned.toSeq
+        .toDF("rank", "sym_a", "sym_b", "merged", "cnt")
+        .orderBy(col("rank"))
+      (mergeTable, p.keep(w))
     }
-    import spark.implicits._
-    val mergeTable = learned.toSeq
-      .toDF("rank", "sym_a", "sym_b", "merged", "cnt")
-      .orderBy(col("rank"))
-    (mergeTable, w)
   }
 
   /** A trained tokenizer: the learned merge list and the final

@@ -118,34 +118,34 @@ object Dedup {
     // cache it once instead of re-running tokenize+explode five times.
     // The small pair result is checkpointed eagerly at the end so the
     // cache is released before returning (no leak in a long session).
-    val sh = shingleSet(docs, id, text, n).cache()
-    try {
-    val docFreq = sh.groupBy(col("shingle")).agg(count(lit(1)).as("df"))
-    val sizes = sh.groupBy(col("doc_id")).agg(count(lit(1)).as("n_sh"))
-    val prefix = sh
-      .join(docFreq, "shingle")
-      .withColumn("r", row_number().over(
-        org.apache.spark.sql.expressions.Window.partitionBy(col("doc_id"))
-          .orderBy(col("df"), col("shingle"))))
-      .join(sizes, "doc_id")
-      .filter(col("r") <= col("n_sh") - ceil(col("n_sh") * threshold) + 1)
-      .select(col("doc_id"), col("shingle"))
-    // Length filter (PPJoin companion bound): j ≥ t ⇒ inter ≥ t·max
-    // and inter ≤ min, so min(|a|,|b|) ≥ t·max(|a|,|b|) — size-skewed
-    // pairs can't reach the threshold and never enter verification.
-    val withSize = prefix.join(sizes, "doc_id")
-    val candidates = withSize.as("x")
-      .join(withSize.as("y"),
-        col("x.shingle") === col("y.shingle") && col("x.doc_id") < col("y.doc_id") &&
-          col("x.n_sh") >= col("y.n_sh") * threshold &&
-          col("y.n_sh") >= col("x.n_sh") * threshold)
-      .select(col("x.doc_id").as("doc_a"), col("y.doc_id").as("doc_b"))
-      .distinct()
-    jaccardOnPairs(sh, candidates)
-      .filter(col("jaccard") >= threshold)
-      .select(col("doc_a"), col("doc_b"), col("jaccard"))
-      .localCheckpoint() // near-dup pairs ≪ corpus; materialized pre-unpersist
-    } finally sh.unpersist()
+    Pins { p =>
+      val sh = p.cache(shingleSet(docs, id, text, n))
+      val docFreq = sh.groupBy(col("shingle")).agg(count(lit(1)).as("df"))
+      val sizes = sh.groupBy(col("doc_id")).agg(count(lit(1)).as("n_sh"))
+      val prefix = sh
+        .join(docFreq, "shingle")
+        .withColumn("r", row_number().over(
+          org.apache.spark.sql.expressions.Window.partitionBy(col("doc_id"))
+            .orderBy(col("df"), col("shingle"))))
+        .join(sizes, "doc_id")
+        .filter(col("r") <= col("n_sh") - ceil(col("n_sh") * threshold) + 1)
+        .select(col("doc_id"), col("shingle"))
+      // Length filter (PPJoin companion bound): j ≥ t ⇒ inter ≥ t·max
+      // and inter ≤ min, so min(|a|,|b|) ≥ t·max(|a|,|b|) — size-skewed
+      // pairs can't reach the threshold and never enter verification.
+      val withSize = prefix.join(sizes, "doc_id")
+      val candidates = withSize.as("x")
+        .join(withSize.as("y"),
+          col("x.shingle") === col("y.shingle") && col("x.doc_id") < col("y.doc_id") &&
+            col("x.n_sh") >= col("y.n_sh") * threshold &&
+            col("y.n_sh") >= col("x.n_sh") * threshold)
+        .select(col("x.doc_id").as("doc_a"), col("y.doc_id").as("doc_b"))
+        .distinct()
+      jaccardOnPairs(sh, candidates)
+        .filter(col("jaccard") >= threshold)
+        .select(col("doc_a"), col("doc_b"), col("jaccard"))
+        .localCheckpoint() // near-dup pairs ≪ corpus; materialized pre-release
+    }
   }
 
   /** MinHash signatures from EXPLODED (doc_id, shingle) rows: for each
@@ -218,16 +218,16 @@ object Dedup {
     // repartition under a cached multi-consumer subtree measurably
     // regressed the q38/q39 family (see OPTIMIZATION_r21.md), unlike
     // the lazy-checkpoint barriers where the fan-out helps
-    val ds = docShingles(docs, id, text, n).cache()
-    try {
-    val sh = ds.select(col("doc_id"), explode(col("sh")).as("shingle"))
-    val candidates = lshCandidatesFromBanded(
-      bandedFromDocShingles(ds, numHashes, bands))
-    jaccardOnPairs(sh, candidates)
-      .filter(col("jaccard") >= threshold)
-      .select(col("doc_a"), col("doc_b"), col("jaccard"))
-      .localCheckpoint() // near-dup pairs ≪ corpus; materialized pre-unpersist
-    } finally ds.unpersist()
+    Pins { p =>
+      val ds = p.cache(docShingles(docs, id, text, n))
+      val sh = ds.select(col("doc_id"), explode(col("sh")).as("shingle"))
+      val candidates = lshCandidatesFromBanded(
+        bandedFromDocShingles(ds, numHashes, bands))
+      jaccardOnPairs(sh, candidates)
+        .filter(col("jaccard") >= threshold)
+        .select(col("doc_a"), col("doc_b"), col("jaccard"))
+        .localCheckpoint() // near-dup pairs ≪ corpus; materialized pre-release
+    }
   }
 
   /** The candidate stage of minhashLshPairs — banded signature join,
@@ -456,7 +456,7 @@ object Dedup {
       val state = if (j < floor) "below-s90" else "ok"
       // the alarm must also fire on a FIRST below-s90 measurement
       // (no prior state → no crossing), so it stays outside
-      // Drift.persist's onCross hook — the documented seam
+      // Drift.record's onCross hook — the documented seam
       if (state == "below-s90" && !params.get("driftAlarm").contains("below-s90"))
         org.slf4j.LoggerFactory.getLogger(getClass).warn(
           f"lsh index $path: re-crawl drift — mean same-doc version " +
@@ -469,7 +469,7 @@ object Dedup {
             "floor), shorten the re-crawl horizon, or — if the drop " +
             "is abrupt — audit re-crawl quality (error stubs/paywall " +
             "pages measure as full drift).")
-      VersionedIndex.Drift.persist(params, "driftAlarm", state,
+      VersionedIndex.Drift.record(params, "driftAlarm", state,
         Map("driftJaccard" -> j.toString, "driftDocs" -> nd.toString,
           "driftFloor" -> floor.toString))
     }
@@ -493,15 +493,15 @@ object Dedup {
     // repartition under a cached multi-consumer subtree measurably
     // regressed the q38/q39 family (see OPTIMIZATION_r21.md), unlike
     // the lazy-checkpoint barriers where the fan-out helps
-    val ds = docShingles(docs, id, text, n).cache()
-    try {
+    Pins { p =>
+      val ds = p.cache(docShingles(docs, id, text, n))
       VersionedIndex.requireUniqueIds(ds, "doc_id", "writeLshIndex")
       commitLshVersion(docs.sparkSession, path,
         withIdxBucket(ds.select(col("doc_id"), explode(col("sh")).as("shingle")),
           idxBuckets),
         withIdxBucket(bandedFromDocShingles(ds, numHashes, bands), idxBuckets),
         n, numHashes, bands, idxBuckets)
-    } finally ds.unpersist()
+    }
   }
 
   /** UPSERT a batch into a persisted LSH index: the batch's rows
@@ -531,8 +531,8 @@ object Dedup {
     requireLshParams(path, params, n, numHashes, bands)
     val nBuckets = params("idxBuckets").toInt
     val newIds = newDocs.select(id.as("doc_id")).distinct()
-    val ds = docShingles(newDocs, id, text, n).cache()
-    try {
+    Pins { p =>
+      val ds = p.cache(docShingles(newDocs, id, text, n))
       VersionedIndex.requireUniqueIds(ds, "doc_id", "upsertLshIndex")
       VersionedIndex.bucketRewrite(spark, path, nBuckets,
           Seq(Seq("shingles", "bands") -> newIds)).foreach { rw =>
@@ -558,7 +558,7 @@ object Dedup {
             nBuckets)),
           n, numHashes, bands, nBuckets, rw.carry, drift)
       }
-    } finally ds.unpersist()
+    }
   }
 
   /** DELETE documents from a persisted LSH index — the takedown/
@@ -744,13 +744,13 @@ object Dedup {
     // the batch-id set — without the cache each branch re-tokenizes
     // the batch inside the single final job (r13: measured ~15% of
     // q131's wall at sf0.1).
-    val dsNew = docShingles(newDocs, id, text, n).cache()
-    val shNew = dsNew.select(col("doc_id"), explode(col("sh")).as("shingle"))
-    // batch ids from the cached per-doc rows — no extra source scan
-    // (the distinct stays: it is what makes the anti-joins correct if
-    // a caller passes duplicate-id rows)
-    val newIds = dsNew.select(col("doc_id")).distinct()
-    try {
+    Pins { p =>
+      val dsNew = p.cache(docShingles(newDocs, id, text, n))
+      val shNew = dsNew.select(col("doc_id"), explode(col("sh")).as("shingle"))
+      // batch ids from the cached per-doc rows — no extra source scan
+      // (the distinct stays: it is what makes the anti-joins correct if
+      // a caller passes duplicate-id rows)
+      val newIds = dsNew.select(col("doc_id")).distinct()
       val bandedNew = bandedFromDocShingles(dsNew, numHashes, bands)
         .withColumn("is_new", lit(true))
       // A doc id on BOTH sides is a CHANGED doc: anti-join the old
@@ -771,7 +771,7 @@ object Dedup {
       // +26% on q117 at sf0.1 — pure extra-job scheduling); the
       // indexed caller's driver-side id collect materializes the
       // cache as its own job anyway.
-      val candidates = bandedNew.as("l")
+      val candidates = p.cache(bandedNew.as("l")
         .join(bandedAll.as("r"),
           col("l.band") === col("r.band") && col("l.band_hash") === col("r.band_hash") &&
             col("l.doc_id") =!= col("r.doc_id") &&
@@ -780,29 +780,23 @@ object Dedup {
             (!col("r.is_new") || col("l.doc_id") < col("r.doc_id")) &&
             firstSharedBand === col("l.band") + 1)
         .select(least(col("l.doc_id"), col("r.doc_id")).as("doc_a"),
-          greatest(col("l.doc_id"), col("r.doc_id")).as("doc_b"))
-        .cache()
-      // the supplier call below runs driver-side work (the indexed
-      // form's bounded id collect) — it must sit INSIDE the try so a
-      // mid-job failure still unpersists the candidates cache (a
-      // long-lived driver retrying crawl rounds would otherwise
+          greatest(col("l.doc_id"), col("r.doc_id")).as("doc_b")))
+      // old-side ids verification actually needs: pair members that
+      // are not batch docs (batch members verify against shNew). The
+      // supplier runs driver-side work (the indexed form's bounded id
+      // collect); a failure there still releases the candidates cache
+      // (a long-lived driver retrying crawl rounds would otherwise
       // accumulate materialized banded-join caches per failure)
-      try {
-        // old-side ids verification actually needs: pair members that
-        // are not batch docs (batch members verify against shNew)
-        val candOldIds = candidates
-          .select(explode(array(col("doc_a"), col("doc_b"))).as("doc_id"))
-          .distinct()
-          .join(newIds, Seq("doc_id"), "left_anti")
-        val shCand = shNew.union(shOldFor(candOldIds)).cache()
-        try {
-          jaccardOnPairs(shCand, candidates)
-            .filter(col("jaccard") >= threshold)
-            .select(col("doc_a"), col("doc_b"), col("jaccard"))
-            .localCheckpoint()
-        } finally shCand.unpersist()
-      } finally candidates.unpersist()
-    } finally dsNew.unpersist()
+      val candOldIds = candidates
+        .select(explode(array(col("doc_a"), col("doc_b"))).as("doc_id"))
+        .distinct()
+        .join(newIds, Seq("doc_id"), "left_anti")
+      val shCand = p.cache(shNew.union(shOldFor(candOldIds)))
+      jaccardOnPairs(shCand, candidates)
+        .filter(col("jaccard") >= threshold)
+        .select(col("doc_a"), col("doc_b"), col("jaccard"))
+        .localCheckpoint()
+    }
   }
 
   /** The banded self-join over (doc_id, bands, band, band_hash) rows.
@@ -1017,217 +1011,195 @@ object Dedup {
   def dupClusters(pairs: DataFrame, a: String = "doc_a", b: String = "doc_b"): DataFrame = {
     val spark = pairs.sparkSession
     // Superseded per-round checkpoints are released AS the loop runs:
-    // Dataset.unpersist never sees RDD-level checkpoints, so an
-    // iterative operator running every streaming trigger
+    // an iterative operator running every streaming trigger
     // (dupClusterSink, 5 s cadence) would otherwise float
     // rounds × graph-size of blocks until driver GC. Only the FINAL
-    // labels checkpoint stays alive — the lazy result the caller gets
+    // labels checkpoint is kept — the lazy result the caller gets
     // is backed by it alone, so no eager result materialization (an
     // extra driver-synchronized job per call, measured +17–27% on the
-    // CC-gated queries) is needed.
-    // failure-path hygiene: every live checkpoint registers here and
-    // deregisters when released, so an exception anywhere (the robust
+    // CC-gated queries) is needed. An exception anywhere (the robust
     // cap's require, a failed job mid-round — a streaming trigger
-    // Structured Streaming will retry) drops ALL surviving blocks in
-    // the finally instead of re-introducing the GC float on exactly
-    // the retry path
-    val live = scala.collection.mutable.Set[DataFrame]()
-    def ckpt(df: DataFrame): DataFrame = {
-      val c = df.localCheckpoint(); live += c; c
-    }
-    def release(df: DataFrame): Unit = {
-      org.apache.spark.sql.GraftBridge.releaseLocalCheckpoint(df)
-      live -= df
-    }
-    val result = try {
-    // canonical undirected edges (x = bigger, y = smaller); self-pairs
-    // carry no connectivity but their nodes are still NODES — a doc
-    // paired only with itself is a singleton cluster, not a dropped
-    // row (mergePairsIntoClusters feeds prior singleton state rows
-    // through here as self-edges and must get them back unchanged)
-    // raw checkpointed FIRST: the pairs expression may be a whole
-    // detection plan (kernels), and e + nodes each read it again
-    val raw = ckpt(pairs
-      .select(greatest(col(a), col(b)).as("x"), least(col(a), col(b)).as("y")))
-    val e = ckpt(raw.filter(col("x") =!= col("y")).distinct())
-    // the node count rides the checkpoint materialization as an
-    // accumulator (r21) instead of a separate count() job — it only
-    // seeds the fast-path round cap (log₂n + 2), where a task-retry
-    // over-count can only ADD slack rounds, never a wrong answer (the
-    // loop exits on changed == 0 either way; the n == 0 empty-input
-    // case reads exactly 0 because an empty frame schedules no rows)
-    val nAcc = spark.sparkContext.longAccumulator("graft.dupClusters.nodes")
-    val nodesRaw = raw.select(col("x").as("node"))
-      .union(raw.select(col("y").as("node"))).distinct()
-    val nodes = ckpt(nodesRaw.mapPartitions { it =>
-      it.map { r => nAcc.add(1L); r }
-    }(org.apache.spark.sql.Encoders.row(nodesRaw.schema)))
-    release(raw)
-    // DEPENDS on ckpt being an EAGER localCheckpoint (r22, advisor):
-    // the accumulator is populated by the materialization job above;
-    // if ckpt is ever made lazy, this reads 0, the fast-path cap
-    // collapses to 2 rounds and every input takes the slow path —
-    // silently. The assert converts that refactor hazard into a loud
-    // failure (an eagerly-checkpointed nonempty frame must have
-    // scheduled its rows by now).
-    val n = nAcc.value.longValue()
-    assert(n > 0 || nodes.isEmpty,
-      "dupClusters: node accumulator read 0 on a nonempty frame — " +
-        "ckpt() must stay an EAGER localCheckpoint")
-    val log2n = 63 - java.lang.Long.numberOfLeadingZeros(math.max(n, 1L))
+    // Structured Streaming will retry) releases every surviving
+    // checkpoint, the final labels included, as the scope exits.
+    Pins { p =>
+      // canonical undirected edges (x = bigger, y = smaller); self-pairs
+      // carry no connectivity but their nodes are still NODES — a doc
+      // paired only with itself is a singleton cluster, not a dropped
+      // row (mergePairsIntoClusters feeds prior singleton state rows
+      // through here as self-edges and must get them back unchanged)
+      // raw checkpointed FIRST: the pairs expression may be a whole
+      // detection plan (kernels), and e + nodes each read it again
+      val raw = p.checkpoint(pairs
+        .select(greatest(col(a), col(b)).as("x"), least(col(a), col(b)).as("y")))
+      val e = p.checkpoint(raw.filter(col("x") =!= col("y")).distinct())
+      // the node count rides the checkpoint materialization as an
+      // accumulator (r21) instead of a separate count() job — it only
+      // seeds the fast-path round cap (log₂n + 2), where a task-retry
+      // over-count can only ADD slack rounds, never a wrong answer (the
+      // loop exits on changed == 0 either way; the n == 0 empty-input
+      // case reads exactly 0 because an empty frame schedules no rows)
+      val nAcc = spark.sparkContext.longAccumulator("graft.dupClusters.nodes")
+      val nodesRaw = raw.select(col("x").as("node"))
+        .union(raw.select(col("y").as("node"))).distinct()
+      val nodes = p.checkpoint(nodesRaw.mapPartitions { it =>
+        it.map { r => nAcc.add(1L); r }
+      }(org.apache.spark.sql.Encoders.row(nodesRaw.schema)))
+      p.release(raw)
+      // DEPENDS on p.checkpoint being an EAGER localCheckpoint (r22, advisor):
+      // the accumulator is populated by the materialization job above;
+      // if it is ever made lazy, this reads 0, the fast-path cap
+      // collapses to 2 rounds and every input takes the slow path —
+      // silently. The assert converts that refactor hazard into a loud
+      // failure (an eagerly-checkpointed nonempty frame must have
+      // scheduled its rows by now).
+      val n = nAcc.value.longValue()
+      assert(n > 0 || nodes.isEmpty,
+        "dupClusters: node accumulator read 0 on a nonempty frame — " +
+          "p.checkpoint must stay an EAGER localCheckpoint")
+      val log2n = 63 - java.lang.Long.numberOfLeadingZeros(math.max(n, 1L))
 
-    // ---- fast path ----
-    // NOT checkpointed (r21): sym is a pure union over e's already-
-    // materialized blocks — re-reading those blocks per round is
-    // cheaper than a third edge-set copy in executor storage plus the
-    // extra materialization job the checkpoint cost
-    val sym = e.union(e.select(col("y").as("x"), col("x").as("y")))
-    var labels = ckpt(nodes.withColumn("lbl", col("node")))
-    val fastCap = log2n + 2
-    var round = 0
-    var changed = if (n == 0L) 0L else 1L
-    while (changed > 0 && round < fastCap) {
-      val neighborMin = sym
-        .join(labels.select(col("node").as("y"), col("lbl").as("nlbl")), "y")
-        .groupBy(col("x").as("node")).agg(min(col("nlbl")).as("nmin"))
-      // lbl is always itself a node (init lbl=node; min preserves
-      // membership), so the shortcut join always matches.
-      val shortcut = labels
-        .join(labels.select(col("node").as("lbl"), col("lbl").as("ll")), "lbl")
-      val next = shortcut.join(neighborMin, Seq("node"), "left")
-        .select(col("node"),
-          least(col("lbl"), coalesce(col("nmin"), col("lbl")), col("ll")).as("lbl"),
-          (coalesce(col("nmin"), col("lbl")) < col("lbl") ||
-            col("ll") < col("lbl")).as("_chg"))
-      val acc = spark.sparkContext.longAccumulator("graft.dupClusters.changed")
-      val chgIdx = next.schema.fieldIndex("_chg")
-      val counted = next.mapPartitions { it =>
-        it.map { r =>
-          if (!r.isNullAt(chgIdx) && r.getBoolean(chgIdx)) acc.add(1L)
-          r
-        }
-      }(org.apache.spark.sql.Encoders.row(next.schema))
-      val nextCk = counted.localCheckpoint()
-      live += nextCk
-      changed = acc.value
-      release(labels) // superseded round, blocks dead
-      labels = nextCk.drop("_chg")
-      live += labels  // release(labels) resolves the Project wrapper
-      round += 1
-    }
-
-    // ---- robust path, entered only when the fast cap tripped ----
-    if (changed > 0) {
-      org.slf4j.LoggerFactory.getLogger(getClass).info(
-        s"dupClusters: graph deeper than the fast-path bound " +
-          s"($changed labels still moving after $fastCap rounds) — " +
-          "switching to alternating-star CC")
-      // One star phase. m = min of each node's CLOSED neighborhood;
-      // the selected side's neighbors re-link to m. Both phases emit
-      // canonical rows by construction: large-star's nb > node ≥ m;
-      // small-star's nb ∈ N(node) so nb ≥ m; self-loops drop.
-      def star(edges: DataFrame, large: Boolean): DataFrame = {
-        val s = edges.select(col("x").as("n"), col("y").as("nb"))
-          .union(edges.select(col("y").as("n"), col("x").as("nb")))
-        val mins = s.groupBy(col("n")).agg(min(col("nb")).as("mnb"))
-          .select(col("n"), least(col("n"), col("mnb")).as("m"))
-        val joined = s.join(mins, "n")
-        val out =
-          if (large) joined.filter(col("nb") > col("n"))
-            .select(col("nb").as("x"), col("m").as("y"))
-          else joined.filter(col("nb") < col("n"))
-            .select(col("nb").as("x"), col("m").as("y"))
-            .unionByName(mins.select(col("n").as("x"), col("m").as("y")))
-        out.filter(col("x") =!= col("y")).distinct()
-      }
-      // the proof's O(log² n) shape; practice is ~log n rounds, so
-      // hitting this cap means a real hang, not a deep graph
-      val starCap = (log2n + 3) * (log2n + 3)
-      var se = e
-      // |se| seeds the cardinality side of the fixpoint test; later
-      // rounds carry it forward from the total accumulator — the
-      // ONLY extra action the probe costs is this one count
-      var seCount = se.count()
-      var starRound = 0
-      var done = false
-      while (!done && starRound < starCap) {
-        // fixpoint probe rides the checkpoint materialization (the
-        // fast path's accumulator pattern): set equality ⇔ e2 ⊆ se
-        // (no row misses the _old marker) ∧ |e2| = |se| — one job per
-        // round instead of three (ckpt + count + anti-join). Both
-        // sides of the probe join are distinct on (x, y) (star()
-        // ends .distinct(); e is built distinct), so the left join
-        // never multiplies rows. Accumulator trust model: task
-        // retries can only OVER-count, so accNew == 0 is reliable
-        // (a real new row can never read as zero: e2 ⊆ se holds for
-        // certain), but accTot and the carried cardinality can both
-        // be retry-inflated — gating the confirmation on
-        // accTot == seCount would let persistent retries silently
-        // suppress it until starCap crashes a converged graph. So the
-        // exact count fires on accNew == 0 ALONE; it is paid only in
-        // candidate-fixpoint rounds (practice: the final round plus
-        // rare retry-noise rounds), and a failed confirmation just
-        // keeps looping with the corrected exact cardinality, which
-        // also repairs any inflation in seCount. The fast path needs
-        // no analogue:
-        // its counter only gates EXTRA rounds — labels are already a
-        // fixpoint when it reads zero — while here `done` asserts a
-        // set equality the labels join then RELIES on.
-        val accNew = spark.sparkContext.longAccumulator("graft.dupClusters.starNew")
-        val accTot = spark.sparkContext.longAccumulator("graft.dupClusters.starTotal")
-        val probed = star(star(se, large = true), large = false)
-          .join(se.select(col("x"), col("y"), lit(true).as("_old")),
-            Seq("x", "y"), "left")
-        val oldIdx = probed.schema.fieldIndex("_old")
-        val counted = probed.mapPartitions { it =>
+      // ---- fast path ----
+      // NOT checkpointed (r21): sym is a pure union over e's already-
+      // materialized blocks — re-reading those blocks per round is
+      // cheaper than a third edge-set copy in executor storage plus the
+      // extra materialization job the checkpoint cost
+      val sym = e.union(e.select(col("y").as("x"), col("x").as("y")))
+      var labels = p.checkpoint(nodes.withColumn("lbl", col("node")))
+      val fastCap = log2n + 2
+      var round = 0
+      var changed = if (n == 0L) 0L else 1L
+      while (changed > 0 && round < fastCap) {
+        val neighborMin = sym
+          .join(labels.select(col("node").as("y"), col("lbl").as("nlbl")), "y")
+          .groupBy(col("x").as("node")).agg(min(col("nlbl")).as("nmin"))
+        // lbl is always itself a node (init lbl=node; min preserves
+        // membership), so the shortcut join always matches.
+        val shortcut = labels
+          .join(labels.select(col("node").as("lbl"), col("lbl").as("ll")), "lbl")
+        val next = shortcut.join(neighborMin, Seq("node"), "left")
+          .select(col("node"),
+            least(col("lbl"), coalesce(col("nmin"), col("lbl")), col("ll")).as("lbl"),
+            (coalesce(col("nmin"), col("lbl")) < col("lbl") ||
+              col("ll") < col("lbl")).as("_chg"))
+        val acc = spark.sparkContext.longAccumulator("graft.dupClusters.changed")
+        val chgIdx = next.schema.fieldIndex("_chg")
+        val counted = next.mapPartitions { it =>
           it.map { r =>
-            accTot.add(1L)
-            if (r.isNullAt(oldIdx)) accNew.add(1L)
+            if (!r.isNullAt(chgIdx) && r.getBoolean(chgIdx)) acc.add(1L)
             r
           }
-        }(org.apache.spark.sql.Encoders.row(probed.schema))
-        val e2 = ckpt(counted.drop("_old"))
-        val exactCount =
-          if (accNew.value == 0L) Some(e2.count())
-          else None
-        done = exactCount.contains(seCount)
-        if (!(se eq e)) release(se) // superseded round
-        se = e2
-        seCount = exactCount.getOrElse(accTot.value)
-        starRound += 1
+        }(org.apache.spark.sql.Encoders.row(next.schema))
+        // _chg drops above the counting pass, so the accumulator still
+        // sees every row and the checkpoint holds only (node, lbl)
+        val nextLabels = p.checkpoint(counted.drop("_chg"))
+        changed = acc.value
+        p.release(labels) // superseded round, blocks dead
+        labels = nextLabels
+        round += 1
       }
-      require(done,
-        s"dupClusters failed to converge in $starCap alternating-star " +
-          "rounds — far beyond the O(log² n) bound; the loop is " +
-          "wedged, not the graph deep")
-      // at the fixpoint every component is a star (member, root), the
-      // root = component min appearing only on the y side — each
-      // non-root node has exactly one label row; roots label themselves
-      release(labels) // the fast path's last round
-      labels = ckpt(nodes
-        .join(se.select(col("x").as("node"), col("y").as("lbl")), Seq("node"), "left")
-        .select(col("node"), coalesce(col("lbl"), col("node")).as("lbl")))
-      release(se)
-    }
 
-    // e/sym/nodes are dead once the final labels checkpoint exists:
-    // the returned (lazy) frame reads labels' blocks only. The one
-    // floating block set per call is that final graph-sized labels
-    // checkpoint, reclaimed by GC after the caller consumes it.
-    release(e)
-    release(nodes)
-    val sizes = labels.groupBy(col("lbl")).agg(count(lit(1)).as("csize"))
-    labels.join(sizes, "lbl")
-      .select(col("node").as("doc_id"), col("lbl").as("cluster"), col("csize"))
-    } catch {
-      // on failure nothing escapes — drop every surviving checkpoint
-      // (on success the final labels checkpoint backs the returned
-      // lazy frame and must stay; `live` is only consulted here)
-      case t: Throwable =>
-        live.foreach(org.apache.spark.sql.GraftBridge.releaseLocalCheckpoint)
-        throw t
+      // ---- robust path, entered only when the fast cap tripped ----
+      if (changed > 0) {
+        org.slf4j.LoggerFactory.getLogger(getClass).info(
+          s"dupClusters: graph deeper than the fast-path bound " +
+            s"($changed labels still moving after $fastCap rounds) — " +
+            "switching to alternating-star CC")
+        // One star phase. m = min of each node's CLOSED neighborhood;
+        // the selected side's neighbors re-link to m. Both phases emit
+        // canonical rows by construction: large-star's nb > node ≥ m;
+        // small-star's nb ∈ N(node) so nb ≥ m; self-loops drop.
+        def star(edges: DataFrame, large: Boolean): DataFrame = {
+          val s = edges.select(col("x").as("n"), col("y").as("nb"))
+            .union(edges.select(col("y").as("n"), col("x").as("nb")))
+          val mins = s.groupBy(col("n")).agg(min(col("nb")).as("mnb"))
+            .select(col("n"), least(col("n"), col("mnb")).as("m"))
+          val joined = s.join(mins, "n")
+          val out =
+            if (large) joined.filter(col("nb") > col("n"))
+              .select(col("nb").as("x"), col("m").as("y"))
+            else joined.filter(col("nb") < col("n"))
+              .select(col("nb").as("x"), col("m").as("y"))
+              .unionByName(mins.select(col("n").as("x"), col("m").as("y")))
+          out.filter(col("x") =!= col("y")).distinct()
+        }
+        // the proof's O(log² n) shape; practice is ~log n rounds, so
+        // hitting this cap means a real hang, not a deep graph
+        val starCap = (log2n + 3) * (log2n + 3)
+        var se = e
+        // |se| seeds the cardinality side of the fixpoint test; later
+        // rounds carry it forward from the total accumulator — the
+        // ONLY extra action the probe costs is this one count
+        var seCount = se.count()
+        var starRound = 0
+        var done = false
+        while (!done && starRound < starCap) {
+          // fixpoint probe rides the checkpoint materialization (the
+          // fast path's accumulator pattern): set equality ⇔ e2 ⊆ se
+          // (no row misses the _old marker) ∧ |e2| = |se| — one job per
+          // round instead of three (ckpt + count + anti-join). Both
+          // sides of the probe join are distinct on (x, y) (star()
+          // ends .distinct(); e is built distinct), so the left join
+          // never multiplies rows. Accumulator trust model: task
+          // retries can only OVER-count, so accNew == 0 is reliable
+          // (a real new row can never read as zero: e2 ⊆ se holds for
+          // certain), but accTot and the carried cardinality can both
+          // be retry-inflated — gating the confirmation on
+          // accTot == seCount would let persistent retries silently
+          // suppress it until starCap crashes a converged graph. So the
+          // exact count fires on accNew == 0 ALONE; it is paid only in
+          // candidate-fixpoint rounds (practice: the final round plus
+          // rare retry-noise rounds), and a failed confirmation just
+          // keeps looping with the corrected exact cardinality, which
+          // also repairs any inflation in seCount. The fast path needs
+          // no analogue:
+          // its counter only gates EXTRA rounds — labels are already a
+          // fixpoint when it reads zero — while here `done` asserts a
+          // set equality the labels join then RELIES on.
+          val accNew = spark.sparkContext.longAccumulator("graft.dupClusters.starNew")
+          val accTot = spark.sparkContext.longAccumulator("graft.dupClusters.starTotal")
+          val probed = star(star(se, large = true), large = false)
+            .join(se.select(col("x"), col("y"), lit(true).as("_old")),
+              Seq("x", "y"), "left")
+          val oldIdx = probed.schema.fieldIndex("_old")
+          val counted = probed.mapPartitions { it =>
+            it.map { r =>
+              accTot.add(1L)
+              if (r.isNullAt(oldIdx)) accNew.add(1L)
+              r
+            }
+          }(org.apache.spark.sql.Encoders.row(probed.schema))
+          val e2 = p.checkpoint(counted.drop("_old"))
+          val exactCount =
+            if (accNew.value == 0L) Some(e2.count())
+            else None
+          done = exactCount.contains(seCount)
+          if (!(se eq e)) p.release(se) // superseded round
+          se = e2
+          seCount = exactCount.getOrElse(accTot.value)
+          starRound += 1
+        }
+        require(done,
+          s"dupClusters failed to converge in $starCap alternating-star " +
+            "rounds — far beyond the O(log² n) bound; the loop is " +
+            "wedged, not the graph deep")
+        // at the fixpoint every component is a star (member, root), the
+        // root = component min appearing only on the y side — each
+        // non-root node has exactly one label row; roots label themselves
+        p.release(labels) // the fast path's last round
+        labels = p.checkpoint(nodes
+          .join(se.select(col("x").as("node"), col("y").as("lbl")), Seq("node"), "left")
+          .select(col("node"), coalesce(col("lbl"), col("node")).as("lbl")))
+      }
+
+      // the last star round, e and nodes are dead once the final labels
+      // checkpoint exists and go with the scope: the returned (lazy)
+      // frame reads labels' blocks only. The one floating block set per
+      // call is that final graph-sized labels checkpoint, kept, and
+      // reclaimed by GC after the caller consumes it.
+      val sizes = p.keep(labels).groupBy(col("lbl")).agg(count(lit(1)).as("csize"))
+      labels.join(sizes, "lbl")
+        .select(col("node").as("doc_id"), col("lbl").as("cluster"), col("csize"))
     }
-    result
   }
 
   /** Fold a round's near-dup pairs into an accumulated cluster state —
@@ -1575,52 +1547,51 @@ object Dedup {
     // — so it is materialized once and released with the commit;
     // every other frame here is either already local (`lbls`) or a
     // caller-checkpointed sibling (`ids`, `newPairs`).
-    val reclosedCk = reclosed.localCheckpoint()
-    try {
-    // touched cluster-buckets: buckets of (affected ∪ re-closed)
-    // labels — ≤ n ints via a Spark distinct, never a label collect
-    val cKeys = lbls.select(col("_aff_lbl").as("cluster"))
-      .unionByName(reclosedCk.select(col("cluster")))
-    // touched pair-buckets, as a SUPERSET from already-bounded frames
-    // (no pairs-member scan — the first cut found the touched set
-    // exactly via two semi-joins over the member and paid ~2 s of
-    // per-trigger scheduling for precision that buys nothing): a
-    // retracted pair sits in bucket(doc_a) where doc_a is either a
-    // batch id or the batch id's component partner — and every
-    // partner is an affected-component MEMBER by definition. Extra
-    // buckets in the superset rewrite with byte-identical content
-    // (their pruned read joins against ids/newPairs match nothing) —
-    // a little spare IO, never a semantic fork.
-    val pKeys = ids.select(col("vec_id").as("doc_a"))
-      .unionByName(members.select(col("doc_id").as("doc_a")))
-      .unionByName(newPairs.select(col("doc_a")))
-    VersionedIndex.bucketRewrite(spark, path, n,
-        Seq(Seq("clusters") -> cKeys, Seq("pairs") -> pKeys)).foreach { rw =>
-      if (!rw.partial)
-        writeClusterStateWithPairs(
-          assembleReclosed(readClusterState(spark, path), lbls, reclosedCk),
-          fullPairs, path, n)
-      else
-        // touched-bucket rewrites: partition-pruned reads of exactly
-        // the buckets being replaced; untouched components/pairs
-        // inside a touched bucket round-trip through the rewrite. The
-        // fresh rows need no bucket filter: their buckets are in the
-        // touched sets by construction (re-closed labels, new doc_a).
-        VersionedIndex.commit(spark, path,
-          Seq("clusters" -> rw.prior("clusters")
-              .join(lbls, col("cluster") === col("_aff_lbl"), "left_anti")
-              .unionByName(ccClustersStaged(reclosedCk, n)),
-            "pairs" -> rw.prior("pairs")
-              .join(broadcast(ids.select(col("vec_id").as("doc_a"))), Seq("doc_a"), "left_anti")
-              .join(broadcast(ids.select(col("vec_id").as("doc_b"))), Seq("doc_b"), "left_anti")
-              .unionByName(ccPairsStaged(newPairs, n))),
-          ccParams(n),
-          partitionBy = ccPartitionBy(n),
-          clusterBy = CcClusterBy,
-          carry = rw.carry)
+    Pins { p =>
+      val reclosedCk = p.checkpoint(reclosed)
+      // touched cluster-buckets: buckets of (affected ∪ re-closed)
+      // labels — ≤ n ints via a Spark distinct, never a label collect
+      val cKeys = lbls.select(col("_aff_lbl").as("cluster"))
+        .unionByName(reclosedCk.select(col("cluster")))
+      // touched pair-buckets, as a SUPERSET from already-bounded frames
+      // (no pairs-member scan — the first cut found the touched set
+      // exactly via two semi-joins over the member and paid ~2 s of
+      // per-trigger scheduling for precision that buys nothing): a
+      // retracted pair sits in bucket(doc_a) where doc_a is either a
+      // batch id or the batch id's component partner — and every
+      // partner is an affected-component MEMBER by definition. Extra
+      // buckets in the superset rewrite with byte-identical content
+      // (their pruned read joins against ids/newPairs match nothing) —
+      // a little spare IO, never a semantic fork.
+      val pKeys = ids.select(col("vec_id").as("doc_a"))
+        .unionByName(members.select(col("doc_id").as("doc_a")))
+        .unionByName(newPairs.select(col("doc_a")))
+      VersionedIndex.bucketRewrite(spark, path, n,
+          Seq(Seq("clusters") -> cKeys, Seq("pairs") -> pKeys)).foreach { rw =>
+        if (!rw.partial)
+          writeClusterStateWithPairs(
+            assembleReclosed(readClusterState(spark, path), lbls, reclosedCk),
+            fullPairs, path, n)
+        else
+          // touched-bucket rewrites: partition-pruned reads of exactly
+          // the buckets being replaced; untouched components/pairs
+          // inside a touched bucket round-trip through the rewrite. The
+          // fresh rows need no bucket filter: their buckets are in the
+          // touched sets by construction (re-closed labels, new doc_a).
+          VersionedIndex.commit(spark, path,
+            Seq("clusters" -> rw.prior("clusters")
+                .join(lbls, col("cluster") === col("_aff_lbl"), "left_anti")
+                .unionByName(ccClustersStaged(reclosedCk, n)),
+              "pairs" -> rw.prior("pairs")
+                .join(broadcast(ids.select(col("vec_id").as("doc_a"))), Seq("doc_a"), "left_anti")
+                .join(broadcast(ids.select(col("vec_id").as("doc_b"))), Seq("doc_b"), "left_anti")
+                .unionByName(ccPairsStaged(newPairs, n))),
+            ccParams(n),
+            partitionBy = ccPartitionBy(n),
+            clusterBy = CcClusterBy,
+            carry = rw.carry)
+      }
     }
-    } finally org.apache.spark.sql.GraftBridge
-      .releaseLocalCheckpoint(reclosedCk)
   }
 
   /** The curation end-step: drop every near-duplicate except one

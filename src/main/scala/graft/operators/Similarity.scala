@@ -315,7 +315,7 @@ object Similarity {
           val state = if (excess >= DefaultIvfStaleExcess) "stale" else "ok"
           // the alarm also fires on a FIRST stale measurement (no
           // prior state → no crossing), so it sits outside
-          // Drift.persist's onCross hook — the lsh alarm's contract
+          // Drift.record's onCross hook — the lsh alarm's contract
           if (state == "stale" && !params.get("driftState").contains("stale"))
             org.slf4j.LoggerFactory.getLogger(getClass).warn(
               f"ivf index $path: centroid staleness — recent ingest " +
@@ -324,7 +324,7 @@ object Similarity {
                 f"${DefaultIvfStaleExcess * 100}%.0f%%); probe recall is " +
                 "degrading silently — re-center with rebuildIvfIndex " +
                 "(which also retrains the PQ codebook, if present)")
-          ew ++ VersionedIndex.Drift.persist(params, "driftState", state,
+          ew ++ VersionedIndex.Drift.record(params, "driftState", state,
             Map("driftDistExcess" -> excess.toString))
       }
       }
@@ -395,28 +395,36 @@ object Similarity {
     * assignment cache can be released before returning (no storage
     * leak in a long-lived session). */
   def ivfSearch(embeddings: DataFrame, nLists: Int, nProbe: Int,
-      queryId: Long, k: Int): DataFrame = {
-    val assigned = ivfAssign(embeddings, nLists).cache()
-    try {
-      val q = assigned.filter(col("vec_id") === queryId)
-        .select(col("embedding").as("q_emb"))
-      val probeLists = assigned
-        .select(col("list_id"), col("vec_id"), col("embedding")).as("c")
-        .join(broadcast(q))
-        .filter(col("vec_id") === col("list_id")) // centroid rows only
-        .withColumn("c_sim", Vectors.cosine(col("embedding"), col("q_emb")))
-        .orderBy(col("c_sim").desc, col("list_id"))
-        .limit(nProbe)
-        .select(col("list_id").as("probe_list"))
-      assigned.filter(col("vec_id") =!= queryId)
-        .join(broadcast(probeLists), col("list_id") === col("probe_list"))
-        .crossJoin(broadcast(q))
-        .select(col("vec_id"), col("label"), col("list_id"),
-          round(Vectors.cosine(col("embedding"), col("q_emb")), 6).as("sim"))
-        .orderBy(col("sim").desc, col("vec_id"))
-        .limit(k)
-        .localCheckpoint() // ≤ k rows, materialized before the unpersist
-    } finally assigned.unpersist()
+      queryId: Long, k: Int): DataFrame = Pins { p =>
+    val assigned = p.cache(ivfAssign(embeddings, nLists))
+    val (q, probeLists) = ivfProbe(assigned, queryId, nProbe)
+    assigned.filter(col("vec_id") =!= queryId)
+      .join(broadcast(probeLists), col("list_id") === col("probe_list"))
+      .crossJoin(broadcast(q))
+      .select(col("vec_id"), col("label"), col("list_id"),
+        round(Vectors.cosine(col("embedding"), col("q_emb")), 6).as("sim"))
+      .orderBy(col("sim").desc, col("vec_id"))
+      .limit(k)
+      .localCheckpoint() // ≤ k rows, materialized before the release
+  }
+
+  /** The query row (`q_emb`) of an in-flight assignment, and the
+    * `nProbe` lists (`probe_list`) whose centroid rows rank highest by
+    * cosine to it — the coarse-quantizer step of [[ivfSearch]] and
+    * [[ivfPqTopK]]. */
+  private def ivfProbe(assigned: DataFrame, queryId: Long,
+      nProbe: Int): (DataFrame, DataFrame) = {
+    val q = assigned.filter(col("vec_id") === queryId)
+      .select(col("embedding").as("q_emb"))
+    val probeLists = assigned
+      .select(col("list_id"), col("vec_id"), col("embedding")).as("c")
+      .join(broadcast(q))
+      .filter(col("vec_id") === col("list_id")) // centroid rows only
+      .withColumn("c_sim", Vectors.cosine(col("embedding"), col("q_emb")))
+      .orderBy(col("c_sim").desc, col("list_id"))
+      .limit(nProbe)
+      .select(col("list_id").as("probe_list"))
+    (q, probeLists)
   }
 
   /** Default hive-bucket count for the `vec_map` side table. Each
@@ -555,21 +563,20 @@ object Similarity {
       .orderBy(col("c_sim").desc, col("centroid_id"))
     val centroidIds = centroids
       .select(col("centroid_id").as("vec_id")).withColumn("_isc", lit(true))
-    val assignedNew = newEmb
-      .select(col("vec_id"), col("label"), col("embedding"))
-      .crossJoin(broadcast(centroids))
-      .withColumn("c_sim", Vectors.cosine(col("embedding"), col("c_emb")))
-      .withColumn("_rn", row_number().over(w))
-      .filter(col("_rn") === 1)
-      .join(broadcast(centroidIds), Seq("vec_id"), "left")
-      // c_sim stays on the cached frame: the centroid-staleness drift
-      // probe averages it (one narrow agg over the batch, no second
-      // kernel pass); the staged lists drop it at the write sites
-      .select(col("vec_id"), col("label"), col("embedding"),
-        when(col("_isc"), col("vec_id")).otherwise(col("centroid_id"))
-          .cast("long").as("list_id"), col("c_sim"))
-      .cache()
-    try {
+    Pins { p =>
+      val assignedNew = p.cache(newEmb
+        .select(col("vec_id"), col("label"), col("embedding"))
+        .crossJoin(broadcast(centroids))
+        .withColumn("c_sim", Vectors.cosine(col("embedding"), col("c_emb")))
+        .withColumn("_rn", row_number().over(w))
+        .filter(col("_rn") === 1)
+        .join(broadcast(centroidIds), Seq("vec_id"), "left")
+        // c_sim stays on the cached frame: the centroid-staleness drift
+        // probe averages it (one narrow agg over the batch, no second
+        // kernel pass); the staged lists drop it at the write sites
+        .select(col("vec_id"), col("label"), col("embedding"),
+          when(col("_isc"), col("vec_id")).otherwise(col("centroid_id"))
+            .cast("long").as("list_id"), col("c_sim")))
       val newIds = newEmb.select(col("vec_id")).distinct()
       val buckets = params("vecMapBuckets").toInt
       // per-list adds/removes of this batch — bounded by nLists, so
@@ -616,7 +623,7 @@ object Similarity {
         _.join(newIds, Seq("vec_id"), "left_anti")
           .unionByName(assignedNew.select(col("vec_id"), col("list_id"))
             .withColumn("vb", vbCol(col("vec_id"), buckets))))
-    } finally assignedNew.unpersist()
+    }
   }
 
   /** The pinned codebook of an IVF-PQ index; None for plain IVF. */
@@ -1250,18 +1257,9 @@ object Similarity {
       cb: Quantization.PqCodebook, queryId: Long, k: Int,
       shortlist: Int): DataFrame = {
     graft.plans.GraftFunctions.register(embeddings.sparkSession)
-    val assigned = ivfAssign(embeddings, nLists).cache()
-    try {
-      val q = assigned.filter(col("vec_id") === queryId)
-        .select(col("embedding").as("q_emb"))
-      val probeLists = assigned
-        .select(col("list_id"), col("vec_id"), col("embedding")).as("c")
-        .join(broadcast(q))
-        .filter(col("vec_id") === col("list_id")) // centroid rows only
-        .withColumn("c_sim", Vectors.cosine(col("embedding"), col("q_emb")))
-        .orderBy(col("c_sim").desc, col("list_id"))
-        .limit(nProbe)
-        .select(col("list_id").as("probe_list"))
+    Pins { p =>
+      val assigned = p.cache(ivfAssign(embeddings, nLists))
+      val (q, probeLists) = ivfProbe(assigned, queryId, nProbe)
       val members = assigned
         .join(broadcast(probeLists), col("list_id") === col("probe_list"))
         .select(col("vec_id"), col("label"), col("embedding"))
@@ -1273,8 +1271,8 @@ object Similarity {
           round(Vectors.cosine(col("embedding"), col("q_emb")), 6).as("sim"))
         .orderBy(col("sim").desc, col("vec_id"))
         .limit(k)
-        .localCheckpoint() // ≤ k rows, materialized before the unpersist
-    } finally assigned.unpersist()
+        .localCheckpoint() // ≤ k rows, materialized before the release
+    }
   }
 
   /** k-NN graph: the top-`k` cosine neighbors of EVERY corpus vector —
@@ -1368,53 +1366,51 @@ object Similarity {
     // eager materialization would buy nothing and cost the caller
     // plan composability; its bucket column is recomputed at
     // execution (one kernel pass, the plain graph's normal cost).
-    val sizes = emb.select(bucketCol.as("bucket"))
-      .groupBy(col("bucket")).agg(count(lit(1)).as("_bn"))
-      .cache()
-    try {
+    Pins { p =>
+      val sizes = p.cache(emb.select(bucketCol.as("bucket"))
+        .groupBy(col("bucket")).agg(count(lit(1)).as("_bn")))
       val maxRow = sizes.agg(max(col("_bn"))).head()
       // null on an EMPTY corpus (max of no rows): degrade like knnGraph
       // (empty result), never an NPE
       val maxBucket = if (maxRow.isNullAt(0)) 0L else maxRow.getLong(0)
-      if (maxBucket <= 2L * maxBlock)
-        return knnGraph(emb, k, Some(bucketCol))
-      val base = emb.select(col("vec_id"), col("embedding"))
-        .withColumn("bucket", bucketCol)
-        .withColumn("nrm", Vectors.norm2(col("embedding")))
-      // e = smallest e ≤ maxExtraBits with size ≤ maxBlock·2^e — an
-      // exact integer ladder (a float log₂ would be off-by-one on exact
-      // powers).
-      val eExpr = (maxExtraBits - 1 to 0 by -1).foldLeft(lit(maxExtraBits): Column) {
-        (acc, i) => when(col("_bn") <= lit(maxBlock.toLong << i), lit(i)).otherwise(acc)
-      }
-      val withE = base.join(broadcast(sizes.select(col("bucket"), eExpr.as("_e"))),
-        "bucket")
-      // refinement code: sign bits of planes nBits … nBits+e−1, masked
-      // to this bucket's e (e is a pure function of the bucket, so both
-      // join sides agree on the mask)
-      val subExpr = (0 until maxExtraBits).map { j =>
-        val plane = typedlit(Vectors.hyperplane(nBits + j, dim).toSeq)
-        when(lit(j) < col("_e") &&
-          graft.plans.GraftFunctions.dot(col("embedding"), plane) >= 0.0,
-          lit(1L << j)).otherwise(lit(0L))
-      }.reduce(_ + _)
-      // materialize ONCE: the bucketed+refined corpus view feeds BOTH
-      // sides of the candidate self-join (and the sizes aggregation
-      // inside each side would otherwise re-scan the corpus twice
-      // more). cache (not localCheckpoint) so it can be unpersisted
-      // once the result below is materialized; the probe explode is
-      // over the cheap _sub/_e columns the cached projection already
-      // computed, so no expensive chain can be inlined into the
-      // InMemoryTableScan by generate-filter pushdown.
-      val subbed = withE.select(col("vec_id"), col("embedding"), col("nrm"),
-        col("bucket"), col("_e"), subExpr.as("_sub")).cache()
-      try {
+      if (maxBucket <= 2L * maxBlock) knnGraph(emb, k, Some(bucketCol))
+      else {
+        val base = emb.select(col("vec_id"), col("embedding"))
+          .withColumn("bucket", bucketCol)
+          .withColumn("nrm", Vectors.norm2(col("embedding")))
+        // e = smallest e ≤ maxExtraBits with size ≤ maxBlock·2^e — an
+        // exact integer ladder (a float log₂ would be off-by-one on exact
+        // powers).
+        val eExpr = (maxExtraBits - 1 to 0 by -1).foldLeft(lit(maxExtraBits): Column) {
+          (acc, i) => when(col("_bn") <= lit(maxBlock.toLong << i), lit(i)).otherwise(acc)
+        }
+        val withE = base.join(broadcast(sizes.select(col("bucket"), eExpr.as("_e"))),
+          "bucket")
+        // refinement code: sign bits of planes nBits … nBits+e−1, masked
+        // to this bucket's e (e is a pure function of the bucket, so both
+        // join sides agree on the mask)
+        val subExpr = (0 until maxExtraBits).map { j =>
+          val plane = typedlit(Vectors.hyperplane(nBits + j, dim).toSeq)
+          when(lit(j) < col("_e") &&
+            graft.plans.GraftFunctions.dot(col("embedding"), plane) >= 0.0,
+            lit(1L << j)).otherwise(lit(0L))
+        }.reduce(_ + _)
+        // materialize ONCE: the bucketed+refined corpus view feeds BOTH
+        // sides of the candidate self-join (and the sizes aggregation
+        // inside each side would otherwise re-scan the corpus twice
+        // more). cache (not localCheckpoint) so it can be unpersisted
+        // once the result below is materialized; the probe explode is
+        // over the cheap _sub/_e columns the cached projection already
+        // computed, so no expensive chain can be inlined into the
+        // InMemoryTableScan by generate-filter pushdown.
+        val subbed = p.cache(withE.select(col("vec_id"), col("embedding"), col("nrm"),
+          col("bucket"), col("_e"), subExpr.as("_sub")))
         // probe set: own code + each single-bit flip within e bits
         val probesExpr = filter(array((0 to maxExtraBits).map {
           case 0 => col("_sub")
           case i => when(lit(i) <= col("_e"),
             col("_sub").bitwiseXOR(lit(1L << (i - 1)))).otherwise(lit(null))
-        }: _*), p => p.isNotNull)
+        }: _*), x => x.isNotNull)
         val probing = subbed.select(col("vec_id"), col("embedding"), col("nrm"),
           col("bucket"), explode(probesExpr).as("_probe"))
         val scored = probing.as("a").join(subbed.as("b"),
@@ -1423,10 +1419,10 @@ object Similarity {
           .select(col("a.vec_id").as("va"), col("b.vec_id").as("vb"),
             round(graft.plans.GraftFunctions.dot(col("a.embedding"), col("b.embedding"))
               / (col("a.nrm") * col("b.nrm")), 6).as("sim"))
-        // n·k rows, materialized before the unpersist below
+        // n·k rows, materialized before the scope releases the caches
         mirrorTopK(scored, k).localCheckpoint()
-      } finally subbed.unpersist()
-    } finally sizes.unpersist()
+      }
+    }
   }
 
   /** Mirror each once-scored (va, vb, sim) pair into both directed
@@ -1967,8 +1963,8 @@ object Similarity {
           "15%% sign-sketch cliff — adjacency degrades toward the " +
           "isotropic floor; use the IVF ANN tier (buildIvfIndex + " +
           "ivfSearchIndexed) for candidate generation in this regime")
-      VersionedIndex.Drift.persist(params, "driftBand", band,
-        // Double.toString — Drift.persist's locale contract
+      VersionedIndex.Drift.record(params, "driftBand", band,
+        // Double.toString — Drift.record's locale contract
         Map("driftFlipRate" -> rate.toString, "driftPairs" -> n.toString),
         c => log.warn(
           f"sketch index $path: embedding-regime drift crossed a sizing " +
@@ -2007,14 +2003,14 @@ object Similarity {
       // instead of scanning them twice per trigger on the streaming
       // hot path; every re-embedded id hashes into a touched bucket,
       // so the probe reads only what the rewrite reads anyway
-      val prior = rw.prior("sketch").cache()
-      try {
+      Pins { p =>
+        val prior = p.cache(rw.prior("sketch"))
         val fresh = sketchRows(newVecs, dim, nBits, nBuckets)
         commitSketchVersion(spark, path,
           prior.join(newIds, Seq("vec_id"), "left_anti").unionByName(fresh),
           dim, nBits, nBuckets, rw.carry,
           measureSketchDrift(prior, fresh, nBits, params, path))
-      } finally prior.unpersist()
+      }
     }
   }
 

@@ -509,7 +509,7 @@ object VersionedIndex {
     def carried(params: Map[String, String]): Map[String, String] =
       params.filter { case (k, _) => k.startsWith("drift") }
 
-    /** Persist a fresh reading: `measured` (serialize doubles with
+    /** Record a fresh reading: `measured` (serialize doubles with
       * Double.toString, NEVER an f-interpolator — that formats under
       * the JVM default locale, and a comma-decimal locale would
       * persist an unparseable "0,0714") plus the state under
@@ -518,7 +518,7 @@ object VersionedIndex {
       * crossing replaces it. `onCross` fires only on a state change —
       * the alarm/log hook; alarms that must also fire on a FIRST
       * measurement (no prior state) stay at the call site. */
-    def persist(params: Map[String, String], stateKey: String,
+    def record(params: Map[String, String], stateKey: String,
         state: String, measured: Map[String, String],
         onCross: String => Unit = _ => ()): Map[String, String] = {
       val crossed = params.get(stateKey).filter(_ != state)

@@ -2,6 +2,7 @@ package graft.queries
 
 import org.apache.spark.sql.functions._
 
+import graft.operators.Pins
 import graft.plans.GraftFunctions
 import graft.sources.Tables
 
@@ -71,14 +72,14 @@ object CoverageQueries {
       // Each distinct-user set feeds three set operators — cache both
       // once (instead of six event-table scans), release after the
       // 1-row result materializes.
-      val su = users("signup").cache()
-      val pu = users("purchase").cache()
-      try {
+      Pins { p =>
+        val su = p.cache(users("signup"))
+        val pu = p.cache(users("purchase"))
         su.union(pu).distinct().agg(count(lit(1)).as("n_union"))
           .crossJoin(su.intersect(pu).agg(count(lit(1)).as("n_intersect")))
           .crossJoin(su.except(pu).agg(count(lit(1)).as("n_except")))
           .localCheckpoint()
-      } finally { su.unpersist(); pu.unpersist() }
+      }
   }
 
   // SC8/SC11/SC13 scalar families: split-part, log10 view-weight,

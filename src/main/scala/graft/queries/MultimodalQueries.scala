@@ -3,6 +3,7 @@ package graft.queries
 import org.apache.spark.sql.functions._
 
 import graft.multimodal.Multimodal
+import graft.operators.Pins
 import graft.sources.Tables
 
 /** Multimodal binary-column queries: payload synthesis → REAL
@@ -67,23 +68,25 @@ object MultimodalQueries {
       |  CAST((CAST(ceil(blob_len / 64.0) AS BIGINT) + 1) // 2 AS BIGINT) AS n_frames
       |FROM z ORDER BY doc_id""".stripMargin) { (s, d) =>
     import s.implicits._
-    val blobs = Tables.documents(s, d).select(col("doc_id"), col("text"))
-      .as[(Long, String)]
-      .mapPartitions(_.map { case (id, text) =>
-        val tb = text.getBytes("UTF-8")
-        (id, Multimodal.jpegBytes(tb.length % 60000 + 1, (id % 480 + 1).toInt,
-          (id % 3 + 1).toInt, (id % 30 + 2).toInt, tb))
-      }).toDF("doc_id", "payload")
-      // both join branches consume the synthesized blobs — cache so
-      // the encode pass runs once (plan-keyed: reruns reuse the entry)
-      .cache()
-    val meta = Multimodal.imageMeta(s, blobs)
-    val frames = Multimodal.sampleFrames(s, blobs, 64, 2)
-      .groupBy(col("doc_id")).agg(count(lit(1)).as("n_frames"))
-    meta.join(frames, "doc_id")
-      .select(col("doc_id"), col("format"), col("width"), col("height"),
-        col("channels"), col("n_frames"))
-      .orderBy(col("doc_id"))
+    // both join branches consume the synthesized blobs — cached so the
+    // encode pass runs once, released once the result materializes
+    Pins { p =>
+      val blobs = p.cache(Tables.documents(s, d).select(col("doc_id"), col("text"))
+        .as[(Long, String)]
+        .mapPartitions(_.map { case (id, text) =>
+          val tb = text.getBytes("UTF-8")
+          (id, Multimodal.jpegBytes(tb.length % 60000 + 1, (id % 480 + 1).toInt,
+            (id % 3 + 1).toInt, (id % 30 + 2).toInt, tb))
+        }).toDF("doc_id", "payload"))
+      val meta = Multimodal.imageMeta(s, blobs)
+      val frames = Multimodal.sampleFrames(s, blobs, 64, 2)
+        .groupBy(col("doc_id")).agg(count(lit(1)).as("n_frames"))
+      meta.join(frames, "doc_id")
+        .select(col("doc_id"), col("format"), col("width"), col("height"),
+          col("channels"), col("n_frames"))
+        .orderBy(col("doc_id"))
+        .localCheckpoint()
+    }
   }
 
   val all: Seq[QueryDef] = Seq(q47, q48)

@@ -4,7 +4,7 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
 import graft.functions.Vectors
-import graft.operators.{Dedup, Quantization, Similarity}
+import graft.operators.{Dedup, Pins, Quantization, Similarity}
 import graft.sources.Tables
 
 /** Similarity-search and near-dup dedup inventory (training-data
@@ -1202,11 +1202,10 @@ object VectorQueries {
     // pass (uncached, the corpus-wide lshBucket join would execute
     // twice); the small result checkpoints eagerly so the cache is
     // released before returning (the ngramJaccardPairs pattern)
-    val joined = codes(emb, "c0").join(codes(reemb, "c1"), "vec_id")
-      .select(col("vec_id"),
-        bit_count(col("c0").bitwiseXOR(col("c1"))).cast("int").as("flips"))
-      .cache()
-    try {
+    Pins { p =>
+      val joined = p.cache(codes(emb, "c0").join(codes(reemb, "c1"), "vec_id")
+        .select(col("vec_id"),
+          bit_count(col("c0").bitwiseXOR(col("c1"))).cast("int").as("flips")))
       val t = joined.agg(sum(col("flips")), count(lit(1))).head()
       val (fsum, n) = (t.getLong(0), t.getLong(1))
       // r22: the estimateFlipRate-vs-totals pin moved to
@@ -1222,7 +1221,7 @@ object VectorQueries {
           lit(fsum).as("flips_total"), lit(n * 32).as("bits_total"))
         .orderBy(col("vec_id"))
         .localCheckpoint()
-    } finally joined.unpersist()
+    }
   }
 
   // Block-less dup clustering: connected components over the sorted-
@@ -1350,8 +1349,8 @@ object VectorQueries {
     // cached: the totals agg and the returned frame share one
     // O(n·nLists) assignment pass; eager-checkpoint the (narrow)
     // result, release the cache (the q152/ngramJaccardPairs pattern)
-    val fit = Similarity.centroidFit(Tables.embeddings(s, d), 16).cache()
-    try {
+    Pins { p =>
+      val fit = p.cache(Similarity.centroidFit(Tables.embeddings(s, d), 16))
       val t = fit.agg(sum(col("dist_micro")), count(lit(1))).head()
       val (dsum, n) = (t.getLong(0), t.getLong(1))
       fit.select(col("vec_id"), col("list_id"), col("dist_micro"),
@@ -1359,7 +1358,7 @@ object VectorQueries {
           lit(dsum / n).as("dist_mean"))
         .orderBy(col("vec_id"))
         .localCheckpoint()
-    } finally fit.unpersist()
+    }
   }
 
   val all: Seq[QueryDef] = Seq(q37, q38, q39, q40, q41, q42, q55, q57, q62, q64, q75,

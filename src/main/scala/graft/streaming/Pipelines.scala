@@ -7,6 +7,7 @@ import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.{StreamingQuery, Trigger}
 
 import graft.model.Cdc
+import graft.operators.Pins
 
 /** Structured Streaming pipelines (SURVEY §2.9, §3.1–§3.4).
   *
@@ -245,109 +246,112 @@ object Pipelines {
       nBuckets: Int = MirrorBuckets,
       policy: Map[String, TablePolicy] = Map.empty,
       defaultPolicy: TablePolicy = TablePolicy.SoftDelete): Unit = {
-    // cached: the routed batch is consumed TWICE (touched-bucket
-    // collect, then the merge) — without the cache a caller whose
-    // `parsed` is itself an expensive lazy chain (JSON parse over a
-    // synthesized batch) pays that chain once per consumer. Batch-
-    // sized, freed in the finally.
-    val incoming = parsed.select(
-      coalesce(col("after.id"), col("before.id")).as("id"),
-      col("table"),
-      col("ts_ms"),
-      col("after.value").as("value"),
-      (col("op") === "d").as("is_deleted"))
-      .filter(col("id").isNotNull)
-      // routing: unsupported tables drop entirely; d-events for
-      // tables with no delete statement drop before the merge (the
-      // previously-mirrored row, if any, stays live).
-      .filter(!policyPred(policy, defaultPolicy, TablePolicy.SkipTable))
-      .filter(!(col("is_deleted") &&
-        policyPred(policy, defaultPolicy, TablePolicy.SkipDeletes)))
-      .withColumn("bucket", mirrorBucket(nBuckets))
-      .cache()
-    try {
+    Pins { p =>
+      // cached: the routed batch is consumed TWICE (touched-bucket
+      // collect, then the merge) — without the cache a caller whose
+      // `parsed` is itself an expensive lazy chain (JSON parse over a
+      // synthesized batch) pays that chain once per consumer. Batch-
+      // sized, freed when the scope ends.
+      val incoming = p.cache(parsed.select(
+        coalesce(col("after.id"), col("before.id")).as("id"),
+        col("table"),
+        col("ts_ms"),
+        col("after.value").as("value"),
+        (col("op") === "d").as("is_deleted"))
+        .filter(col("id").isNotNull)
+        // routing: unsupported tables drop entirely; d-events for
+        // tables with no delete statement drop before the merge (the
+        // previously-mirrored row, if any, stays live).
+        .filter(!policyPred(policy, defaultPolicy, TablePolicy.SkipTable))
+        .filter(!(col("is_deleted") &&
+          policyPred(policy, defaultPolicy, TablePolicy.SkipDeletes)))
+        .withColumn("bucket", mirrorBucket(nBuckets)))
       val root = new Path(mirrorPath)
       val fs = root.getFileSystem(spark.sparkContext.hadoopConfiguration)
       recoverMirror(fs, root)
       // Bounded driver-side state: ≤ nBuckets ints, regardless of batch size.
       val touched = incoming.select("bucket").distinct()
         .collect().map(_.getInt(0)).sorted
-      if (touched.isEmpty) return
-      val hasLiveBuckets = fs.exists(root) &&
-        fs.listStatus(root).exists(_.getPath.getName.startsWith("bucket="))
-      val existing =
-        if (hasLiveBuckets)
-          spark.read.parquet(mirrorPath)
-            .filter(col("bucket").isin(touched.toIndexedSeq.map(Int.box): _*))
-        else spark.createDataFrame(spark.sparkContext.emptyRDD[org.apache.spark.sql.Row],
-          incoming.schema)
-      // union → keep the newest (ts_ms) version per (table, id), ties
-      // is_deleted-first — as ONE max-by aggregation (r21, guide §2.3:
-      // aggregate before you shuffle). The former dropDuplicates +
-      // row_number pipeline paid two wide shuffles plus a per-key sort;
-      // the struct-max aggregation combines map-side, so the shuffle
-      // carries one candidate row per (table, id) per map partition and
-      // no sort at all. Winner identical: lexicographic struct max on
-      // (ts_ms, is_deleted) is exactly the rank's (ts_ms DESC,
-      // is_deleted DESC) head; rows tied on both were an arbitrary
-      // winner before (documented: `value` is not asserted on ties) and
-      // are now a deterministic max over the remaining fields. Replayed
-      // duplicates collapse the same way (one winner per key).
-      // FORMAT NOTE (r22, advisor): mirrors persisted at external
-      // mirrorPath locations by pre-r21 builds may therefore carry
-      // different tie-LOSER rows than a fresh rebuild would produce —
-      // expected, not corruption (ties were never asserted).
-      val merged = existing.unionByName(incoming)
-        .groupBy(col("table"), col("id"))
-        .agg(max(struct(col("ts_ms"), col("is_deleted"), col("value"),
-          col("bucket"))).as("_w"))
-        .select(col("id"), col("table"), col("_w.ts_ms").as("ts_ms"),
-          col("_w.value").as("value"), col("_w.is_deleted").as("is_deleted"),
-          col("_w.bucket").as("bucket"))
-        // hard-delete tables: a winning d-event removes the row
-        // physically instead of leaving a tombstone. (Same caveat as the
-        // reference's DELETE: a later replay of an OLDER upsert can
-        // resurrect the id, because no tombstone remains to outrank it.)
-        .filter(!(col("is_deleted") &&
-          policyPred(policy, defaultPolicy, TablePolicy.HardDelete)))
-      val staging = new Path(root, ".staging")
-      if (fs.exists(staging))
-        require(fs.delete(staging, true), s"failed to clear $staging")
-      // repartition on the bucket key before the partitionBy write: the
-      // merge window leaves rows of one bucket spread over every task,
-      // and partitionBy alone would then emit tasks×buckets small files
-      // per micro-batch — a file-count explosion at 100 TB. One extra
-      // exchange of the touched-buckets subset buys one file per bucket
-      // (AQE coalesces the near-empty partitions). The within-partition
-      // sort is the writeClustered mechanism applied to the mirror
-      // (r13): leading with the partition column keeps the writer on
-      // one open file, and (table, id) order gives every row group
-      // tight min/max stats on the SERVING keys — a mirror range read
-      // (q145's `table = x AND id BETWEEN lo AND hi`, the reference's
-      // SyncService point-read shape) prunes row groups instead of
-      // scanning whole buckets (hash bucketing spreads every id range
-      // across ALL buckets, so dir-level pruning can't help there;
-      // SCALE.md "Clustered layout ADOPTED: the CDC mirror", r13).
-      // Files split at the session's per-file record cap (a
-      // `spark.sql.files` conf; SyncMirrorSpec's sort pin lowers it to
-      // surface multi-file row-group geometry at toy scale; at 100 TB
-      // natural row-group segmentation provides it).
-      merged.repartition(col("bucket"))
-        .sortWithinPartitions(col("bucket"), col("table"), col("id"))
-        .write.mode("overwrite")
-        .partitionBy("bucket").parquet(staging.toString)
-      val bak = new Path(root, ".bak")
-      fs.mkdirs(bak)
-      // a touched bucket with no staged dir (every row hard-deleted)
-      // publishes as absent
-      touched.foreach { b =>
-        val name = s"bucket=$b"
-        publish(fs, new Path(staging, name), new Path(root, name), new Path(bak, name))
+      if (touched.nonEmpty) {
+        val hasLiveBuckets = fs.exists(root) &&
+          fs.listStatus(root).exists(_.getPath.getName.startsWith("bucket="))
+        val existing =
+          // read with the batch's schema (the mirror's own columns, in
+          // order; `bucket` is the partition column): no per-trigger
+          // parquet schema-inference job
+          if (hasLiveBuckets)
+            spark.read.schema(incoming.schema).parquet(mirrorPath)
+              .filter(col("bucket").isin(touched.toIndexedSeq.map(Int.box): _*))
+          else spark.createDataFrame(spark.sparkContext.emptyRDD[org.apache.spark.sql.Row],
+            incoming.schema)
+        // union → keep the newest (ts_ms) version per (table, id), ties
+        // is_deleted-first — as ONE max-by aggregation (r21, guide §2.3:
+        // aggregate before you shuffle). The former dropDuplicates +
+        // row_number pipeline paid two wide shuffles plus a per-key sort;
+        // the struct-max aggregation combines map-side, so the shuffle
+        // carries one candidate row per (table, id) per map partition and
+        // no sort at all. Winner identical: lexicographic struct max on
+        // (ts_ms, is_deleted) is exactly the rank's (ts_ms DESC,
+        // is_deleted DESC) head; rows tied on both were an arbitrary
+        // winner before (documented: `value` is not asserted on ties) and
+        // are now a deterministic max over the remaining fields. Replayed
+        // duplicates collapse the same way (one winner per key).
+        // FORMAT NOTE (r22, advisor): mirrors persisted at external
+        // mirrorPath locations by pre-r21 builds may therefore carry
+        // different tie-LOSER rows than a fresh rebuild would produce —
+        // expected, not corruption (ties were never asserted).
+        val merged = existing.unionByName(incoming)
+          .groupBy(col("table"), col("id"))
+          .agg(max(struct(col("ts_ms"), col("is_deleted"), col("value"),
+            col("bucket"))).as("_w"))
+          .select(col("id"), col("table"), col("_w.ts_ms").as("ts_ms"),
+            col("_w.value").as("value"), col("_w.is_deleted").as("is_deleted"),
+            col("_w.bucket").as("bucket"))
+          // hard-delete tables: a winning d-event removes the row
+          // physically instead of leaving a tombstone. (Same caveat as the
+          // reference's DELETE: a later replay of an OLDER upsert can
+          // resurrect the id, because no tombstone remains to outrank it.)
+          .filter(!(col("is_deleted") &&
+            policyPred(policy, defaultPolicy, TablePolicy.HardDelete)))
+        val staging = new Path(root, ".staging")
+        if (fs.exists(staging))
+          require(fs.delete(staging, true), s"failed to clear $staging")
+        // repartition on the bucket key before the partitionBy write: the
+        // merge window leaves rows of one bucket spread over every task,
+        // and partitionBy alone would then emit tasks×buckets small files
+        // per micro-batch — a file-count explosion at 100 TB. One extra
+        // exchange of the touched-buckets subset buys one file per bucket
+        // (AQE coalesces the near-empty partitions). The within-partition
+        // sort is the writeClustered mechanism applied to the mirror
+        // (r13): leading with the partition column keeps the writer on
+        // one open file, and (table, id) order gives every row group
+        // tight min/max stats on the SERVING keys — a mirror range read
+        // (q145's `table = x AND id BETWEEN lo AND hi`, the reference's
+        // SyncService point-read shape) prunes row groups instead of
+        // scanning whole buckets (hash bucketing spreads every id range
+        // across ALL buckets, so dir-level pruning can't help there;
+        // SCALE.md "Clustered layout ADOPTED: the CDC mirror", r13).
+        // Files split at the session's per-file record cap (a
+        // `spark.sql.files` conf; SyncMirrorSpec's sort pin lowers it to
+        // surface multi-file row-group geometry at toy scale; at 100 TB
+        // natural row-group segmentation provides it).
+        merged.repartition(col("bucket"))
+          .sortWithinPartitions(col("bucket"), col("table"), col("id"))
+          .write.mode("overwrite")
+          .partitionBy("bucket").parquet(staging.toString)
+        val bak = new Path(root, ".bak")
+        fs.mkdirs(bak)
+        // a touched bucket with no staged dir (every row hard-deleted)
+        // publishes as absent
+        touched.foreach { b =>
+          val name = s"bucket=$b"
+          publish(fs, new Path(staging, name), new Path(root, name), new Path(bak, name))
+        }
+        require(fs.delete(bak, true), s"failed to clean $bak")
+        if (fs.exists(staging))
+          require(fs.delete(staging, true), s"failed to clean $staging")
       }
-      require(fs.delete(bak, true), s"failed to clean $bak")
-      if (fs.exists(staging))
-        require(fs.delete(staging, true), s"failed to clean $staging")
-    } finally incoming.unpersist()
+    }
   }
 
   /** Crash recovery for the bucket swap: a leftover `.bak/bucket=N`
@@ -479,35 +483,35 @@ object Pipelines {
     Seq("counts", "snapshot", "delta").foreach(restoreSwap(fs, root, _))
     // persist + count: the emptiness probe and the merge read the
     // micro-batch once (applyClusteredStateBatch's move)
-    updates.persist()
-    try {
-      if (updates.count() == 0L) return
-      val countsPath = new Path(root, "counts")
-      val prior =
-        if (fs.exists(countsPath)) spark.read.parquet(countsPath.toString)
-        else spark.createDataFrame(
-          spark.sparkContext.emptyRDD[org.apache.spark.sql.Row],
-          org.apache.spark.sql.types.StructType(Seq(
-            org.apache.spark.sql.types.StructField("key",
-              org.apache.spark.sql.types.StringType),
-            org.apache.spark.sql.types.StructField("cnt",
-              org.apache.spark.sql.types.LongType))))
-      writeSwap(fs, root, "counts", prior
-        .join(updates.select(col("key")), Seq("key"), "left_anti")
-        .unionByName(updates.filter(!col("evicted"))
-          .select(col("key"), col("total").as("cnt"))))
-      val snap = new Path(root, "snapshot")
-      val current = spark.read.parquet(countsPath.toString)
-        .orderBy(col("cnt").desc, col("key")).limit(topN)
-      val previous =
-        if (fs.exists(snap)) spark.read.parquet(snap.toString)
-        else spark.createDataFrame(
-          spark.sparkContext.emptyRDD[org.apache.spark.sql.Row], current.schema)
-      // delta reads the old snapshot, so publish it BEFORE the swap
-      writeSwap(fs, root, "delta",
-        graft.operators.TimeSeries.rankDelta(current, previous, topN = topN))
-      writeSwap(fs, root, "snapshot", current)
-    } finally updates.unpersist()
+    Pins { p =>
+      if (p.cache(updates).count() > 0L) {
+        val countsPath = new Path(root, "counts")
+        val prior =
+          if (fs.exists(countsPath)) spark.read.parquet(countsPath.toString)
+          else spark.createDataFrame(
+            spark.sparkContext.emptyRDD[org.apache.spark.sql.Row],
+            org.apache.spark.sql.types.StructType(Seq(
+              org.apache.spark.sql.types.StructField("key",
+                org.apache.spark.sql.types.StringType),
+              org.apache.spark.sql.types.StructField("cnt",
+                org.apache.spark.sql.types.LongType))))
+        writeSwap(fs, root, "counts", prior
+          .join(updates.select(col("key")), Seq("key"), "left_anti")
+          .unionByName(updates.filter(!col("evicted"))
+            .select(col("key"), col("total").as("cnt"))))
+        val snap = new Path(root, "snapshot")
+        val current = spark.read.parquet(countsPath.toString)
+          .orderBy(col("cnt").desc, col("key")).limit(topN)
+        val previous =
+          if (fs.exists(snap)) spark.read.parquet(snap.toString)
+          else spark.createDataFrame(
+            spark.sparkContext.emptyRDD[org.apache.spark.sql.Row], current.schema)
+        // delta reads the old snapshot, so publish it BEFORE the swap
+        writeSwap(fs, root, "delta",
+          graft.operators.TimeSeries.rankDelta(current, previous, topN = topN))
+        writeSwap(fs, root, "snapshot", current)
+      }
+    }
   }
 
   /** One trigger's clustered state-table landing — the foreachBatch
@@ -541,39 +545,39 @@ object Pipelines {
     // empty trigger and is the price of one execution on a full one
     // (MEMORY_AND_DISK, so an oversized batch spills rather than
     // evicts).
-    batch.persist()
-    try {
-      if (batch.count() == 0L) return
-      val ks = keys.map(col)
-      // STAGE + RENAME, never write into the live dir: the native
-      // file sink this replaces gave readers atomic trigger
-      // visibility via _spark_metadata; a plain multi-file write
-      // into batch=N would let a concurrent serving read list a
-      // SUBSET of the trigger's files (silently undercounted
-      // windows). Dot-prefixed dirs are invisible to Spark's file
-      // listing, so the staged write is never read; the rename is
-      // the atomic publish, and a crash-replay swaps the redelivered
-      // batch in whole (writeSwap). TWO residual
-      // reader races exist, BOTH confined to crash-replay of an
-      // already-published batch (first publish of batch=N has no
-      // live dir to swap): (a) a reader that listed the OLD files
-      // just before the swap hits FileNotFound mid-scan — loud, the
-      // standard swap trade; (b) a reader whose ROOT listing lands
-      // in the live→aside→live window sees no batch=N dir at all
-      // and silently undercounts that one batch for that one read.
-      // (b) is accepted for this tier: replay re-delivers the SAME
-      // rows (deterministic per-batch recomputation), the window is
-      // two renames wide, and it requires a crash between commit and
-      // checkpoint — a dashboard read repeated a trigger later is
-      // whole again. A tier where a transient whole-batch gap is
-      // NOT acceptable should publish under versioned dir names
-      // resolved through a pointer file instead.
-      val root = new Path(path)
-      val fs = root.getFileSystem(
-        batch.sparkSession.sparkContext.hadoopConfiguration)
-      writeSwap(fs, root, s"batch=$batchId",
-        batch.repartitionByRange(ks: _*).sortWithinPartitions(ks: _*))
-    } finally batch.unpersist()
+    Pins { p =>
+      if (p.cache(batch).count() > 0L) {
+        val ks = keys.map(col)
+        // STAGE + RENAME, never write into the live dir: the native
+        // file sink this replaces gave readers atomic trigger
+        // visibility via _spark_metadata; a plain multi-file write
+        // into batch=N would let a concurrent serving read list a
+        // SUBSET of the trigger's files (silently undercounted
+        // windows). Dot-prefixed dirs are invisible to Spark's file
+        // listing, so the staged write is never read; the rename is
+        // the atomic publish, and a crash-replay swaps the redelivered
+        // batch in whole (writeSwap). TWO residual
+        // reader races exist, BOTH confined to crash-replay of an
+        // already-published batch (first publish of batch=N has no
+        // live dir to swap): (a) a reader that listed the OLD files
+        // just before the swap hits FileNotFound mid-scan — loud, the
+        // standard swap trade; (b) a reader whose ROOT listing lands
+        // in the live→aside→live window sees no batch=N dir at all
+        // and silently undercounts that one batch for that one read.
+        // (b) is accepted for this tier: replay re-delivers the SAME
+        // rows (deterministic per-batch recomputation), the window is
+        // two renames wide, and it requires a crash between commit and
+        // checkpoint — a dashboard read repeated a trigger later is
+        // whole again. A tier where a transient whole-batch gap is
+        // NOT acceptable should publish under versioned dir names
+        // resolved through a pointer file instead.
+        val root = new Path(path)
+        val fs = root.getFileSystem(
+          batch.sparkSession.sparkContext.hadoopConfiguration)
+        writeSwap(fs, root, s"batch=$batchId",
+          batch.repartitionByRange(ks: _*).sortWithinPartitions(ks: _*))
+      }
+    }
   }
 
   /** Clustered sink for events-derived STATE tables (the r13 mirror
@@ -1081,129 +1085,116 @@ object Pipelines {
           "of an interrupted bootstrap; if these paths were meant to " +
           "pair an OLD state with a NEW index, stop: the re-bootstrap " +
           "replaces the state with this batch's clusters)")
-    import org.apache.spark.sql.GraftBridge.releaseLocalCheckpoint
-    batch.persist() // consumed by ≥2 actions below; count() probes all partitions
-    try {
-      if (batch.count() == 0L) return
-      if (!haveIndex) {
-        // bootstrap: full block-less clustering PLUS the pair set it
-        // was closed from — the retraction capital later rounds spend
-        val p0 = Dedup.embeddingNearDupSorted(batch, threshold, dim,
-            nBits = nBits, tables = tables, window = window)
-          .select(col("vec_a").as("doc_a"), col("vec_b").as("doc_b"))
-          .localCheckpoint()
-        try {
+    Pins { p =>
+      // consumed by ≥2 actions below; count() probes all partitions
+      if (p.cache(batch).count() > 0L) {
+        if (!haveIndex) {
+          // bootstrap: full block-less clustering PLUS the pair set it
+          // was closed from — the retraction capital later rounds spend
+          val p0 = p.checkpoint(Dedup.embeddingNearDupSorted(batch, threshold, dim,
+              nBits = nBits, tables = tables, window = window)
+            .select(col("vec_a").as("doc_a"), col("vec_b").as("doc_b")))
           Dedup.writeClusterStateWithPairs(Dedup.dupClusters(p0), p0, statePath)
-        } finally releaseLocalCheckpoint(p0)
-        Similarity.writeSketchIndex(batch, indexPath, dim, nBits)
-      } else {
-        // RETRACTION before fold: a batch id's accumulated pairs are
-        // revoked wholesale — a re-embedded vector must not keep
-        // memberships its OLD embedding earned (the star-compressed
-        // assignment can't revoke them; the pairs member can) — and
-        // the batch's new detection re-establishes exactly what still
-        // holds (embeddingNearDupIndexed covers batch-vs-corpus AND
-        // within-batch, with batch versions superseding index rows).
-        // A vector left with no pairs drops out of the state: absence
-        // = "has no duplicates", the dupClusters node contract.
-        // Replay-idempotent EXACTLY: every new pair touches a batch
-        // id, so re-running retraction on an already-folded pair set
-        // removes precisely what the replayed fold re-adds.
-        val newPairs = Dedup.embeddingNearDupIndexed(batch, indexPath,
-            threshold, tables, window)
-          .select(col("vec_a").as("doc_a"), col("vec_b").as("doc_b"))
-          .localCheckpoint()
-        val oldPairs = Dedup.readClusterPairs(spark, statePath).getOrElse(
-          sys.error(s"dupClusterSink: state at $statePath has no pairs " +
-            "member — it was committed by the pairs-less " +
-            "writeClusterState (the monotone one-shot form), so " +
-            "changed-vector retraction is impossible; re-bootstrap " +
-            "the sink on fresh paths")).localCheckpoint()
-        // ONE distinct over the persisted batch, CHECKPOINTED like its
-        // sibling frames: consumed by both retraction anti-joins and
-        // the re-close's dirty-id probes/joins — uncheckpointed, the
-        // distinct shuffle would re-execute in every consuming action
-        val ids = batch.select(col("vec_id")).distinct().localCheckpoint()
-        val kept = oldPairs
-          .join(ids.select(col("vec_id").as("doc_a")), Seq("doc_a"), "left_anti")
-          .join(ids.select(col("vec_id").as("doc_b")), Seq("doc_b"), "left_anti")
-          .localCheckpoint()
-        var accCk: Option[DataFrame] = None
-        try {
-          // quiet-trigger skip: nothing detected AND nothing revoked —
-          // the graph-sized state is not rewritten with identical
-          // content (counts are metadata-cheap on checkpointed frames)
-          val accPairCount = oldPairs.count()
-          if (newPairs.count() > 0L || kept.count() < accPairCount) {
-            // INCREMENTAL re-close + (past the crossover) PARTIAL
-            // commit (r16): only components incident to the batch
-            // (retracted memberships or new pairs) re-enter the
-            // iterative CC; and once the accumulated graph outgrows
-            // CcPartialCommitMinPairs, only the state buckets holding
-            // an affected/re-closed label (or a moved pair) REWRITE —
-            // untouched buckets carry in the manifest. Below the
-            // crossover the whole write is measurably the cheaper
-            // route (the partial path's fixed planning/bookkeeping
-            // overhead exceeds a small graph's write — SCALE.md r16
-            // growing-graph A/B), so the route is adaptive on the
-            // pair count the quiet check already computed. Every
-            // fallback (affected set over the cap, manifest unable to
-            // carry, chain at the cap, small graph) is a whole
-            // rewrite with identical content — route choices, never
-            // semantic forks.
-            // the accumulated-pair union in two forms: `fullPairs`
-            // (lazy, uncheckpointed) for the arms that consume it at
-            // most ONCE (the staged pairs member of the single-write
-            // routes), and `acc` (forced-once CHECKPOINTED, released
-            // with the trigger's other checkpoints) for the
-            // RecloseFull route, whose two consumers (the full
-            // re-close AND the staged member) would otherwise each
-            // pay the graph-sized shuffle
-            lazy val fullPairs = kept.unionByName(newPairs).distinct()
-            def acc: DataFrame = accCk.getOrElse {
-              val c = fullPairs.localCheckpoint()
-              accCk = Some(c); c
-            }
-            val prior = Dedup.readClusterState(spark, statePath)
-            // layout is a one-way upgrade: once bucketed, stay
-            // bucketed (downgrading would churn the whole state on a
-            // shrinking graph for nothing)
-            val committedBuckets = Dedup.ccStateBucketsOf(spark, statePath)
-            val pastGate =
-              committedBuckets.isDefined || accPairCount >= partialMinPairs
-            // a whole rewrite PRESERVES a committed bucket count (a
-            // caller may have chosen a custom one) and only ever
-            // upgrades 0 → the default — both fallbacks must leave
-            // the same layout or "route choice" becomes a layout fork
-            val wholeBuckets = committedBuckets.getOrElse(
-              if (pastGate) Dedup.CcStateBuckets else 0)
-            Dedup.recloseParts(prior, kept, newPairs, ids,
-                accAll = Some(() => acc)) match {
-              case full: Dedup.RecloseFull =>
-                Dedup.writeClusterStateWithPairs(
-                  full.assignment, acc, statePath,
-                  buckets = wholeBuckets)
-              case inc: Dedup.RecloseIncremental if pastGate =>
-                Dedup.commitClusterStatePartial(spark, statePath,
-                  inc.affectedLbls, inc.members, inc.reclosed, ids,
-                  newPairs, fullPairs = fullPairs)
-              case inc: Dedup.RecloseIncremental =>
-                Dedup.writeClusterStateWithPairs(
-                  Dedup.assembleReclosed(prior, inc.affectedLbls,
-                    inc.reclosed),
-                  fullPairs, statePath)
+          p.release(p0)
+          Similarity.writeSketchIndex(batch, indexPath, dim, nBits)
+        } else {
+          // RETRACTION before fold: a batch id's accumulated pairs are
+          // revoked wholesale — a re-embedded vector must not keep
+          // memberships its OLD embedding earned (the star-compressed
+          // assignment can't revoke them; the pairs member can) — and
+          // the batch's new detection re-establishes exactly what still
+          // holds (embeddingNearDupIndexed covers batch-vs-corpus AND
+          // within-batch, with batch versions superseding index rows).
+          // A vector left with no pairs drops out of the state: absence
+          // = "has no duplicates", the dupClusters node contract.
+          // Replay-idempotent EXACTLY: every new pair touches a batch
+          // id, so re-running retraction on an already-folded pair set
+          // removes precisely what the replayed fold re-adds.
+          // The trigger's checkpoints are released before the index upsert.
+          Pins { q =>
+            val newPairs = q.checkpoint(Dedup.embeddingNearDupIndexed(batch, indexPath,
+                threshold, tables, window)
+              .select(col("vec_a").as("doc_a"), col("vec_b").as("doc_b")))
+            val oldPairs = q.checkpoint(Dedup.readClusterPairs(spark, statePath).getOrElse(
+              sys.error(s"dupClusterSink: state at $statePath has no pairs " +
+                "member — it was committed by the pairs-less " +
+                "writeClusterState (the monotone one-shot form), so " +
+                "changed-vector retraction is impossible; re-bootstrap " +
+                "the sink on fresh paths")))
+            // ONE distinct over the persisted batch, CHECKPOINTED like its
+            // sibling frames: consumed by both retraction anti-joins and
+            // the re-close's dirty-id probes/joins — uncheckpointed, the
+            // distinct shuffle would re-execute in every consuming action
+            val ids = q.checkpoint(batch.select(col("vec_id")).distinct())
+            val kept = q.checkpoint(oldPairs
+              .join(ids.select(col("vec_id").as("doc_a")), Seq("doc_a"), "left_anti")
+              .join(ids.select(col("vec_id").as("doc_b")), Seq("doc_b"), "left_anti"))
+            // quiet-trigger skip: nothing detected AND nothing revoked —
+            // the graph-sized state is not rewritten with identical
+            // content (counts are metadata-cheap on checkpointed frames)
+            val accPairCount = oldPairs.count()
+            if (newPairs.count() > 0L || kept.count() < accPairCount) {
+              // INCREMENTAL re-close + (past the crossover) PARTIAL
+              // commit (r16): only components incident to the batch
+              // (retracted memberships or new pairs) re-enter the
+              // iterative CC; and once the accumulated graph outgrows
+              // CcPartialCommitMinPairs, only the state buckets holding
+              // an affected/re-closed label (or a moved pair) REWRITE —
+              // untouched buckets carry in the manifest. Below the
+              // crossover the whole write is measurably the cheaper
+              // route (the partial path's fixed planning/bookkeeping
+              // overhead exceeds a small graph's write — SCALE.md r16
+              // growing-graph A/B), so the route is adaptive on the
+              // pair count the quiet check already computed. Every
+              // fallback (affected set over the cap, manifest unable to
+              // carry, chain at the cap, small graph) is a whole
+              // rewrite with identical content — route choices, never
+              // semantic forks.
+              // the accumulated-pair union in two forms: `fullPairs`
+              // (lazy, uncheckpointed) for the arms that consume it at
+              // most ONCE (the staged pairs member of the single-write
+              // routes), and `acc` (forced-once CHECKPOINTED, released
+              // with the trigger's other checkpoints) for the
+              // RecloseFull route, whose two consumers (the full
+              // re-close AND the staged member) would otherwise each
+              // pay the graph-sized shuffle
+              lazy val fullPairs = kept.unionByName(newPairs).distinct()
+              lazy val acc = q.checkpoint(fullPairs)
+              val prior = Dedup.readClusterState(spark, statePath)
+              // layout is a one-way upgrade: once bucketed, stay
+              // bucketed (downgrading would churn the whole state on a
+              // shrinking graph for nothing)
+              val committedBuckets = Dedup.ccStateBucketsOf(spark, statePath)
+              val pastGate =
+                committedBuckets.isDefined || accPairCount >= partialMinPairs
+              // a whole rewrite PRESERVES a committed bucket count (a
+              // caller may have chosen a custom one) and only ever
+              // upgrades 0 → the default — both fallbacks must leave
+              // the same layout or "route choice" becomes a layout fork
+              val wholeBuckets = committedBuckets.getOrElse(
+                if (pastGate) Dedup.CcStateBuckets else 0)
+              Dedup.recloseParts(prior, kept, newPairs, ids,
+                  accAll = Some(() => acc)) match {
+                case full: Dedup.RecloseFull =>
+                  Dedup.writeClusterStateWithPairs(
+                    full.assignment, acc, statePath,
+                    buckets = wholeBuckets)
+                case inc: Dedup.RecloseIncremental if pastGate =>
+                  Dedup.commitClusterStatePartial(spark, statePath,
+                    inc.affectedLbls, inc.members, inc.reclosed, ids,
+                    newPairs, fullPairs = fullPairs)
+                case inc: Dedup.RecloseIncremental =>
+                  Dedup.writeClusterStateWithPairs(
+                    Dedup.assembleReclosed(prior, inc.affectedLbls,
+                      inc.reclosed),
+                    fullPairs, statePath)
+              }
             }
           }
-        } finally {
-          accCk.foreach(releaseLocalCheckpoint)
-          releaseLocalCheckpoint(ids)
-          releaseLocalCheckpoint(newPairs)
-          releaseLocalCheckpoint(oldPairs)
-          releaseLocalCheckpoint(kept)
+          Similarity.upsertSketchIndex(batch, indexPath)
         }
-        Similarity.upsertSketchIndex(batch, indexPath)
       }
-    } finally batch.unpersist()
+    }
   }
 
   /** Streaming dup-cluster maintenance — the persisted-state CC

@@ -18,32 +18,4 @@ object GraftBridge {
     classic.ExpressionUtils.column(e)
   def expression(c: Column): org.apache.spark.sql.catalyst.expressions.Expression =
     classic.ExpressionUtils.expression(c)
-
-  /** Drop the block-manager storage behind a localCheckpoint'd frame.
-    * `Dataset.unpersist` only consults the CacheManager, which never
-    * sees RDD-level checkpoints — without this, an iterative operator
-    * that checkpoints per round (lineage truncation) leaks every
-    * round's blocks until driver GC, a real float on a 5-second
-    * streaming cadence. ONLY call after every consumer of the frame
-    * has fully materialized: the checkpoint's blocks ARE its data
-    * (lineage is gone), so a later action on a released frame fails.
-    * No-op on frames that are not checkpoint-backed.
-    *
-    * Single-root contract: the frame must BE a checkpoint (its
-    * analyzed plan contains at most one LogicalRDD). Walking a
-    * derived frame — say a join of two checkpointed inputs — would
-    * unpersist a still-live sibling's blocks, and with no lineage
-    * behind a local checkpoint that sibling is unrecoverable. We
-    * assert rather than silently releasing whatever we find. */
-  def releaseLocalCheckpoint(df: DataFrame): Unit = {
-    val rdds = df.queryExecution.analyzed.collect {
-      case l: org.apache.spark.sql.execution.LogicalRDD => l
-    }
-    require(
-      rdds.length <= 1,
-      s"releaseLocalCheckpoint expects a frame whose plan holds at most one " +
-        s"LogicalRDD (the checkpoint root); found ${rdds.length}. Releasing a " +
-        "derived frame would drop a sibling checkpoint's only copy of its data.")
-    rdds.foreach(_.rdd.unpersist(blocking = false))
-  }
 }

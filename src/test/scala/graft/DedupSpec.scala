@@ -490,9 +490,9 @@ class DedupSpec extends SparkSuite {
     // the deployment shape: fit the flagged table on the corpus once,
     // then apply statelessly to each half as its own "micro-batch" —
     // rewritten rows must be identical to the one-shot's
-    val fitted = Dedup.flaggedSpans(corpus, col("doc_id"), col("text"),
-      k = 3, maxDocs = 2).localCheckpoint()
-    try {
+    graft.operators.Pins { p =>
+      val fitted = p.checkpoint(Dedup.flaggedSpans(corpus, col("doc_id"), col("text"),
+        k = 3, maxDocs = 2))
       val batched = Seq(corpus.filter(col("doc_id") <= 2),
         corpus.filter(col("doc_id") > 2))
         .flatMap(b => Dedup.removeSpans(b, col("doc_id"), col("text"), fitted, k = 3)
@@ -500,8 +500,7 @@ class DedupSpec extends SparkSuite {
         .sorted.toSeq
       assert(batched == oneShot,
         "per-batch apply against the fitted table diverged from the one-shot")
-    } finally
-      org.apache.spark.sql.GraftBridge.releaseLocalCheckpoint(fitted)
+    }
   }
 
   test("span removal before near-dup: boilerplate-only overlap stops making near-dups (the q161 order)") {

@@ -1698,26 +1698,6 @@ class LayoutSpec extends SparkSuite {
     }
   }
 
-  test("releaseLocalCheckpoint: refuses a derived frame holding two checkpoint roots") {
-    import org.apache.spark.sql.GraftBridge
-    val a = Seq(1L, 2L).toDF("x").localCheckpoint(eager = true)
-    val b = Seq(2L, 3L).toDF("x").localCheckpoint(eager = true)
-    // releasing a JOIN of two checkpoints would drop a still-live
-    // sibling's only copy of its data (no lineage behind a local
-    // checkpoint) — the single-root contract is asserted, not assumed
-    val derived = a.join(b, Seq("x"))
-    val err = intercept[IllegalArgumentException](
-      GraftBridge.releaseLocalCheckpoint(derived))
-    assert(err.getMessage.contains("LogicalRDD"))
-    // both checkpoints stayed live through the refusal
-    assert(derived.count() == 1)
-    // the intended single-root shape (modulo a projection) releases fine
-    GraftBridge.releaseLocalCheckpoint(a.select(col("x")))
-    GraftBridge.releaseLocalCheckpoint(b)
-    // a plain non-checkpointed frame is a no-op, never an error
-    GraftBridge.releaseLocalCheckpoint(Seq(1L).toDF("x"))
-  }
-
   test("health poll: one table over all four index kinds, drift in the uniform direction, junk skipped") {
     import graft.operators.Index
     val root = Files.createTempDirectory("graft_health").toString
